@@ -16,10 +16,10 @@ minhash / simhash / hyperplane-LSH ANN / randomtextwriter / terasort
 exactly oracle-checked via portable (cross-engine bit-identical)
 modes.
 
-Registration order is the driver's verification order and is
-self-healing: queries with a green row in any CORRECTNESS_r*.json
-rotate behind the ones the driver has never checked
-(plans/queries.py::_reorder_for_driver).
+Registration order is the driver's verification order: queries
+stable-sorted by their latest green round in CORRECTNESS_r*.json
+(never checked = round 0, so those come first), with each *_verdict
+companion adjacent to its base query.
 """
 
 from __future__ import annotations

@@ -19,8 +19,10 @@ q1), and removes unique-key outer joins (4.3x on dedup_semantic, whose
 whole pair-compare subtree vanished).  noop write forces the full
 result.  Cross-round comparisons: r1-r4 numbers are count()-actioned —
 compare per-query only where the shapes are count-stable (joins,
-explodes), and use anchors.cpu_probe_sec for machine normalization;
-the record carries "action": "noop_write" from r5 on.
+explodes); the record carries "action": "noop_write" from r5 on.
+
+Paired parent-vs-change comparisons live in perfbench/ (fresh process
+per side, same machine); this harness records one sweep's facts only.
 """
 
 from __future__ import annotations
@@ -373,129 +375,6 @@ def _jvm_gc_stats(spark) -> tuple[float | None, float | None]:
         return None, None
 
 
-def _session_health(pre: dict, post: dict, vs_prev: dict) -> dict:
-    """Mechanical health verdict for the full sf0.1 sweep (VERDICT r11
-    task 1 — the r11 end-of-round session posted median 1.40 with flat
-    probes and every flag reverting, and the attribution lived in
-    commit prose; this makes it a recorded verdict downstream vs_prev
-    readings must cite).  Rule, in order:
-
-    - ``degraded`` when a probe catches the resource in the act:
-      either bracketing disk probe below the anchor floor, the
-      in-session CPU probe drifting >20% pre→post, the disk probe
-      falling >2x across the sweep, or (when the snapshot carries
-      query_cpu_sec) wall inflating >1.25x while JVM CPU stays flat —
-      the wait-dominated regime the r11 probe suite could not see.
-    - ``unattributed`` when no probe moved but the cpu-normalized
-      median vs the committed snapshot still exceeds 1.25 AND the
-      wall-vs-cpu split can't vouch for the session: whatever degraded
-      it is outside the probe suite; the sweep's absolute numbers are
-      not representative and vs_prev must not be read as an engine
-      regression (nor as proof there is none — the per-query flags
-      and flag_recheck reverts are the evidence tier that still
-      works, being median-relative).
-    - ``healthy`` otherwise — including the med>1.25 case where the
-      cpu median ratio TRACKS the wall ratio (>= 1.1): the session is
-      fine and the slowdown is positively engine-attributed, so
-      vs_prev is a like-for-like comparison showing a real delta.
-    """
-    reasons = []
-    for tag, p in (("pre", pre), ("post", post)):
-        d = p.get("disk_probe_mb_s")
-        if d is not None and d < DISK_PROBE_FLOOR_MB_S:
-            reasons.append(
-                f"{tag}-sweep disk probe {d} MB/s < {DISK_PROBE_FLOOR_MB_S} floor"
-            )
-    c0, c1 = pre.get("cpu_probe_sec"), post.get("cpu_probe_sec")
-    if c0 and c1 and max(c0, c1) / min(c0, c1) > 1.2:
-        reasons.append(f"cpu probe drifted {c0} -> {c1} s across the sweep")
-    d0, d1 = pre.get("disk_probe_mb_s"), post.get("disk_probe_mb_s")
-    if d0 and d1 and d0 / max(d1, 1e-9) > 2.0:
-        reasons.append(f"disk probe fell {d0} -> {d1} MB/s across the sweep")
-    split = vs_prev.get("cpu_split") or {}
-    if (
-        split.get("wall_median_ratio")
-        and split.get("cpu_median_ratio")
-        and split["wall_median_ratio"] > 1.25
-        and split["cpu_median_ratio"] < 1.1
-    ):
-        reasons.append(
-            f"wait-dominated: wall median ratio {split['wall_median_ratio']} vs "
-            f"JVM-cpu median ratio {split['cpu_median_ratio']} — added time is "
-            "wait, not compute"
-        )
-    med = vs_prev.get("median_ratio")
-    probe_drift_note = None
-    drift_substituted = False
-    if vs_prev.get("cpu_probe_drift") and split.get("wall_median_ratio"):
-        # r13: when the machine-speed probe itself drifted >1.5×
-        # between snapshots, the normalized median measures the probe,
-        # not the engine (the r13 final sweep read 2.05 normalized vs
-        # 1.07 raw after the probe halved between rounds) — judge the
-        # session on the RAW wall median instead, and record the
-        # substitution as an informational note (NOT a degraded
-        # trigger: per-query flags are median-relative and unaffected).
-        probe_drift_note = (
-            f"cpu probe drifted {vs_prev.get('prev_cpu_probe_sec')} -> "
-            f"{vs_prev.get('cpu_probe_sec')} s ACROSS SNAPSHOTS: "
-            f"normalized median_ratio {med} is a normalization artifact; "
-            f"session judged on raw wall median "
-            f"{split['wall_median_ratio']} instead"
-        )
-        med = split["wall_median_ratio"]
-        drift_substituted = True
-    if reasons:
-        verdict = "degraded"
-    elif med is not None and med > 1.25:
-        if drift_substituted:
-            # r14 (ADVICE): probe drift + a raw-median regression
-            # COINCIDING is ambiguous — if the machine genuinely
-            # changed speed between rounds, raw wall (with cpu
-            # tracking it) would mislabel an environment change as a
-            # "REAL engine delta"; the normalized ratio would have
-            # corrected for it but is itself untrustworthy under
-            # drift.  Don't assert attribution either way: the
-            # median-relative per-query flags and their fresh-session
-            # rechecks are the evidence tier that still works.
-            verdict = "unattributed"
-            reasons.append(
-                f"raw wall median {med} regressed WHILE the cpu probe "
-                "drifted across snapshots: cannot separate a machine-"
-                "speed change from an engine delta — corroborate via "
-                "per-query flags and flag_recheck, not this median"
-            )
-        elif split.get("cpu_median_ratio") and split["cpu_median_ratio"] >= 1.1:
-            # cpu TRACKED wall: the session is fine and the slowdown is
-            # positively engine-attributed — the one med>1.25 case
-            # where vs_prev IS a like-for-like comparison (round-12
-            # review: the original rule labeled this 'unattributed',
-            # masking exactly the regression class the split exists to
-            # expose)
-            verdict = "healthy"
-            reasons.append(
-                f"median_ratio {med} with cpu tracking wall "
-                f"(cpu_median_ratio {split['cpu_median_ratio']}): session "
-                "healthy — read vs_prev as a REAL engine delta"
-            )
-        else:
-            verdict = "unattributed"
-            reasons.append(
-                f"median_ratio {med} with flat pre/post probes: the degraded "
-                "resource is outside the probe suite; do not cite this sweep's "
-                "vs_prev as an engine delta in either direction"
-            )
-    else:
-        verdict = "healthy"
-    if probe_drift_note:
-        reasons.append(probe_drift_note)
-    return {
-        "verdict": verdict,
-        "reasons": reasons,
-        "probe_pre_sweep": pre,
-        "probe_post_sweep": post,
-    }
-
-
 def _stage_audit(spark, min_stage_sec: float = 3.0, min_per_task_sec: float = 1.0) -> dict:
     """Stage-parallelism audit over everything the given UI-enabled
     session has run (the round-6 detector for the AQE-coalesce hazard
@@ -567,44 +446,8 @@ def _disk_probe_mb_s() -> float | None:
 # Below this sequential-write floor the machine is in the throttled
 # regime where the big anchor measures the hypervisor's IO budget, not
 # the engine (VERDICT r7 "What's wrong #3"); the anchor is skipped and
-# the best prior healthy session stands, with its probe, in-row.
+# the skip reason is recorded in its place.
 DISK_PROBE_FLOOR_MB_S = float(os.environ.get("SPARK_GRAFT_DISK_FLOOR_MB_S", "50"))
-
-
-def _terasort_200m_sessions(current_sec: float | None, current_probe: float | None) -> list[dict]:
-    """Every recorded 200M-anchor measurement with its session's disk
-    probe attached — committed bench_baselines snapshots plus this
-    session — so the anchor row carries its own attribution evidence
-    (min-of-sessions with probes, VERDICT r7 task 3)."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    sessions = []
-    for snap in sorted(glob.glob(os.path.join(here, "bench_baselines", "BENCH_full_r*.json"))):
-        try:
-            with open(snap) as f:
-                a = json.load(f).get("anchors", {})
-        except (OSError, ValueError):
-            continue
-        if a.get("terasort_200m_sec"):
-            sessions.append(
-                {
-                    "src": os.path.basename(snap),
-                    "sec": a["terasort_200m_sec"],
-                    "gb_per_node_min": round(20.0 / (a["terasort_200m_sec"] / 60.0), 2),
-                    "disk_probe_mb_s": a.get("disk_probe_mb_s"),
-                }
-            )
-    if current_sec:
-        sessions.append(
-            {
-                "src": "this_session",
-                "sec": current_sec,
-                "gb_per_node_min": round(20.0 / (current_sec / 60.0), 2),
-                "disk_probe_mb_s": current_probe,
-            }
-        )
-    return sessions
 
 
 def _min_of(reps: int, run) -> float:
@@ -685,9 +528,8 @@ def main() -> None:
     from hadoop_3_3_6_spark.session import load_table
 
     _sweep_stale_local_dirs()
-    # bracketing probes: the sweep's health verdict needs the machine
-    # state AT ENTRY and AT EXIT, not one probe measured after the
-    # anchors (VERDICT r11 task 1)
+    # bracketing probes: the machine state AT ENTRY and AT EXIT of the
+    # sweep, recorded as facts beside the timings (VERDICT r11 task 1)
     probe_pre_sweep = {
         "cpu_probe_sec": _cpu_probe_sec(),
         "disk_probe_mb_s": _disk_probe_mb_s(),
@@ -702,7 +544,7 @@ def main() -> None:
             fn = QUERIES[name]
             # min-of-2 with a JVM-CPU delta per rep: the cpu second
             # column is what separates "ran slower" (cpu up) from
-            # "waited longer" (cpu flat) in the session-health verdict
+            # "waited longer" (cpu flat)
             best = best_cpu = None
             for _ in range(2):
                 c0 = _jvm_cpu_sec(spark)
@@ -739,7 +581,6 @@ def main() -> None:
     terasort_200m_sec = None
     terasort_200m_shuffle_parts = None
     terasort_200m_skipped = None
-    terasort_200m_throttled = None
     terasort_200m_attempts: list[dict] = []
     # probe the disk BEFORE deciding to run the big anchor: in the
     # throttled regime the measurement is the hypervisor's IO budget,
@@ -772,53 +613,8 @@ def main() -> None:
             f"disk_probe {disk_probe_mb_s} MB/s "
             + ("(probe failed - disk state unknown)" if disk_probe_mb_s is None
                else f"< {DISK_PROBE_FLOOR_MB_S} floor (burst-throttled session)")
-            + "; best prior healthy session stands in terasort_200m_sessions"
         )
         print(f"# terasort_200m_records SKIPPED: {terasort_200m_skipped}", file=sys.stderr)
-        # Two consecutive sessions skipped on throttle left the headline
-        # row aging silently (VERDICT r9 task 5): when the probe is a
-        # known number (not a failed probe) the anchor now ALSO runs
-        # under throttle and publishes a CLEARLY-LABELED normalized
-        # estimate next to the skip record — raw GB/node/min scaled by
-        # (floor / probe), a conservative basis since the floor is the
-        # SLOWEST disk the healthy regime admits.  The throttled raw
-        # number never enters terasort_200m_sessions (min-of-sessions
-        # stays healthy-only).  The 15 MB/s lower bound keeps a
-        # pathologically starved disk from stalling the whole bench.
-        if disk_probe_mb_s is not None and disk_probe_mb_s >= 15.0:
-            from hadoop_3_3_6_spark.session import sized_shuffle_partitions
-
-            prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-            parts = sized_shuffle_partitions(spark, 200_000_000 * 100)
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            try:
-                t0 = time.perf_counter()
-                terasort_gen(spark, 200_000_000, partitions=640).write.mode(
-                    "overwrite"
-                ).format("noop").save()
-                raw_sec = round(time.perf_counter() - t0, 1)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            raw_gbnm = round(20.0 / (raw_sec / 60.0), 2)
-            terasort_200m_throttled = {
-                "raw_sec": raw_sec,
-                "raw_gb_per_node_min": raw_gbnm,
-                "disk_probe_mb_s": disk_probe_mb_s,
-                "estimate_gb_per_node_min": round(
-                    raw_gbnm * (DISK_PROBE_FLOOR_MB_S / disk_probe_mb_s), 2
-                ),
-                "estimate_basis": (
-                    f"ESTIMATE: raw x (floor {DISK_PROBE_FLOOR_MB_S} / probe "
-                    f"{disk_probe_mb_s}); throttled session, excluded from "
-                    "terasort_200m_sessions"
-                ),
-            }
-            print(
-                f"# terasort_200m_throttled: {raw_sec:.1f}s raw "
-                f"({raw_gbnm} GB/node/min; estimate "
-                f"{terasort_200m_throttled['estimate_gb_per_node_min']})",
-                file=sys.stderr,
-            )
     else:
         from hadoop_3_3_6_spark.session import sized_shuffle_partitions
 
@@ -829,10 +625,9 @@ def main() -> None:
         # disk/cpu probes and spill deltas (VERDICT r10 task 2: three
         # healthy sessions spanned 49.5-111.4 s with the slowest on the
         # fastest disk — per-attempt attribution is the only way to
-        # separate machine drift from a lucky draw).  The headline
-        # contract is unchanged: terasort_200m_sec = min of attempts,
-        # feeding the same min-of-sessions table; the attempts list and
-        # the in-session median travel beside it as evidence.
+        # separate machine drift from a lucky draw).  terasort_200m_sec
+        # is the min of attempts; the attempts list and the in-session
+        # median travel beside it as evidence.
         reps_200m = int(os.environ.get("SPARK_GRAFT_200M_REPS", "3"))
         try:
             for _att in range(max(reps_200m, 1)):
@@ -978,14 +773,11 @@ def main() -> None:
             print(f"# sf3 spotcheck skipped: {e}", file=sys.stderr)
 
     # Machine-speed index: a fixed driver-side CPU probe (300k chained
-    # sha256) so cross-round comparisons can separate engine changes
-    # from sandbox speed — the round-3 "uniform 1.66x regression" was
-    # the machine (bisected in round 4: round-2 CODE re-run on the
-    # round-4 machine was SLOWER than round-4 code on the same machine).
+    # sha256), recorded so a reader can tell a slow machine from a slow
+    # engine.  disk_probe_mb_s was measured just before the big anchor
+    # (gating it) and is recorded beside it.
     cpu_probe = _cpu_probe_sec()
 
-    # disk_probe_mb_s was measured just before the big anchor (gating
-    # it); reused here for the record and the vs_prev annotation.
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     record_sf = float(sf) if sf.replace(".", "").isdigit() else sf
     total = round(sum(timings.values()), 3)
@@ -1002,9 +794,6 @@ def main() -> None:
         "sf": record_sf,
         "n_queries": len(timings),
         "anchors": {
-            # headline normalized by the CPU probe: cross-round deltas
-            # in this ratio are engine changes, not sandbox speed
-            "headline_per_cpu_probe": round(total / max(cpu_probe, 1e-9), 1),
             "terasort_gb_per_node_min": terasort_gb_per_node_min,
             "terasort_20m_gb_per_node_min": round(
                 2.0 / (timings["terasort_20m_records"] / 60.0), 2
@@ -1014,27 +803,17 @@ def main() -> None:
             "terasort_200m_gb_per_node_min": (
                 round(20.0 / (terasort_200m_sec / 60.0), 2) if terasort_200m_sec else None
             ),
-            # min-of-sessions with each session's disk probe attached:
-            # the anchor's attribution evidence travels IN-ROW instead
-            # of in SCALE.md prose (VERDICT r7 task 3).  "skipped" set
-            # means THIS session was throttled below the floor and ran
-            # no 200M measurement.
+            # "skipped" set means THIS session was throttled below the
+            # floor and ran no 200M measurement
             "terasort_200m_skipped": terasort_200m_skipped,
-            "terasort_200m_throttled": terasort_200m_throttled,
             # r11: the in-session min-of-3 evidence — per-attempt
             # disk/cpu probes + spill deltas, and the session median
-            # as the variance-honest companion to best-of-sessions
+            # as the variance-honest companion to the min
             "terasort_200m_attempts": terasort_200m_attempts,
             "terasort_200m_median_sec": (
                 round(statistics.median(a["sec"] for a in terasort_200m_attempts), 3)
                 if terasort_200m_attempts
                 else None
-            ),
-            "terasort_200m_sessions": (ts200_sessions := _terasort_200m_sessions(
-                terasort_200m_sec, disk_probe_mb_s
-            )),
-            "terasort_200m_best": (
-                min(ts200_sessions, key=lambda s: s["sec"]) if ts200_sessions else None
             ),
             "baseline_terasort_gb_per_node_min_500gb": 6.0,
             "baseline_terasort_gb_per_node_min_100tb": 0.97,
@@ -1047,57 +826,12 @@ def main() -> None:
         # clean); the mechanical regression gate for the AQE-coalesce
         # serialized-CPU-stage hazard class (VERDICT r6 task 6).
         "stage_audit": stage_audit,
-        # Mechanical cross-round comparison (VERDICT r5 task 5): each
-        # query's time is normalized by the machine-speed probe on BOTH
-        # sides, so a ratio > 1 is an engine delta, not sandbox speed.
-        # The baseline is the newest committed bench_baselines/
-        # BENCH_full_r{NN}.json (same noop_write action required);
-        # queries >1.3x normalized are flagged for the judge, then
-        # automatically RE-MEASURED min-of-3 in a fresh session
-        # (flag_recheck) so transient-noise flags self-attribute
-        # (VERDICT r6 task 3).
-        "vs_prev_normalized": _vs_prev_normalized(
-            timings, cpu_probe, disk_probe_mb_s, record_sf, query_cpu_sec
-        ),
+        # the sweep's bracketing machine probes, as recorded facts
+        "probes": {"pre_sweep": probe_pre_sweep, "post_sweep": probe_post_sweep},
         # per-query JVM-CPU seconds for the winning rep (None where
-        # /proc was unreadable) — next round's snapshot side of the
-        # cpu_split comparison
+        # /proc was unreadable)
         "query_cpu_sec": query_cpu_sec,
     }
-    # the sweep's health verdict: downstream vs_prev readings must cite
-    # it (VERDICT r11 task 1; attribution rule documented in SCALE.md)
-    record["session_health"] = _session_health(
-        probe_pre_sweep, probe_post_sweep, record["vs_prev_normalized"]
-    )
-    print(
-        f"# session_health: {record['session_health']['verdict']} "
-        f"{record['session_health']['reasons']}",
-        file=sys.stderr,
-    )
-    if record["session_health"]["verdict"] != "healthy":
-        # a degraded/unattributed sweep's record points at the newest
-        # committed HEALTHY snapshot so downstream comparisons have a
-        # representative per-query map (VERDICT r12 task 5)
-        record["representative_snapshot"] = _newest_healthy_snapshot()
-    flagged = record["vs_prev_normalized"].get("flagged_over_1.3_of_median") or {}
-    if flagged:
-        try:
-            record["vs_prev_normalized"]["flag_recheck"] = _flag_recheck(
-                list(flagged), cpu_probe, record["vs_prev_normalized"]
-            )
-        except Exception as e:  # never fail the bench on the recheck tier
-            print(f"# flag recheck skipped: {e}", file=sys.stderr)
-        # first-class adjudicated map (r14): every flagged query's
-        # fresh-session min-of-3 recheck, published beside (never
-        # inside) the in-sweep `queries` map — next-round comparisons
-        # substitute these for the in-sweep spikes via
-        # _adjudicated_prev_queries, so a transient in-sweep number
-        # can no longer become a stale baseline (the r13 snapshot's
-        # 6.38 s multimodal_video fork-storm spike).
-        record["queries_adjudicated"] = {
-            n: r["recheck_sec"]
-            for n, r in (record["vs_prev_normalized"].get("flag_recheck") or {}).items()
-        }
     # full per-query map: stderr + a file next to this script (the
     # round-2 driver could only capture a bounded stdout tail, so the
     # 91-query one-liner came back "parsed": null)
@@ -1123,236 +857,6 @@ def main() -> None:
             }
         )
     )
-
-
-def _load_prev_snapshot() -> tuple[str | None, dict | None]:
-    """Newest committed bench_baselines/BENCH_full_r{NN}.json."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    snaps = sorted(glob.glob(os.path.join(here, "bench_baselines", "BENCH_full_r*.json")))
-    if not snaps:
-        return None, None
-    try:
-        with open(snaps[-1]) as f:
-            return os.path.basename(snaps[-1]), json.load(f)
-    except (OSError, ValueError):
-        return os.path.basename(snaps[-1]), None
-
-
-def _vs_prev_normalized(
-    timings: dict[str, float],
-    cpu_probe: float,
-    disk_probe: float | None = None,
-    sf=None,
-    query_cpu_sec: dict | None = None,
-) -> dict:
-    """Per-query cpu-normalized ratios vs the newest committed
-    bench_baselines/BENCH_full_r{NN}.json snapshot (same-action only).
-    ratio = (t_now / probe_now) / (t_prev / probe_prev); >1.3 flagged.
-    Anchors with their own scale changes (terasort_20m went min-of-1
-    -> min-of-3 in r6) compare like any query — the min can only drop.
-
-    The CPU probe cannot see DISK state, and the sandbox disk is
-    burst-throttled — r7's median drifted to 1.21 purely because
-    scan-bound queries ran on a 14.6 MB/s session vs the baseline's
-    healthy one (VERDICT r7 task 3).  The median therefore ships WITH
-    both sessions' disk probes and an explicit ``disk_drift`` marker
-    (>3x probe gap in either direction): when the marker is set, a
-    uniform median shift is the machine, not the code — read the
-    per-query flags (which are median-relative and thus immune to the
-    uniform term) and the flag_recheck reverts instead."""
-    base_name, prev = _load_prev_snapshot()
-    if base_name is None:
-        return {"baseline": None}
-    if prev is None:
-        return {"baseline": base_name, "error": "unreadable snapshot"}
-    if prev.get("action") != "noop_write":
-        return {"baseline": base_name, "skipped": "action mismatch"}
-    if sf is not None and prev.get("sf") is not None and prev.get("sf") != sf:
-        # a sf0.01 smoke run against a sf0.1 snapshot would "compare"
-        # every query across data scales and flag garbage
-        return {"baseline": base_name, "skipped": f"sf mismatch ({prev.get('sf')} vs {sf})"}
-    # r14 (ADVICE): keep the RAW probe (None when the snapshot lacks it)
-    # for the drift check — the 1.0 placeholder is a normalization
-    # fallback only; comparing a real ~0.16 s probe against a fabricated
-    # 1.0 would spuriously flag drift and silently switch the health
-    # verdict onto the raw wall median.
-    prev_probe_raw = prev.get("anchors", {}).get("cpu_probe_sec")
-    prev_probe = prev_probe_raw or 1.0
-    prev_disk = prev.get("anchors", {}).get("disk_probe_mb_s")
-    disk_drift = bool(
-        prev_disk and disk_probe and not (1 / 3 <= disk_probe / prev_disk <= 3)
-    )
-    prev_queries, prev_adjudicated = _adjudicated_prev_queries(prev)
-    ratios = {}
-    for name, t_prev in prev_queries.items():
-        if name in timings and t_prev > 0:
-            ratios[name] = round((timings[name] / max(cpu_probe, 1e-9)) / (t_prev / prev_probe), 2)
-    med = sorted(ratios.values())[len(ratios) // 2] if ratios else None
-    # Flag RELATIVE TO THE MEDIAN ratio, not 1.3 absolute: the CPU
-    # probe corrects raw compute speed but not JVM/scheduler overhead
-    # shifts, which move every query's ratio together (first trial run:
-    # median 1.12 flagged 22 queries, all sub-second overhead noise).
-    # The median is the residual machine term; a query 1.3x above IT is
-    # an engine delta.  Queries under 0.3s on EITHER side are
-    # scheduler-floor noise and never flagged (2-decimal snapshot
-    # rounding also makes tiny baselines produce garbage ratios), and
-    # `med > 0` is guarded explicitly — a zero-rounded median must not
-    # silently disable all flagging (round-6 ADVICE items).
-    flagged = {
-        n: r
-        for n, r in sorted(ratios.items(), key=lambda kv: -kv[1])
-        if med is not None
-        and med > 0
-        and r / med > 1.3
-        and timings.get(n, 0) >= 0.3
-        and prev_queries.get(n, 0) >= 0.3
-    }
-    # wall-vs-cpu split (r12): when BOTH sides carry per-query JVM-CPU
-    # seconds, the median wall ratio and median cpu ratio separate
-    # "the engine computed more" from "the session waited more" —
-    # the r11 1.40-median mystery class becomes mechanically
-    # attributable.  Raw (un-normalized) ratios on both axes: the
-    # point is their DISAGREEMENT, and normalizing wall by the cpu
-    # probe while cpu seconds can't be normalized the same way would
-    # manufacture one.
-    cpu_split: dict = {}
-    prev_cpu_map = prev.get("query_cpu_sec") or {}
-    if query_cpu_sec and prev_cpu_map:
-        wall_r, cpu_r = [], []
-        for name, c_prev in prev_cpu_map.items():
-            c_now = query_cpu_sec.get(name)
-            t_prev, t_now = prev_queries.get(name), timings.get(name)
-            if c_prev and c_now and t_prev and t_now and t_prev >= 0.3 and t_now >= 0.3:
-                wall_r.append(t_now / t_prev)
-                cpu_r.append(c_now / c_prev)
-        if wall_r:
-            cpu_split = {
-                "n_compared": len(wall_r),
-                "wall_median_ratio": round(statistics.median(wall_r), 2),
-                "cpu_median_ratio": round(statistics.median(cpu_r), 2),
-            }
-    # r13: the normalization DENOMINATOR can itself drift — the sandbox's
-    # single-core sha256 probe halved between r12 and r13 (0.31 → 0.163 s)
-    # while Spark throughput was flat (raw wall median 1.07), which
-    # inflated every normalized ratio ~1.9× and made the health rule
-    # read a normalization artifact as a "real engine delta".  When the
-    # probes differ >1.5× in either direction, mark it: readers (and
-    # the health verdict below) must use the RAW cpu_split medians, not
-    # median_ratio.  Per-query FLAGS stay valid either way — they are
-    # median-relative, so a uniform probe term cancels out.
-    cpu_probe_drift = bool(
-        prev_probe_raw
-        and cpu_probe
-        and not (1 / 1.5 <= cpu_probe / prev_probe_raw <= 1.5)
-    )
-    return {
-        "baseline": base_name,
-        "prev_cpu_probe_sec": prev_probe,
-        "cpu_probe_sec": cpu_probe,
-        "prev_disk_probe_mb_s": prev_disk,
-        "disk_probe_mb_s": disk_probe,
-        "disk_drift": disk_drift,
-        "cpu_probe_drift": cpu_probe_drift,
-        "n_compared": len(ratios),
-        "median_ratio": med,
-        "cpu_split": cpu_split,
-        "flagged_over_1.3_of_median": flagged,
-        # which prev-side values were replaced by the snapshot's own
-        # fresh-session rechecks (adjudication substitution, r14)
-        "prev_adjudicated_applied": prev_adjudicated,
-    }
-
-
-def _adjudicated_prev_queries(prev: dict) -> tuple[dict[str, float], dict[str, float]]:
-    """The prev snapshot's per-query map with ADJUDICATED values
-    substituted (r14, VERDICT r13 task 1).  A committed sweep's
-    in-sweep spike that its own min-of-3 fresh-session recheck
-    contradicted is NOT the representative number — r13's snapshot
-    carried multimodal_video at 6.38 s (a fork-storm spike whose
-    recheck read 0.46 s and whose cause was reverted post-snapshot),
-    so the next round's comparison would report a phantom 9x
-    "improvement".  Preference order per query: the snapshot's
-    first-class ``queries_adjudicated`` map (written by this harness
-    from r14 on), else its ``vs_prev_normalized.flag_recheck``
-    recheck_sec (the same fresh-session re-measure, pre-r14 layout).
-    Returns (substituted map, {name: substituted value} for the
-    record)."""
-    prev_queries = dict(prev.get("queries", {}))
-    substituted: dict[str, float] = {}
-    recheck = (prev.get("vs_prev_normalized") or {}).get("flag_recheck") or {}
-    for name, r in recheck.items():
-        sec = r.get("recheck_sec")
-        if sec and name in prev_queries:
-            prev_queries[name] = sec
-            substituted[name] = sec
-    for name, sec in (prev.get("queries_adjudicated") or {}).items():
-        if sec and name in prev_queries:
-            prev_queries[name] = sec
-            substituted[name] = sec
-    return prev_queries, substituted
-
-
-def _newest_healthy_snapshot() -> str | None:
-    """Newest committed bench_baselines snapshot whose own
-    session_health verdict is healthy (or that predates the verdict
-    field) — the ``representative_snapshot`` pointer a degraded
-    session's record must carry (VERDICT r12 task 5 / r13 task 8) so
-    downstream readers compare against representative numbers instead
-    of the degraded sweep."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    for snap in sorted(
-        glob.glob(os.path.join(here, "bench_baselines", "BENCH_full_r*.json")),
-        reverse=True,
-    ):
-        try:
-            with open(snap) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            continue
-        verdict = (rec.get("session_health") or {}).get("verdict")
-        if verdict in (None, "healthy"):
-            return os.path.basename(snap)
-    return None
-
-
-def _flag_recheck(names: list[str], cpu_probe: float, vs_prev: dict) -> dict:
-    """Re-measure flagged queries min-of-3 in ONE fresh session and
-    re-derive their normalized ratios — transient noise (chunk
-    composition, GC pressure from a neighboring query's broadcasts)
-    reverts on re-measure; a real plan regression survives it.  The
-    round-6 verdict carried 6 unattributed flags precisely because this
-    step was manual; now every flag ships with its own re-measurement
-    (``reverts`` = recheck ratio back under the 1.3x-of-median bar)."""
-    from hadoop_3_3_6_spark.plans.queries import QUERIES
-
-    _, prev = _load_prev_snapshot()
-    prev_probe = (prev or {}).get("anchors", {}).get("cpu_probe_sec") or 1.0
-    prev_queries, _ = _adjudicated_prev_queries(prev or {})
-    med = vs_prev.get("median_ratio") or 1.0
-    spark = _fresh_session("bench-flag-recheck")
-    out: dict[str, dict] = {}
-    for name in names:
-        if name not in QUERIES or not prev_queries.get(name):
-            continue
-        fn = QUERIES[name]
-        best = _min_of(3, lambda: fn(spark, SF_DIR).write.mode("overwrite").format("noop").save())
-        ratio = round((best / max(cpu_probe, 1e-9)) / (prev_queries[name] / prev_probe), 2)
-        out[name] = {
-            "recheck_sec": round(best, 3),
-            "recheck_ratio": ratio,
-            "reverts": bool(med > 0 and ratio / med <= 1.3),
-        }
-        print(
-            f"# flag recheck {name}: {best:.3f}s ratio {ratio} "
-            f"({'reverts' if out[name]['reverts'] else 'PERSISTS'})",
-            file=sys.stderr,
-        )
-    spark.stop()
-    return out
 
 
 SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/spark_graft_sf1")

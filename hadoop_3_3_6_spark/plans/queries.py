@@ -8500,51 +8500,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# === Driver registration order ===========================================
-# The correctness driver consumes ``queries()`` in dict-insertion order
-# and is budgeted (round 1 verified exactly the first 50 entries).  Keep
-# everything that does NOT yet have a driver-verified green row in
-# CORRECTNESS_r01.json at the FRONT so round 2 verifies the other half
-# of the corpus; the 50 round-1-verified names ride at the back (they
-# remain covered by tests/test_oracle_parity.py every run).
-_ROUND1_DRIVER_VERIFIED = [
-    "wordcount", "multifilewc", "grep", "wordmean", "wordmedian",
-    "wordstandarddeviation", "sort", "topk_orders", "distinct_segments",
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_volume",
-    "q6_revenue_forecast", "join_inner", "join_outer", "join_override",
-    "semi_join_customers", "anti_join_customers", "tagged_join_3way",
-    "intersect_nations", "except_orderkeys", "union_heterogeneous",
-    "dbcount", "fieldsel", "aggregate_framework", "uniq_value_count",
-    "value_histogram", "secondarysort", "terasort_validate",
-    "window_topn_per_customer", "window_lag_events", "window_running_sum",
-    "sessionize_events", "streaming_tumbling_counts", "streaming_dedup",
-    "streaming_session_window", "dedup_exact", "dedup_ngram_jaccard",
-    "dedup_minhash", "dedup_simhash", "similarity_topk",
-    # similarity_lsh_topk deliberately absent: its only driver row (r1)
-    # was rows-only and predates its exact oracle — it must re-rotate.
-    "embedding_neardup", "similarity_ivf_topk",
-    "text_token_counts", "text_langid", "text_quality",
-    "text_fingerprint", "multimodal_meta", "aggregatewordcount",
-]
-
-
-# Deliberately deferred past the driver's ~50-row budget: detail/scalar
-# suites whose semantics are already exhaustively pytest-oracle-checked
-# (tests/test_oracle_parity.py) and whose parent query is driver-green.
-# They rotate into the front group next round.
-_DRIVER_DEFERRED = [
-    "value_histogram_details",
-    "date_functions",
-    "string_functions",
-    "array_functions",
-    "pi_estimate",
-    "randomtextwriter",
-    "aggregatewordhist",
-    "json_extract_events",
-    "streaming_sliding_counts",
-]
-
-
 @_register(
     "variant_events",
     """
@@ -11359,388 +11314,64 @@ def q_approx_quantiles_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Pinned to the head of the front group: flagship custom operators and
-# the TPC-H suite — the driver must verify these regardless of how many
-# extension queries register after them.
-_DRIVER_PRIORITY = [
-    "asof_join_events_orders",
-    "interval_join_shipments",
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_priority_by_status",
-    "q13_order_count_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_part_supplier_stats",
-    "q17_small_quantity",
-    "q18_large_orders",
-    "q19_disjunctive",
-    "q20_excess_share_suppliers",
-    "q21_waiting_suppliers",
-    "q22_global_sales_opportunity",
-    "sql_interface_q3",
-    "sql_interface_window",
-]
+# === Driver registration order ===========================================
+# The correctness driver consumes ``queries()`` in dict-insertion order
+# on a per-round budget.  Queries with the OLDEST driver verdict go
+# first (never-checked ones count as round 0), so every green row in
+# CORRECTNESS_r*.json gets re-confirmed in turn.
 
 
 def _driver_verified_rounds() -> dict[str, int]:
-    """Name -> LATEST round with a counting driver row (green hash, or
-    a rows-only row for a query that is still oracle-less) — read from
-    CORRECTNESS_r*.json at the repo root so the rotation self-heals
-    every round: whatever the driver has already verified yields its
-    budgeted slot to queries it has not, and once everything is green
-    the OLDEST verdicts re-rotate first so no green row goes stale.
-    Falls back to the hardcoded round-1 list when no files are
-    readable (e.g. the package runs outside the repo)."""
+    """Name -> latest round with a counting driver row in the repo's
+    CORRECTNESS_r*.json: a hash-green row, or a rows-only row for a
+    query that still has no oracle.  Empty outside the repo."""
     import glob
     import json
     import re as _re
     from pathlib import Path
 
-    rounds = {n: 1 for n in _ROUND1_DRIVER_VERIFIED}
+    rounds: dict[str, int] = {}
     root = Path(__file__).resolve().parent.parent.parent
-    for p in sorted(glob.glob(str(root / "CORRECTNESS_r*.json"))):
+    for p in glob.glob(str(root / "CORRECTNESS_r*.json")):
         m = _re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        rnd = int(m.group(1)) if m else 0
+        if not m:
+            continue
         try:
             with open(p) as f:
                 data = json.load(f)
         except (OSError, ValueError):
             continue
         for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            # hash-green, or a rows-only row for a query that is STILL
-            # oracle-less — both already consumed a driver slot.  A
-            # rows-only row for a query that has since gained an exact
-            # oracle (e.g. similarity_lsh_topk's r1 row) is stale: the
-            # query must rotate forward for a real hash check.
-            if row.get("hash_match") or (
-                row.get("err") == "no_oracle" and name not in ORACLES
+            if isinstance(row, dict) and (
+                row.get("hash_match") or (row.get("err") == "no_oracle" and name not in ORACLES)
             ):
-                rounds[name] = max(rounds.get(name, 0), rnd)
+                rounds[name] = max(rounds.get(name, 0), int(m.group(1)))
     return rounds
 
 
-def _driver_verified_names() -> set[str]:
-    return set(_driver_verified_rounds())
-
-
-# Queries added AFTER a round's verified/unverified backlog formed:
-# held back behind the never-driver-checked backlog AND the rows-only
-# tier, so new registrations never displace queries still waiting for
-# their first exact driver check.  Round-4 policy: the round-3 names
-# graduated (they ARE the backlog now and ride at the very front);
-# only queries newly registered THIS round belong here.
-_DRIVER_HOLDBACK = [
-    "randomwriter",
-    "kv_text_scan",
-    "text_lines_scan",
-    "xml_records_scan",
-    "fixedlen_scan",
-    "seqfile_filter_percent",
-    "mapfile_lookup_customers",
-    "chain_fused_lineitem",
-    "salted_join_mktsegment",
-    "timetravel_nation_versions",
-    "compaction_orders_scan",
-    "zorder_orders_scan",
-    "routed_outputs_scan",
-    "keyfield_topk_orders",
-    "archive_restore_scan",
-    "db_range_split_scan",
-    "codec_gzip_scan",
-]
-
-# Queries whose IMPLEMENTATION or ORACLE materially changed, mapped to
-# the round the change landed: their older green rows verify the OLD
-# form, so they jump the queue until a green row from >= that round
-# exists — then they graduate automatically (no manual clearing).
-_DRIVER_RECHECK = {
-    # round 6: pair-join spread now keys by cluster_id exactly (becomes
-    # the join's own non-coalescible exchange) and the corpus->centroid
-    # assignment gets the conditional spread; plans changed, outputs
-    # identical
-    "dedup_semantic": 6,
-    "similarity_ivf_topk": 6,
-    # ("keyfield_topk_orders" r5 oracle-cast + r11 DSL-conformance
-    # entries superseded by the round-12 byte-exactness entry below —
-    # python dict last-wins made the earlier pins dead weight)
-    "xml_records_scan": 5,     # exact-tag open pattern in the reader
-    "text_repetition_topgram": 5,  # O(G log G) run-length rewrite (same outputs)
-    # round 6: explicit REPARTITION_BY_NUM spread of the CPU-bound pair
-    # compare (AQE size-coalescing serialized it on ~1 task at sf1);
-    # results identical, plans changed
-    "fuzzy_join_titles": 6,
-    "embedding_neardup": 6,
-    # round 6: k-means assignment rewritten from corpus x broadcast(k)
-    #
-    # (round-9 pruning: the 13 round-8 recheck entries — the
-    # two-phase-rank similarity family, the span-dedup/simhash review
-    # fixes, temperature-mix/packing null handling, and the LSH fast
-    # tier — GRADUATED manually.  The conservative same-round rule
-    # would re-queue them because their green rows carry round 8, but
-    # the r8 VERDICT explicitly confirms those CORRECTNESS_r08 rows
-    # were recorded by the end-of-round driver run AFTER the changes
-    # landed ("re-verified fresh exact-green in r08"), so the verdicts
-    # certify the changed forms; keeping them queued would crowd the
-    # ~50-slot budget and strand the r4 rotation tail this round is
-    # tasked to drain.)
-    # (round-10 pruning: all twelve round-9 recheck entries — the
-    # Gopher counting suite, token shards, topgram, ValueHistogram x2,
-    # secondarysort, audit_orders, pipeline_sample_per_group, and the
-    # unigram/IVF-PQ entries superseded by round-10 changes below —
-    # GRADUATED manually.  The conservative same-round rule would
-    # re-queue them, but the r9 VERDICT explicitly confirms their
-    # CORRECTNESS_r09 rows were recorded by the end-of-round driver run
-    # AFTER the changes landed ("re-verified fresh exact-green in
-    # r09"), so those verdicts certify the changed forms; keeping them
-    # queued would crowd the ~50-slot budget and strand the r4
-    # rotation tail this round is tasked to drain — the same
-    # crowd-out that stranded it in round 9.)
-    # (round-11 pruning: all ten round-10 recheck entries — the three
-    # IVF-PQ tiers, tokenizer_unigram_apply, warc_source_scan,
-    # token_shards_roundtrip, terasort_validate, fieldsel, and the two
-    # aggregate-framework rows — GRADUATED manually.  The conservative
-    # same-round rule would re-queue them because their green rows
-    # carry round 10, but the r10 VERDICT explicitly confirms every
-    # materially-changed query "was force-rechecked and is fresh green
-    # in r10" (recorded by the end-of-round driver run AFTER the
-    # changes landed), so those verdicts certify the changed forms;
-    # keeping them queued would crowd the ~50-slot budget and strand
-    # the r5 vintage cohort this round is tasked to drain.)
-    # (round-12 pruning: the eight remaining round-11 recheck entries
-    # — the classifier pair and the six codec-exercising multimodal
-    # rows — GRADUATED manually.  The conservative same-round rule
-    # would re-queue them because their green rows carry round 11,
-    # but the r11 VERDICT explicitly confirms every materially-changed
-    # query "was force-rechecked via _DRIVER_RECHECK and is fresh
-    # green in r11" (recorded by the end-of-round driver run AFTER
-    # the changes landed), so those verdicts certify the changed
-    # forms; keeping them queued would waste 8 of the ~50 slots the
-    # r6 vintage cohort this round is tasked to drain needs.  The
-    # r11 KeyFieldBasedComparator entry for keyfield_topk_orders is
-    # superseded by the round-12 byte-exactness entry below.)
-    # round 12 (VERDICT r11 task 3, output rows CHANGE — supersedes
-    # the r11 classifier/sampling entry): URL canonicalization + URL
-    # dedup threaded in as capstone stage 1 (the RefinedWeb §3.2 /
-    # CCNet order); the WARC fixture gains later-dated refetch records
-    # (same canonical URL, changed body) and the accounting gains the
-    # 'url_dedup' row
-    "pipeline_pretraining_full": 12,
-    # round 11 conformance changes whose consumers were NOT queued in
-    # r11 (VERDICT r11 "What's wrong" #2 — the rows are provably
-    # unaffected: seqfile_filter_percent uses the percent form, not
-    # the regex/md5 membership changes of 7821af6; wordcount/grep pass
-    # explicit sep=" " so 0f5d0e9's default-delimiter change can't
-    # reach them — but the rotation contract is mechanical, so they
-    # get fresh verdicts anyway)
-    "seqfile_filter_percent": 11,
-    "grep": 11,
-    "wordcount": 11,
-    # round 12 (key_field_sort made BYTE-exact per the r11 ADVICE
-    # medium item: offsets compiled over encode(text,'utf-8'), binary
-    # unsigned-byte comparison — identical outputs on the registered
-    # ASCII spec, plan changes)
-    "keyfield_topk_orders": 12,
-}
-
-# Freshness pulls — NOT changed queries: standing verdicts whose
-# vintage has drifted past the rotation contract's spirit are pulled
-# into the mid tier until a green row NEWER than stale_round exists,
-# then graduate automatically (same auto-graduation rule as
-# _DRIVER_RECHECK, different reason: these rows kept losing the
-# oldest-first race to recheck/holdback crowding — the r4 cohort stood
-# five rounds).  VERDICT r9 task 1.
-_DRIVER_REFRESH = {
-    "timetravel_nation_versions": 4,
-    "compaction_orders_scan": 4,
-    "zorder_orders_scan": 4,
-    "routed_outputs_scan": 4,
-    "archive_restore_scan": 4,
-    "db_range_split_scan": 4,
-    "codec_gzip_scan": 4,
-    # the five approximate-tier pairs re-sync in one file (VERDICT r9
-    # task 2: companions drifted up to two rounds behind their fast
-    # rows — e.g. sketch_bloom_prefilter_fast r9 vs its _verdict r7);
-    # the adjacency rule in _reorder_for_driver keeps each pair in
-    # the same round's CORRECTNESS file from here on
-    "sketch_bloom_prefilter_fast": 9,
-    "sketch_bloom_prefilter_fast_verdict": 9,
-    "dedup_minhash_fast": 9,
-    "dedup_minhash_fast_verdict": 9,
-    "similarity_lsh_topk_fast": 9,
-    "similarity_lsh_topk_fast_verdict": 9,
-    "approx_distinct_suppliers": 9,
-    "approx_distinct_suppliers_verdict": 9,
-    "approx_quantiles_lineitem": 9,
-    "approx_quantiles_lineitem_verdict": 9,
-}
-
-_DRIVER_HOLDBACK_R5 = [
-    "tokenizer_bpe_apply",
-]
-_DRIVER_HOLDBACK_R6 = [
-    "pivot_status_matrix",
-    "unpivot_status_long",
-]
-_DRIVER_HOLDBACK_R7 = [
-    "dedup_minhash_fast_verdict",
-    "similarity_lsh_topk_fast_verdict",
-    "sketch_bloom_prefilter_fast_verdict",
-    "approx_distinct_suppliers_verdict",
-    "approx_quantiles_lineitem_verdict",
-    "distcp_manifest",
-    "distcpsync_incremental",
-    "dedup_minhash_verified",
-    "similarity_pq_topk",
-    "pipeline_importance_resample",
-]
-_DRIVER_HOLDBACK_R8 = [
-    "similarity_ivf_pq_topk",
-    "distch_manifest",
-    "pipeline_contamination_semantic",
-    "pipeline_perplexity_buckets",
-    "similarity_opq_topk",
-    "bucketed_join_customers",
-    "skipbad_quarantine_scan",
-    "db_output_roundtrip",
-    "pipeline_gopher_rules",
-    "similarity_ivf_pq_residual_topk",
-    "text_repetition_gopher",
-    "multimodal_phash_dedup",
-    "token_shards_roundtrip",
-    "similarity_ivf_pq_refined_topk",
-    "tokenizer_unigram_apply",
-    "pipeline_quality_funnel",
-    "multimodal_phash_incremental",
-    "nline_split_scan",
-    "inverse_map",
-    "observe_counters",
-]
-_DRIVER_HOLDBACK_R9 = [
-    "text_html_extract",
-    "pipeline_web_e2e",
-    "similarity_pq_incremental",
-    "dedup_spans_apply",
-    "dedup_lines_apply",
-]
-_DRIVER_HOLDBACK_R10 = [
-    "pipeline_pretraining_full",
-    "bloommapfile_point_skip",
-    "lazyoutput_empty_parts",
-    "pipeline_web_streaming",
-    "pipeline_quality_classifier",
-    "pipeline_classifier_eval",
-    "keyfield_partitioner_colocation",
-    "seqfile_as_text_scan",
-    "rangestream_drain",
-]
-_DRIVER_HOLDBACK_R11 = [
-    "seqfile_as_binary_scan",
-    "nulloutput_noop",
-    "pipeline_url_dedup",
-    "warc_stream_sink_roundtrip",
-]
-_DRIVER_HOLDBACK_R12 = [
-    "seqfile_filter_percent_positional",
-    "pipeline_classifier_calibration",
-    "teragen_gensort_validate",
-    "auto_input_scan",
-    "inputsampler_totalorder",
-]
-_DRIVER_HOLDBACK = (
-    _DRIVER_HOLDBACK
-    + _DRIVER_HOLDBACK_R5
-    + _DRIVER_HOLDBACK_R6
-    + _DRIVER_HOLDBACK_R7
-    + _DRIVER_HOLDBACK_R8
-    + _DRIVER_HOLDBACK_R9
-    + _DRIVER_HOLDBACK_R10
-    + _DRIVER_HOLDBACK_R11
-    + _DRIVER_HOLDBACK_R12
-)
-
-
-def _reorder_for_driver() -> None:
-    verified_rounds = _driver_verified_rounds()
-    verified = set(verified_rounds)
-    deferred = set(_DRIVER_DEFERRED)
-    holdback = [n for n in _DRIVER_HOLDBACK if n in QUERIES and n not in verified]
-    held = set(holdback)
-    priority = [n for n in _DRIVER_PRIORITY if n in QUERIES and n not in verified]
-    front = priority + [
-        n for n in QUERIES
-        if n not in verified and n not in deferred and n not in priority
-        and n not in held and n in ORACLES
-    ]
-    # A query graduates from recheck only once a green row exists from a
-    # round STRICTLY AFTER changed_round: a green row recorded earlier in
-    # the same round (before the change landed mid-round) would otherwise
-    # wrongly count as verifying the new form (round-5 ADVICE item).
-    recheck = [
-        n for n, changed_round in _DRIVER_RECHECK.items()
-        if n in QUERIES and n not in front
-        and verified_rounds.get(n, 0) <= changed_round
-    ]
-    refresh = [
-        n for n, stale_round in _DRIVER_REFRESH.items()
-        if n in QUERIES and n not in front and n not in recheck
-        and verified_rounds.get(n, 0) <= stale_round
-    ]
-    # Mid-tier priority maximizes exact-green coverage per budget slot:
-    # (1) materially-changed queries needing a fresh verdict,
-    # (2) freshness pulls (standing verdicts past the staleness bound),
-    # (3) held-back NEW exact-oracle queries (first hash check),
-    # (4) no-oracle entries (first rows-only row — weaker, so after),
-    # (5) deferred unverified names (explicitly pushed back).
-    no_oracle = [
-        n for n in QUERIES
-        if n not in verified and n not in ORACLES and n not in recheck
-    ]
-    mid = recheck + refresh + holdback + no_oracle + [
-        n for n in _DRIVER_DEFERRED if n in QUERIES and n not in verified
-    ]
-    placed = set(front) | set(mid)
-    # Everything verified re-confirms OLDEST green verdict first, so a
-    # ~50-slot round keeps every standing verdict at most a few rounds
-    # stale; ties keep registration order (stable sort).
-    back = sorted(
-        (n for n in QUERIES if n not in placed),
-        key=lambda n: verified_rounds.get(n, 0),
-    )
+def _driver_order(names: list[str], rounds: dict[str, int]) -> list[str]:
+    """``names`` stable-sorted by their latest green round (absent = 0),
+    with each ``x`` / ``x_verdict`` pair adjacent: an approximate row
+    and its exact verdict twin certify one contract, so whichever the
+    sort reaches first pulls its partner into the next slot."""
+    present = set(names)
     order: list[str] = []
     emitted: set[str] = set()
-    for name in front + mid + back:
-        if name in emitted:
-            continue
-        # Companion-pairing rule (VERDICT r9 task 2): an approximate
-        # *_fast/no-oracle row and its exact *_verdict twin certify ONE
-        # contract, so whichever member the rotation reaches first
-        # drags its partner into the adjacent slot — the pair always
-        # lands in the same round's CORRECTNESS file instead of the
-        # companion's verdict aging independently.
-        pair = [name]
-        if name.endswith("_verdict") and name[: -len("_verdict")] in QUERIES:
-            pair.append(name[: -len("_verdict")])
-        elif name + "_verdict" in QUERIES:
-            pair.append(name + "_verdict")
-        for p in pair:
-            if p not in emitted:
-                order.append(p)
-                emitted.add(p)
+    for name in sorted(names, key=lambda n: rounds.get(n, 0)):
+        partner = name[: -len("_verdict")] if name.endswith("_verdict") else name + "_verdict"
+        for n in (name, partner):
+            if n in present and n not in emitted:
+                order.append(n)
+                emitted.add(n)
+    return order
+
+
+def _apply_driver_order() -> None:
+    order = _driver_order(list(QUERIES), _driver_verified_rounds())
     for registry in (QUERIES, ORACLES):
         snapshot = dict(registry)
         registry.clear()
-        for name in order:
-            if name in snapshot:
-                registry[name] = snapshot[name]
-    assert set(QUERIES) == emitted == placed | set(back), "reorder dropped queries"
+        registry.update((n, snapshot[n]) for n in order if n in snapshot)
 
 
-_reorder_for_driver()
+_apply_driver_order()

@@ -74,13 +74,17 @@ def sized_state_partitions(
             # multi-file parquet dataset (the realistic at-scale shape):
             # getsize on the directory returns the inode size (~4 KB),
             # which would silently pin the count to the floor — sum the
-            # data files instead (r14 ADVICE fix)
-            nbytes = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _dirs, files in os.walk(path)
-                for f in files
-                if not f.startswith((".", "_"))
-            )
+            # data files instead (r14 ADVICE fix).  Hidden and
+            # underscore DIRECTORIES are pruned too: an interrupted
+            # write's _temporary/ tree is not part of the dataset.
+            nbytes = 0
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+                nbytes += sum(
+                    os.path.getsize(os.path.join(root, f))
+                    for f in files
+                    if not f.startswith((".", "_"))
+                )
         else:
             nbytes = os.path.getsize(path)
     except OSError:

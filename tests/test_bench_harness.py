@@ -1,13 +1,12 @@
-"""bench.py harness safety contracts (round-7 ADVICE + VERDICT task 3).
+"""bench.py harness safety contracts (round-7 ADVICE).
 
-These are pure-function tests — no SparkSession — pinning:
+Pinned here:
 - the stale-scratch sweep deletes ONLY Spark-scratch-named entries,
   resolves its base through the same helper get_spark uses, and keys
   staleness off the tree's max mtime (a live session writing into
-  nested hash-bucket subdirs must not be swept);
-- the 200M-anchor session history attaches each session's disk probe;
-- the vs_prev normalizer carries the disk-probe pair and flags >3x
-  drift so a machine-wide disk throttle is not read as a regression.
+  nested hash-bucket subdirs must not be swept) — pure-function tests,
+  no SparkSession;
+- the JVM CPU and GC probes read a live session and move forward.
 """
 
 from __future__ import annotations
@@ -75,229 +74,6 @@ def test_sweep_base_resolution_is_shared_with_session(monkeypatch, tmp_path):
     monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR")
     resolved = spark_local_dir()
     assert resolved == ("/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp")
-
-
-def test_terasort_sessions_attach_disk_probe(monkeypatch, tmp_path):
-    bench = _bench(monkeypatch, tmp_path)
-    sessions = bench._terasort_200m_sessions(100.0, 250.0)
-    assert sessions[-1] == {
-        "src": "this_session",
-        "sec": 100.0,
-        "gb_per_node_min": 12.0,
-        "disk_probe_mb_s": 250.0,
-    }
-    # committed snapshots ride along with their own probes (or None
-    # for pre-probe rounds)
-    assert all({"src", "sec", "gb_per_node_min", "disk_probe_mb_s"} <= set(s) for s in sessions)
-
-
-def test_vs_prev_carries_disk_probe_pair_and_drift(monkeypatch, tmp_path):
-    bench = _bench(monkeypatch, tmp_path)
-    _, prev = bench._load_prev_snapshot()
-    if prev is None or prev.get("action") != "noop_write":
-        import pytest
-
-        pytest.skip("no committed noop_write snapshot")
-    prev_disk = prev.get("anchors", {}).get("disk_probe_mb_s")
-    out = bench._vs_prev_normalized({"q1_pricing_summary": 1.0}, 0.2, disk_probe=400.0)
-    assert out["disk_probe_mb_s"] == 400.0
-    assert out["prev_disk_probe_mb_s"] == prev_disk
-    if prev_disk:
-        assert out["disk_drift"] == (not (1 / 3 <= 400.0 / prev_disk <= 3))
-
-
-def test_session_health_rules(monkeypatch, tmp_path):
-    """The r12 sweep-health verdict (VERDICT r11 task 1): degraded when
-    a probe catches the resource (disk floor, in-session cpu drift,
-    wait-dominated wall-vs-cpu split), unattributed when the median
-    moved with flat probes, healthy otherwise."""
-    bench = _bench(monkeypatch, tmp_path)
-    ok = {"cpu_probe_sec": 0.25, "disk_probe_mb_s": 300.0}
-    out = bench._session_health(dict(ok), dict(ok), {"median_ratio": 1.02})
-    assert out["verdict"] == "healthy" and not out["reasons"]
-    out = bench._session_health(
-        {"cpu_probe_sec": 0.25, "disk_probe_mb_s": 20.0}, dict(ok), {"median_ratio": 1.0}
-    )
-    assert out["verdict"] == "degraded"
-    out = bench._session_health(
-        dict(ok), {"cpu_probe_sec": 0.35, "disk_probe_mb_s": 300.0}, {"median_ratio": 1.0}
-    )
-    assert out["verdict"] == "degraded"
-    # the r11 mystery class, now attributable: wall up, JVM cpu flat
-    out = bench._session_health(
-        dict(ok),
-        dict(ok),
-        {
-            "median_ratio": 1.4,
-            "cpu_split": {"wall_median_ratio": 1.4, "cpu_median_ratio": 1.02},
-        },
-    )
-    assert out["verdict"] == "degraded"
-    assert any("wait-dominated" in r for r in out["reasons"])
-    # same median with no split evidence and flat probes: unattributed
-    out = bench._session_health(dict(ok), dict(ok), {"median_ratio": 1.4})
-    assert out["verdict"] == "unattributed"
-    assert any("probe suite" in r for r in out["reasons"])
-    # cpu TRACKING wall is the opposite of wait-dominated: the session
-    # is healthy and the slowdown is a REAL engine delta (round-12
-    # review fix — this class must never be filed as 'unattributed')
-    out = bench._session_health(
-        dict(ok),
-        dict(ok),
-        {
-            "median_ratio": 1.4,
-            "cpu_split": {"wall_median_ratio": 1.4, "cpu_median_ratio": 1.38},
-        },
-    )
-    assert out["verdict"] == "healthy"
-    assert any("REAL engine delta" in r for r in out["reasons"])
-    # a degraded verdict's reasons never claim health
-    out = bench._session_health(
-        dict(ok), {"cpu_probe_sec": 0.25, "disk_probe_mb_s": 100.0}, {"median_ratio": 0.99}
-    )
-    assert out["verdict"] == "degraded"  # 300 -> 100 MB/s across the sweep
-    # r13: a CROSS-SNAPSHOT cpu-probe drift makes the normalized median
-    # a normalization artifact — the verdict must be judged on the raw
-    # wall median instead (here 1.07: healthy, noted), not on the
-    # inflated 2.05 (which would have claimed a "REAL engine delta")
-    out = bench._session_health(
-        dict(ok),
-        dict(ok),
-        {
-            "median_ratio": 2.05,
-            "cpu_probe_drift": True,
-            "prev_cpu_probe_sec": 0.31,
-            "cpu_probe_sec": 0.163,
-            "cpu_split": {"wall_median_ratio": 1.07, "cpu_median_ratio": 1.11},
-        },
-    )
-    assert out["verdict"] == "healthy"
-    assert any("normalization artifact" in r for r in out["reasons"])
-    # r14 (ADVICE): a raw-median regression COINCIDING with cross-
-    # snapshot probe drift is ambiguous — a genuine machine-speed
-    # change would show exactly this signature (raw wall up, raw cpu
-    # tracking it, probe moved), so the verdict must NOT assert engine
-    # attribution; it downgrades to unattributed and points readers at
-    # the median-relative per-query flags.
-    out = bench._session_health(
-        dict(ok),
-        dict(ok),
-        {
-            "median_ratio": 2.6,
-            "cpu_probe_drift": True,
-            "cpu_split": {"wall_median_ratio": 1.4, "cpu_median_ratio": 1.35},
-        },
-    )
-    assert out["verdict"] == "unattributed"
-    assert any("machine-" in r for r in out["reasons"])
-
-
-def test_adjudicated_prev_queries_substitution(monkeypatch, tmp_path):
-    """r14 (VERDICT r13 task 1): a prev snapshot's in-sweep spike that
-    its own fresh-session recheck contradicted must not serve as the
-    comparison baseline — the recheck value substitutes, and the
-    first-class queries_adjudicated map (r14 snapshots) wins over the
-    legacy flag_recheck layout."""
-    bench = _bench(monkeypatch, tmp_path)
-    prev = {
-        "queries": {"a": 6.38, "b": 1.0, "c": 2.0},
-        "vs_prev_normalized": {
-            "flag_recheck": {
-                "a": {"recheck_sec": 0.46, "recheck_ratio": 1.1, "reverts": True},
-                "c": {"recheck_sec": 1.5, "recheck_ratio": 3.0, "reverts": False},
-            }
-        },
-        "queries_adjudicated": {"c": 1.4},
-    }
-    out, subst = bench._adjudicated_prev_queries(prev)
-    assert out == {"a": 0.46, "b": 1.0, "c": 1.4}
-    assert subst == {"a": 0.46, "c": 1.4}
-    # entries for queries absent from the map never invent a baseline
-    prev2 = {"queries": {"x": 1.0}, "queries_adjudicated": {"ghost": 9.9}}
-    out2, subst2 = bench._adjudicated_prev_queries(prev2)
-    assert out2 == {"x": 1.0} and subst2 == {}
-
-
-def test_cpu_probe_drift_needs_real_prev_probe(monkeypatch, tmp_path):
-    """r14 (ADVICE medium): when the committed snapshot lacks
-    anchors.cpu_probe_sec, the drift check must not compare the real
-    probe against the fabricated 1.0 normalization fallback."""
-    import json
-
-    bench = _bench(monkeypatch, tmp_path)
-    snapdir = tmp_path / "bench_baselines"
-    snapdir.mkdir()
-    snap = {
-        "action": "noop_write",
-        "sf": 0.1,
-        "queries": {"q": 1.0},
-        "anchors": {},  # no cpu_probe_sec — pre-probe-era snapshot
-    }
-    (snapdir / "BENCH_full_r99.json").write_text(json.dumps(snap))
-    monkeypatch.setattr(
-        bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
-    )
-    out = bench._vs_prev_normalized({"q": 1.0}, 0.16, sf=0.1)
-    assert out["baseline"] == "BENCH_full_r99.json"
-    assert out["cpu_probe_drift"] is False  # 0.16 vs fabricated 1.0 must NOT flag
-
-
-def test_newest_healthy_snapshot(monkeypatch, tmp_path):
-    """The representative_snapshot pointer resolves to the newest
-    committed snapshot whose own session_health is healthy (or that
-    predates the field), skipping degraded sweeps."""
-    import json
-
-    bench = _bench(monkeypatch, tmp_path)
-    snapdir = tmp_path / "bench_baselines"
-    snapdir.mkdir()
-    (snapdir / "BENCH_full_r01.json").write_text(
-        json.dumps({"queries": {}})  # pre-verdict era: counts as healthy
-    )
-    (snapdir / "BENCH_full_r02.json").write_text(
-        json.dumps({"session_health": {"verdict": "healthy"}})
-    )
-    (snapdir / "BENCH_full_r03.json").write_text(
-        json.dumps({"session_health": {"verdict": "degraded"}})
-    )
-    monkeypatch.setattr(
-        bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
-    )
-    assert bench._newest_healthy_snapshot() == "BENCH_full_r02.json"
-
-
-def test_vs_prev_cpu_split(monkeypatch, tmp_path):
-    """cpu_split appears only when BOTH sides carry per-query JVM-CPU
-    seconds, and reports raw wall/cpu median ratios over queries >=
-    0.3 s on both sides."""
-    import json
-
-    bench = _bench(monkeypatch, tmp_path)
-    prev_name, prev = bench._load_prev_snapshot()
-    if prev is None or prev.get("action") != "noop_write":
-        import pytest
-
-        pytest.skip("no committed noop_write snapshot")
-    if not prev.get("query_cpu_sec"):
-        # pre-r12 snapshots carry no cpu map: the split must be empty
-        out = bench._vs_prev_normalized(
-            {"q1_pricing_summary": 1.0}, 0.2, query_cpu_sec={"q1_pricing_summary": 2.0}
-        )
-        assert out.get("cpu_split") == {}
-    else:
-        name, c_prev = next(
-            (n, c)
-            for n, c in prev["query_cpu_sec"].items()
-            if c and prev["queries"].get(n, 0) >= 0.3
-        )
-        t_prev = prev["queries"][name]
-        out = bench._vs_prev_normalized(
-            {name: t_prev * 1.4}, 0.2, query_cpu_sec={name: c_prev * 1.01}
-        )
-        split = out["cpu_split"]
-        assert split["n_compared"] == 1
-        assert split["wall_median_ratio"] == 1.4
-        assert split["cpu_median_ratio"] == 1.01
 
 
 def test_jvm_probes_live(monkeypatch, tmp_path, spark):

@@ -550,35 +550,61 @@ def test_query_construction_runs_no_jobs(spark, sf_dir):
 
 
 def test_driver_rotation_invariants():
-    """The self-healing driver ordering must (a) never drop a query,
-    (b) fill the first 50 slots with exact-oracle queries that have no
-    green row in any recorded CORRECTNESS_r*.json, and (c) keep the
-    pinned flagship/TPC-H names in front of the budget."""
+    """The driver verification order is one rule: registration order
+    stable-sorted by latest green round (never-checked = 0), with no
+    name dropped or duplicated — and the live registry is exactly that
+    rule applied to the committed CORRECTNESS files."""
     from hadoop_3_3_6_spark.plans.queries import (
-        ORACLES,
-        _DRIVER_HOLDBACK,
-        _DRIVER_PRIORITY,
-        _driver_verified_names,
+        _driver_order,
+        _driver_verified_rounds,
     )
 
+    names = [
+        "a_old", "b_new", "c_fast", "d_never", "c_fast_verdict",
+        "e_old", "f_mid", "g_never",
+    ]
+    rounds = {
+        "a_old": 3, "b_new": 9, "c_fast": 7, "c_fast_verdict": 2,
+        "e_old": 3, "f_mid": 5,
+    }
+    order = _driver_order(names, rounds)
+    assert sorted(order) == sorted(names) and len(order) == len(set(order))
+    # never-checked first (registration order), then oldest green round
+    # with ties in registration order; the fast row (round 7) is pulled
+    # up next to its round-2 verdict twin
+    assert order == [
+        "d_never", "g_never", "c_fast_verdict", "c_fast",
+        "a_old", "e_old", "f_mid", "b_new",
+    ]
+
+    live = list(QUERIES)
+    assert live == _driver_order(live, _driver_verified_rounds())
+
+
+def test_driver_rotation_refresh_and_companion_pairing():
+    """A ``x`` / ``x_verdict`` pair always occupies ADJACENT slots, even
+    when the two were last green in different rounds, so both land in
+    the same round's CORRECTNESS file. (The separate refresh tier this
+    test once pinned is gone: a stale name now sorts forward by its old
+    round under the one order rule.)"""
+    from hadoop_3_3_6_spark.plans.queries import _driver_order
+
+    # a pair reached base-first keeps base-then-verdict
+    assert _driver_order(["x_verdict", "x"], {"x": 1, "x_verdict": 4}) == ["x", "x_verdict"]
+    # a pair reached verdict-first keeps verdict-then-base, and a stale
+    # name (round 1) sorts ahead of fresher ones
+    assert _driver_order(
+        ["y", "z", "z_verdict", "w"], {"y": 6, "z": 8, "z_verdict": 2, "w": 1}
+    ) == ["w", "z_verdict", "z", "y"]
+
     names = list(QUERIES)
-    verified = _driver_verified_names()
-    # held-back (newly registered) queries deliberately sit BEHIND the
-    # rows-only tier; exclude them from the front-slot guarantee
-    unverified_oracle = [
-        n for n in names
-        if n in ORACLES and n not in verified and n not in _DRIVER_HOLDBACK
-    ]
-    # Only the first min(50, #unverified-with-oracle) slots are guaranteed
-    # to be unverified exact-oracle queries; once the backlog shrinks below
-    # the driver budget, later slots legally hold verified/no-oracle names.
-    top = names[: min(50, len(unverified_oracle))]
-    assert all(n in ORACLES and n not in verified for n in top), [
-        n for n in top if n not in ORACLES or n in verified
-    ]
-    for n in _DRIVER_PRIORITY:
-        if n in QUERIES and n not in verified:
-            assert n in top, f"priority query {n} fell out of the driver budget"
+    pos = {n: i for i, n in enumerate(names)}
+    for n in names:
+        if n.endswith("_verdict") and n[: -len("_verdict")] in pos:
+            base = n[: -len("_verdict")]
+            assert abs(pos[n] - pos[base]) == 1, (
+                f"companion {n} not adjacent to {base}: {pos[n]} vs {pos[base]}"
+            )
 
 
 def test_oracle_coverage_is_pinned():
@@ -916,31 +942,6 @@ def test_dynamic_partition_pruning_fires(spark, sf_dir):
         assert "dynamicpruning" in plan.lower(), plan[:3000]
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-def test_driver_rotation_refresh_and_companion_pairing():
-    """Round-10 rotation contract additions: (a) _DRIVER_REFRESH names
-    whose standing verdict is still at/under their stale_round ride the
-    mid tier (inside the ~50-slot budget), and (b) a *_fast/no-oracle
-    row and its exact *_verdict twin always occupy ADJACENT slots so
-    both land in the same round's CORRECTNESS file."""
-    from hadoop_3_3_6_spark.plans.queries import (
-        _DRIVER_REFRESH,
-        _driver_verified_rounds,
-    )
-
-    names = list(QUERIES)
-    pos = {n: i for i, n in enumerate(names)}
-    rounds = _driver_verified_rounds()
-    for n, stale in _DRIVER_REFRESH.items():
-        if n in QUERIES and rounds.get(n, 0) <= stale:
-            assert pos[n] < 50, f"refresh name {n} outside the driver budget"
-    for n in names:
-        if n.endswith("_verdict") and n[: -len("_verdict")] in pos:
-            base = n[: -len("_verdict")]
-            assert abs(pos[n] - pos[base]) == 1, (
-                f"companion {n} not adjacent to {base}: {pos[n]} vs {pos[base]}"
-            )
 
 
 def test_pretraining_full_stage_conservation(spark):
