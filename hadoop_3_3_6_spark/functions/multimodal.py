@@ -18,9 +18,9 @@ is REAL for YUV4MPEG2 (C420/C444) — ``decode_y4m`` / ``encode_y4m``;
 ``frame_sample_stub`` samples real y4m frames.  MP3/MP4 METADATA
 extraction is REAL (``parse_mp3_metadata`` walks MPEG audio frame
 headers, ``parse_mp4_metadata`` walks ISO-BMFF boxes — the typed
-metadata a corpus-stats pass needs); only their full sample decode
-stays gated behind ``fake=True`` / NotImplementedError — that
-genuinely requires external codec libraries not in this environment.
+metadata a corpus-stats pass needs); their full sample decode raises
+NotImplementedError — that genuinely requires external codec
+libraries not in this environment.
 """
 
 from __future__ import annotations
@@ -425,15 +425,14 @@ def y4m_frame_luma(meta: dict, frame: bytes) -> np.ndarray:
     return np.frombuffer(frame, dtype=np.uint8, count=w * h).reshape(h, w)
 
 
-def decode_stub(payload: bytes, modality: str = "image", fake: bool = False) -> dict:
+def decode_stub(payload: bytes, modality: str = "image") -> dict:
     """Decode one payload to typed metadata + an 8-dim feature.
 
     Real path: PPM/BMP/PNG/baseline-JPEG images decode via
     ``decode_image`` — the feature is [per-channel mean (3),
     per-channel max (3), normalized aspect terms (2)].  Remaining
     formats (MP3/MP4 audio/video) require codec libraries not in this
-    environment: ``fake=True`` substitutes a digest-derived
-    pseudo-feature with the same contract, else NotImplementedError."""
+    environment and raise NotImplementedError."""
     if modality == "image":
         try:
             arr = decode_image(bytes(payload))
@@ -449,25 +448,15 @@ def decode_stub(payload: bytes, modality: str = "image", fake: bool = False) -> 
                 "channels": 3,
                 "feature": [*means.tolist(), *maxes.tolist(), w / (w + h), h / (w + h)],
             }
-    if not fake:
-        raise NotImplementedError(
-            f"media decode for modality={modality!r} requires external libraries not present in this environment"
-        )
-    digest = hashlib.sha256(payload).digest()
-    return {
-        "width": 1 + digest[0],
-        "height": 1 + digest[1],
-        "channels": 3,
-        "feature": [b / 255.0 for b in digest[:8]],
-    }
+    raise NotImplementedError(
+        f"media decode for modality={modality!r} requires external libraries not present in this environment"
+    )
 
 
-def resize_stub(payload: bytes, width: int, height: int, fake: bool = False) -> bytes:
+def resize_stub(payload: bytes, width: int, height: int) -> bytes:
     """Resize one image payload.  Real path: PPM/BMP/PNG/JPEG decode →
     nearest-neighbor resize → re-encode in the same container format.
-    Other formats: ``fake=True`` returns a deterministic digest-derived
-    pseudo-thumbnail (same bytes-in/bytes-out contract), else
-    NotImplementedError."""
+    Other formats raise NotImplementedError."""
     payload = bytes(payload)
     try:
         arr = decode_image(payload)
@@ -482,22 +471,16 @@ def resize_stub(payload: bytes, width: int, height: int, fake: bool = False) -> 
 
             return encode_jpeg(small)
         return encode_ppm(small) if payload[:2] == b"P6" else encode_bmp(small)
-    if not fake:
-        raise NotImplementedError(
-            "resize of non-PPM/BMP/PNG/JPEG images requires PIL/opencv, not present in this environment"
-        )
-    digest = hashlib.sha256(payload).digest()
-    need = width * height
-    return (digest * (need // len(digest) + 1))[:need]
+    raise NotImplementedError(
+        "resize of non-PPM/BMP/PNG/JPEG images requires PIL/opencv, not present in this environment"
+    )
 
 
-def frame_sample_stub(payload: bytes, every_n: int = 10, fake: bool = False) -> list[bytes]:
+def frame_sample_stub(payload: bytes, every_n: int = 10) -> list[bytes]:
     """Video frame sampling.  Real path: YUV4MPEG2 streams decode via
     ``decode_y4m`` and every n-th frame is re-encoded as a standalone
     single-frame y4m (self-describing blob).  Compressed containers
-    (MP4/MKV) require ffmpeg: ``fake=True`` treats the payload as a
-    byte stream of 16-byte 'frames' with the same output contract,
-    else NotImplementedError."""
+    (MP4/MKV) require ffmpeg and raise NotImplementedError."""
     payload = bytes(payload)
     try:
         meta, frames = decode_y4m(payload)
@@ -505,21 +488,18 @@ def frame_sample_stub(payload: bytes, every_n: int = 10, fake: bool = False) -> 
         meta = None
     if meta is not None:
         return [encode_y4m(meta, [f]) for f in frames[::every_n]]
-    if not fake:
-        raise NotImplementedError("compressed video decode requires ffmpeg, not present in this environment")
-    frames = [payload[i : i + 16] for i in range(0, len(payload), 16)]
-    return frames[::every_n]
+    raise NotImplementedError("compressed video decode requires ffmpeg, not present in this environment")
 
 
 def resize_images(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", width: int = 8, height: int = 8, fake: bool = True
+    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", width: int = 8, height: int = 8
 ) -> DataFrame:
     """Distributed resize stage: mapInPandas over binary payloads →
     (id, thumbnail binary, n_bytes).  Arrow carries bytes both ways."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            thumbs = pdf[payload_col].map(lambda b: resize_stub(bytes(b), width, height, fake=fake))
+            thumbs = pdf[payload_col].map(lambda b: resize_stub(bytes(b), width, height))
             yield pd.DataFrame(
                 {id_col: pdf[id_col], "thumbnail": thumbs, "n_bytes": thumbs.map(len).astype("int32")}
             )
@@ -528,7 +508,7 @@ def resize_images(
 
 
 def sample_frames(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", every_n: int = 10, fake: bool = True
+    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", every_n: int = 10
 ) -> DataFrame:
     """Distributed frame sampling: one output row per kept frame
     (id, frame_idx, frame binary) — the explode-shaped mapInPandas."""
@@ -537,7 +517,7 @@ def sample_frames(
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for i, b in zip(pdf[id_col], pdf[payload_col]):
-                for j, fr in enumerate(frame_sample_stub(bytes(b), every_n, fake=fake)):
+                for j, fr in enumerate(frame_sample_stub(bytes(b), every_n)):
                     ids.append(i)
                     idxs.append(j)
                     frames.append(fr)
@@ -547,7 +527,7 @@ def sample_frames(
 
 
 def decode_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id", fake: bool = True
+    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
     """Decode/feature-extract stage over binary payloads: mapInPandas
     with an 8-dim feature vector output — the batch shape a real
@@ -555,7 +535,7 @@ def decode_features(
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = pdf[payload_col].map(lambda b: decode_stub(bytes(b), fake=fake))
+            feats = pdf[payload_col].map(lambda b: decode_stub(bytes(b)))
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],

@@ -1319,17 +1319,6 @@ def qc_sigmoid_table_micro() -> list[int]:
     ]
 
 
-def qc_bucket_expr(tok_sql: str, buckets: int, salt: str = "qc1") -> str:
-    """Portable feature hash: pmod of the md5-ring 60-bit hash — the
-    same cross-engine device the minhash family uses.  ``salt``
-    namespaces the gram order inside the shared bucket space ('qc1'
-    unigrams, 'qc2' word bigrams)."""
-    from hadoop_3_3_6_spark.functions.dedup import portable_hash_expr
-
-    salted = f"concat('{salt}:', {tok_sql})"
-    return f"pmod({portable_hash_expr(salted)}, {buckets})"
-
-
 def _qc_gram_sql(words_sql: str, word_ngrams: int) -> str:
     """SQL expression for a doc's SALTED feature-gram strings from a
     words-array expression: 'qc1:<w>' unigrams plus, at

@@ -10,8 +10,10 @@ MRC/mapreduce/Reducer.java:124).  The engine's tiers, fastest first:
 4. applyInPandas / mapInPandas                       — whole-group/partition
 5. rdd.pipe (operators/pipeops.py)                   — external executables
 
-These examples are engine-registered so queries can exercise the tier-2
-and tier-3 machinery; real pipelines define their own the same way.
+The examples below are engine-registered so queries can exercise the
+tier-3 machinery and the Python UDTF; tier 2 is used in place by the
+text, BPE and similarity stages.  Real pipelines define their own the
+same way.
 """
 
 from __future__ import annotations
@@ -21,14 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-
-@pandas_udf("double")
-def norm_price(price: pd.Series, discount: pd.Series) -> pd.Series:
-    """Scalar pandas UDF (Arrow-batched): discounted price.  One
-    vectorized numpy multiply per batch — the TypedBytes/streaming role
-    played natively."""
-    return price * (1.0 - discount)
 
 
 @pandas_udf("double")

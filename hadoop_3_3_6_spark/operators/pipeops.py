@@ -30,16 +30,6 @@ def pipe_map(df: DataFrame, command: str, sep: str = "\t", out_col: str = "line"
     return spark.createDataFrame(piped.map(lambda l: (l,)), schema=f"{out_col} string")
 
 
-def pipe_reduce(
-    df: DataFrame, key_cols: list[str], command: str, sep: str = "\t", out_col: str = "line"
-) -> DataFrame:
-    """PipeReducer semantics: records grouped (hash-partitioned) and
-    sorted by key reach the child process contiguously, so line-oriented
-    reducers (uniq -c, awk accumulators) see whole groups."""
-    parts = df.repartition(*key_cols).sortWithinPartitions(*key_cols)
-    return pipe_map(parts, command, sep=sep, out_col=out_col)
-
-
 def chain(df: DataFrame, *stages) -> DataFrame:
     """ChainMapper/ChainReducer (MRC/mapreduce/lib/chain/Chain.java):
     pipeline of DataFrame->DataFrame stages fused into one pass —

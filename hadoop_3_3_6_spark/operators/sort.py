@@ -119,25 +119,6 @@ def grouped_sorted_apply(
     return ordered.mapInPandas(run, schema=schema)
 
 
-def secondary_sort_streaming(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[str],
-    map_fn,
-    schema,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Giant-group-safe variant: hash-repartition on the group key,
-    sort within partitions on (group, order), then stream batches
-    through ``mapInPandas``.  ``map_fn(iter_of_pdf) -> iter_of_pdf``
-    sees each partition's rows in full (group, order) order — exactly
-    the reference reducer's input contract without materializing a
-    group in memory."""
-    parts = df.repartition(num_partitions, *group_cols) if num_partitions else df.repartition(*group_cols)
-    ordered = parts.sortWithinPartitions(*group_cols, *order_cols)
-    return ordered.mapInPandas(map_fn, schema=schema)
-
-
 # --- KeyFieldBasedComparator DSL ----------------------------------------
 
 

@@ -2270,7 +2270,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     blobs = docs.mapInPandas(render, schema="doc_id bigint, payload binary")
-    feats = decode_features(blobs, "payload", "doc_id", fake=False)
+    feats = decode_features(blobs, "payload", "doc_id")
     return feats.select(
         "doc_id",
         "width",
@@ -3514,7 +3514,7 @@ def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     blobs = docs.mapInPandas(render, schema="doc_id bigint, payload binary")
-    kept = sample_frames(blobs, "payload", "doc_id", every_n=2, fake=False)
+    kept = sample_frames(blobs, "payload", "doc_id", every_n=2)
 
     def features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

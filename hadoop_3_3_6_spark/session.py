@@ -65,25 +65,7 @@ def get_spark(app_name: str = "hadoop-3-3-6-spark", shuffle_partitions: int | No
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Broadcast joins for small dims (region/nation/supplier).
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Arrow for every JVM<->Python exchange (pandas UDFs,
-        # mapInPandas/applyInPandas) — the reference's TypedBytes role.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # custom Python DataSources (sources/pydatasource.py) implement
-        # pushFilters; Spark refuses a pushdown-capable reader unless on
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Match Hadoop's permissive numeric semantics (no ANSI errors
-        # on overflow/cast; MR user code wrapped silently).
-        .config("spark.sql.ansi.enabled", "false")
-        # Deterministic epoch arithmetic across engines (DuckDB treats
-        # naive timestamps as UTC; so must we).
-        .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet stores TIMESTAMP(NANOS) which the vectorized
-        # reader rejects; read as long and convert in load_table.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # naive parquet timestamps read as LTZ (== NTZ under UTC tz);
-        # event-time/watermark ops require TIMESTAMP, not TIMESTAMP_NTZ
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # Keep partition files reasonably sized at scan time.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Shuffle/spill scratch space.  On a real cluster this is the
@@ -105,21 +87,32 @@ def get_spark(app_name: str = "hadoop-3-3-6-spark", shuffle_partitions: int | No
         # (bench.py's stage-parallelism audit).
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
-    return builder.getOrCreate()
+    # the semantic confs live in ONE list, applied to this session the
+    # same way as to a session built by someone else
+    spark = builder.getOrCreate()
+    ensure_session_confs(spark)
+    return spark
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
     """Apply the semantically-required runtime confs to ANY session.
 
     The driver contract runs queries in a session this engine did not
-    build; without these, events.parquet (TIMESTAMP NANOS) fails to
-    scan, epoch arithmetic follows the host timezone, and ANSI mode
-    would error where Hadoop semantics are permissive.  All four are
-    runtime-settable (verified against a bare session)."""
+    build — and ``get_spark`` applies them to its own session here
+    too, so the list exists once.  All are runtime-settable (verified
+    against a bare session)."""
     for k, v in (
+        # events.parquet stores TIMESTAMP(NANOS) which the vectorized
+        # reader rejects; read as long and convert in load_table.
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        # Deterministic epoch arithmetic across engines (DuckDB treats
+        # naive timestamps as UTC; so must we).
         ("spark.sql.session.timeZone", "UTC"),
+        # Match Hadoop's permissive numeric semantics (no ANSI errors
+        # on overflow/cast; MR user code wrapped silently).
         ("spark.sql.ansi.enabled", "false"),
+        # Arrow for every JVM<->Python exchange (pandas UDFs,
+        # mapInPandas/applyInPandas) — the reference's TypedBytes role.
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         # custom Python DataSources (warc.py, pydatasource.py) implement
         # pushFilters(); Spark 4 hard-errors (DATA_SOURCE_PUSHDOWN_DISABLED)

@@ -18,11 +18,10 @@ proves it by reading our output through ``org.apache.avro.file.
 DataFileReader`` from the avro-1.12.1 jar on Spark's classpath.
 
 Scale shape: ``write_avro`` emits one container file per partition
-inside executors (bytes never visit the driver); ``read_avro`` lists
-distributively via the binaryFile source and decodes per file in
-``mapInPandas`` (a container file is splittable at sync markers — at
-100 TB you would split large files by sync scan; fixture files are
-one-block, so per-file parallelism is the operative axis here).
+inside executors (bytes never visit the driver), committed through
+the shared part-file protocol in ``sources/pydatasource.py``;
+``read_avro`` lists the input with the shared ``list_data_files`` rule
+and decodes sync-marker-aligned byte-range splits on executors.
 
 Supported schema surface: records of boolean / int / long / float /
 double / string / bytes and their nullable unions — the primitive
@@ -46,7 +45,14 @@ from pyspark.sql.datasource import (
     DataSourceArrowWriter,
     DataSourceReader,
     InputPartition,
-    WriterCommitMessage,
+)
+
+from hadoop_3_3_6_spark.sources.pydatasource import (
+    abort_parts,
+    commit_parts,
+    list_data_files,
+    prepare_sink_dir,
+    publish_part,
 )
 
 MAGIC = b"Obj\x01"
@@ -223,8 +229,10 @@ def encode_container(rows: list[tuple], avro_schema: dict, codec: str = "null", 
     return out
 
 
-def decode_container(data: bytes) -> tuple[dict, list[tuple]]:
-    """Parse an Avro Object Container File into (schema, rows)."""
+def parse_container_header(data: bytes) -> tuple[dict, str, bytes, int]:
+    """Parse a container header prefix → (schema, codec, sync,
+    header_length).  header_length is the file offset of the first
+    data block."""
     if data[:4] != MAGIC:
         raise ValueError("not an Avro container file")
     pos = 4
@@ -233,17 +241,20 @@ def decode_container(data: bytes) -> tuple[dict, list[tuple]]:
         count, pos = _zigzag_decode(data, pos)
         if count == 0:
             break
-        if count < 0:  # block with byte size prefix (spec allows)
+        if count < 0:  # block with byte-size prefix (spec allows)
             count = -count
             _, pos = _zigzag_decode(data, pos)
         for _ in range(count):
             k, pos = _decode_value(data, pos, "string")
             v, pos = _decode_value(data, pos, "bytes")
             meta[k] = v
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
     sync = data[pos : pos + 16]
-    pos += 16
+    return json.loads(meta["avro.schema"]), meta.get("avro.codec", b"null").decode(), sync, pos + 16
+
+
+def decode_container(data: bytes) -> tuple[dict, list[tuple]]:
+    """Parse an Avro Object Container File into (schema, rows)."""
+    schema, codec, sync, pos = parse_container_header(data)
     field_types = [f["type"] for f in schema["fields"]]
     rows: list[tuple] = []
     while pos < len(data):
@@ -271,103 +282,45 @@ def decode_container(data: bytes) -> tuple[dict, list[tuple]]:
 # --- Spark integration ---------------------------------------------------
 
 
-class _AvroCommit(WriterCommitMessage):
-    def __init__(self, path: str, n: int):
-        self.path = path
-        self.n = n
-
-
 class AvroArrowWriter(DataSourceArrowWriter):
     """Arrow-batched Avro container sink: one multi-block container
     file per partition (one block per Arrow batch — bounded memory,
     unlike a buffer-the-partition single block), written executor-side
-    with no pickled RDD, via hidden temp + atomic rename to a
-    deterministic ``part-{pid:05d}.avro`` (task retries overwrite,
-    never duplicate).  Driver ``commit`` records the manifest;
-    ``abort`` sweeps the failed attempt."""
+    with no pickled RDD and published as ``part-{pid:05d}.avro``
+    through the shared part-file commit protocol
+    (``sources/pydatasource.py``)."""
 
     def __init__(self, options: dict, schema, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("avrofile sink requires a path")
         self.codec = options.get("codec", "null")
         if self.codec not in ("null", "deflate"):
             raise ValueError(f"codec {self.codec!r} unsupported (null/deflate)")
         self.avro_schema = avro_schema_of(schema)
-        os.makedirs(self.path, exist_ok=True)
-        if overwrite:
-            for n in os.listdir(self.path):
-                if n.startswith("part-") or n == "_SUCCESS":
-                    os.remove(os.path.join(self.path, n))
+        self.path = prepare_sink_dir(options.get("path"), overwrite, "avrofile")
 
     def write(self, iterator):
-        import uuid as _uuid
-
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        final = os.path.join(self.path, f"part-{pid:05d}.avro")
-        tmp = os.path.join(self.path, f".part-{pid:05d}-{_uuid.uuid4().hex[:8]}.avro.tmp")
         sync = hashlib.md5(f"spark-graft-avro:{self.path}:{pid}".encode()).digest()
         field_types = [f["type"] for f in self.avro_schema["fields"]]
-        n = 0
-        with open(tmp, "wb") as f:
+
+        def encode(f) -> int:
+            n = 0
             f.write(encode_container_header(self.avro_schema, self.codec, sync))
             for batch in iterator:
                 rows = list(zip(*(batch.column(i).to_pylist() for i in range(batch.num_columns))))
                 if rows:
                     f.write(encode_container_block(rows, field_types, self.codec, sync))
                     n += len(rows)
-        if n == 0:  # LazyOutputFormat stance: no empty files
-            os.remove(tmp)
-            return _AvroCommit("", 0)
-        os.replace(tmp, final)
-        return _AvroCommit(final, n)
+            return n
+
+        return publish_part(self.path, f"part-{pid:05d}.avro", encode)
 
     def commit(self, messages):
-        kept = [m.path for m in messages if m and m.n]
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            f.write("\n".join(os.path.basename(p) for p in kept))
+        commit_parts(self.path, messages)
 
     def abort(self, messages):
-        for m in messages:
-            if m and m.path and os.path.exists(m.path):
-                os.remove(m.path)
-        for name in os.listdir(self.path):
-            if name.startswith(".part-") and name.endswith(".tmp"):
-                os.remove(os.path.join(self.path, name))
-
-
-def parse_container_header(data: bytes) -> tuple[dict, str, bytes, int]:
-    """Parse a container header prefix → (schema, codec, sync,
-    header_length).  header_length is the file offset of the first
-    data block."""
-    if data[:4] != MAGIC:
-        raise ValueError("not an Avro container file")
-    pos = 4
-    meta: dict[str, bytes] = {}
-    while True:
-        count, pos = _zigzag_decode(data, pos)
-        if count == 0:
-            break
-        if count < 0:  # block with byte-size prefix (spec allows)
-            count = -count
-            _, pos = _zigzag_decode(data, pos)
-        for _ in range(count):
-            k, pos = _decode_value(data, pos, "string")
-            v, pos = _decode_value(data, pos, "bytes")
-            meta[k] = v
-    sync = data[pos : pos + 16]
-    return json.loads(meta["avro.schema"]), meta.get("avro.codec", b"null").decode(), sync, pos + 16
-
-
-def _avro_files(path: str) -> list[str]:
-    import glob as _glob
-
-    hits = sorted(_glob.glob(os.path.join(path, "*.avro")) if os.path.isdir(path) else _glob.glob(path))
-    if not hits:
-        raise FileNotFoundError(f"no avro files under {path!r}")
-    return hits
+        abort_parts(self.path, messages)
 
 
 _ARROW_OF = {
@@ -408,8 +361,11 @@ class AvroReader(DataSourceReader):
         self.split_size = int(options.get("split_size", 32 * 1024 * 1024))
 
     def partitions(self):
+        paths = list_data_files(self.path, ".avro")
+        if not paths:
+            raise FileNotFoundError(f"no avro files under {self.path!r}")
         parts = []
-        for p in _avro_files(self.path):
+        for p in paths:
             size = os.path.getsize(p)
             start = 0
             while True:
@@ -502,7 +458,7 @@ class AvroFileDataSource(DataSource):
         return "avrofile"
 
     def schema(self) -> str:
-        with open(_avro_files(self.options.get("path"))[0], "rb") as f:
+        with open(AvroReader(self.options).partitions()[0].path, "rb") as f:
             schema, _, _, _ = parse_container_header(f.read(1 << 20))
         return spark_schema_of(schema)
 
@@ -530,11 +486,11 @@ def write_avro(df: DataFrame, path: str, codec: str = "null") -> int:
     commit/abort protocol).  Returns files written."""
     register_avro_sink(df.sparkSession)
     df.write.format("avrofile").option("codec", codec).mode("overwrite").save(path)
-    return len([n for n in os.listdir(path) if n.startswith("part-") and n.endswith(".avro")])
+    return len(list_data_files(os.path.join(path, "part-*.avro"), ".avro"))
 
 
 def read_avro(spark: SparkSession, path: str, split_size: int | None = None) -> DataFrame:
-    """Read a directory/glob of Avro container files as a DataFrame
+    """Read a directory or wildcard path of Avro container files as a DataFrame
     through the split-capable ``avrofile`` reader: schema from one
     driver-side header peek, then one InputPartition per ~32 MB byte
     range per file (sync-marker alignment), blocks decoded straight to

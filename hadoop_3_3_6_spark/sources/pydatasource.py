@@ -1,29 +1,31 @@
-"""Custom Python DataSource (Spark 4 ``pyspark.sql.datasource`` API)
-for WAV audio ingestion — the FileInputFormat analogue for a media
-corpus (reference: mapreduce/lib/input/FileInputFormat.java:1 computes
-splits on the driver and hands each to a record reader on an executor;
-here ``partitions()`` lists files driver-side and ``read()`` decodes
-on executors).
+"""Shared file plumbing for the hand-written Python DataSources
+(Spark 4 ``pyspark.sql.datasource`` API), so seqfile, avrofile, warc,
+wavfiles, token shards and versioned tables keep only their codecs.
 
-``spark.read.format("wavfiles").load(glob)`` yields one row per audio
-file: (path, sample_rate, n_channels, n_samples, payload) with the
-RIFF header parsed by the pure-numpy decoder
-(functions/multimodal.decode_wav).  ``option("metadata_only", "true")``
-skips shipping payload bytes (header-only scan — the column-pruned
-fast path for corpus stats over millions of files).
+Input, the FileInputFormat analogue (FileInputFormat.java:1):
+``list_data_files`` is the one rule for which files an input path
+names (a ``.``/``_``-prefixed name — task temp file, ``_SUCCESS``,
+``_temporary`` — is never data); ``FilePartition`` is a one-file split;
+``PathFilteredReader`` prunes the listing by pushed ``path`` predicates.
 
-Scale notes: file listing is a driver-side glob (like every Spark file
-source's InMemoryFileIndex); each file is one InputPartition, so
-parallelism = file count and a 1000-executor cluster decodes 1000
-files at a time.  For many tiny files, pack multiple paths per
-partition upstream (the CombineFileInputFormat move) by pointing the
-glob at pre-bundled directories.
+Output, the FileOutputCommitter analogue (FileOutputCommitter.java:51):
+``prepare_sink_dir``, then per task ``publish_part`` (hidden temp file
++ atomic rename to a deterministic ``part-*`` name: a retried task
+overwrites its earlier attempt, no reader lists half a part, an empty
+partition publishes nothing), then ``commit_parts`` (``_SUCCESS``
+manifest) or ``abort_parts``.  ``publish_file`` is the
+temp-then-rename step for any single file.
+
+The ``wavfiles`` format yields one row per WAV file, (path,
+sample_rate, n_channels, n_samples, payload), one file per partition
+(parallelism = file count); ``metadata_only=true`` skips the payload.
 """
 
 from __future__ import annotations
 
 import glob as _glob
 import os
+import uuid
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -31,28 +33,55 @@ from pyspark.sql.datasource import (
     EqualTo,
     InputPartition,
     StringStartsWith,
+    WriterCommitMessage,
 )
 
+# --- input side ------------------------------------------------------------
 
-class _WavPartition(InputPartition):
+
+def list_data_files(path: str, exts: str | tuple[str, ...]) -> list[str]:
+    """The data files an input ``path`` names: a wildcard path's sorted
+    glob, a directory's sorted entries ending in one of ``exts``, any
+    other path itself — never a name starting with ``.`` or ``_``."""
+    if any(c in path for c in "*?["):
+        paths = sorted(_glob.glob(path))
+    elif os.path.isdir(path):
+        paths = sorted(os.path.join(path, n) for n in os.listdir(path) if n.endswith(exts))
+    else:
+        paths = [path]
+    return [p for p in paths if not os.path.basename(p).startswith((".", "_"))]
+
+
+def option_flag(options: dict, name: str, default: bool = False) -> bool:
+    return str(options.get(name, default)).lower() == "true"
+
+
+class FilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
 
 
-class WavDataSourceReader(DataSourceReader):
+class PathFilteredReader(DataSourceReader):
+    """Reader base for a one-file-per-partition source with a ``path``
+    column.  ``path`` equality and prefix predicates are consumed by
+    ``pushFilters`` and applied to the file LISTING, so pruned files
+    are never opened and never become partitions; everything else is
+    returned for Spark to evaluate post-scan.  Also parses the shared
+    ``metadata_only`` option.  Subclasses set ``fmt`` (the name in
+    error messages) and ``exts`` (a directory's data extensions) and
+    implement ``read``."""
+
+    fmt = ""
+    exts: tuple[str, ...] = ()
+
     def __init__(self, options: dict):
         self.path = options.get("path")
         if not self.path:
-            raise ValueError("wavfiles source requires a path")
-        self.metadata_only = str(options.get("metadata_only", "false")).lower() == "true"
+            raise ValueError(f"{self.fmt} source requires a path")
+        self.metadata_only = option_flag(options, "metadata_only")
         self._path_filters: list = []
 
     def pushFilters(self, filters):
-        """Partition pruning for the custom source: `path` equality and
-        prefix predicates are consumed here and applied to the file
-        LISTING, so pruned files are never opened and never become
-        partitions — the FileInputFormat `setInputPathFilter` analogue.
-        Everything else is returned for Spark to evaluate post-scan."""
         remaining = []
         for f in filters:
             if isinstance(f, (EqualTo, StringStartsWith)) and tuple(f.attribute) == ("path",):
@@ -70,21 +99,92 @@ class WavDataSourceReader(DataSourceReader):
         return True
 
     def partitions(self):
-        paths = sorted(_glob.glob(self.path)) if any(c in self.path for c in "*?[") else None
-        if paths is None:
-            paths = (
-                sorted(
-                    os.path.join(self.path, f)
-                    for f in os.listdir(self.path)
-                    if f.endswith(".wav")
-                )
-                if os.path.isdir(self.path)
-                else [self.path]
-            )
+        paths = list_data_files(self.path, self.exts)
         if not paths:
-            raise FileNotFoundError(f"no wav files match {self.path}")
-        paths = [p for p in paths if self._keep(p)]
-        return [_WavPartition(p) for p in paths]
+            raise FileNotFoundError(f"no {self.fmt} files match {self.path}")
+        return [FilePartition(p) for p in paths if self._keep(p)]
+
+
+# --- output side -----------------------------------------------------------
+
+
+class PartCommit(WriterCommitMessage):
+    """A task's commit message: its published part file ("" for an
+    empty partition) and the row count it holds."""
+
+    def __init__(self, path: str, n: int):
+        self.path = path
+        self.n = n
+
+
+def _is_task_temp(name: str) -> bool:
+    return name.startswith(".part-") and name.endswith(".tmp")
+
+
+def prepare_sink_dir(path: str | None, overwrite: bool, fmt: str) -> str:
+    """Job setup: create the output directory; on overwrite remove the
+    previous job's parts, its ``_SUCCESS`` and stale task temp files."""
+    if not path:
+        raise ValueError(f"{fmt} sink requires a path")
+    os.makedirs(path, exist_ok=True)
+    if overwrite:
+        for n in os.listdir(path):
+            if n.startswith("part-") or n == "_SUCCESS" or _is_task_temp(n):
+                os.remove(os.path.join(path, n))
+    return path
+
+
+def publish_file(final: str, write_fn) -> int:
+    """Publish ``final`` whole or not at all.  ``write_fn(f)`` writes
+    into a hidden unique temp file beside it (binary mode) and returns
+    how much it wrote; a non-zero amount is atomically renamed onto
+    ``final``.  Zero, or an exception, removes the temp file and leaves
+    ``final`` untouched.  Returns ``write_fn``'s amount."""
+    d, name = os.path.split(final)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
+    try:
+        with open(tmp, "wb") as f:
+            n = write_fn(f)
+        if n:
+            os.replace(tmp, final)
+        return n
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def publish_part(path: str, name: str, write_fn) -> PartCommit:
+    """Task commit: publish part file ``name`` under ``path`` through
+    ``publish_file``, where ``write_fn`` returns the row count."""
+    final = os.path.join(path, name)
+    n = publish_file(final, write_fn)
+    return PartCommit(final if n else "", n)
+
+
+def commit_parts(path: str, messages) -> None:
+    """Job commit: the ``_SUCCESS`` manifest lists the committed parts."""
+    kept = [os.path.basename(m.path) for m in messages if m and m.n]
+    with open(os.path.join(path, "_SUCCESS"), "w") as f:
+        f.write("\n".join(kept))
+
+
+def abort_parts(path: str, messages) -> None:
+    """Job abort: remove the parts the job's tasks published and any
+    task temp file still present."""
+    for m in messages:
+        if m and m.path and os.path.exists(m.path):
+            os.remove(m.path)
+    for n in os.listdir(path):
+        if _is_task_temp(n):
+            os.remove(os.path.join(path, n))
+
+
+# --- wavfiles ----------------------------------------------------------------
+
+
+class WavDataSourceReader(PathFilteredReader):
+    fmt = "wav"
+    exts = (".wav",)
 
     def read(self, partition):
         from hadoop_3_3_6_spark.functions.multimodal import decode_wav

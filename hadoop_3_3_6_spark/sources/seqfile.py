@@ -16,13 +16,9 @@ Conformance: files written here are read back by Hadoop's own Java
 SequenceFile.Reader (via ``sc.sequenceFile``) in tests/test_containers.py
 — the same cross-engine oracle the Avro codec uses.
 
-Write protocol (FileOutputCommitter-v2 analogue, same design as the
-WARC batch sink): tasks write to a dot-prefixed temp file (hidden from
-FileInputFormat's listing) and atomically rename to a DETERMINISTIC
-``part-{pid:05d}.seq`` on task success, so a retried task overwrites
-its earlier attempt instead of duplicating it; the driver's ``commit``
-records the committed segment list in ``_SUCCESS``; ``abort`` removes
-the failed attempt's files.
+Write protocol: the shared part-file commit protocol in
+``sources/pydatasource.py`` (FileOutputCommitter analogue), publishing
+one ``part-{pid:05d}.seq`` per partition.
 
 Scale: one file per partition, encode CPU fully parallel, no driver
 data path.  Uncompressed records only (sync markers keep the files
@@ -32,11 +28,17 @@ splittable); for codec output hand off to the legacy converter path in
 
 from __future__ import annotations
 
-import os
 import struct
 import uuid
 
-from pyspark.sql.datasource import DataSource, DataSourceArrowWriter, WriterCommitMessage
+from pyspark.sql.datasource import DataSource, DataSourceArrowWriter
+
+from hadoop_3_3_6_spark.sources.pydatasource import (
+    abort_parts,
+    commit_parts,
+    prepare_sink_dir,
+    publish_part,
+)
 
 _SYNC_INTERVAL = 2000  # bytes between sync markers (100 * SYNC_SIZE, per spec)
 
@@ -106,21 +108,11 @@ def encode_sequence_file_header(key_cls: str, val_cls: str, sync: bytes) -> byte
     return bytes(out)
 
 
-class _SeqCommit(WriterCommitMessage):
-    def __init__(self, path: str, n: int):
-        self.path = path
-        self.n = n
-
-
 class SeqFileArrowWriter(DataSourceArrowWriter):
     """Arrow-batched SequenceFile writer: one ``part-{pid:05d}.seq``
-    per partition, written via hidden temp + atomic rename so task
-    retries overwrite rather than duplicate."""
+    per partition."""
 
     def __init__(self, options: dict, schema, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("seqfile sink requires a path")
         fields = schema.fields
         if len(fields) < 2:
             raise ValueError("seqfile sink needs (key, value) columns")
@@ -135,63 +127,46 @@ class SeqFileArrowWriter(DataSourceArrowWriter):
         opt = {k.lower(): v for k, v in options.items()}
         self.key_cls = opt.get("keyclass", self.key_cls)
         self.val_cls = opt.get("valueclass", self.val_cls)
-        os.makedirs(self.path, exist_ok=True)
-        if overwrite:
-            for n in os.listdir(self.path):
-                if n.startswith("part-") or n == "_SUCCESS":
-                    os.remove(os.path.join(self.path, n))
+        self.path = prepare_sink_dir(options.get("path"), overwrite, "seqfile")
 
     def write(self, iterator):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        final = os.path.join(self.path, f"part-{pid:05d}.seq")
-        tmp = os.path.join(self.path, f".part-{pid:05d}-{uuid.uuid4().hex[:8]}.seq.tmp")
+        return publish_part(self.path, f"part-{pid:05d}.seq", lambda f: self._encode(f, iterator))
+
+    def _encode(self, f, iterator) -> int:
         sync = uuid.uuid4().bytes
         n = 0
         since_sync = 0
         kenc, venc = self.key_enc, self.val_enc
-        with open(tmp, "wb") as f:
-            f.write(encode_sequence_file_header(self.key_cls, self.val_cls, sync))
-            for batch in iterator:
-                keys = batch.column(0).to_pylist()
-                vals = batch.column(1).to_pylist()
-                buf = bytearray()
-                for k, v in zip(keys, vals):
-                    if k is None or v is None:
-                        raise ValueError(
-                            "SequenceFile Writables are not nullable; coalesce/filter "
-                            "null keys and values before writing"
-                        )
-                    kb, vb = kenc(k), venc(v)
-                    if since_sync >= _SYNC_INTERVAL:
-                        buf += b"\xff\xff\xff\xff" + sync
-                        since_sync = 0
-                    rec = (
-                        struct.pack(">ii", len(kb) + len(vb), len(kb)) + kb + vb
+        f.write(encode_sequence_file_header(self.key_cls, self.val_cls, sync))
+        for batch in iterator:
+            keys = batch.column(0).to_pylist()
+            vals = batch.column(1).to_pylist()
+            buf = bytearray()
+            for k, v in zip(keys, vals):
+                if k is None or v is None:
+                    raise ValueError(
+                        "SequenceFile Writables are not nullable; coalesce/filter "
+                        "null keys and values before writing"
                     )
-                    buf += rec
-                    since_sync += len(rec)
-                    n += 1
-                f.write(buf)
-        if n == 0:
-            os.remove(tmp)
-            return _SeqCommit("", 0)
-        os.replace(tmp, final)
-        return _SeqCommit(final, n)
+                kb, vb = kenc(k), venc(v)
+                if since_sync >= _SYNC_INTERVAL:
+                    buf += b"\xff\xff\xff\xff" + sync
+                    since_sync = 0
+                rec = struct.pack(">ii", len(kb) + len(vb), len(kb)) + kb + vb
+                buf += rec
+                since_sync += len(rec)
+                n += 1
+            f.write(buf)
+        return n
 
     def commit(self, messages):
-        kept = [m.path for m in messages if m and m.n]
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            f.write("\n".join(os.path.basename(p) for p in kept))
+        commit_parts(self.path, messages)
 
     def abort(self, messages):
-        for m in messages:
-            if m and m.path and os.path.exists(m.path):
-                os.remove(m.path)
-        for name in os.listdir(self.path):
-            if name.startswith(".part-") and name.endswith(".tmp"):
-                os.remove(os.path.join(self.path, name))
+        abort_parts(self.path, messages)
 
 
 class SeqFileDataSource(DataSource):

@@ -17,22 +17,23 @@ fairseq's ``data/indexed_dataset.py``):
 
 This is the LAST MILE of the pretraining pipeline (tokenize → pack →
 shard export): at 100 TB each executor partition streams its documents
-into exactly one shard triple (hidden temp + atomic rename, so task
-retries overwrite rather than duplicate — the SeqFileArrowWriter
-committer discipline, ``sources/seqfile.py``), the only driver state
-is the manifest of per-shard counts, and read-back parallelizes over
-shard files with executor-side IO.
+into exactly one shard triple, each file published whole by
+``pydatasource.publish_file`` and ``.idx`` LAST (the reader lists
+shards by it, so a task dying mid-shard leaves no unreadable listed
+shard); the only driver state is the manifest of per-shard counts,
+and read-back parallelizes over shard files with executor-side IO.
 """
 
 from __future__ import annotations
 
 import os
 import struct
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+
+from hadoop_3_3_6_spark.sources.pydatasource import list_data_files, publish_file
 
 _MAGIC = b"MMIDIDX\x00\x00"
 # the public dtype registry (indexed_dataset.py); we write int32 (4)
@@ -104,9 +105,10 @@ def write_token_shards(
     dtype=np.int32,
 ) -> DataFrame:
     """Write (id, token_ids array) rows as Megatron-style shard triples
-    — ONE shard per partition, streamed executor-side through a hidden
-    temp + atomic rename.  Returns the manifest DataFrame (shard,
-    n_docs, n_tokens); empty partitions write nothing."""
+    — ONE shard per partition, streamed executor-side, each file
+    published through ``publish_file`` (``.idx`` last).  Returns the
+    manifest DataFrame (shard, n_docs, n_tokens); empty partitions
+    write nothing."""
     os.makedirs(path, exist_ok=True)
     import pandas as pd
 
@@ -117,31 +119,25 @@ def write_token_shards(
 
         pid = TaskContext.get().partitionId()
         stem = os.path.join(path, f"shard-{pid:05d}")
-        tmp = f"{stem}.{uuid.uuid4().hex[:8]}.tmp"
         sizes: list[int] = []
         doc_ids: list[int] = []
-        with open(tmp, "wb") as f:
+
+        def write_bin(f) -> int:
             for pdf in batches:
                 for i, ids in zip(pdf[id_col], pdf[ids_col]):
                     arr = np.asarray(list(ids), dtype=itemtype)
                     f.write(arr.tobytes())
                     sizes.append(len(arr))
                     doc_ids.append(int(i))
-        if not sizes:
-            os.remove(tmp)
+            return len(sizes)
+
+        if not publish_file(f"{stem}.bin", write_bin):
             yield pd.DataFrame({"shard": [], "n_docs": [], "n_tokens": []}).astype(
                 {"shard": str, "n_docs": "int64", "n_tokens": "int64"}
             )
             return
-        os.replace(tmp, f"{stem}.bin")
-        itmp = f"{stem}.idx.{uuid.uuid4().hex[:8]}.tmp"
-        with open(itmp, "wb") as f:
-            f.write(encode_idx(sizes, itemtype.type))
-        os.replace(itmp, f"{stem}.idx")
-        dtmp = f"{stem}.ids.{uuid.uuid4().hex[:8]}.tmp"
-        with open(dtmp, "wb") as f:
-            f.write(np.asarray(doc_ids, dtype=np.int64).tobytes())
-        os.replace(dtmp, f"{stem}.ids")
+        publish_file(f"{stem}.ids", lambda f: f.write(np.asarray(doc_ids, dtype=np.int64).tobytes()))
+        publish_file(f"{stem}.idx", lambda f: f.write(encode_idx(sizes, itemtype.type)))
         yield pd.DataFrame(
             {
                 "shard": [os.path.basename(stem)],
@@ -166,11 +162,9 @@ def read_token_shards(spark: SparkSession, path: str) -> DataFrame:
     registered integer dtype widens into int64 losslessly."""
     import pandas as pd
 
-    stems = sorted(
-        os.path.join(path, n[:-4])
-        for n in os.listdir(path)
-        if n.endswith(".idx") and not n.endswith(".tmp")
-    )
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"no token-shard directory {path!r}")
+    stems = [p[: -len(".idx")] for p in list_data_files(path, ".idx")]
     if not stems:
         return spark.createDataFrame([], "doc_id bigint, token_ids array<bigint>")
     # range-partition on a dense index: exactly one shard per task

@@ -34,6 +34,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_3_3_6_spark.sources.pydatasource import publish_file
+
 _V_RE = re.compile(r"^v=(\d{5})$")
 
 
@@ -70,8 +72,9 @@ def latest_version(path: str) -> int | None:
 
 def write_version(df: DataFrame, path: str) -> int:
     """Publish ``df`` as the table's next version: write the parquet
-    under ``v=NNNNN``, then atomically flip ``_latest`` (tmp file +
-    rename).  Returns the new version number.
+    under ``v=NNNNN``, then atomically flip ``_latest`` (the shared
+    ``publish_file`` temp-then-rename step).  Returns the new version
+    number.
 
     SINGLE-WRITER publish contract (round-9 review note): two
     concurrent ``write_version`` calls can pick the same next number —
@@ -88,10 +91,7 @@ def write_version(df: DataFrame, path: str) -> int:
     nxt = (vs[-1] if vs else 0) + 1
     vdir = os.path.join(path, f"v={nxt:05d}")
     df.write.mode("overwrite").parquet(vdir)
-    tmp = os.path.join(path, "._latest.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(nxt))
-    os.replace(tmp, os.path.join(path, "_latest"))
+    publish_file(os.path.join(path, "_latest"), lambda f: f.write(str(nxt).encode()))
     return nxt
 
 

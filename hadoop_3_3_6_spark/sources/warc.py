@@ -5,7 +5,7 @@ surface as the wavfiles source; FileInputFormat analogue:
 MRC/mapreduce/lib/input/FileInputFormat.java:1 computes splits
 driver-side, record readers run executor-side).
 
-``spark.read.format("warc").load(glob)`` yields one row per WARC
+``spark.read.format("warc").load(path)`` yields one row per WARC
 record: (path, record_id, warc_type, target_uri, warc_date,
 content_type, content_length, payload).  Options:
 
@@ -18,21 +18,20 @@ content_type, content_length, payload).  Options:
 ``.warc.gz`` files are read through gzip; the common
 one-gzip-member-per-record layout concatenates transparently.
 
-Scale notes: listing is a driver-side glob (InMemoryFileIndex
-analogue); each FILE is one InputPartition because WARC is a
-sequential record stream (and .warc.gz is only splittable at member
-boundaries, which require an index) — the same non-splittable
-contract as gzip TextInputFormat in the reference
-(io/compress/GzipCodec: no SplittableCompressionCodec).  Parallelism
-therefore equals file count; crawls ship thousands of ~1 GB segment
-files, which is exactly the right granularity for a 1000-executor
-cluster.  Records stream one at a time — a segment never
-materializes in memory.
+Scale notes: listing is driver-side (InMemoryFileIndex analogue; the
+shared ``list_data_files`` rule in ``sources/pydatasource.py``); each
+FILE is one InputPartition because WARC is a sequential record stream
+(and .warc.gz is only splittable at member boundaries, which require
+an index) — the same non-splittable contract as gzip TextInputFormat
+in the reference (io/compress/GzipCodec: no
+SplittableCompressionCodec).  Parallelism therefore equals file count;
+crawls ship thousands of ~1 GB segment files, which is exactly the
+right granularity for a 1000-executor cluster.  Records stream one at
+a time — a segment never materializes in memory.
 """
 
 from __future__ import annotations
 
-import glob as _glob
 import gzip
 import io
 import os
@@ -40,15 +39,24 @@ import uuid
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     DataSourceStreamWriter,
     DataSourceWriter,
     EqualTo,
-    InputPartition,
-    StringStartsWith,
-    WriterCommitMessage,
 )
+
+from hadoop_3_3_6_spark.sources.pydatasource import (
+    FilePartition,
+    PathFilteredReader,
+    abort_parts,
+    commit_parts,
+    list_data_files,
+    option_flag,
+    prepare_sink_dir,
+    publish_part,
+)
+
+_EXTS = (".warc", ".warc.gz")
 
 _CRLF = b"\r\n"
 
@@ -85,30 +93,22 @@ def encode_warc(records: list[dict], compress: bool = False) -> bytes:
     return out.getvalue()
 
 
-def _row_to_record(d: dict) -> dict:
-    """Map a writer input row (asDict) to an encode record dict —
-    shared by the batch and streaming writers so their accepted
-    columns cannot diverge."""
-    rec = {"warc_type": d.get("warc_type", "resource"), "payload": d.get("payload") or b""}
-    for k in ("target_uri", "content_type", "record_id"):
-        if d.get(k):
-            rec[k] = d[k]
-    if d.get("warc_date"):
-        rec["date"] = d["warc_date"]
-    return rec
-
-
-def _write_partition(path: str, rows, compress: bool):
-    """Stream a partition's rows straight to ``path`` record by record
-    — never the whole segment (or the record dicts) in memory.
-    Returns the record count (0 = nothing written, file removed)."""
+def _write_records(f, rows, compress: bool) -> int:
+    """Stream a partition's input rows into ``f`` record by record —
+    never the whole segment (or the record dicts) in memory; shared by
+    the batch and streaming writers so their accepted columns cannot
+    diverge.  Returns the record count."""
     n = 0
-    with open(path, "wb") as f:
-        for row in rows:
-            f.write(_encode_record(_row_to_record(row.asDict()), compress))
-            n += 1
-    if n == 0:
-        os.remove(path)
+    for row in rows:
+        d = row.asDict()
+        rec = {"warc_type": d.get("warc_type", "resource"), "payload": d.get("payload") or b""}
+        for k in ("target_uri", "content_type", "record_id"):
+            if d.get(k):
+                rec[k] = d[k]
+        if d.get("warc_date"):
+            rec["date"] = d["warc_date"]
+        f.write(_encode_record(rec, compress))
+        n += 1
     return n
 
 
@@ -177,88 +177,47 @@ def iter_warc_records(stream, permissive: bool = False):
         yield headers, block
 
 
-class _WarcPartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+class WarcDataSourceReader(PathFilteredReader):
+    fmt = "warc"
+    exts = _EXTS
 
-
-def _read_segment(path: str, record_types, metadata_only: bool, permissive: bool):
-    """Executor-side record scan of one segment — the single parsing
-    path shared by the batch reader and the streaming reader (schema
-    and filter semantics cannot drift between them)."""
-    opener = gzip.open if path.endswith(".gz") else open
-    with opener(path, "rb") as f:
-        for headers, block in iter_warc_records(f, permissive=permissive):
-            wtype = headers.get("warc-type", "")
-            if record_types is not None and wtype not in record_types:
-                continue
-            yield (
-                path,
-                headers.get("warc-record-id", ""),
-                wtype,
-                headers.get("warc-target-uri"),
-                headers.get("warc-date", ""),
-                headers.get("content-type"),
-                len(block),
-                None if metadata_only else block,
-            )
-
-
-class WarcDataSourceReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("warc source requires a path")
-        self.metadata_only = str(options.get("metadata_only", "false")).lower() == "true"
-        self.permissive = str(options.get("permissive", "false")).lower() == "true"
+        super().__init__(options)
+        self.permissive = option_flag(options, "permissive")
         types = options.get("record_types")
         self.record_types = {t.strip() for t in types.split(",")} if types else None
-        self._path_filters: list = []
 
     def pushFilters(self, filters):
-        """`path` equality/prefix predicates prune the file LISTING
-        (pruned files never become partitions); `warc_type` equality
+        """Besides the shared ``path`` pruning, ``warc_type`` equality
         narrows the in-reader record filter so skipped records never
-        cross the Arrow boundary.  The rest is Spark's to re-check."""
-        remaining = []
-        for f in filters:
-            if isinstance(f, (EqualTo, StringStartsWith)) and tuple(f.attribute) == ("path",):
-                self._path_filters.append(f)
-            elif isinstance(f, EqualTo) and tuple(f.attribute) == ("warc_type",):
+        cross the Arrow boundary; Spark still re-checks it."""
+        remaining = super().pushFilters(filters)
+        for f in remaining:
+            if isinstance(f, EqualTo) and tuple(f.attribute) == ("warc_type",):
                 wanted = {f.value}
                 self.record_types = wanted if self.record_types is None else (self.record_types & wanted)
-                remaining.append(f)  # Spark re-checks; filter here is an optimization
-            else:
-                remaining.append(f)
         return remaining
 
-    def _keep(self, p: str) -> bool:
-        for f in self._path_filters:
-            if isinstance(f, EqualTo) and p != f.value:
-                return False
-            if isinstance(f, StringStartsWith) and not p.startswith(f.value):
-                return False
-        return True
-
-    def partitions(self):
-        if any(c in self.path for c in "*?["):
-            paths = sorted(_glob.glob(self.path))
-        elif os.path.isdir(self.path):
-            paths = sorted(
-                os.path.join(self.path, f)
-                for f in os.listdir(self.path)
-                if f.endswith((".warc", ".warc.gz"))
-            )
-        else:
-            paths = [self.path]
-        if not paths:
-            raise FileNotFoundError(f"no warc files match {self.path}")
-        return [_WarcPartition(p) for p in paths if self._keep(p)]
-
     def read(self, partition):
-        return _read_segment(
-            partition.path, self.record_types, self.metadata_only, self.permissive
-        )
+        """Executor-side record scan of one segment — the one parsing
+        path, shared with ``WarcStreamReader``."""
+        path = partition.path
+        opener = gzip.open if path.endswith(".gz") else open
+        with opener(path, "rb") as f:
+            for headers, block in iter_warc_records(f, permissive=self.permissive):
+                wtype = headers.get("warc-type", "")
+                if self.record_types is not None and wtype not in self.record_types:
+                    continue
+                yield (
+                    path,
+                    headers.get("warc-record-id", ""),
+                    wtype,
+                    headers.get("warc-target-uri"),
+                    headers.get("warc-date", ""),
+                    headers.get("content-type"),
+                    len(block),
+                    None if self.metadata_only else block,
+                )
 
 
 class WarcDataSource(DataSource):
@@ -296,83 +255,53 @@ def register_warc_source(spark) -> None:
     spark.dataSource.register(WarcDataSource)
 
 
-class _WarcCommit(WriterCommitMessage):
-    def __init__(self, path: str, n: int):
-        self.path = path
-        self.n = n
-
-
 class WarcDataSourceWriter(DataSourceWriter):
     """Custom batch SINK through the same Python DataSource API — the
     FileOutputFormat analogue for WARC: each task serializes its
-    partition to one segment file (``part-<pid>-<uuid>.warc[.gz]``),
-    the driver's ``commit`` records a ``_SUCCESS`` manifest listing
-    the committed segments, ``abort`` deletes whatever the failed
-    attempt produced — FileOutputCommitter-v2-style semantics (task
-    output is visible on task success; job atomicity comes from the
-    manifest, which readers needing atomicity should consult).
+    partition to one segment file ``part-{pid:05d}.warc[.gz]``
+    through the shared part-file commit protocol
+    (``sources/pydatasource.py``): task output is visible on task
+    success, and job atomicity comes from the ``_SUCCESS`` manifest,
+    which readers needing atomicity should consult.
 
     Input rows need (warc_type, payload) and optionally target_uri /
     content_type / warc_date / record_id columns."""
 
     def __init__(self, options: dict, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("warc sink requires a path")
-        self.compress = str(options.get("compress", "true")).lower() == "true"
-        os.makedirs(self.path, exist_ok=True)
-        if overwrite:
-            for n in os.listdir(self.path):
-                if n.startswith("part-") or n == "_SUCCESS":
-                    os.remove(os.path.join(self.path, n))
+        self.compress = option_flag(options, "compress", True)
+        self.path = prepare_sink_dir(options.get("path"), overwrite, "warc")
 
     def write(self, iterator):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         ext = ".warc.gz" if self.compress else ".warc"
-        # hidden temp + atomic rename to a DETERMINISTIC name: a
-        # retried/speculative task overwrites its earlier attempt
-        # instead of leaving a second uuid-named copy for glob readers
-        # (same protocol as the seqfile/avrofile sinks)
-        final = os.path.join(self.path, f"part-{pid:05d}{ext}")
-        tmp = os.path.join(self.path, f".part-{pid:05d}-{uuid.uuid4().hex[:8]}{ext}.tmp")
-        n = _write_partition(tmp, iterator, self.compress)
-        if not n:
-            # empty partition: no file (LazyOutputFormat)
-            return _WarcCommit("", 0)
-        os.replace(tmp, final)
-        return _WarcCommit(final, n)
+        return publish_part(
+            self.path, f"part-{pid:05d}{ext}", lambda f: _write_records(f, iterator, self.compress)
+        )
 
     def commit(self, messages):
-        kept = [m.path for m in messages if m and m.n]
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            f.write("\n".join(os.path.basename(p) for p in kept))
+        commit_parts(self.path, messages)
 
     def abort(self, messages):
-        for m in messages:
-            if m and m.path and os.path.exists(m.path):
-                os.remove(m.path)
-        for name in os.listdir(self.path):
-            if name.startswith(".part-") and name.endswith(".tmp"):
-                os.remove(os.path.join(self.path, name))
+        abort_parts(self.path, messages)
 
 
 class WarcStreamWriter(DataSourceStreamWriter):
     """Custom STREAMING sink through the DataSource API — the
     micro-batch twin of ``WarcDataSourceWriter``: every epoch's tasks
-    write their partitions as segment files, the driver's per-epoch
-    ``commit`` appends the segment names to an ``_epochs`` manifest
-    (one line per committed batch — the idempotence record a restarted
-    query checks), ``abort`` removes the failed epoch's files.  Same
-    crash contract as the streaming file sink's metadata log."""
+    publish their partitions as segment files through the shared
+    ``publish_part`` step (so a segment appears only when complete),
+    the driver's per-epoch ``commit`` appends the segment names to an
+    ``_epochs`` manifest (one line per committed batch — the
+    idempotence record a restarted query checks), ``abort`` removes
+    the failed epoch's files.  Same crash contract as the streaming
+    file sink's metadata log."""
 
     def __init__(self, options: dict):
-        self.path = options.get("path") or options.get("checkpointLocation_path")
-        if not self.path:
-            raise ValueError("warc stream sink requires a path")
-        self.compress = str(options.get("compress", "true")).lower() == "true"
-        os.makedirs(self.path, exist_ok=True)
+        self.compress = option_flag(options, "compress", True)
+        path = options.get("path") or options.get("checkpointLocation_path")
+        self.path = prepare_sink_dir(path, False, "warc stream")
 
     def write(self, iterator):
         from pyspark import TaskContext
@@ -383,7 +312,7 @@ class WarcStreamWriter(DataSourceStreamWriter):
         # Deterministic name per (batchId, partition): a restarted query
         # re-executing a batch OVERWRITES its earlier attempt's segments
         # instead of landing a second uuid-named copy (replay
-        # idempotence for directory-glob readers, not just manifest
+        # idempotence for directory readers, not just manifest
         # readers).  batchId prefix also keeps names monotonic across
         # epochs — the WarcStreamReader's high-water-mark contract.
         # MicroBatchExecution publishes the batch id as a job-local
@@ -393,9 +322,9 @@ class WarcStreamWriter(DataSourceStreamWriter):
             stem = f"part-{int(batch):08d}-{pid:05d}"
         else:  # pragma: no cover — property always set by micro-batch exec
             stem = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}"
-        full = os.path.join(self.path, stem + ext)
-        n = _write_partition(full, iterator, self.compress)
-        return _WarcCommit(full if n else "", n)
+        return publish_part(
+            self.path, stem + ext, lambda f: _write_records(f, iterator, self.compress)
+        )
 
     def commit(self, messages, batchId: int) -> None:
         epochs = os.path.join(self.path, "_epochs")
@@ -411,9 +340,7 @@ class WarcStreamWriter(DataSourceStreamWriter):
             f.write(f"{batchId}\t{','.join(kept)}\n")
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m and m.path and os.path.exists(m.path):
-                os.remove(m.path)
+        abort_parts(self.path, messages)
 
 
 class WarcStreamReader(DataSourceStreamReader):
@@ -444,22 +371,15 @@ class WarcStreamReader(DataSourceStreamReader):
     with cleanup."""
 
     def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("warc stream source requires a path")
-        self.record_types = None
-        types = options.get("record_types")
-        if types:
-            self.record_types = {t.strip() for t in types.split(",")}
-        self.metadata_only = str(options.get("metadata_only", "false")).lower() == "true"
-        self.permissive = str(options.get("permissive", "false")).lower() == "true"
+        # the batch reader owns the options and the record parsing, so
+        # schema and filter semantics cannot drift between the two
+        self._segments = WarcDataSourceReader(options)
+        self.path = self._segments.path
 
     def _listing(self):
         if not os.path.isdir(self.path):
             return []
-        return sorted(
-            f for f in os.listdir(self.path) if f.endswith((".warc", ".warc.gz"))
-        )
+        return [os.path.basename(p) for p in list_data_files(self.path, _EXTS)]
 
     def initialOffset(self) -> dict:
         return {"last": ""}
@@ -471,13 +391,10 @@ class WarcStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         lo, hi = start.get("last", ""), end.get("last", "")
         names = [n for n in self._listing() if lo < n <= hi]
-        return [_WarcPartition(os.path.join(self.path, n)) for n in names]
+        return [FilePartition(os.path.join(self.path, n)) for n in names]
 
     def read(self, partition):
-        # executor-side: the same record parsing as the batch reader
-        return _read_segment(
-            partition.path, self.record_types, self.metadata_only, self.permissive
-        )
+        return self._segments.read(partition)
 
     def commit(self, end: dict) -> None:
         pass  # consumed files stay in place; retention is the producer's policy

@@ -161,7 +161,7 @@ def test_jpeg_through_distributed_decode_and_resize(spark):
     rows = [(i, encode_jpeg(a, quality=90)) for i, a in imgs.items()]
     df = spark.createDataFrame(rows, "doc_id bigint, payload binary").repartition(4)
 
-    feats = {r.doc_id: r for r in decode_features(df, "payload", "doc_id", fake=False).collect()}
+    feats = {r.doc_id: r for r in decode_features(df, "payload", "doc_id").collect()}
     assert len(feats) == 12
     for i, a in imgs.items():
         r = feats[i]
@@ -169,7 +169,7 @@ def test_jpeg_through_distributed_decode_and_resize(spark):
         # channel means survive the lossy roundtrip within tolerance
         assert abs(r.feature[0] - a[..., 0].mean() / 255.0) < 0.02
 
-    thumbs = {r.doc_id: r for r in resize_images(df, "payload", "doc_id", 8, 8, fake=False).collect()}
+    thumbs = {r.doc_id: r for r in resize_images(df, "payload", "doc_id", 8, 8).collect()}
     for i in imgs:
         t = decode_jpeg(bytes(thumbs[i].thumbnail))
         assert t.shape == (8, 8, 3)

@@ -83,7 +83,7 @@ def test_decode_image_png_drops_alpha_and_resize_roundtrips():
     arr[..., 3] = 255
     rgb = decode_image(encode_png(arr))
     assert rgb.shape == (4, 4, 3) and rgb[0, 0, 0] == 200
-    thumb = resize_stub(encode_png(arr[:, :, :3]), 2, 2, fake=False)
+    thumb = resize_stub(encode_png(arr[:, :, :3]), 2, 2)
     assert thumb[:8] == b"\x89PNG\r\n\x1a\n"
     assert decode_png(thumb).shape == (2, 2, 3)
 

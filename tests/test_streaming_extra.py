@@ -129,20 +129,18 @@ def test_permissive_csv_bad_records(spark, tmp_path):
 
 
 def test_multimodal_resize_and_frames(spark):
+    """Payloads that are neither a decodable image nor y4m video fail
+    the resize and frame-sampling stages loudly — no fabricated
+    thumbnails or frames."""
     from hadoop_3_3_6_spark.functions.multimodal import resize_images, sample_frames
 
     df = spark.createDataFrame(
         [(1, bytes(range(200))), (2, bytes(200))], "doc_id long, payload binary"
     )
-    thumbs = resize_images(df, width=8, height=8).collect()
-    assert all(r["n_bytes"] == 64 for r in thumbs)
-    # deterministic: same payload -> same thumbnail
-    again = {r["doc_id"]: bytes(r["thumbnail"]) for r in resize_images(df, width=8, height=8).collect()}
-    assert {r["doc_id"]: bytes(r["thumbnail"]) for r in thumbs} == again
-    frames = sample_frames(df, every_n=3).collect()
-    # 200 bytes -> 13 16-byte frames -> every 3rd -> 5 per doc
-    assert len(frames) == 10
-    assert {r["frame_idx"] for r in frames} == {0, 1, 2, 3, 4}
+    with pytest.raises(Exception, match="NotImplementedError"):
+        resize_images(df, width=8, height=8).collect()
+    with pytest.raises(Exception, match="NotImplementedError"):
+        sample_frames(df, every_n=3).collect()
 
 
 def test_custom_stream_source_exactly_once_drain(spark, tmp_path):

@@ -85,14 +85,10 @@ def test_random_generators_deterministic(spark):
 
 
 def test_multimodal_decode_stub(spark):
-    from hadoop_3_3_6_spark.functions.multimodal import decode_features, decode_stub
+    from hadoop_3_3_6_spark.functions.multimodal import decode_stub
 
     with pytest.raises(NotImplementedError):
-        decode_stub(b"xx", fake=False)
-    df = spark.createDataFrame([(1, b"abc"), (2, b"def")], "doc_id long, payload binary")
-    feats = decode_features(df, fake=True).collect()
-    assert len(feats) == 2
-    assert all(len(r["feature"]) == 8 for r in feats)
+        decode_stub(b"xx")
 
 
 def test_approx_distinct_tolerance(spark, sf_dir):
@@ -405,7 +401,7 @@ def test_resize_nearest_known_values():
 
 def test_real_image_decode_and_resize_in_spark(spark):
     """The mapInPandas stages run the REAL numpy decoder end-to-end on
-    PPM and BMP payloads (no fake gate), producing true dimensions and
+    PPM and BMP payloads, producing true dimensions and
     re-encoded thumbnails that decode back to the expected size."""
     import numpy as np
 
@@ -424,13 +420,13 @@ def test_real_image_decode_and_resize_in_spark(spark):
         [(1, bytearray(encode_ppm(img1))), (2, bytearray(encode_bmp(img2)))],
         "doc_id long, payload binary",
     )
-    feats = {r["doc_id"]: r for r in decode_features(df, fake=False).collect()}
+    feats = {r["doc_id"]: r for r in decode_features(df).collect()}
     assert (feats[1]["width"], feats[1]["height"]) == (12, 16)
     assert (feats[2]["width"], feats[2]["height"]) == (21, 9)
     exp_mean = img1.reshape(-1, 3).mean(axis=0) / 255.0
     assert abs(feats[1]["feature"][0] - exp_mean[0]) < 1e-9
 
-    thumbs = {r["doc_id"]: r for r in resize_images(df, width=4, height=4, fake=False).collect()}
+    thumbs = {r["doc_id"]: r for r in resize_images(df, width=4, height=4).collect()}
     t1 = decode_image(bytes(thumbs[1]["thumbnail"]))
     t2 = decode_image(bytes(thumbs[2]["thumbnail"]))
     assert t1.shape == (4, 4, 3) and t2.shape == (4, 4, 3)

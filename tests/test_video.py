@@ -37,7 +37,7 @@ def test_y4m_spec_bytes_parse():
 
 
 def test_frame_sampling_real_path():
-    kept = frame_sample_stub(_clip(n=7, val=9), every_n=3, fake=False)
+    kept = frame_sample_stub(_clip(n=7, val=9), every_n=3)
     assert len(kept) == 3  # frames 0,3,6
     for blob in kept:
         meta, frames = decode_y4m(blob)
@@ -47,8 +47,7 @@ def test_frame_sampling_real_path():
 
 def test_non_y4m_still_gated():
     with pytest.raises(NotImplementedError):
-        frame_sample_stub(b"\x00\x01\x02mp4ish", every_n=2, fake=False)
-    assert frame_sample_stub(b"x" * 64, every_n=2, fake=True)
+        frame_sample_stub(b"\x00\x01\x02mp4ish", every_n=2)
 
 
 def test_malformed_y4m_rejected():

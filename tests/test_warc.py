@@ -181,11 +181,12 @@ def test_warc_stream_sink_commit_is_replay_idempotent(tmp_path):
     already overwrote the same segments)."""
     import os
 
-    from hadoop_3_3_6_spark.sources.warc import WarcStreamWriter, _WarcCommit
+    from hadoop_3_3_6_spark.sources.pydatasource import PartCommit
+    from hadoop_3_3_6_spark.sources.warc import WarcStreamWriter
 
     out = str(tmp_path / "sink")
     w = WarcStreamWriter({"path": out})
-    msgs = [_WarcCommit(os.path.join(out, "part-00000007-00000.warc.gz"), 5)]
+    msgs = [PartCommit(os.path.join(out, "part-00000007-00000.warc.gz"), 5)]
     w.commit(msgs, 7)
     w.commit(msgs, 7)  # replay of batch 7 after restart
     w.commit(msgs, 8)
