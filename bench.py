@@ -271,7 +271,7 @@ HEADLINE = [
 # (the I/O anchors hit 5-9x).  A fresh session per chunk drops that
 # state while the shared JVM keeps JIT-compiled code warm; measured to
 # restore round-2-level timings on the same machine.
-CHUNK = int(os.environ.get("SPARK_GRAFT_BENCH_CHUNK", "40"))
+CHUNK = 40
 
 
 def _fresh_session(app_name: str, warm_dir: str | None = None, ui: bool = False):
@@ -1144,18 +1144,10 @@ def _pretraining_chain(spark, sf_dir: str):
     (fixture prep, not chain work) and the classifier training weights
     (training is pipeline_quality_classifier's own scale row; the
     chain's classifier stage is the APPLY projection)."""
-    from hadoop_3_3_6_spark.functions.text import train_quality_classifier
     from hadoop_3_3_6_spark.plans import queries as Q
 
-    wkey = ("qc_weights", sf_dir)
-    if wkey not in Q._RENDER_CACHE:
-        Q._RENDER_CACHE[wkey] = train_quality_classifier(
-            Q._qc_labeled(spark, sf_dir),
-            buckets=Q._QC_BUCKETS,
-            iters=Q._QC_ITERS,
-            lr=Q._QC_LR,
-        )
-    Q._RENDER_CACHE.pop(("pretrain_full", sf_dir), None)
+    Q._qc_weights(spark, sf_dir, even_only=False)
+    Q._BUILT.pop(("pretrain_full_", sf_dir), None)
     return Q.QUERIES["pipeline_pretraining_full"](spark, sf_dir)
 
 

@@ -22,6 +22,7 @@ join, multifilewc, dbcount, teragen/terasort/teravalidate.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,25 +62,40 @@ from hadoop_3_3_6_spark.functions.text import (
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-# Rendered-corpus cache for the eager-by-contract ingestion queries
-# (wav/warc/avro): the synthetic corpus is a pure function of sf_dir,
-# so render ONCE per process and reuse — repeat constructions (bench
-# double-runs, explain-only calls) previously leaked one uncleaned
-# temp directory per invocation.
-_RENDER_CACHE: dict[tuple[str, str], str] = {}
+# Build-once store for construction-time artifacts (rendered corpus
+# dirs, trained models, drained stream sinks): each is a pure function
+# of its key, so it is built ONCE per process and reused by every
+# query that needs it.  _once is the only reader and writer of the
+# store.  Saved tables are not kept here: a catalog entry does not
+# carry over to a new session, so their users re-create the table
+# whenever spark.catalog.tableExists is false.
+_BUILT: dict[tuple, object] = {}
+
+
+def _once(key: tuple, build: Callable[[], object]):
+    """Return the artifact stored under ``key``, calling ``build()``
+    exactly once per process (a build that raises stores nothing)."""
+    if key not in _BUILT:
+        _BUILT[key] = build()
+    return _BUILT[key]
 
 
 def _rendered_dir(prefix: str, sf_dir: str, render) -> str:
-    """Return the cached rendered-corpus directory for (prefix, sf_dir),
-    invoking ``render(out_dir)`` exactly once per process."""
-    import tempfile
+    """Return the rendered directory for (prefix, sf_dir), invoking
+    ``render(out_dir)`` once per process into a fresh temp dir that is
+    removed when the process exits."""
 
-    key = (prefix, sf_dir)
-    if key not in _RENDER_CACHE:
+    def build() -> str:
+        import atexit
+        import shutil
+        import tempfile
+
         out = tempfile.mkdtemp(prefix=prefix)
+        atexit.register(shutil.rmtree, out, ignore_errors=True)
         render(out)
-        _RENDER_CACHE[key] = out
-    return _RENDER_CACHE[key]
+        return out
+
+    return _once((prefix, sf_dir), build)
 
 
 def _register(name: str, oracle: str | None = None):
@@ -583,28 +599,24 @@ def q_bucketed_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (test_bucketed_join_query_elides_exchange); this row pins the
     RESULTS against a plain-join oracle, so a bucket-misrouted row
     (wrong hash, wrong bucket count on either side) turns the driver
-    row red.  Eager by contract (bucketed tables written once per
-    (process, sf_dir))."""
+    row red.  Eager by contract (bucketed tables written whenever the
+    session's catalog lacks them)."""
     import hashlib as _hl
+
+    from hadoop_3_3_6_spark.sources.containers import bucketed_table
 
     # sf-scoped table names: two tiers constructed in one process must
     # not overwrite each other's bucketed tables out from under a plan
     sfx = _hl.md5(sf_dir.encode()).hexdigest()[:8]
-    key = ("bucketed_tables", sf_dir)
-    if key not in _RENDER_CACHE:
-        from hadoop_3_3_6_spark.sources.containers import bucketed_table
-
-        cust = load_table(spark, "customer", sf_dir)
-        orders = load_table(spark, "orders", sf_dir)
-        bucketed_table(
-            cust.select("c_custkey", "c_mktsegment"),
-            f"bq_customer_{sfx}", ["c_custkey"], num_buckets=8,
-        )
-        bucketed_table(
-            orders.select("o_custkey", "o_totalprice"),
-            f"bq_orders_{sfx}", ["o_custkey"], num_buckets=8,
-        )
-        _RENDER_CACHE[key] = True
+    for table, cols in (
+        ("customer", ["c_custkey", "c_mktsegment"]),
+        ("orders", ["o_custkey", "o_totalprice"]),
+    ):
+        if not spark.catalog.tableExists(f"bq_{table}_{sfx}"):
+            bucketed_table(
+                load_table(spark, table, sf_dir).select(*cols),
+                f"bq_{table}_{sfx}", cols[:1], num_buckets=8,
+            )
     c = spark.table(f"bq_customer_{sfx}")
     o = spark.table(f"bq_orders_{sfx}")
     return (
@@ -2294,16 +2306,12 @@ def _phash_fixture_array(i: int):
     return arr.astype(np.uint8)
 
 
-_PHASH_REPLICA_CACHE: dict = {}
-
-
+@functools.cache
 def _phash_replica(path: str):
     """Memoized replica core shared by the batch and incremental phash
     oracles: (sorted ids, unsigned 64-bit dHash per id) — the fixture
     render + the resize/luma/comparison fold restated independently of
     the engine (the resize_nearest formula, integer luma, bit fold)."""
-    if path in _PHASH_REPLICA_CACHE:
-        return _PHASH_REPLICA_CACHE[path]
     import numpy as np
     import pyarrow.parquet as pq
 
@@ -2323,8 +2331,7 @@ def _phash_replica(path: str):
         return h
 
     uh = {i: dh(_phash_fixture_array(i)) for i in ids}
-    _PHASH_REPLICA_CACHE[path] = (ids, uh)
-    return _PHASH_REPLICA_CACHE[path]
+    return ids, uh
 
 
 def _phash_incremental_oracle() -> str | None:
@@ -2643,14 +2650,14 @@ def q_similarity_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trained centroids cached per (process, sf_dir) — the
     # build-once/query-many contract (BPE-merge-table pattern);
     # training is deterministic so the cache can never mask a drift
-    key = ("kmeans_centroids", sf_dir)
-    if key not in _RENDER_CACHE:
+    def train() -> list:
         trained = train_kmeans_centroids(
             emb, "vec_id", "embedding", k=16, iters=3, quantize_decimals=3
         )
-        _RENDER_CACHE[key] = [(r["cent_id"], list(r["cvec"])) for r in trained.collect()]
+        return [(r["cent_id"], list(r["cvec"])) for r in trained.collect()]
+
     cents = spark.createDataFrame(
-        _RENDER_CACHE[key], "cent_id int, cvec array<double>"
+        _once(("kmeans_centroids", sf_dir), train), "cent_id int, cvec array<double>"
     )
     probes = emb.filter(F.col("vec_id") < 25).select("vec_id")
     return ivf_topk(emb, "vec_id", "embedding", k=5, nprobe=4, probes=probes, centroids=cents)
@@ -2677,23 +2684,20 @@ def _spark_round(x: float, decimals: int = 6) -> float:
     )
 
 
+@functools.cache
 def _pq_replica(path: str):
     """Shared pure-numpy replica of the distributed PQ pipeline's
     training + encoding stages: per-subspace Lloyd with the same md5
     seed ranking / sequential-fold distances (cumsum = Spark's
     aggregate() left fold) / lowest-code-id tie break / per-iteration
     decimal-grid snap, then PQ encoding.  Returns (ids, vecs, barr,
-    enc); memoized (cache defined just below) so the two PQ oracles
-    (_pq_oracle, _ivf_pq_oracle) pay ONE replica run per process
-    (round-7 ADVICE item)."""
-    if path in _PQ_REPLICA_CACHE:
-        return _PQ_REPLICA_CACHE[path]
+    enc); memoized so the two PQ oracles (_pq_oracle, _ivf_pq_oracle)
+    pay ONE replica run per process (round-7 ADVICE item)."""
     ids, vecs = _load_embeddings_np(path)
     _books, barr, enc = _pq_train_encode_np(
         ids, vecs, _PQ_M, _PQ_CODES, _PQ_ITERS, _PQ_Q
     )
-    _PQ_REPLICA_CACHE[path] = (ids, vecs, barr, enc)
-    return _PQ_REPLICA_CACHE[path]
+    return ids, vecs, barr, enc
 
 
 def _load_embeddings_np(path: str):
@@ -2747,9 +2751,6 @@ def _pq_train_encode_np(ids, vecs, m: int, codes: int, iters: int, q: int):
         diffs = sv[:, None, :] - barr[j][None, :, :]
         enc[:, j] = np.argmin(np.cumsum(diffs * diffs, axis=2)[:, :, -1], axis=1)
     return books, barr, enc
-
-
-_PQ_REPLICA_CACHE: dict = {}
 
 
 def _adc_replica_rows(path: str, probe_max: int, allowed_cells=None, k: int | None = None):
@@ -2839,9 +2840,7 @@ def _pq_oracle() -> str | None:
     return _adc_values_sql(rows)
 
 
-_COARSE_REPLICA_CACHE: dict = {}
-
-
+@functools.cache
 def _coarse_replica(path: str):
     """Memoized numpy replica of the coarse IVF stage (the
     assign_clusters contract): cosine scores against the
@@ -2849,8 +2848,6 @@ def _coarse_replica(path: str):
     HALF_UP 1e-6 rounding.  Returns (ids, vecs, cent_rows, id_to_idx,
     cs) — shared by the composed IVF-PQ oracle and the residual
     variant's."""
-    if path in _COARSE_REPLICA_CACHE:
-        return _COARSE_REPLICA_CACHE[path]
     import numpy as np
 
     ids, vecs = _load_embeddings_np(path)
@@ -2867,8 +2864,7 @@ def _coarse_replica(path: str):
         dots = np.cumsum(vecs * cents[ci][None, :], axis=1)[:, -1]
         cs[:, ci] = dots / (norms * cnorms[ci])
     cs = np.vectorize(_spark_round)(cs)
-    _COARSE_REPLICA_CACHE[path] = (ids, vecs, cent_rows, id_to_idx, cs)
-    return _COARSE_REPLICA_CACHE[path]
+    return ids, vecs, cent_rows, id_to_idx, cs
 
 
 def _ivf_pq_oracle() -> str | None:
@@ -3030,14 +3026,10 @@ def _trained_pq_books(spark: SparkSession, sf_dir: str) -> list:
     decimal-grid snap), so the cache can never mask a drift."""
     from hadoop_3_3_6_spark.functions.similarity import train_pq_codebooks
 
-    key = ("pq_books", sf_dir)
-    if key not in _RENDER_CACHE:
-        emb = load_table(spark, "embeddings", sf_dir)
-        _RENDER_CACHE[key] = train_pq_codebooks(
-            emb, "vec_id", "embedding",
-            m=_PQ_M, codes=_PQ_CODES, iters=_PQ_ITERS, quantize_decimals=_PQ_Q,
-        )
-    return _RENDER_CACHE[key]
+    return _once(("pq_books", sf_dir), lambda: train_pq_codebooks(
+        load_table(spark, "embeddings", sf_dir), "vec_id", "embedding",
+        m=_PQ_M, codes=_PQ_CODES, iters=_PQ_ITERS, quantize_decimals=_PQ_Q,
+    ))
 
 
 def _trained_residual_pq_books(spark: SparkSession, sf_dir: str) -> list:
@@ -3047,14 +3039,11 @@ def _trained_residual_pq_books(spark: SparkSession, sf_dir: str) -> list:
     never mask a drift."""
     from hadoop_3_3_6_spark.functions.similarity import train_residual_pq_codebooks
 
-    key = ("pq_res_books", sf_dir)
-    if key not in _RENDER_CACHE:
-        emb = load_table(spark, "embeddings", sf_dir)
-        _RENDER_CACHE[key] = train_residual_pq_codebooks(
-            emb, "vec_id", "embedding", num_centroids=_IVFPQ_CELLS,
-            m=_PQ_M, codes=_PQ_CODES, iters=_PQ_ITERS, quantize_decimals=_PQ_Q,
-        )
-    return _RENDER_CACHE[key]
+    return _once(("pq_res_books", sf_dir), lambda: train_residual_pq_codebooks(
+        load_table(spark, "embeddings", sf_dir), "vec_id", "embedding",
+        num_centroids=_IVFPQ_CELLS,
+        m=_PQ_M, codes=_PQ_CODES, iters=_PQ_ITERS, quantize_decimals=_PQ_Q,
+    ))
 
 
 _OPQ_ITERS, _OPQ_PQ_ITERS = 2, 2  # rotation sweeps × Lloyd iters per sweep
@@ -3254,15 +3243,12 @@ def q_similarity_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_3_3_6_spark.functions.similarity import opq_topk, train_opq_rotation
 
     emb = load_table(spark, "embeddings", sf_dir)
-    key = ("opq_rotation_books", sf_dir)
-    if key not in _RENDER_CACHE:
-        _RENDER_CACHE[key] = train_opq_rotation(
-            emb, "vec_id", "embedding",
-            m=_PQ_M, codes=_PQ_CODES,
-            opq_iters=_OPQ_ITERS, pq_iters=_OPQ_PQ_ITERS,
-            quantize_decimals=_PQ_Q,
-        )
-    rmat, books = _RENDER_CACHE[key]
+    rmat, books = _once(("opq_rotation_books", sf_dir), lambda: train_opq_rotation(
+        emb, "vec_id", "embedding",
+        m=_PQ_M, codes=_PQ_CODES,
+        opq_iters=_OPQ_ITERS, pq_iters=_OPQ_PQ_ITERS,
+        quantize_decimals=_PQ_Q,
+    ))
     probes = emb.filter(F.col("vec_id") < _PQ_PROBE_MAX).select("vec_id")
     return opq_topk(emb, rmat, books, "vec_id", "embedding", k=_PQ_K, probes=probes)
 
@@ -3297,8 +3283,6 @@ def q_similarity_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     here exists only to CERTIFY the maintenance loop.  Eager by
     contract (index build + the availableNow maintenance stream run at
     construction; artifacts cached per (process, sf_dir))."""
-    import tempfile
-
     from hadoop_3_3_6_spark.functions.similarity import (
         append_pq_index,
         build_pq_index,
@@ -3307,9 +3291,8 @@ def q_similarity_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     books = _trained_pq_books(spark, sf_dir)
-    key = ("pq_inc_index", sf_dir)
-    if key not in _RENDER_CACHE:
-        base = tempfile.mkdtemp(prefix="pqinc_")
+
+    def render(base: str) -> None:
         idx, src = f"{base}/index", f"{base}/arriving"
         seed = emb.filter(F.col("vec_id") % 2 == 0)
         arriving = emb.filter(F.col("vec_id") % 2 == 1)
@@ -3329,8 +3312,9 @@ def q_similarity_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _RENDER_CACHE[key] = idx
-    maintained = spark.read.parquet(_RENDER_CACHE[key]).select(
+
+    base = _rendered_dir("pqinc_", sf_dir, render)
+    maintained = spark.read.parquet(f"{base}/index").select(
         F.col("vec_id"), F.col("codes").alias("_mc")
     )
     oneshot = pq_encode(emb, books, "vec_id", "embedding").select(
@@ -4169,20 +4153,18 @@ def q_warc_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     on disk (the commit protocol's ledger is exact), and zero
     deterministic-name violations (part-<batch>-<partition> — the
     replay-overwrite discipline).  Eager by contract (both stream
-    phases run at construction; results cache per (process,
+    phases run at construction; the sink dir caches per (process,
     sf_dir))."""
     import os
     import re as _re
-    import tempfile
 
     from hadoop_3_3_6_spark.sources.streamsource import register_range_stream
     from hadoop_3_3_6_spark.sources.warc import register_warc_source
 
     register_warc_source(spark)
     register_range_stream(spark)
-    key = ("warc_stream_sink", sf_dir)
-    if key not in _RENDER_CACHE:
-        base = tempfile.mkdtemp(prefix="warcsink_")
+
+    def render(base: str) -> None:
         out, ckpt = f"{base}/out", f"{base}/ckpt"
         os.makedirs(out, exist_ok=True)
 
@@ -4214,20 +4196,20 @@ def q_warc_stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 q.awaitTermination()
                 if n_back() == before:
                     break  # cap drained: a full restart added nothing
-        segs = sorted(x for x in os.listdir(out) if x.endswith(".warc.gz"))
-        manifest: set[str] = set()
-        epochs = os.path.join(out, "_epochs")
-        if os.path.isfile(epochs):
-            with open(epochs) as f:
-                for line in f:
-                    names = line.rstrip("\n").split("\t", 1)[1] if "\t" in line else ""
-                    manifest |= {s for s in names.split(",") if s}
-        mismatches = len(manifest.symmetric_difference(segs))
-        bad_names = sum(
-            1 for s in segs if not _re.fullmatch(r"part-\d{8}-\d{5}\.warc\.gz", s)
-        )
-        _RENDER_CACHE[key] = (out, mismatches, bad_names)
-    out, mismatches, bad_names = _RENDER_CACHE[key]
+
+    out = _rendered_dir("warcsink_", sf_dir, render) + "/out"
+    segs = sorted(x for x in os.listdir(out) if x.endswith(".warc.gz"))
+    manifest: set[str] = set()
+    epochs = os.path.join(out, "_epochs")
+    if os.path.isfile(epochs):
+        with open(epochs) as f:
+            for line in f:
+                names = line.rstrip("\n").split("\t", 1)[1] if "\t" in line else ""
+                manifest |= {s for s in names.split(",") if s}
+    mismatches = len(manifest.symmetric_difference(segs))
+    bad_names = sum(
+        1 for s in segs if not _re.fullmatch(r"part-\d{8}-\d{5}\.warc\.gz", s)
+    )
     back = spark.read.format("warc").load(f"{out}/*.warc.gz").select(
         F.regexp_extract("target_uri", r"(\d+)$", 1).cast("bigint").alias("n"),
         F.decode(F.col("payload"), "UTF-8").alias("v"),
@@ -4573,9 +4555,7 @@ _QC_GOLD = ("src0", "src1", "src2", "src3")
 _QC_GOLD_MARK, _QC_CRAWL_MARK = " hqmarker hqa hqb", " hqb hqa"
 
 
-_QC_REPLICA_MEMO: dict = {}
-
-
+@functools.cache
 def _qc_replica_state(train_even_only: bool):
     """Shared replica core for the classifier oracles: an INDEPENDENT
     python re-derivation of the whole loop — md5-ring feature hashing
@@ -4587,8 +4567,6 @@ def _qc_replica_state(train_even_only: bool):
     Returns (weights, feats, labels, table) — memoized, because the
     full-train weights are shared by the classifier oracle AND the
     capstone pretraining oracle's in-SQL scoring stage."""
-    if train_even_only in _QC_REPLICA_MEMO:
-        return _QC_REPLICA_MEMO[train_even_only]
     import os
 
     path = "/root/testdata/sf0.01/documents.parquet"
@@ -4651,8 +4629,7 @@ def _qc_replica_state(train_even_only: bool):
                 grad[b] += r
             grad[B] += r
         w = [w[b] - round(LR * grad[b] / n) for b in range(B + 1)]
-    _QC_REPLICA_MEMO[train_even_only] = (w, feats, labels, table)
-    return _QC_REPLICA_MEMO[train_even_only]
+    return w, feats, labels, table
 
 
 def _qc_replica_rows(train_even_only: bool) -> list[tuple[int, int, int, bool]] | None:
@@ -4905,8 +4882,6 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     Eager by contract (renders once per (process, sf_dir)); the
     returned accounting plan reads the rendered stage tables
     lazily."""
-    import tempfile
-
     from hadoop_3_3_6_spark.functions.dedup import (
         apply_span_dedup,
         exact_dedup,
@@ -4919,7 +4894,6 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         canonicalize_urls,
         gopher_quality_rules,
         html_to_text,
-        train_quality_classifier,
     )
     from pyspark.sql.window import Window
 
@@ -5024,9 +4998,7 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.coalesce("token_ids", F.expr("array()")).alias("token_ids")
         )
 
-    key = ("pretrain_full", sf_dir)
-    if key not in _RENDER_CACHE:
-        base = tempfile.mkdtemp(prefix="pretrain_full_")
+    def render(base: str) -> None:
 
         def j_urldedup(deps) -> DataFrame:
             # stage 1 of the published recipes (RefinedWeb §3.2 runs
@@ -5121,16 +5093,8 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the fastText-style quality classifier.  Training runs on
             # the CURATED labeled split (the raw gold-vs-crawl table,
             # the same set pipeline_quality_classifier certifies —
-            # weights shared via _RENDER_CACHE); applying to the
+            # weights shared via _qc_weights); applying to the
             # chain's cleaned text is this stage's 100-TB hot path.
-            wkey = ("qc_weights", sf_dir)
-            if wkey not in _RENDER_CACHE:
-                _RENDER_CACHE[wkey] = train_quality_classifier(
-                    _qc_labeled(spark, sf_dir),
-                    buckets=_QC_BUCKETS,
-                    iters=_QC_ITERS,
-                    lr=_QC_LR,
-                )
             gold = (
                 load_table(spark, "documents", sf_dir)
                 .select("doc_id", F.col("source").isin(*_QC_GOLD).alias("_gold"))
@@ -5147,7 +5111,8 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("text"),
             )
             scored = apply_quality_classifier(
-                marked, _RENDER_CACHE[wkey], keep_cols=("n_words", "_clean")
+                marked, _qc_weights(spark, sf_dir, even_only=False),
+                keep_cols=("n_words", "_clean"),
             )
             out = scored.filter(F.col("predicted")).select(
                 "doc_id",
@@ -5194,8 +5159,8 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             n: repr(j.error) for n, j in jobs.items() if j.state.value != "SUCCESS"
         }
         assert not failed, failed
-        _RENDER_CACHE[key] = base
-    base = _RENDER_CACHE[key]
+
+    base = _rendered_dir("pretrain_full_", sf_dir, render)
 
     wc = F.expr("size(filter(split(text, ' '), w -> w <> ''))").cast("bigint")
 
@@ -5309,7 +5274,6 @@ def q_pipeline_web_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_streamed.  Eager by contract (segments, stream phases and
     index render once per (process, sf_dir))."""
     import os
-    import tempfile
 
     from hadoop_3_3_6_spark.functions.text import html_to_text
     from hadoop_3_3_6_spark.sources.warc import register_warc_source
@@ -5322,9 +5286,7 @@ def q_pipeline_web_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.decode(F.col("payload"), "UTF-8").alias("html"),
         )
 
-    key = ("webstream", sf_dir)
-    if key not in _RENDER_CACHE:
-        base = tempfile.mkdtemp(prefix="webstream_")
+    def render(base: str) -> None:
         seg, idx, ckpt = f"{base}/segs", f"{base}/digest_index", f"{base}/ckpt"
         os.makedirs(seg)
         docs = load_table(spark, "documents", sf_dir).select(
@@ -5393,8 +5355,8 @@ def q_pipeline_web_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_phase()
         write_phase(mirrors, "b")
         run_phase()
-        _RENDER_CACHE[key] = base
-    base = _RENDER_CACHE[key]
+
+    base = _rendered_dir("webstream_", sf_dir, render)
 
     streamed = spark.read.parquet(f"{base}/stats").agg(
         F.sum("n_records").cast("bigint").alias("docs_streamed")
@@ -5525,19 +5487,12 @@ def q_pipeline_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame
     (ValueAggregatorJob.java:85) driving a broadcast-side scoring
     pass.  Eager by contract (training runs at construction; weights
     cached per (process, sf_dir))."""
-    from hadoop_3_3_6_spark.functions.text import (
-        apply_quality_classifier,
-        train_quality_classifier,
-    )
+    from hadoop_3_3_6_spark.functions.text import apply_quality_classifier
 
-    labeled = _qc_labeled(spark, sf_dir)
-    key = ("qc_weights", sf_dir)
-    if key not in _RENDER_CACHE:
-        _RENDER_CACHE[key] = train_quality_classifier(
-            labeled, buckets=_QC_BUCKETS, iters=_QC_ITERS, lr=_QC_LR
-        )
     return apply_quality_classifier(
-        labeled, _RENDER_CACHE[key], keep_cols=("label",)
+        _qc_labeled(spark, sf_dir),
+        _qc_weights(spark, sf_dir, even_only=False),
+        keep_cols=("label",),
     ).select("doc_id", "label", "score", "predicted")
 
 
@@ -5554,6 +5509,24 @@ def _qc_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _qc_weights(spark: SparkSession, sf_dir: str, even_only: bool) -> list:
+    """Quality-classifier weights trained on the labeled corpus (or its
+    even-id half, the held-out split's training side), cached per
+    (process, sf_dir) — deterministic integer training, so the cache
+    can never mask a drift."""
+    from hadoop_3_3_6_spark.functions.text import train_quality_classifier
+
+    def train() -> list:
+        labeled = _qc_labeled(spark, sf_dir)
+        if even_only:
+            labeled = labeled.filter(F.col("doc_id") % 2 == 0)
+        return train_quality_classifier(
+            labeled, buckets=_QC_BUCKETS, iters=_QC_ITERS, lr=_QC_LR
+        )
+
+    return _once(("qc_weights", sf_dir, even_only), train)
+
+
 @_register("pipeline_classifier_eval", _quality_classifier_eval_oracle())
 def q_pipeline_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HELD-OUT evaluation of the quality classifier — the train/test
@@ -5568,22 +5541,13 @@ def q_pipeline_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     replica closed-form.  Same exactness and scale contracts as
     pipeline_quality_classifier (weights cached per (process,
     sf_dir); scoring is the shuffle-free HOF projection)."""
-    from hadoop_3_3_6_spark.functions.text import (
-        apply_quality_classifier,
-        train_quality_classifier,
-    )
+    from hadoop_3_3_6_spark.functions.text import apply_quality_classifier
 
     labeled = _qc_labeled(spark, sf_dir)
-    key = ("qc_weights_even", sf_dir)
-    if key not in _RENDER_CACHE:
-        _RENDER_CACHE[key] = train_quality_classifier(
-            labeled.filter(F.col("doc_id") % 2 == 0),
-            buckets=_QC_BUCKETS,
-            iters=_QC_ITERS,
-            lr=_QC_LR,
-        )
     test = labeled.filter(F.col("doc_id") % 2 == 1)
-    scored = apply_quality_classifier(test, _RENDER_CACHE[key], keep_cols=("label",))
+    scored = apply_quality_classifier(
+        test, _qc_weights(spark, sf_dir, even_only=True), keep_cols=("label",)
+    )
     n_train = F.lit(
         labeled.filter(F.col("doc_id") % 2 == 0).count()
     ).cast("bigint")
@@ -5693,22 +5657,13 @@ def q_pipeline_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataF
     report-per-bucket discipline (…/lib/aggregate/ValueHistogram.java:37).
     Eager only for the cached training pass (shared with the eval
     row per (process, sf_dir))."""
-    from hadoop_3_3_6_spark.functions.text import (
-        apply_quality_classifier,
-        train_quality_classifier,
-    )
+    from hadoop_3_3_6_spark.functions.text import apply_quality_classifier
 
     labeled = _qc_labeled(spark, sf_dir)
-    key = ("qc_weights_even", sf_dir)
-    if key not in _RENDER_CACHE:
-        _RENDER_CACHE[key] = train_quality_classifier(
-            labeled.filter(F.col("doc_id") % 2 == 0),
-            buckets=_QC_BUCKETS,
-            iters=_QC_ITERS,
-            lr=_QC_LR,
-        )
     test = labeled.filter(F.col("doc_id") % 2 == 1)
-    scored = apply_quality_classifier(test, _RENDER_CACHE[key], keep_cols=("label",))
+    scored = apply_quality_classifier(
+        test, _qc_weights(spark, sf_dir, even_only=True), keep_cols=("label",)
+    )
     binned = scored.select(
         "label",
         F.expr("cast(round(score * 1e6) as bigint)").alias("score_micro"),
@@ -5932,13 +5887,13 @@ def q_nulloutput_noop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     obs = Observation()
     li = load_table(spark, "lineitem", sf_dir)
-    scratch = tempfile.mkdtemp(prefix="nulloutput_")
-    li.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").format(
-        "noop"
-    ).save(scratch)
-    files = [
-        p for p in glob.glob(f"{scratch}/**", recursive=True) if os.path.isfile(p)
-    ]
+    with tempfile.TemporaryDirectory(prefix="nulloutput_") as scratch:
+        li.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").format(
+            "noop"
+        ).save(scratch)
+        files = [
+            p for p in glob.glob(f"{scratch}/**", recursive=True) if os.path.isfile(p)
+        ]
     rows = [(int(obs.get["n"]), len(files))]
     return spark.createDataFrame(rows, "rows_discarded bigint, files_written bigint")
 
@@ -6008,16 +5963,13 @@ def q_token_shards_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary/index encode, pointer arithmetic and the decode end-to-end.
     Eager by contract (shards render once per (process, sf_dir) at
     construction; the returned plan reads the rendered files)."""
-    import tempfile
-
     from hadoop_3_3_6_spark.functions.text import build_vocab
     from hadoop_3_3_6_spark.sources.tokenshards import (
         read_token_shards,
         write_token_shards,
     )
 
-    key = ("token_shards", sf_dir)
-    if key not in _RENDER_CACHE:
+    def render(out: str) -> None:
         docs = load_table(spark, "documents", sf_dir)
         vocab = build_vocab(docs, "text", "doc_id").select("token", "token_id")
         toks = docs.select(
@@ -6042,12 +5994,11 @@ def q_token_shards_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.coalesce("token_ids", F.expr("array()")).alias("token_ids"),
         )
-        out = tempfile.mkdtemp(prefix="tokshards_")
         write_token_shards(
             full.repartition(8, "doc_id"), out, "doc_id", "token_ids"
         ).collect()  # the write action; manifest is partition-count sized
-        _RENDER_CACHE[key] = out
-    rb = read_token_shards(spark, _RENDER_CACHE[key])
+
+    rb = read_token_shards(spark, _rendered_dir("tokshards_", sf_dir, render))
     return rb.select(
         "doc_id",
         F.size("token_ids").alias("n_tokens"),
@@ -8769,14 +8720,11 @@ def q_rangestream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     n²%997 definition recomputed in-plan, and the full h-sum.  Eager
     by contract (both stream phases run at construction; the sink dir
     caches per (process, sf_dir))."""
-    import tempfile
-
     from hadoop_3_3_6_spark.sources.streamsource import register_range_stream
 
     register_range_stream(spark)
-    key = ("rangestream_drain", sf_dir)
-    if key not in _RENDER_CACHE:
-        base = tempfile.mkdtemp(prefix="rangestream_")
+
+    def render(base: str) -> None:
         sink, ckpt = f"{base}/rows", f"{base}/ckpt"
 
         appended = [0]
@@ -8801,8 +8749,8 @@ def q_rangestream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 q.awaitTermination()
                 if appended[0] == before:
                     break  # cap drained: a full restart added nothing
-        _RENDER_CACHE[key] = sink
-    rows = spark.read.parquet(_RENDER_CACHE[key])
+
+    rows = spark.read.parquet(_rendered_dir("rangestream_", sf_dir, render) + "/rows")
     return rows.agg(
         F.count(F.lit(1)).cast("bigint").alias("rows_total"),
         F.countDistinct("n").cast("bigint").alias("distinct_n"),
@@ -9761,17 +9709,24 @@ def q_tokenizer_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge table is cached per (process, sf_dir) like the
     rendered-corpus queries, so repeat constructions rebuild a tiny
     local DataFrame instead of retraining)."""
-    from hadoop_3_3_6_spark.functions.bpe import train_bpe
-
-    key = ("bpe_merges", sf_dir)
-    if key not in _RENDER_CACHE:
-        docs = load_table(spark, "documents", sf_dir)
-        merges = train_bpe(docs, num_merges=8, sample_cap_words=1200)
-        _RENDER_CACHE[key] = [tuple(r) for r in merges.collect()]
     return spark.createDataFrame(
-        _RENDER_CACHE[key],
+        _bpe_merges(spark, sf_dir),
         "rank int, left string, right string, merged string, pair_count bigint",
     )
+
+
+def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
+    """The learned BPE merge table as (rank, left, right, merged,
+    pair_count) tuples, trained once per (process, sf_dir) and shared
+    by tokenizer_bpe_train and tokenizer_bpe_apply."""
+    from hadoop_3_3_6_spark.functions.bpe import train_bpe
+
+    def train() -> list:
+        docs = load_table(spark, "documents", sf_dir)
+        merges = train_bpe(docs, num_merges=8, sample_cap_words=1200)
+        return [tuple(r) for r in merges.collect()]
+
+    return _once(("bpe_merges", sf_dir), train)
 
 
 def _bpe_apply_oracle() -> str | None:
@@ -9974,15 +9929,11 @@ def _trained_unigram(spark: SparkSession, sf_dir: str) -> list:
     deterministic training means the cache can never mask a drift."""
     from hadoop_3_3_6_spark.functions.bpe import train_unigram
 
-    key = ("unigram_pieces", sf_dir)
-    if key not in _RENDER_CACHE:
-        docs = load_table(spark, "documents", sf_dir)
-        _RENDER_CACHE[key] = train_unigram(
-            docs, "text",
-            vocab_size=_UNI_VOCAB, seed_size=_UNI_SEED,
-            max_piece_len=_UNI_MAXLEN, iters=_UNI_ITERS,
-        )
-    return _RENDER_CACHE[key]
+    return _once(("unigram_pieces", sf_dir), lambda: train_unigram(
+        load_table(spark, "documents", sf_dir), "text",
+        vocab_size=_UNI_VOCAB, seed_size=_UNI_SEED,
+        max_piece_len=_UNI_MAXLEN, iters=_UNI_ITERS,
+    ))
 
 
 @_register("tokenizer_unigram_apply", _unigram_oracle())
@@ -10024,8 +9975,7 @@ def q_tokenizer_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     constructed, cached)."""
     from hadoop_3_3_6_spark.functions.bpe import apply_bpe
 
-    q_tokenizer_bpe_train(spark, sf_dir)  # fills the merge cache
-    merges = [(l, r) for _rank, l, r, _m, _c in _RENDER_CACHE[("bpe_merges", sf_dir)]]
+    merges = [(l, r) for _rank, l, r, _m, _c in _bpe_merges(spark, sf_dir)]
     docs = load_table(spark, "documents", sf_dir)
     return apply_bpe(docs, merges)
 
@@ -10232,20 +10182,16 @@ def q_mapfile_lookup_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucketed_table analogue: three point lookups, each pruned to a
     single bucket at planning time (SelectedBucketsCount: 1 out of N —
     plan-asserted in tests), unioned into one result.  The bucketed
-    table persists once per (process, sf_dir)."""
+    table is written whenever the session's catalog lacks it."""
     from hadoop_3_3_6_spark.sources.containers import bucketed_table, mapfile_get
 
     token = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
     name = f"mapfile_customer_{token}"
-    # Unlike the other _RENDER_CACHE entries (session-independent disk
-    # paths), a saved table registration lives in the SESSION catalog —
-    # re-create it whenever the current session can't see it (e.g. a
-    # later per-chunk bench session in the same process).
-    key = ("mapfile_customer_table", sf_dir)
-    if key not in _RENDER_CACHE or not spark.catalog.tableExists(name):
+    # a saved table lives in the SESSION catalog (see _BUILT): re-create
+    # it whenever the current session can't see it
+    if not spark.catalog.tableExists(name):
         cust = load_table(spark, "customer", sf_dir).select("c_custkey", "c_name", "c_acctbal")
         bucketed_table(cust, name, ["c_custkey"], num_buckets=8)
-        _RENDER_CACHE[key] = name
     parts = [mapfile_get(spark, name, "c_custkey", k) for k in (1, 7, 13)]
     df = parts[0]
     for p in parts[1:]:

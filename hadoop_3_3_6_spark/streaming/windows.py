@@ -60,14 +60,11 @@ def sized_state_partitions(
     monotone in partition count, so the floor (4) is the local
     optimum AND the scale-safe minimum.  At real stream volumes
     (GB-scale micro-batches) ceil(bytes/target) takes over and the
-    count grows with the data exactly like a batch shuffle.
-    ``SPARK_GRAFT_STATE_PARTITIONS`` overrides for deployments that
-    pin their checkpoint layout."""
+    count grows with the data exactly like a batch shuffle.  Every
+    drain checkpoints into a fresh temp dir, so no checkpoint layout
+    pins the count."""
     import math
 
-    env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if env:
-        return int(env)
     path = os.path.join(sf_dir, source)
     try:
         if os.path.isdir(path):

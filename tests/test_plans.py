@@ -458,80 +458,44 @@ def test_query_construction_runs_no_jobs(spark, sf_dir):
     """Query constructors must be pure plan builders — no eager driver
     action (collect/count) hidden inside.  At scale an eager action in
     a constructor splits the plan and materializes intermediates.
-    Exemptions: streaming queries execute an availableNow micro-batch
-    run by contract (the returned DataFrame is the memory-sink table),
-    terasort_validate and avro_roundtrip write+read their own data,
-    and pipe_wordcount spawns the child-process pipe eagerly to
-    surface launch errors."""
+    Work a constructor builds once per process (rendered dirs, trained
+    models, drained stream sinks, saved tables) is paid in the warm
+    pass, so those queries are measured like the lazy ones.  Exempt
+    are only the queries that launch a job on EVERY construction, each
+    with its reason."""
     eager_by_contract = {
         name
         for name in QUERIES
+        # the availableNow drain runs at every construction
         if name.startswith("streaming_")
-        or name in {"terasort_validate", "pipe_wordcount", "avro_roundtrip", "dedup_clusters",
-                    "similarity_ivf_trained", "multimodal_wav_source", "pipeline_dedup_keep",
-                    "warc_source_scan", "seqfile_roundtrip", "jobcontrol_word_pipeline",
-                    "tokenizer_bpe_train", "tokenizer_bpe_apply",
-                    "similarity_pq_topk",  # PQ training iterations (ivf_trained contract)
-                    "similarity_ivf_pq_topk",  # same PQ training contract
-                    "similarity_ivf_pq_residual_topk",  # same PQ training contract
-                    "similarity_ivf_pq_refined_topk",  # same PQ training contract
-                    "similarity_opq_topk",  # OPQ rotation + PQ training contract
-                    "distch_manifest",  # renders + mutates its tree at construction
-                    "token_shards_roundtrip",  # renders shard triples at construction
-                    "tokenizer_unigram_apply",  # EM training + unique-word segmentation at construction
-                    "nline_split_scan",  # closed-form verdict computed from actions
-                    "observe_counters",  # the observed map exists only after the action
-                    # round-4 rendered-artifact rows that pay a per-
-                    # construction metadata job even after the render
-                    # cache: SequenceFile toDF inference, and parquet
-                    # footer/partition discovery on non-memoized
-                    # rendered dirs (probed individually; the other
-                    # round-4 rows are pure and stay under the sweep)
-                    "seqfile_filter_percent", "timetravel_nation_versions",
-                    "compaction_orders_scan", "zorder_orders_scan",
-                    "routed_outputs_scan",
-                    "pipeline_web_e2e",  # renders its WARC corpus at construction
-                    # index build + availableNow maintenance stream at construction
-                    "similarity_pq_incremental",
-                    # round-10 eager-by-contract rows: the capstone runs
-                    # its JobControl DAG at construction; the streaming
-                    # twin runs its two checkpointed stream phases; the
-                    # two storage verdict rows render artifacts and
-                    # compute their scan/footer metrics
-                    "pipeline_pretraining_full", "pipeline_web_streaming",
-                    "bloommapfile_point_skip", "lazyoutput_empty_parts",
-                    # classifier training loops run at construction
-                    "pipeline_quality_classifier", "pipeline_classifier_eval",
-                    # shares seqfile_roundtrip's rendered dir + the
-                    # sequenceFile toDF inference job
-                    "seqfile_as_text_scan",
-                    # two checkpointed stream phases run at construction
-                    "rangestream_drain",
-                    # round-11 eager-by-contract rows: shares
-                    # seqfile_roundtrip's rendered dir + sequenceFile
-                    # toDF inference; the noop write action runs at
-                    # construction
-                    "seqfile_as_binary_scan", "nulloutput_noop",
-                    # two capped stream-sink phases run at construction
-                    "warc_stream_sink_roundtrip",
-                    # round-12: renders its TypedBytesWritable
-                    # SequenceFile at construction (plus binaryFile
-                    # listing on the rendered dir)
-                    "typedbytes_roundtrip",
-                    # the AutoInputFormat sniff reads each file's
-                    # 3-byte head at plan time (the reference's own
-                    # per-split algorithm) and the SEQ branch pays the
-                    # toDF inference job on the rendered dir
-                    "auto_input_scan",
-                    # the partition-file workflow IS sample-then-plan:
-                    # the reference's InputSampler.writePartitionFile
-                    # runs client-side before the job, so the sampler
-                    # collect at construction is the contract
-                    "inputsampler_totalorder"}
+        or name in {
+            "terasort_validate",  # checksum + per-partition sortedness collects
+            "dedup_clusters",  # connected-components iterations localCheckpoint
+            "pipeline_dedup_keep",  # same connected-components iterations
+            "nline_split_scan",  # closed-form verdict computed from actions
+            "observe_counters",  # the observed map exists only after the action
+            "nulloutput_noop",  # the noop write action runs at construction
+            "inputsampler_totalorder",  # the sampler collect is the workflow
+            "pipeline_classifier_eval",  # n_train is counted at construction
+            # the under-split probe (text.needs_spread) misses its memo
+            # on the encoded frame and runs a job every construction
+            "similarity_pq_topk", "similarity_opq_topk",
+            # sequenceFile toDF pays a schema-inference job per read
+            "seqfile_roundtrip", "seqfile_as_text_scan", "seqfile_as_binary_scan",
+            "seqfile_filter_percent", "auto_input_scan",
+            # spark.read.parquet on a rendered dir pays a schema-inference job
+            "jobcontrol_word_pipeline", "similarity_pq_incremental",
+            "pipeline_web_streaming", "rangestream_drain", "pipeline_pretraining_full",
+            "timetravel_nation_versions", "compaction_orders_scan", "zorder_orders_scan",
+            "routed_outputs_scan",
+            # compute their scan/footer metrics with actions
+            "bloommapfile_point_skip", "lazyoutput_empty_parts",
+        }
     }
     lazy = [n for n in QUERIES if n not in eager_by_contract]
     # Warm pass: pays the one-time parquet schema-inference jobs that
-    # load_table memoizes; the measured pass below must then be pure.
+    # load_table memoizes and the build-once construction work; the
+    # measured pass below must then be pure.
     for name in lazy:
         QUERIES[name](spark, sf_dir)
     sc = spark.sparkContext
@@ -784,7 +748,7 @@ def test_rendered_corpus_dir_is_cached_per_process():
     ONE rendered temp dir per (prefix, sf_dir) — a fresh mkdtemp per
     construction (the round-2 behavior) leaked a directory every
     bench double-run and explain call."""
-    from hadoop_3_3_6_spark.plans.queries import _RENDER_CACHE, _rendered_dir
+    from hadoop_3_3_6_spark.plans.queries import _BUILT, _rendered_dir
 
     calls = []
     d1 = _rendered_dir("cache_probe_", "/fake/sfX", lambda d: calls.append(d))
@@ -794,11 +758,61 @@ def test_rendered_corpus_dir_is_cached_per_process():
         assert d1 == d2 and len(calls) == 2  # one render per distinct key
         assert d3 != d1
     finally:
-        import os
         import shutil
 
         for key in [("cache_probe_", "/fake/sfX"), ("cache_probe_", "/fake/sfY")]:
-            shutil.rmtree(_RENDER_CACHE.pop(key), ignore_errors=True)
+            shutil.rmtree(_BUILT.pop(key), ignore_errors=True)
+
+
+def test_rendered_dir_removed_at_exit():
+    """A rendered dir lives as long as its process: it is removed at
+    interpreter exit instead of piling up in the temp dir."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "from hadoop_3_3_6_spark.plans.queries import _rendered_dir\n"
+        "d = _rendered_dir('exit_probe_', '/fake/sfZ',"
+        " lambda d: open(d + '/part-0', 'w').write('x'))\n"
+        "print(d)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    ).stdout.strip().splitlines()[-1]
+    assert os.path.basename(out).startswith("exit_probe_")
+    assert not os.path.exists(out)
+
+
+def test_nulloutput_noop_leaves_no_temp_dir(spark, sf_dir):
+    """The null sink's scratch dir is removed once files_written is
+    counted: a construction leaves no nulloutput_* entry behind."""
+    import os
+    import tempfile
+
+    def entries():
+        return {n for n in os.listdir(tempfile.gettempdir()) if n.startswith("nulloutput_")}
+
+    before = entries()
+    rows = QUERIES["nulloutput_noop"](spark, sf_dir).collect()
+    assert rows[0]["files_written"] == 0 and rows[0]["rows_discarded"] > 0
+    assert entries() - before == set()
+
+
+def test_bucketed_join_rebuilds_after_catalog_loss(spark, sf_dir):
+    """A saved table lives in the session catalog, not the build-once
+    store: once its bq_* tables are gone (as in a new session's
+    catalog), constructing the query again re-creates them and returns
+    the same rows."""
+    import hashlib
+
+    first = sorted(QUERIES["bucketed_join_customers"](spark, sf_dir).collect())
+    sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    for table in ("customer", "orders"):
+        spark.sql(f"DROP TABLE bq_{table}_{sfx}")
+    again = sorted(QUERIES["bucketed_join_customers"](spark, sf_dir).collect())
+    assert first and again == first
 
 
 def test_guarded_spans_reuse_one_exchange(spark, sf_dir):

@@ -182,13 +182,12 @@ def test_custom_stream_source_exactly_once_drain(spark, tmp_path):
     assert all(r.h == r.n * r.n % 997 for r in rows)
 
 
-def test_state_sizing_skips_temporary_and_hidden_dirs(monkeypatch, tmp_path):
+def test_state_sizing_skips_temporary_and_hidden_dirs(tmp_path):
     """State partitions size from the dataset's real part files only:
     an interrupted write's _temporary/ tree (or a hidden directory)
     must not inflate the byte count and hence the partition count."""
     from hadoop_3_3_6_spark.streaming.windows import sized_state_partitions
 
-    monkeypatch.delenv("SPARK_GRAFT_STATE_PARTITIONS", raising=False)
     ds = tmp_path / "events.parquet"
     ds.mkdir()
     (ds / "part-00000.parquet").write_bytes(b"x" * 1000)
