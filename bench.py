@@ -760,7 +760,7 @@ def main() -> None:
     # 10x (plus fixed overhead) = linear; >> 10x = investigate.
     sf1_spotcheck: dict[str, dict] = {}
     stage_audit: dict = {}
-    if os.environ.get("SPARK_GRAFT_SF1_SPOTCHECK", "1") != "0" and SF_DIR.rstrip("/").endswith("sf0.1"):
+    if SF_DIR.rstrip("/").endswith("sf0.1"):
         try:
             sf1_spotcheck, stage_audit = _sf1_spotcheck(timings, result_rows)
         except Exception as e:  # never fail the bench on the stretch tier
@@ -768,7 +768,7 @@ def main() -> None:
 
     # sf3 second scale point for the heaviest families (exponent check)
     sf3_spotcheck: dict[str, dict] = {}
-    if sf1_spotcheck and os.environ.get("SPARK_GRAFT_SF3_SPOTCHECK", "1") != "0":
+    if sf1_spotcheck:
         try:
             sf3_spotcheck = _sf3_spotcheck(sf1_spotcheck)
         except Exception as e:  # never fail the bench on the stretch tier

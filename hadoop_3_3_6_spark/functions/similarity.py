@@ -1,15 +1,25 @@
-"""Similarity search over embedding columns (north-star extension;
-SURVEY.md §7.2 M6).
+"""Similarity search over embedding columns: exact, LSH, IVF, PQ,
+OPQ and IVF-PQ top-k, plus the cluster-blocked near-dup, SemDeDup,
+diversity and contamination operators built from the same parts.
+Each shared decision has one copy:
 
-- ``cosine_topk_bruteforce``: exact top-k neighbors per probe via a
-  join + window rank — the correctness baseline.  O(probes × corpus);
-  bound the probe set, or use the LSH path at scale.
-- ``cosine_pairs_above``: exact all-pairs above a cosine threshold
-  (embedding near-dup detection).
-- ``lsh_bucketed_topk``: random-hyperplane LSH — deterministic plane
-  vectors, sign-bit bucket key, candidates meet in a bucket join.  The
-  100 TB path: shuffles only (bucket_key, id, embedding), never the
-  cross product.
+- Trainer: :func:`train_pq_codebooks` is the one distributed Lloyd
+  loop (md5 id-rank seeding, one broadcast matrix row with an
+  ``array_min`` argmin, ``posexplode`` means, an empty cell keeps its
+  centroid, optional decimal snap); :func:`train_kmeans_centroids` is
+  its ``m=1`` case.
+- Assignment: :func:`_seed_centroids` prepares every centroid frame
+  (the ``id < num_centroids`` seeding or given centroids, cast to
+  ``array<double>``, ``_cnorm``).  :func:`assign_clusters` ranks cells
+  by rounded cosine desc, NULL last, then ``cent_id`` asc;
+  :func:`assign_clusters_rowwise` is its shuffle-free one-cell form.
+- ADC: :func:`pq_encode` codes the corpus, :func:`_adc_tables` builds
+  per-probe distance tables and :func:`_adc_dist` sums the lookups.
+  :func:`_sqdist` is the one squared-L2 fold (trainer, encoder, tables
+  and the refine stage).
+- Probe form: every top-k takes ``probes``, a DataFrame of probe ids
+  applied as a broadcast semi-join (:func:`_restrict_to_probes`), so
+  no driver action; the PQ tiers require it.
 
 Dot products run JVM-side via zip_with/aggregate folds in double
 precision (sequential fold ⇒ bit-reproducible, oracle-matchable).
@@ -39,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_3_3_6_spark.functions.text import spread_for_compute
+
 
 def _dot(a: str, b: str) -> str:
     return (
@@ -47,20 +59,24 @@ def _dot(a: str, b: str) -> str:
     )
 
 
-def _restrict_to_probes(
-    df: DataFrame, id_col: str, probes: DataFrame | None, probe_ids: list[int] | None
-) -> DataFrame:
-    """Restrict ``df`` to probe rows without any driver action.
+def _sqdist(a: "F.Column", b: "F.Column") -> "F.Column":
+    """Squared L2 distance as a sequential left fold from 0.0 — the
+    one form the trainer, the encoder, the ADC tables and the refine
+    stage share, so their distances are bit-identical (and a numpy
+    ``cumsum`` replica reproduces them)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, d: acc + d
+    )
 
-    ``probes`` is a DataFrame of probe ids (column named ``id_col``) —
-    the scale form: a broadcast semi-join keeps the probe set a table
-    inside the plan instead of a collected literal list.  ``probe_ids``
-    (legacy literal list) is kept for small fixed sets."""
-    if probes is not None:
-        return df.join(F.broadcast(probes.select(id_col).distinct()), on=id_col, how="left_semi")
-    if probe_ids is not None:
-        return df.filter(F.col(id_col).isin(probe_ids))
-    return df
+
+def _restrict_to_probes(df: DataFrame, id_col: str, probes: DataFrame | None) -> DataFrame:
+    """Restrict ``df`` to the probe rows without any driver action:
+    ``probes`` is a DataFrame of probe ids (column named ``id_col``),
+    applied as a broadcast semi-join so the probe set stays a table
+    inside the plan.  ``None`` keeps every row (all-pairs)."""
+    if probes is None:
+        return df
+    return df.join(F.broadcast(probes.select(id_col).distinct()), on=id_col, how="left_semi")
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -110,8 +126,6 @@ def _rank_topk(
 def _scored_pairs(
     emb: DataFrame, probes: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
     a = with_norm(probes, vec_col).alias("a")
     # corpus side of the |probes|-fanout score join: D-wide dot folds
     # per (probe, row) pair are CPU-bound — rebalance an under-split
@@ -134,13 +148,12 @@ def cosine_topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    probe_ids: list[int] | None = None,
     probes: DataFrame | None = None,
 ) -> DataFrame:
     """Exact cosine top-k per probe.  Rank over (round(score,6) desc,
     neighbor_id asc) — deterministic across engines.  Pass ``probes``
     (an id DataFrame) to keep the probe set in-plan; no driver action."""
-    probe_rows = _restrict_to_probes(emb, id_col, probes, probe_ids)
+    probe_rows = _restrict_to_probes(emb, id_col, probes)
     scored = _scored_pairs(emb, probe_rows, id_col, vec_col).select(
         "probe_id", "neighbor_id", F.round("score", 6).alias("score")
     )
@@ -298,146 +311,23 @@ def train_kmeans_centroids(
     vec_col: str = "embedding",
     k: int = 16,
     iters: int = 5,
-    sample_fraction: float | None = None,
     quantize_decimals: int | None = None,
 ) -> DataFrame:
-    """Distributed Lloyd's k-means for IVF centroid training.
-
-    Init: the ``k`` vectors with the smallest portable hash of their id
-    — a deterministic, engine-independent uniform sample (the scalable
-    analogue of random init; swap for k-means|| over-seeding if cluster
-    counts grow adversarial).  Each iteration: the k×dim centroid
-    matrix (already driver state) rides as ONE broadcast row holding
-    ``array<struct<cvec, cent_id>>``, and every vector picks its
-    nearest centroid with a per-row HOF argmin — ``array_min`` over
-    struct(_d, cent_id) reproduces ``min_by``'s (distance, id)
-    tie-break exactly — so assignment is a 1-row broadcast cross plus
-    a projection: NO k× row expansion, NO corpus shuffle.  Means then
-    recompute with a two-level aggregate on (cent_id, dim) whose
-    map-side partials shrink the only shuffle to k×dim rows per
-    partition.  (Through round 5 assignment was a corpus ×
-    broadcast(k-ROW) cross + groupBy(id) min_by — that expanded the
-    corpus k× and shuffled it WITH vector payloads once per
-    iteration; the 1-row matrix form removes both, the difference
-    between ``iters`` corpus shuffles and none at 100 TB.  A
-    plan-literal matrix was measured and rejected: 1 024 ``lit``
-    nodes cost ~1 s of py4j plan-build plus a fresh whole-stage
-    codegen per iteration, where the 1-row broadcast keeps the
-    expression tree CONSTANT across iterations so codegen caches.)
-    The training set is persisted across iterations (MLlib-KMeans
-    practice; at 100 TB you persist the ``sample_fraction`` sample,
-    not the corpus).
-
-    The ONLY driver-side state is the k×dim centroid matrix collected
-    once per iteration — bounded by design (a few KB), the same
-    contract as MLlib's KMeans; collecting it keeps the lineage flat
-    across iterations instead of stacking ``iters`` corpus scans into
-    one plan.  ``sample_fraction`` optionally trains on a
-    deterministic hash-sample of the corpus (the standard 100 TB play:
-    centroids from a 0.1% sample are statistically identical).
+    """Distributed Lloyd's k-means for IVF centroid training: the
+    ``m=1`` case of :func:`train_pq_codebooks` (one subspace spanning
+    the whole vector, ``codes=k``), so seeding, assignment, means, the
+    empty-cell and tie rules and the decimal snap are that trainer's.
+    The only driver-side state is the k×dim centroid matrix, collected
+    once per iteration — the MLlib KMeans contract.
 
     Returns a DataFrame (cent_id int, cvec array<double>) usable as
-    ``ivf_topk(centroids=...)``.
-    """
-    from pyspark.sql.window import Window
-
-    spark = emb.sparkSession
-    v = emb.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-    if sample_fraction is not None:
-        bucket = F.expr(
-            f"pmod(conv(substr(md5(concat('kmtrain:', cast({id_col} as string))), 1, 15), 16, 10), 1000000)"
-        )
-        v = v.filter(bucket < int(sample_fraction * 1_000_000))
-    seed_rank = F.expr(
-        f"conv(substr(md5(concat('kmseed:', cast({id_col} as string))), 1, 15), 16, 10)"
+    ``ivf_topk(centroids=...)``."""
+    book = train_pq_codebooks(
+        emb, id_col, vec_col, m=1, codes=k, iters=iters, quantize_decimals=quantize_decimals
+    )[0]
+    return emb.sparkSession.createDataFrame(
+        list(enumerate(book)), "cent_id int, cvec array<double>"
     )
-    # stable small ids 0..k-1 for the seeds: rank directly over the
-    # SAME deterministic total order the limit used ((_r, id)) — the
-    # previous monotonically_increasing_id dance relied on the limit's
-    # output layout preserving sort order, an execution property, not
-    # a contract
-    cents = (
-        v.withColumn("_r", seed_rank.cast("decimal(20,0)"))
-        .orderBy("_r", id_col)
-        .limit(k)
-        .select(
-            (F.row_number().over(Window.orderBy("_r", id_col)) - 1).alias("cent_id"),
-            F.col("v").alias("cvec"),
-        )
-    )
-    v = v.persist()
-    try:
-        cent_rows = _lloyd_iterations(
-            spark, v, cents, iters, quantize_decimals
-        )
-    finally:
-        v.unpersist(blocking=False)
-    return spark.createDataFrame(
-        [(r["cent_id"], r["cvec"]) for r in cent_rows], "cent_id int, cvec array<double>"
-    )
-
-
-def _lloyd_iterations(spark, v, cents, iters, quantize_decimals):
-    cent_rows = cents.collect()
-    # Constant expression tree across iterations (only the broadcast
-    # row's DATA changes), so whole-stage codegen compiles once.  The
-    # zip_with/aggregate fold is the same expression as the former
-    # k-row cross-join form — distances are bit-identical; only the
-    # expansion and the shuffle are gone.
-    dists = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(F.col("v"), c["cvec"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ).alias("_d"),
-            c["cent_id"].alias("cent_id"),
-        ),
-    )
-    for _ in range(iters):
-        cents_df = F.broadcast(
-            spark.createDataFrame(
-                [([(r["cvec"], r["cent_id"]) for r in cent_rows],)],
-                "cents array<struct<cvec: array<double>, cent_id: int>>",
-            )
-        )
-        assigned = v.crossJoin(cents_df).select(
-            F.array_min(dists)["cent_id"].alias("cent_id"), "v"
-        )
-        means = (
-            assigned.select("cent_id", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cent_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cent_id")
-            .agg(
-                F.expr("transform(array_sort(collect_list(struct(pos, m))), s -> s.m)").alias("cvec")
-            )
-        )
-        new_rows = {r["cent_id"]: r["cvec"] for r in means.collect()}
-        # empty clusters keep their previous centroid
-        cent_rows = [
-            {"cent_id": r["cent_id"], "cvec": new_rows.get(r["cent_id"], r["cvec"])} for r in cent_rows
-        ]
-        if quantize_decimals is not None:
-            # Snap each mean to a decimal grid AFTER every iteration:
-            # distributed mean aggregation is float-order-dependent at
-            # ~1e-15 relative, so raw trained means can never be
-            # engine-exact — but a mean landing within 1e-15 of a
-            # half-grid boundary is vanishingly rare, and once snapped
-            # the NEXT iteration's assignment inputs are exact decimals
-            # on every engine.  This is what makes a trained-IVF query
-            # oracle-checkable end-to-end (the BPE-apply pattern:
-            # an independent replica re-derives the same quantized
-            # centroids, certifying the distributed training outcome).
-            # Driver-side (cent_rows is the k x dim matrix already
-            # collected per iteration); Python round() both here and in
-            # the replica, so the tie-rounding mode is identical.
-            cent_rows = [
-                {"cent_id": r["cent_id"], "cvec": [round(x, quantize_decimals) for x in r["cvec"]]}
-                for r in cent_rows
-            ]
-    return cent_rows
 
 
 def ivf_topk(
@@ -447,7 +337,6 @@ def ivf_topk(
     k: int = 5,
     num_centroids: int = 16,
     nprobe: int = 4,
-    probe_ids: list[int] | None = None,
     probes: DataFrame | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
@@ -459,66 +348,33 @@ def ivf_topk(
     deterministic, engine-reproducible seeding that keeps the whole
     query exactly oracle-checkable.  Pass ``centroids`` (cent_id,
     cvec) — e.g. from ``train_kmeans_centroids`` — to use trained
-    lists without touching the assignment/probe machinery (trained
-    means are float-order-dependent, so that path is recall-tested
-    rather than oracle-matched).  Scale shape: centroids are broadcast
-    (a few KB); the
-    |V|×K score matrix exists only inside one stage (broadcast
-    nested-loop + partial max_by combine), so the shuffle carries one
-    assignment row per vector keyed by ``cent_id`` — the inverted
-    "lists" are just that partitioning, never materialized.  Probe
-    ranking is a window over |probes|×K rows only.  Per-probe work
-    drops from O(|V|) (brute force) to O(|V|·nprobe/K) expected."""
-    from pyspark.sql.window import Window
-
-    if centroids is not None:
-        cents = centroids.select("cent_id", F.col("cvec").cast("array<double>").alias("cvec"))
-    else:
-        cents = emb.filter(F.col(id_col) < num_centroids).select(
-            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec")
-        )
-    cents = cents.withColumn("_cnorm", F.expr(f"sqrt({_dot('cvec', 'cvec')})"))
-    # The corpus x broadcast(k) cosine assignment is CPU-bound on N*k
-    # folds but its input scan is small in BYTES (packed into few
-    # splits by maxPartitionBytes/openCost), so a small corpus would
-    # run the whole assignment on a handful of tasks; the conditional
-    # spread rebalances to defaultParallelism and is a plan no-op once
-    # the scan yields enough splits (same discipline as the per-row
-    # text stages, functions/text.spread_for_compute).
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
-    v = spread_for_compute(with_norm(emb, vec_col), id_col)
-    cscore = F.round(F.expr(f"{_dot(vec_col, 'cvec')} / (_norm * _cnorm)"), 6)
-    vc = v.crossJoin(F.broadcast(cents)).select(
-        F.col(id_col), F.col(vec_col), F.col("_norm"), F.col("cent_id"), cscore.alias("cscore")
-    )
-    assigned = vc.groupBy(id_col).agg(
-        F.max_by("cent_id", F.struct(F.col("cscore"), (-F.col("cent_id")).alias("_nc"))).alias("cent_id"),
-        # deterministic key-functional carry (see assign_clusters note)
-        F.max_by(vec_col, F.col(id_col)).alias(vec_col),
-        F.max_by("_norm", F.col(id_col)).alias("_norm"),
-    )
-    pw = Window.partitionBy(id_col).orderBy(F.col("cscore").desc(), F.col("cent_id").asc())
-    bounded = probes is not None or probe_ids is not None
-    probe_vc = _restrict_to_probes(vc, id_col, probes, probe_ids)
-    probe_rows = (
-        probe_vc.withColumn("crank", F.row_number().over(pw))
-        .filter(F.col("crank") <= nprobe)
-        .select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("_pvec"),
-            F.col("_norm").alias("_pnorm"),
-            "cent_id",
-        )
+    lists without touching the assignment/probe machinery.  Both sides
+    are :func:`assign_clusters` against the same broadcast centroids:
+    the corpus with one cell per vector (partial max_by combine, so
+    the shuffle carries one assignment row per vector keyed by cell —
+    the inverted "lists" are just that keying, never materialized),
+    the probes with their ``nprobe`` best cells, crossing only the
+    probe rows.  Per-probe work drops from O(|V|) (brute force) to
+    O(|V|·nprobe/K) expected."""
+    cents = _seed_centroids(emb, id_col, vec_col, num_centroids, centroids)
+    assigned = assign_clusters(emb, id_col, vec_col, centroids=cents)
+    probe_cells = assign_clusters(
+        _restrict_to_probes(emb, id_col, probes), id_col, vec_col,
+        centroids=cents, num_probes=nprobe,
+    ).select(
+        F.col(id_col).alias("probe_id"),
+        F.col(vec_col).alias("_pvec"),
+        F.col("_norm").alias("_pnorm"),
+        "cluster_id",
     )
     score = F.round(F.expr(f"{_dot('_pvec', vec_col)} / (_pnorm * _norm)"), 6)
     # probes × nprobe is small by construction — broadcast it so the
-    # corpus-sized assigned side never shuffles (cent_id has only
+    # corpus-sized assigned side never shuffles (cluster_id has only
     # num_centroids values: a hash join on it would be maximally
     # skewed).  In all-pairs mode (no probe restriction) the probe side
     # is corpus-sized, so fall back to the shuffle join.
-    probe_side = F.broadcast(probe_rows) if bounded else probe_rows
-    cand = assigned.join(probe_side, on="cent_id").filter(F.col("probe_id") != F.col(id_col))
+    probe_side = F.broadcast(probe_cells) if probes is not None else probe_cells
+    cand = assigned.join(probe_side, on="cluster_id").filter(F.col("probe_id") != F.col(id_col))
     scored = cand.select("probe_id", F.col(id_col).alias("neighbor_id"), score.alias("score"))
     return _rank_topk(scored, k)
 
@@ -555,7 +411,6 @@ def quantized_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    probe_ids: list[int] | None = None,
     probes: DataFrame | None = None,
 ) -> DataFrame:
     """Exact top-k over int8-QUANTIZED cosine — the memory-bandwidth
@@ -577,7 +432,7 @@ def quantized_topk(
     q = quantize_embeddings(emb, id_col, vec_col, drop_zero=True)
     idot = "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as bigint) * cast(y as bigint)), cast(0 as bigint), (acc, v) -> acc + v)"
     qn = q.withColumn("_qnorm", F.expr(f"sqrt(cast({idot.format(a='qvec', b='qvec')} as double))"))
-    probe_rows = _restrict_to_probes(qn, id_col, probes, probe_ids)
+    probe_rows = _restrict_to_probes(qn, id_col, probes)
     a = probe_rows.alias("a")
     b = qn.alias("b")
     score = F.round(
@@ -602,53 +457,56 @@ def train_pq_codebooks(
 ) -> list[list[list[float]]]:
     """Product-quantization codebook training (Jégou et al., "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011 — the
-    IVF-PQ architecture behind FAISS-style billion-vector ANN).
+    IVF-PQ architecture behind FAISS-style billion-vector ANN), and
+    the module's one Lloyd trainer: :func:`train_kmeans_centroids` is
+    its ``m=1`` case.
 
     Each D-dim vector is split into ``m`` contiguous subvectors of
     D/m dims; subspace ``j`` gets its own ``codes``-entry codebook via
     Lloyd iterations run over ALL subspaces in ONE plan per iteration:
-    the corpus is posexploded once into (id, sub_id, subvector) rows
-    (a projection — no shuffle; total bytes equal the corpus) and
+    the corpus is posexploded once into (sub_id, subvector) rows (a
+    projection — no shuffle; total bytes equal the corpus) and
     persisted, the m×codes×(D/m) codebook matrix rides as ONE
     broadcast row of ``array<array<struct<cvec, code_id>>>`` indexed
-    by sub_id, and assignment is a per-row HOF argmin — the same
-    no-expansion, no-corpus-shuffle form as
-    :func:`train_kmeans_centroids`.  The only shuffle per iteration is
-    the (sub_id, code_id, pos) mean partial-aggregate — m×codes×(D/m)
-    rows per partition, i.e. exactly D×codes doubles, corpus-size
-    independent.  Driver state is the codebook matrix (m·codes·D/m
-    floats ≈ the full-vector k-means contract).
+    by sub_id, and assignment is a per-row HOF argmin — ``array_min``
+    over struct(:func:`_sqdist`, code_id), so equidistant entries tie
+    to the LOWER code id — with NO k× row expansion and NO corpus
+    shuffle.  The expression tree is constant across iterations (only
+    the broadcast row's DATA changes), so whole-stage codegen compiles
+    once; a plan-literal matrix was measured and rejected (1 024
+    ``lit`` nodes cost ~1 s of py4j plan-build plus a fresh codegen
+    per iteration).  The only shuffle per iteration is the (sub_id,
+    code_id, pos) mean partial-aggregate — m×codes×(D/m) rows per
+    partition, i.e. exactly D×codes doubles, corpus-size independent.
+    An entry no subvector picks keeps its previous value.  Driver
+    state is the codebook matrix (m·codes·D/m floats ≈ the
+    full-vector k-means contract), collected once per iteration so the
+    lineage stays flat instead of stacking ``iters`` corpus scans.
 
     Seeding: the ``codes`` vectors with the smallest portable md5 rank
-    of their id (identical to the IVF trainer's ``kmseed:`` ranking),
-    sliced per subspace — deterministic and trivially replicable by an
-    independent oracle.  ``quantize_decimals`` snaps every trained
-    mean to a decimal grid after each iteration (the
-    similarity_ivf_trained pattern) so an independent numpy replica
-    re-derives bit-identical codebooks and the downstream ADC query
-    becomes exactly oracle-checkable.  Boundary caveat (shared with
-    _lloyd_iterations, round-7 ADVICE): the per-code means use F.avg
-    over distributed partials, whose float summation order is
-    partition-dependent; the decimal snap absorbs that ~1e-15 noise
-    EXCEPT when a mean lands within an ulp of a half-grid boundary,
-    so bit-reproducibility is overwhelming-probability, not proven —
-    a flip would surface as a red driver row (false red, never a
-    false green), at which point the integer-scaled-sum exact-mean
-    device (functions/sampling's milli-nat pattern) is the escalation
-    path.
+    of their id — a deterministic, engine-independent uniform sample —
+    sliced per subspace, trivially replicable by an independent
+    oracle.  ``quantize_decimals`` snaps every trained mean to a
+    decimal grid after each iteration, driver-side with Python round()
+    (the replicas' tie-rounding): distributed mean aggregation is
+    float-order-dependent at ~1e-15 relative, and once snapped the
+    NEXT iteration's inputs are exact decimals on every engine, so an
+    independent numpy replica re-derives bit-identical codebooks and
+    the downstream query becomes exactly oracle-checkable
+    (similarity_ivf_trained, the PQ tiers).  Boundary caveat (round-7
+    ADVICE): a mean landing within an ulp of a half-grid boundary
+    could still flip, so bit-reproducibility is overwhelming-
+    probability, not proven — a flip would surface as a red driver row
+    (false red, never a false green), at which point the
+    integer-scaled-sum exact-mean device (functions/sampling's
+    milli-nat pattern) is the escalation path.
 
     Returns the codebooks as a driver-side list ``books[j][c] ->
-    list[float]`` (j in [0,m), c in [0,codes)) for
-    :func:`pq_encode` / :func:`pq_topk`.
+    list[float]`` (j in [0,m), c in [0,codes); fewer entries when the
+    corpus has fewer than ``codes`` rows) for :func:`pq_encode` /
+    :func:`pq_topk`.
     """
     spark = emb.sparkSession
-    first = emb.select(vec_col).first()
-    if first is None:
-        raise ValueError("train_pq_codebooks: empty corpus (no rows to train on)")
-    dim = len(first[0])
-    if dim % m != 0:
-        raise ValueError(f"embedding dim {dim} not divisible by m={m}")
-    sub = dim // m
     seed_rank = F.expr(
         f"conv(substr(md5(concat('kmseed:', cast({id_col} as string))), 1, 15), 16, 10)"
     )
@@ -660,29 +518,28 @@ def train_pq_codebooks(
         .select("v")
         .collect()
     )
+    if not seeds:
+        raise ValueError("train_pq_codebooks: empty corpus (no rows to train on)")
+    dim = len(seeds[0]["v"])
+    if dim % m != 0:
+        raise ValueError(f"embedding dim {dim} not divisible by m={m}")
+    sub = dim // m
     books = [[list(r["v"][j * sub : (j + 1) * sub]) for r in seeds] for j in range(m)]
     vs = emb.select(
         F.posexplode(F.expr(_slices_expr(vec_col, m, sub))).alias("sub_id", "sv")
     ).persist()
     try:
-        # Constant expression tree across iterations (broadcast DATA
-        # changes, codegen caches) — see _lloyd_iterations.
-        book = F.element_at(F.col("books"), F.col("sub_id") + 1)
-        dists = F.transform(
-            book,
-            lambda c: F.struct(
-                F.aggregate(
-                    F.zip_with(F.col("sv"), c["cvec"], lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ).alias("_d"),
-                c["code_id"].alias("code_id"),
-            ),
-        )
+        nearest = F.array_min(
+            F.transform(
+                F.element_at(F.col("books"), F.col("sub_id") + 1),
+                lambda c: F.struct(
+                    _sqdist(F.col("sv"), c["cvec"]).alias("_d"), c["code_id"].alias("code_id")
+                ),
+            )
+        )["code_id"]
         for _ in range(iters):
-            bdf = F.broadcast(_books_df(spark, books))
-            assigned = vs.crossJoin(bdf).select(
-                "sub_id", F.array_min(dists)["code_id"].alias("code_id"), "sv"
+            assigned = vs.crossJoin(F.broadcast(_books_df(spark, books))).select(
+                "sub_id", nearest.alias("code_id"), "sv"
             )
             means = (
                 assigned.select("sub_id", "code_id", F.posexplode("sv").alias("pos", "x"))
@@ -697,13 +554,10 @@ def train_pq_codebooks(
             )
             new = {(r["sub_id"], r["code_id"]): r["cvec"] for r in means.collect()}
             books = [
-                [list(new.get((j, c), books[j][c])) for c in range(codes)] for j in range(m)
+                [list(new.get((j, c), cv)) for c, cv in enumerate(book_j)]
+                for j, book_j in enumerate(books)
             ]
             if quantize_decimals is not None:
-                # Python round() on the driver matrix, matching the
-                # independent replica's tie-rounding exactly (see
-                # _lloyd_iterations for why the grid snap is what makes
-                # distributed training engine-exact).
                 books = [
                     [[round(x, quantize_decimals) for x in cv] for cv in book_j]
                     for book_j in books
@@ -748,13 +602,23 @@ def pq_encode(
     array<int>) — ``extra_cols`` lets ivf_pq_topk carry the coarse
     cluster assignment through the encode projection without a
     join-back."""
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
     # the encode argmin (m×codes×sub fused multiply-adds per row) is
     # CPU-bound and narrow: rebalance an under-split scan to full width
     # first (plan no-op at real scale, and a no-op for callers that
     # already spread — needs_spread probes the input's partition count)
-    emb = spread_for_compute(emb, id_col)
+    return _pq_codes(spread_for_compute(emb, id_col), books, id_col, vec_col, extra_cols)
+
+
+def _pq_codes(
+    emb: DataFrame,
+    books: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+    extra_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """:func:`pq_encode` at the input's own partitioning — for a frame
+    that already carries a broadcast matrix (OPQ's rotation), whose
+    under-split probe would launch a job at every construction."""
     m, sub = len(books), len(books[0][0])
     bdf = F.broadcast(_books_df(emb.sparkSession, books))
     codes_expr = F.zip_with(
@@ -764,12 +628,7 @@ def pq_encode(
             F.transform(
                 book,
                 lambda c: F.struct(
-                    F.aggregate(
-                        F.zip_with(sv, c["cvec"], lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0),
-                        lambda acc, d: acc + d,
-                    ).alias("_d"),
-                    c["code_id"].alias("code_id"),
+                    _sqdist(sv, c["cvec"]).alias("_d"), c["code_id"].alias("code_id")
                 ),
             )
         )["code_id"],
@@ -797,14 +656,7 @@ def _adc_tables(
     dtab = F.zip_with(
         F.expr(_slices_expr(vec_col, m, sub)),
         F.col("books"),
-        lambda sv, book: F.transform(
-            book,
-            lambda c: F.aggregate(
-                F.zip_with(sv, c["cvec"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ),
-        ),
+        lambda sv, book: F.transform(book, lambda c: _sqdist(sv, c["cvec"])),
     )
     return probe_rows.crossJoin(bdf).select(
         F.col(id_col).alias("probe_id"),
@@ -825,13 +677,26 @@ def _adc_dist() -> "F.Column":
     )
 
 
+def _require_probes(probes: DataFrame | None, op: str, why: str) -> None:
+    """The PQ tiers' bounded-probe contract: their per-probe tables
+    broadcast, so an unbounded probe set is refused up front."""
+    if probes is None:
+        raise ValueError(f"{op} requires a bounded probe set (probes): {why}")
+
+
+_ADC_WHY = (
+    "the ADC scan broadcasts one distance table per probe, so unbounded probes "
+    "mean a corpus-sized broadcast and O(N²) candidate work — batch the "
+    "probes, or use ivf_pq_topk's list pruning for all-pairs shapes"
+)
+
+
 def pq_topk(
     emb: DataFrame,
     books: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    probe_ids: list[int] | None = None,
     probes: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: each probe keeps
@@ -851,16 +716,11 @@ def pq_topk(
     by an independent replica (the similarity_ivf_trained pattern).
     Output: (probe_id, neighbor_id, adc_dist, rank), ascending ADC
     distance."""
-    if probes is None and probe_ids is None:
-        raise ValueError(
-            "pq_topk requires a bounded probe set (probes/probe_ids): the ADC "
-            "scan broadcasts one distance table per probe, so unbounded probes "
-            "mean a corpus-sized broadcast and O(N²) candidate work — batch the "
-            "probes, or use ivf_pq_topk's list pruning for all-pairs shapes"
-        )
+    _require_probes(probes, "pq_topk", _ADC_WHY)
+    # pq_encode spreads the scan; the encoded frame carries the
+    # codebook broadcast, so the ADC scan takes it as it is
     enc = pq_encode(emb, books, id_col, vec_col)
-    probe_rows = _restrict_to_probes(emb, id_col, probes, probe_ids)
-    return adc_topk(enc, probe_rows, books, id_col, vec_col, k)
+    return _adc_scan(enc, _restrict_to_probes(emb, id_col, probes), books, id_col, vec_col, k)
 
 
 def adc_topk(
@@ -883,9 +743,20 @@ def adc_topk(
     # the ADC scan (m lookups + m adds per candidate × |probes| fanout)
     # is CPU-bound; a persisted code table read back as one small file
     # would otherwise scan single-task (plan no-op at real scale)
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
+    return _adc_scan(spread_for_compute(enc, id_col), probe_rows, books, id_col, vec_col, k)
 
-    enc = spread_for_compute(enc, id_col)
+
+def _adc_scan(
+    enc: DataFrame,
+    probe_rows: DataFrame,
+    books: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+    k: int,
+) -> DataFrame:
+    """The full ADC scan at ``enc``'s partitioning: every code row ×
+    the broadcast probe tables, two-phase ranked by ascending
+    distance."""
     probe_tabs = _adc_tables(probe_rows, books, id_col, vec_col)
     cand = enc.crossJoin(F.broadcast(probe_tabs)).filter(
         F.col("probe_id") != F.col(id_col)
@@ -1047,7 +918,6 @@ def opq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    probe_ids: list[int] | None = None,
     probes: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k in the OPQ-rotated space: rotate corpus and probes by
@@ -1055,17 +925,19 @@ def opq_topk(
     space approximates the original-space neighbors with lower
     quantization error), then the standard PQ query path — encode,
     broadcast distance tables, two-phase rank."""
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
-    # spread BEFORE the rotation: R·x is D² multiplies per row and the
-    # single-file local fixture would run it (and everything above) on
-    # one task (plan no-op at real scale).  NO barrier here: pq_encode's
-    # crossJoin blocks CollapseProject, so the rotation already
-    # evaluates once per row — a barrier re-measured 1.24× SLOWER (r13).
+    _require_probes(probes, "opq_topk", _ADC_WHY)
+    # spread BEFORE the rotation, and only there: R·x is D² multiplies
+    # per row and the single-file local fixture would run it (and
+    # everything above) on one task (plan no-op at real scale), while
+    # the rotated frame carries the rotation broadcast (see _pq_codes).
+    # NO barrier here: the encode's crossJoin blocks CollapseProject, so
+    # the rotation already evaluates once per row — a barrier
+    # re-measured 1.24× SLOWER (r13).
     rot = rotate_vectors(spread_for_compute(emb, id_col), rmat, vec_col).select(
         F.col(id_col), F.col("_rvec").alias(vec_col)
     )
-    return pq_topk(rot, books, id_col, vec_col, k, probe_ids=probe_ids, probes=probes)
+    enc = _pq_codes(rot, books, id_col, vec_col)
+    return _adc_scan(enc, _restrict_to_probes(rot, id_col, probes), books, id_col, vec_col, k)
 
 
 def ivf_pq_topk(
@@ -1076,7 +948,6 @@ def ivf_pq_topk(
     k: int = 5,
     num_centroids: int = 16,
     nprobe: int = 4,
-    probe_ids: list[int] | None = None,
     probes: DataFrame | None = None,
 ) -> DataFrame:
     """Composed IVF-PQ (Jégou et al. TPAMI 2011 §IV; the architecture
@@ -1106,11 +977,9 @@ def ivf_pq_topk(
     neighbor_id, adc_dist, rank), ascending ADC distance; NOTE a probe
     sees only vectors in its probed cells (recall < 1 by construction,
     floor-tested vs exact L2 in tests/test_tools.py)."""
-    if probes is None and probe_ids is None:
-        raise ValueError(
-            "ivf_pq_topk requires a bounded probe set (probes/probe_ids): "
-            "per-probe ADC tables broadcast — batch unbounded probe sweeps"
-        )
+    _require_probes(
+        probes, "ivf_pq_topk", "per-probe ADC tables broadcast — batch unbounded probe sweeps"
+    )
     cents = _seed_centroids(emb, id_col, vec_col, num_centroids)
     # rowwise assignment: the corpus never shuffles — assignment AND
     # the PQ encode are one projection over the (spread) scan stage,
@@ -1120,7 +989,7 @@ def ivf_pq_topk(
     enc = _plan_barrier(
         pq_encode(assigned, books, id_col, vec_col, extra_cols=("cluster_id",))
     )
-    probe_rows = _restrict_to_probes(emb, id_col, probes, probe_ids)
+    probe_rows = _restrict_to_probes(emb, id_col, probes)
     probe_cells = assign_clusters(
         probe_rows, id_col, vec_col, centroids=cents, num_probes=nprobe
     ).select(F.col(id_col).alias("probe_id"), "cluster_id")
@@ -1191,10 +1060,7 @@ def assign_clusters_rowwise(
     cluster-BLOCKED pair families, whose groupBy exchange is
     load-bearing (reused as the pair join's own non-coalescible
     exchange) and whose multi-probe/score variants it carries."""
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
-    cents = cents.select("cent_id", F.col("cvec").cast("array<double>").alias("cvec"))
-    cents = cents.withColumn("_cnorm", F.expr(f"sqrt({_dot('cvec', 'cvec')})"))
+    cents = _seed_centroids(emb, id_col, vec_col, centroids=cents)
     one_row = F.broadcast(
         cents.agg(F.collect_list(F.struct("cvec", "cent_id", "_cnorm")).alias("_cents"))
     )
@@ -1228,14 +1094,28 @@ def assign_clusters_rowwise(
 
 
 def _seed_centroids(
-    emb: DataFrame, id_col: str, vec_col: str, num_centroids: int
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    num_centroids: int | None = None,
+    centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """The deterministic id < num_centroids coarse-centroid rule as a
-    (cent_id, cvec) frame — the oracle-exact seeding shared by
-    ivf_pq_topk and the residual tier."""
-    return emb.filter(F.col(id_col) < num_centroids).select(
-        F.col(id_col).alias("cent_id"), F.col(vec_col).cast("array<double>").alias("cvec")
-    )
+    """The one centroid rule, as a (cent_id, cvec array<double>,
+    _cnorm) frame.  ``centroids`` (cent_id, cvec) are used as given
+    (e.g. trained); otherwise the seeds are the corpus vectors with
+    ``id < num_centroids`` — the deterministic, oracle-exact seeding
+    every SQL oracle mirrors — and ``num_centroids=None`` sizes k =
+    ceil(sqrt(N)) in-plan (a 1-row count aggregate broadcast into the
+    filter, no driver action; see :func:`assign_clusters`)."""
+    if centroids is None:
+        if num_centroids is None:
+            k = emb.agg(F.ceil(F.sqrt(F.count(F.lit(1)))).alias("_k"))
+            pool = emb.crossJoin(F.broadcast(k)).filter(F.col(id_col) < F.col("_k"))
+        else:
+            pool = emb.filter(F.col(id_col) < num_centroids)
+        centroids = pool.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec"))
+    cents = centroids.select("cent_id", F.col("cvec").cast("array<double>").alias("cvec"))
+    return cents.withColumn("_cnorm", F.expr(f"sqrt({_dot('cvec', 'cvec')})"))
 
 
 def _residualize(
@@ -1297,7 +1177,6 @@ def ivf_pq_residual_topk(
     k: int = 5,
     num_centroids: int = 16,
     nprobe: int = 4,
-    probe_ids: list[int] | None = None,
     probes: DataFrame | None = None,
 ) -> DataFrame:
     """Residual-encoded IVF-PQ — FAISS IndexIVFPQ's actual default
@@ -1320,11 +1199,7 @@ def ivf_pq_residual_topk(
     decimal-grid training, sequential folds, HALF_UP 1e-6, neighbor-id
     tiebreak), so the full composition is pinned end-to-end by the
     independent numpy replica in plans/queries._ivf_pq_residual_oracle."""
-    if probes is None and probe_ids is None:
-        raise ValueError(
-            "ivf_pq_residual_topk requires a bounded probe set "
-            "(probes/probe_ids): per-(probe, cell) ADC tables broadcast"
-        )
+    _require_probes(probes, "ivf_pq_residual_topk", "per-(probe, cell) ADC tables broadcast")
     cents = _seed_centroids(emb, id_col, vec_col, num_centroids)
     # rowwise assignment (no corpus exchange); residualize is a k-row
     # broadcast equi join, so assignment + residual + encode all ride
@@ -1337,7 +1212,7 @@ def ivf_pq_residual_topk(
             books, id_col, "resid", extra_cols=("cluster_id",),
         )
     )
-    probe_rows = _restrict_to_probes(emb, id_col, probes, probe_ids)
+    probe_rows = _restrict_to_probes(emb, id_col, probes)
     probe_cells = assign_clusters(
         probe_rows, id_col, vec_col, centroids=cents, num_probes=nprobe
     )
@@ -1364,7 +1239,6 @@ def ivf_pq_refined_topk(
     num_centroids: int = 16,
     nprobe: int = 4,
     shortlist: int = 20,
-    probe_ids: list[int] | None = None,
     probes: DataFrame | None = None,
 ) -> DataFrame:
     """Two-stage refined ANN — the FAISS IndexRefineFlat deployment
@@ -1386,22 +1260,19 @@ def ivf_pq_refined_topk(
     sequential with HALF_UP 1e-6 rounding), so the composition is
     pinned by the independent replica in
     plans/queries._ivf_pq_refined_oracle."""
-    if probes is None and probe_ids is None:
-        raise ValueError(
-            "ivf_pq_refined_topk requires a bounded probe set "
-            "(probes/probe_ids): the shortlist and probe vectors broadcast"
-        )
+    _require_probes(
+        probes, "ivf_pq_refined_topk", "the shortlist and probe vectors broadcast"
+    )
     short = ivf_pq_topk(
         emb, books, id_col, vec_col,
-        k=shortlist, num_centroids=num_centroids, nprobe=nprobe,
-        probe_ids=probe_ids, probes=probes,
+        k=shortlist, num_centroids=num_centroids, nprobe=nprobe, probes=probes,
     )
     cand = short.select("probe_id", "neighbor_id")
     nvec = emb.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("_nv"),
     )
-    probe_rows = _restrict_to_probes(emb, id_col, probes, probe_ids)
+    probe_rows = _restrict_to_probes(emb, id_col, probes)
     pvec = probe_rows.select(
         F.col(id_col).alias("probe_id"),
         F.col(vec_col).cast("array<double>").alias("_pv"),
@@ -1409,11 +1280,7 @@ def ivf_pq_refined_topk(
     joined = nvec.join(F.broadcast(cand), on="neighbor_id").join(
         F.broadcast(pvec), on="probe_id"
     )
-    l2 = F.aggregate(
-        F.zip_with(F.col("_pv"), F.col("_nv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
+    l2 = _sqdist(F.col("_pv"), F.col("_nv"))
     scored = joined.select("probe_id", "neighbor_id", F.round(l2, 6).alias("l2_dist"))
     return _rank_topk(scored, k, order_col="l2_dist", ascending=True)
 
@@ -1458,8 +1325,6 @@ def semantic_contamination(
             ).alias("_evals")
         )
     )
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
     v = spread_for_compute(with_norm(corpus, vec_col), id_col)
     # zero-norm CORPUS rows score the -2.0 sentinel (below any cosine):
     # deterministic, never NaN, contaminated stays false
@@ -1524,16 +1389,7 @@ def assign_clusters(
     diversity_sample ranks on."""
     if with_score and num_probes != 1:
         raise ValueError("with_score requires num_probes=1 (one assigned cell per vector)")
-    if centroids is not None:
-        cents = centroids.select("cent_id", F.col("cvec").cast("array<double>").alias("cvec"))
-    else:
-        if num_centroids is None:
-            k = emb.agg(F.ceil(F.sqrt(F.count(F.lit(1)))).alias("_k"))
-            pool = emb.crossJoin(F.broadcast(k)).filter(F.col(id_col) < F.col("_k"))
-        else:
-            pool = emb.filter(F.col(id_col) < num_centroids)
-        cents = pool.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec"))
-    cents = cents.withColumn("_cnorm", F.expr(f"sqrt({_dot('cvec', 'cvec')})"))
+    cents = _seed_centroids(emb, id_col, vec_col, num_centroids, centroids)
     # The corpus x broadcast(k) cosine assignment is CPU-bound on N*k
     # folds but its input scan is small in BYTES (packed into few
     # splits by maxPartitionBytes/openCost), so a small corpus would
@@ -1541,8 +1397,6 @@ def assign_clusters(
     # spread rebalances to defaultParallelism and is a plan no-op once
     # the scan yields enough splits (same discipline as the per-row
     # text stages, functions/text.spread_for_compute).
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
     v = spread_for_compute(with_norm(emb, vec_col), id_col)
     cscore = F.round(F.expr(f"{_dot(vec_col, 'cvec')} / (_norm * _cnorm)"), 6)
     vc = v.crossJoin(F.broadcast(cents)).select(
@@ -1567,10 +1421,15 @@ def assign_clusters(
     # Multi-probe: keep the num_probes best cells per vector.  The
     # k-element collect_list is bounded by the centroid count (not the
     # corpus), sorted by (-cscore, cent_id) — identical ordering to
-    # the oracle's ORDER BY cscore DESC, cent_id.
+    # the oracle's ORDER BY cscore DESC, cent_id.  The coalesce(-2)
+    # pins a NULL score (zero-norm centroid or vector) after every real
+    # cosine, as assign_clusters_rowwise does: array_sort would
+    # otherwise put the NULL field FIRST and hand that cell to every
+    # vector.
+    nc = -F.coalesce(F.col("cscore"), F.lit(-2.0))
     picked = vc.groupBy(id_col).agg(
         F.slice(
-            F.array_sort(F.collect_list(F.struct((-F.col("cscore")).alias("_nc"), F.col("cent_id")))),
+            F.array_sort(F.collect_list(F.struct(nc.alias("_nc"), F.col("cent_id")))),
             1,
             num_probes,
         ).alias("_cells"),
@@ -1717,7 +1576,6 @@ def lsh_bucketed_topk(
     num_tables: int = 8,
     bits_per_table: int = 4,
     dim: int = 64,
-    probe_ids: list[int] | None = None,
     probes: DataFrame | None = None,
     portable: bool = False,
 ) -> DataFrame:
@@ -1797,11 +1655,8 @@ def lsh_bucketed_topk(
     # folds per row) and the in-bucket scoring above it are CPU-bound
     # and narrow: rebalance an under-split scan to full width first
     # (plan no-op at real scale — the spread_for_compute contract)
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
     buckets = mk_buckets(spread_for_compute(emb, id_col))
-    bounded = probes is not None or probe_ids is not None
-    if bounded:
+    if probes is not None:
         # bounded probe set: the bucket rows carry the vector (map-side
         # projection — never shuffled), so candidates are scored inside
         # the bucket join with the BROADCAST probe side; the corpus
@@ -1813,7 +1668,7 @@ def lsh_bucketed_topk(
         vb = buckets.withColumn("_norm", F.expr(f"sqrt({_dot(vec_col, vec_col)})"))
         # probe side: restrict FIRST, then fold buckets over the probe
         # rows only — |probes| fold evaluations, not another corpus pass
-        probe_vb = mk_buckets(_restrict_to_probes(emb, id_col, probes, probe_ids)).withColumn(
+        probe_vb = mk_buckets(_restrict_to_probes(emb, id_col, probes)).withColumn(
             "_norm", F.expr(f"sqrt({_dot(vec_col, vec_col)})")
         )
         pa = probe_vb.select(
@@ -1837,7 +1692,7 @@ def lsh_bucketed_topk(
         )
         return _rank_topk(deduped, k)
     pairs = (
-        _restrict_to_probes(buckets, id_col, probes, probe_ids)
+        _restrict_to_probes(buckets, id_col, probes)
         .alias("pa")
         .join(
             buckets.alias("pb"),

@@ -4703,7 +4703,7 @@ def _pretraining_full_oracle() -> str | None:
     `pages` CTE therefore stays originals + mirrors only: had the
     stage NOT dropped the refetches (same URL, CHANGED body — invisible
     to exact dedup), their extra bodies would shift every later row."""
-    state = _qc_replica_state(train_even_only=False)
+    state = _qc_replica_state(False)
     if state is None:
         return None
     w, _feats, _labels, table = state

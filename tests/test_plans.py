@@ -477,9 +477,6 @@ def test_query_construction_runs_no_jobs(spark, sf_dir):
             "nulloutput_noop",  # the noop write action runs at construction
             "inputsampler_totalorder",  # the sampler collect is the workflow
             "pipeline_classifier_eval",  # n_train is counted at construction
-            # the under-split probe (text.needs_spread) misses its memo
-            # on the encoded frame and runs a job every construction
-            "similarity_pq_topk", "similarity_opq_topk",
             # sequenceFile toDF pays a schema-inference job per read
             "seqfile_roundtrip", "seqfile_as_text_scan", "seqfile_as_binary_scan",
             "seqfile_filter_percent", "auto_input_scan",
@@ -511,6 +508,16 @@ def test_query_construction_runs_no_jobs(spark, sf_dir):
         if jobs:
             offenders[name] = len(jobs)
     assert not offenders, f"eager constructors: {offenders}"
+
+
+def test_classifier_replica_trained_once_per_split():
+    """The classifier oracles share one memoized replica per training
+    split (full corpus, even-id half).  Every caller passes the split
+    the same way, so importing the registry trains each split once:
+    two cache entries, not a third for a keyword-spelled call."""
+    from hadoop_3_3_6_spark.plans.queries import _qc_replica_state
+
+    assert _qc_replica_state.cache_info().currsize == 2
 
 
 def test_driver_rotation_invariants():

@@ -160,6 +160,42 @@ def test_kmeans_trained_ivf_recall(spark, sf_dir):
     assert recall >= 0.4, f"trained-IVF recall {recall:.2f}"
 
 
+@pytest.mark.parametrize("trainer", ["kmeans", "pq_m1"])
+def test_lloyd_empty_cell_and_tie_rules(spark, trainer):
+    """One Lloyd iteration on a hand-built frame pins two rules of the
+    shared trainer, for k-means and for PQ with m=1 alike: an
+    equidistant vector joins the LOWER centroid id, and a centroid no
+    vector picks keeps its previous value.  The 3 smallest md5 id ranks
+    are ids 0, 5, 3, so those rows seed centroids 0, 1, 2.  Centroids
+    0 and 1 are the same point, so every tie between them goes to 0
+    and centroid 1 is left empty; (5, 5) is equidistant from all three
+    and joins 0.  Means snap to the 1e-3 grid."""
+    from hadoop_3_3_6_spark.functions.similarity import (
+        train_kmeans_centroids,
+        train_pq_codebooks,
+    )
+
+    rows = [
+        (0, [0.0, 0.0]),    # seed of centroid 0
+        (5, [0.0, 0.0]),    # seed of centroid 1: the same point
+        (3, [10.0, 10.0]),  # seed of centroid 2
+        (1, [1.0, 0.0]),    # tie 0/1 -> 0
+        (2, [5.0, 5.0]),    # tie 0/1/2 -> 0
+        (4, [9.0, 10.0]),   # -> 2
+        (6, [10.0, 11.0]),  # -> 2
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    if trainer == "kmeans":
+        trained = train_kmeans_centroids(emb, k=3, iters=1, quantize_decimals=3)
+        got = {r.cent_id: list(r.cvec) for r in trained.collect()}
+    else:
+        book = train_pq_codebooks(emb, m=1, codes=3, iters=1, quantize_decimals=3)[0]
+        got = dict(enumerate(book))
+    # centroid 0: mean of (0,0) (0,0) (1,0) (5,5); centroid 1 kept;
+    # centroid 2: mean of (10,10) (9,10) (10,11) = (29/3, 31/3)
+    assert got == {0: [1.5, 1.25], 1: [0.0, 0.0], 2: [9.667, 10.333]}
+
+
 def test_parse_jvm_mem():
     """JVM -Xmx grammar: suffixed and plain-byte forms."""
     from hadoop_3_3_6_spark.session import _parse_jvm_mem
@@ -1151,7 +1187,9 @@ def test_rowwise_assignment_matches_with_zero_norm_centroid(spark):
     would sort FIRST (always wins) while max_by orders it SMALLEST
     (never wins).  With the coalesce(-2) pin the two forms must agree
     everywhere — including the all-NULL case (a zero-norm VECTOR),
-    where both fall through to the lowest cent_id."""
+    where both fall through to the lowest cent_id.  Multi-probe
+    assignment sorts by the same pinned score, so the zero-norm
+    centroid is never among a real vector's two cells."""
     from hadoop_3_3_6_spark.functions.similarity import (
         assign_clusters,
         assign_clusters_rowwise,
@@ -1183,6 +1221,14 @@ def test_rowwise_assignment_matches_with_zero_norm_centroid(spark):
     assert rowwise == grouped
     assert rowwise[10] == 1 and rowwise[11] == 2
     assert rowwise[10] != 0 and rowwise[12] != 0   # zero-norm centroid never wins
+    # multi-probe ranks the NULL score last too: the two best cells of
+    # a vector with real cosines never include the zero-norm centroid
+    cells = {}
+    for r in assign_clusters(
+        emb, "vec_id", "embedding", centroids=cents, num_probes=2
+    ).collect():
+        cells.setdefault(r.vec_id, set()).add(r.cluster_id)
+    assert cells[10] == cells[11] == cells[12] == {1, 2}
 
 
 def test_teravalidate_detects_out_of_order_records(spark):
