@@ -292,23 +292,29 @@ def _fresh_session(app_name: str, warm_dir: str | None = None, ui: bool = False)
     return spark
 
 
+def _completed_stages(spark) -> list[dict] | None:
+    """Every completed stage of a UI-enabled session, read from Spark's
+    REST API; None when the UI is off.  A failed REST call raises."""
+    import urllib.request
+
+    sc = spark.sparkContext
+    if not sc.uiWebUrl:
+        return None
+    with urllib.request.urlopen(
+        f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages?status=complete",
+        timeout=10,
+    ) as r:
+        return json.load(r)
+
+
 def _spill_totals(spark) -> tuple[int, int]:
     """(memoryBytesSpilled, diskBytesSpilled) summed over every
     completed stage of the given UI-enabled session, via the same REST
     surface the stage audit reads.  (0, 0) when the UI is off or the
     REST call fails — attempts then record spill deltas of 0 with the
     probe row still carrying disk/cpu attribution."""
-    import urllib.request
-
-    sc = spark.sparkContext
-    if not sc.uiWebUrl:
-        return (0, 0)
     try:
-        with urllib.request.urlopen(
-            f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}/stages?status=complete",
-            timeout=10,
-        ) as r:
-            stages = json.load(r)
+        stages = _completed_stages(spark) or []
         return (
             sum(s.get("memoryBytesSpilled") or 0 for s in stages),
             sum(s.get("diskBytesSpilled") or 0 for s in stages),
@@ -385,20 +391,13 @@ def _stage_audit(spark, min_stage_sec: float = 3.0, min_per_task_sec: float = 1.
     per-task floor keeps sub-second AQE-coalesced aggregates (accepted
     residuals whose exchanges grow with corpus bytes) out of the flag
     list, exactly the round-6 triage rule.  Empty ``flagged`` = clean."""
-    import urllib.request
-
-    sc = spark.sparkContext
-    base = sc.uiWebUrl
-    if not base:
-        return {"skipped": "ui disabled"}
-    cores = sc.defaultParallelism
     try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{sc.applicationId}/stages?status=complete", timeout=10
-        ) as r:
-            stages = json.load(r)
+        stages = _completed_stages(spark)
     except Exception as e:
         return {"skipped": f"rest unavailable: {e}"}
+    if stages is None:
+        return {"skipped": "ui disabled"}
+    cores = spark.sparkContext.defaultParallelism
     flagged = []
     for s in stages:
         run_sec = (s.get("executorRunTime") or 0) / 1000.0

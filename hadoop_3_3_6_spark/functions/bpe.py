@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_3_3_6_spark.functions.text import words_sql
+
 #: last symbol of each word carries the end-of-word marker so merges
 #: never cross word boundaries (standard BPE formulation).
 EOW = "</w>"
@@ -49,9 +51,7 @@ EOW = "</w>"
 def _word_freqs(df: DataFrame, text_col: str, sample_cap_words: int | None) -> DataFrame:
     """Distributed word-frequency table: (word, freq).  The corpus
     never passes this point — everything after is vocabulary-sized."""
-    words = df.select(
-        F.explode(F.expr(f"filter(split({text_col}, ' '), w -> w <> '')")).alias("word")
-    )
+    words = df.select(F.explode(F.expr(words_sql(text_col))).alias("word"))
     freqs = words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
     if sample_cap_words is not None:
         # deterministic cap: keep the most frequent words (freq desc,
@@ -327,9 +327,7 @@ def train_unigram(
     import math
 
     wc = (
-        df.select(
-            F.explode(F.expr(f"filter(split({text_col}, ' '), w -> w <> '')")).alias("w")
-        )
+        df.select(F.explode(F.expr(words_sql(text_col))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -403,8 +401,7 @@ def apply_unigram(
     lp = {p: s for p, _pid, s in pieces}
     pid = {p: i for p, i, _s in pieces}
     max_len = max((len(p) for p in lp), default=1)
-    words_expr = f"filter(split({text_col}, ' '), w -> w <> '')"
-    toks = df.select(F.col(id_col), F.posexplode(F.expr(words_expr)).alias("pos", "w"))
+    toks = df.select(F.col(id_col), F.posexplode(F.expr(words_sql(text_col))).alias("pos", "w"))
 
     @F.pandas_udf("struct<np: int, hw: bigint, pw: bigint>")
     def _segment(ws: pd.Series) -> pd.DataFrame:

@@ -24,6 +24,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_3_3_6_spark.functions.text import (
+    evaluate_once,
+    let_sql,
+    spread_for_compute,
+    word_ngrams_sql,
+    words_sql,
+)
+
 #: Modulus for the portable (cross-engine reproducible) hash ring.
 #: Arithmetic stays under 2^60 so neither Spark (wrapping) nor DuckDB
 #: (overflow-checked) BIGINT semantics are exercised — both compute the
@@ -61,30 +69,15 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 def shingle_docs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """(id, shingles array) — distinct word n-grams per document.
 
-    The word array is materialized behind an explode(array(...))
-    generator boundary first: higher-order functions are interpreted
-    (no codegen subexpression elimination), so without the boundary
-    CollapseProject inlines the split() into every size()/slice()
-    reference and the document is re-tokenized once per shingle —
-    ~10× the work.  The input is spread_for_compute-rebalanced first:
-    the shingle build is the CPU-heavy stage and otherwise runs inside
-    however few splits the file layout yields (min-of-3 at sf0.1:
-    minhash pairs 1.21→0.79s, n-gram jaccard 4.34→1.17s; no-op at
-    scale)."""
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
-    df = spread_for_compute(df, id_col)
-    words = df.select(
-        F.col(id_col),
-        F.explode(F.array(F.expr(f"filter(split({text_col}, ' '), w -> w <> '')"))).alias("ws"),
-    )
-    shingles = (
-        f"case when size(ws) >= {n} then "
-        f"array_distinct(transform(sequence(1, size(ws) - {n - 1}), "
-        f"i -> array_join(slice(ws, i, {n}), ' '))) "
-        f"else array() end"
-    )
-    return words.select(F.col(id_col), F.expr(shingles).alias("shingles"))
+    The word array is evaluated once behind the generator barrier
+    (text.evaluate_once): without it the document is re-tokenized once
+    per shingle — ~10× the work.  The input is spread_for_compute-
+    rebalanced first: the shingle build is the CPU-heavy stage and
+    otherwise runs inside however few splits the file layout yields
+    (min-of-3 at sf0.1: minhash pairs 1.21→0.79s, n-gram jaccard
+    4.34→1.17s; no-op at scale)."""
+    words = evaluate_once(spread_for_compute(df, id_col), [id_col], ws=F.expr(words_sql(text_col)))
+    return words.select(F.col(id_col), F.array_distinct(F.expr(word_ngrams_sql("ws", n))).alias("shingles"))
 
 
 def minhash_coef(tag: str, p: int) -> int:
@@ -138,8 +131,7 @@ def minhash_signatures(
 
     if portable:
         P = PORTABLE_MOD
-        words = f"filter(split({text_col}, ' '), w -> w <> '')"
-        whashes = f"transform({words}, w -> {portable_hash_expr('w')} % {P})"
+        whashes = f"transform({words_sql(text_col)}, w -> {portable_hash_expr('w')} % {P})"
         combine = " + ".join(
             f"element_at(hs, cast(i + {j} as int)) * {minhash_coef('g', j)}L % {P}" for j in range(n)
         )
@@ -149,7 +141,7 @@ def minhash_signatures(
             f"else array(cast(null as bigint)) end"
         )
         exploded = (
-            df.select(F.col(id_col), F.explode(F.array(F.expr(whashes))).alias("hs"))
+            evaluate_once(df, [id_col], hs=F.expr(whashes))
             .select(F.col(id_col), F.explode(F.expr(shingle_hashes)).alias("h"))
             .filter(F.col("h").isNotNull())
         )
@@ -164,13 +156,10 @@ def minhash_signatures(
 
     # shingle identity = arithmetic combination of the n word hashes —
     # never materializes n-gram strings (hash each word once, then one
-    # multiply-add chain per shingle; distinct over int64s).  The
-    # explode(array(...)) wrapper is a generator boundary: without it
-    # CollapseProject would inline the word-hash transform into every
-    # downstream reference (higher-order functions are interpreted, so
-    # no codegen subexpression elimination saves us).
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
-    whashes = f"transform({words}, w -> xxhash64(w))"
+    # multiply-add chain per shingle; distinct over int64s).  The word
+    # hashes are evaluated once behind the generator barrier, not once
+    # per shingle lane.
+    whashes = f"transform({words_sql(text_col)}, w -> xxhash64(w))"
     combine = " + ".join(f"element_at(hs, cast(i + {j} as int)) * {_coef('g', j)}" for j in range(n))
     shingle_hashes = (
         f"case when size(hs) >= {n} then "
@@ -178,7 +167,7 @@ def minhash_signatures(
         f"else array(cast(null as bigint)) end"
     )
     exploded = (
-        df.select(F.col(id_col), F.explode(F.array(F.expr(whashes))).alias("hs"))
+        evaluate_once(df, [id_col], hs=F.expr(whashes))
         .select(F.col(id_col), F.explode(F.expr(shingle_hashes)).alias("h"))
         .filter(F.col("h").isNotNull())
     )
@@ -453,16 +442,8 @@ def duplicated_span_fraction(
     duplicated shingle counts, however hot (the join-back has no
     fan-out: one row per shingle).  Both forms are oracle-exact.
     """
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
     df = spread_for_compute(df, id_col)
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
-    grams = (
-        f"case when size({words}) >= {n} then "
-        f"transform(sequence(1, size({words}) - {n - 1}), "
-        f"i -> array_join(slice({words}, i, {n}), ' ')) "
-        f"else array() end"
-    )
+    grams = let_sql(words_sql(text_col), "ws", word_ngrams_sql("ws", n))
     inst = df.select(F.col(id_col), F.explode(F.expr(grams)).alias("shingle"))
     if max_df is not None:
         # the skew guard needs the true distinct-doc count; repartition
@@ -546,17 +527,8 @@ def duplicated_spans(
     join has no fan-out)."""
     from pyspark.sql.window import Window
 
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
     df = spread_for_compute(df, id_col)
-
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
-    grams = (
-        f"case when size({words}) >= {n} then "
-        f"transform(sequence(1, size({words}) - {n - 1}), "
-        f"i -> array_join(slice({words}, i, {n}), ' ')) "
-        f"else array() end"
-    )
+    grams = let_sql(words_sql(text_col), "ws", word_ngrams_sql("ws", n))
     inst = df.select(F.col(id_col), F.posexplode(F.expr(grams)).alias("pos", "shingle"))
     if max_df is not None:
         # repartition by shingle first: the countDistinct then runs
@@ -640,26 +612,23 @@ def apply_span_dedup(
     per_doc = runs.groupBy(id_col).agg(
         F.collect_list(F.struct("run_start", "run_end")).alias("_runs")
     )
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
+    words = words_sql(text_col)
     kept = (
         f"transform(filter(transform({words}, (w, i) -> struct(w AS w, i AS i)), "
         f"s -> not exists(_runs, r -> s.i >= r.run_start and s.i <= r.run_end)), "
         f"s -> s.w)"
     )
     empty_runs = "cast(array() as array<struct<run_start:int,run_end:int>>)"
-    # the kept-words array is consumed three times (join/size/size);
-    # HOFs are interpreted (no codegen CSE), so materialize it ONCE
-    # behind a one-element generator barrier (the _materialize_arrays
-    # device) instead of re-deriving the filter chain per reference
-    staged = (
-        df.join(per_doc, id_col, "left")
-        .withColumn("_runs", F.coalesce(F.col("_runs"), F.expr(empty_runs)))
-        .select(
-            F.col(id_col),
-            F.expr(f"size({words})").alias("_nw"),
-            F.explode(F.array(F.struct(F.expr(kept).alias("k")))).alias("_m"),
-        )
-        .select(id_col, "_nw", F.col("_m.k").alias("_kept"))
+    # the kept-words array is consumed three times (join/size/size),
+    # so it is evaluated once behind the generator barrier instead of
+    # re-deriving the filter chain per reference
+    staged = evaluate_once(
+        df.join(per_doc, id_col, "left").withColumn(
+            "_runs", F.coalesce(F.col("_runs"), F.expr(empty_runs))
+        ),
+        [id_col],
+        _nw=F.expr(f"size({words})"),
+        _kept=F.expr(kept),
     )
     return staged.select(
         F.col(id_col),
@@ -699,8 +668,6 @@ def remove_duplicate_lines(
     shuffle once for the count, the reassembly moves each document
     once — both unavoidable for a corpus rewrite, and nothing hotter
     than a line's own duplication count ever concentrates."""
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
     df = spread_for_compute(df, id_col)
     inst = df.select(
         F.col(id_col), F.posexplode(F.expr(f"split({text_col}, '\\n')")).alias("pos", "l")
@@ -746,12 +713,9 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", porta
     ``portable=True`` uses the md5-derived 60-bit token hash (exact
     DuckDB oracle); lanes 60-63 then never go positive, so the
     fingerprint effectively has 60 informative bits."""
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
     df = spread_for_compute(df, id_col)
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
     lanes = (
-        f"aggregate(transform({words}, w -> {_token_hash('w', portable)}), "
+        f"aggregate(transform({words_sql(text_col)}, w -> {_token_hash('w', portable)}), "
         f"array_repeat(cast(0 as bigint), 64), "
         f"(acc, h) -> zip_with(acc, sequence(0, 63), "
         f"(a, i) -> a + case when (shiftright(h, cast(i as int)) & 1) = 1 then 1 else -1 end))"

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_3_3_6_spark.functions.dedup import portable_hash_expr
+from hadoop_3_3_6_spark.functions.text import let_sql, spread_for_compute, word_ngrams_sql, words_sql
 
 
 def _sq(v: str) -> str:
@@ -216,16 +217,6 @@ def importance_weights(
     Returns (id_col, logw_milli BIGINT).  Documents with no tokens drop
     out (no features ⇒ no weight), matching the paper's n-gram model.
     """
-    from hadoop_3_3_6_spark.functions.text import spread_for_compute
-
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
-    # Spark's sequence(1, 0) counts DOWN — guard degenerate docs.
-    bigrams = (
-        f"case when size({words}) >= 2 then "
-        f"transform(sequence(1, size({words}) - 1), "
-        f"i -> concat(element_at({words}, i), ' ', element_at({words}, i + 1))) "
-        f"else array() end"
-    )
     # The explode + per-token md5 is CPU-bound on ~2 hashes per word
     # while the scan is tiny in bytes — the serialized-stage hazard
     # class; the conditional spread is a no-op once the corpus yields
@@ -234,7 +225,9 @@ def importance_weights(
     toks = df.select(
         F.col(id_col),
         target.alias("_tgt"),
-        F.explode(F.expr(f"concat({words}, {bigrams})")).alias("_tok"),
+        F.explode(
+            F.expr(let_sql(words_sql(text_col), "ws", f"concat(ws, {word_ngrams_sql('ws', 2)})"))
+        ).alias("_tok"),
     )
     salted_tok = f"concat('{salt}:', _tok)"
     toks = toks.withColumn(
@@ -342,7 +335,7 @@ def pack_sequences(
     # coalesce: a NULL text must count as 0 tokens — size() of a null
     # split is NULL (or -1 under the legacy conf), either of which
     # corrupts every later document's running offset in the block
-    n_tokens = F.expr(f"size(filter(split(coalesce({text_col}, ''), ' '), w -> w <> ''))")
+    n_tokens = F.size(F.expr(words_sql(f"coalesce({text_col}, '')")))
     w = (
         Window.partitionBy("block")
         .orderBy(F.col("_skey").asc(), F.col(id_col).asc())

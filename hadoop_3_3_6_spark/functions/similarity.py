@@ -49,7 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_3_3_6_spark.functions.text import spread_for_compute
+from hadoop_3_3_6_spark.functions.text import evaluate_once, spread_for_compute
 
 
 def _dot(a: str, b: str) -> str:
@@ -986,9 +986,8 @@ def ivf_pq_topk(
     # barriered so the candidates join consumes code ATTRIBUTES (the
     # argmins must evaluate once per corpus row, not per candidate)
     assigned = assign_clusters_rowwise(emb, cents, id_col, vec_col)
-    enc = _plan_barrier(
-        pq_encode(assigned, books, id_col, vec_col, extra_cols=("cluster_id",))
-    )
+    enc = pq_encode(assigned, books, id_col, vec_col, extra_cols=("cluster_id",))
+    enc = evaluate_once(enc, [], **{c: F.col(c) for c in enc.columns})
     probe_rows = _restrict_to_probes(emb, id_col, probes)
     probe_cells = assign_clusters(
         probe_rows, id_col, vec_col, centroids=cents, num_probes=nprobe
@@ -1011,24 +1010,6 @@ def ivf_pq_topk(
         "probe_id", F.col(id_col).alias("neighbor_id"), F.round(_adc_dist(), 6).alias("adc_dist")
     )
     return _rank_topk(scored, k, order_col="adc_dist", ascending=True)
-
-
-def _plan_barrier(df: DataFrame) -> DataFrame:
-    """One-element explode(array(struct(...))) generator barrier (the
-    _materialize_arrays device, column-generic): downstream operators
-    consume plain ATTRIBUTES instead of CollapseProject-inlined
-    defining expressions.  Needed wherever a projection computed ONCE
-    per row (e.g. the PQ code argmin) feeds a FANOUT join — without
-    the barrier the optimizer inlines the defining expression into
-    every post-join reference and the per-row cost multiplies by the
-    join's fanout (measured: ivf_pq_topk's encode CPU ×10 when the
-    rowwise assignment removed the old aggregate, whose exchange had
-    been an accidental barrier)."""
-    cols = df.columns
-    staged = df.select(
-        F.explode(F.array(F.struct(*[F.col(c) for c in cols]))).alias("_b")
-    )
-    return staged.select(*[F.col(f"_b.{c}").alias(c) for c in cols])
 
 
 def assign_clusters_rowwise(
@@ -1064,12 +1045,13 @@ def assign_clusters_rowwise(
     one_row = F.broadcast(
         cents.agg(F.collect_list(F.struct("cvec", "cent_id", "_cnorm")).alias("_cents"))
     )
-    # _plan_barrier: _norm is referenced INSIDE the argmin lambda, and
+    # barrier: _norm is referenced INSIDE the argmin lambda, and
     # CollapseProject would otherwise inline its defining sqrt-fold
     # into the transform — re-deriving it once per CENTROID element
-    # (the per-element re-derivation trap _materialize_arrays exists
-    # for); behind the barrier it is a plain attribute, one fold/row
-    v = _plan_barrier(spread_for_compute(with_norm(emb, vec_col), id_col))
+    # (the per-element re-derivation trap evaluate_once exists for);
+    # behind the barrier it is a plain attribute, one fold/row
+    v = spread_for_compute(with_norm(emb, vec_col), id_col)
+    v = evaluate_once(v, [], **{c: F.col(c) for c in v.columns})
     # the SAME textual cosine as assign_clusters' cscore (shared _dot
     # fold, round 6) so scores — and therefore every tie — are
     # bit-identical between the two forms.  The coalesce(-2) pins NULL
@@ -1206,12 +1188,11 @@ def ivf_pq_residual_topk(
     # the (spread) scan stage at full width, barriered before the
     # fanout join (codes evaluate once per corpus row)
     assigned = assign_clusters_rowwise(emb, cents, id_col, vec_col)
-    enc = _plan_barrier(
-        pq_encode(
-            _residualize(assigned, cents, id_col, vec_col),
-            books, id_col, "resid", extra_cols=("cluster_id",),
-        )
+    enc = pq_encode(
+        _residualize(assigned, cents, id_col, vec_col),
+        books, id_col, "resid", extra_cols=("cluster_id",),
     )
+    enc = evaluate_once(enc, [], **{c: F.col(c) for c in enc.columns})
     probe_rows = _restrict_to_probes(emb, id_col, probes)
     probe_cells = assign_clusters(
         probe_rows, id_col, vec_col, centroids=cents, num_probes=nprobe

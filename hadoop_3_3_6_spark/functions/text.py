@@ -29,9 +29,55 @@ BPE_ISH_PATTERN = "[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]"
 FINGERPRINT_MOD = 1_000_000_007
 
 
+# Higher-order functions are interpreted with NO common-subexpression
+# elimination, and CollapseProject inlines a projected column's defining
+# expression into every downstream reference, lambda bodies included.
+# So a word array referenced inside a lambda must already be evaluated
+# (an attribute behind ``evaluate_once`` or a variable bound by
+# ``let_sql``); an inlined word rule re-splits the text once per array
+# element, O(words²) per document.  tests/test_plans.py's lambda lint
+# fails any registered query that does this.
+
+
+def words_sql(text_col: str) -> str:
+    """The word rule as SQL text: ' '-split tokens with empties removed
+    (StringTokenizer semantics)."""
+    return f"filter(split({text_col}, ' '), w -> w <> '')"
+
+
 def _words(text_col: str) -> Column:
-    """Whitespace tokens with empties removed (StringTokenizer semantics)."""
-    return F.expr(f"filter(split({text_col}, ' '), w -> w <> '')")
+    return F.expr(words_sql(text_col))
+
+
+def word_ngrams_sql(words: str, n: int) -> str:
+    """Word n-grams (``n`` consecutive words joined by one space, in
+    document order; empty below ``n`` words) of ``words``, an
+    already-evaluated word array: an attribute or a lambda variable."""
+    return (
+        f"case when size({words}) >= {n} then "
+        f"transform(sequence(1, size({words}) - {n - 1}), "
+        f"i -> array_join(slice({words}, i, {n}), ' ')) "
+        f"else array() end"
+    )
+
+
+def let_sql(value: str, var: str, body: str) -> str:
+    """``body`` with lambda variable ``var`` bound to ``value``: a
+    one-element transform, so ``value`` is evaluated once per row
+    however many times ``body`` (lambdas included) reads ``var``."""
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
+
+
+def evaluate_once(df: DataFrame, keep: list[str], **computed: Column) -> DataFrame:
+    """The generator barrier: ``keep`` columns plus each ``computed``
+    column, evaluated once per row behind a one-element
+    explode(array(struct(...))).  Downstream operators read the results
+    as plain attributes: CollapseProject cannot inline their defining
+    expressions through the generator."""
+    staged = df.select(
+        *keep, F.explode(F.array(F.struct(*[c.alias(n) for n, c in computed.items()]))).alias("_m")
+    )
+    return staged.select(*keep, *[F.col(f"_m.{n}").alias(n) for n in computed])
 
 
 _SPREAD_MEMO: dict[tuple, bool] = {}
@@ -137,9 +183,8 @@ def language_id(
     NLP surface; this is the training-pipeline heuristic analogue.)"""
     df = spread_for_compute(df)
     stop_arr = "array(" + ",".join(f"'{w}'" for w in EN_STOPWORDS) + ")"
-    words = _words(text_col)
-    hits = F.expr(f"size(filter(filter(split({text_col}, ' '), w -> w <> ''), w -> array_contains({stop_arr}, w)))")
-    total = F.size(words)
+    hits = F.expr(f"size(filter({words_sql(text_col)}, w -> array_contains({stop_arr}, w)))")
+    total = F.size(_words(text_col))
     ratio = F.when(total > 0, hits.cast("double") / total.cast("double")).otherwise(F.lit(0.0))
     return df.select(
         F.col(id_col),
@@ -171,9 +216,7 @@ def language_id_multi(
     ratios = {}
     for lang, stops in LANG_STOPWORDS.items():
         arr = "array(" + ",".join(f"'{w}'" for w in stops) + ")"
-        hits = F.expr(
-            f"size(filter(filter(split({text_col}, ' '), w -> w <> ''), w -> array_contains({arr}, w)))"
-        )
+        hits = F.expr(f"size(filter({words_sql(text_col)}, w -> array_contains({arr}, w)))")
         ratios[lang] = (
             F.when(total > 0, hits.cast("double") / total.cast("double")).otherwise(F.lit(0.0))
         )
@@ -210,7 +253,7 @@ def normalize_text(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     return df.select(
         F.col(id_col),
         norm.alias("norm_text"),
-        F.size(F.expr("filter(split(trim(regexp_replace(regexp_replace(lower(" + text_col + "), '[^a-z0-9 ]', ' '), ' +', ' ')), ' '), w -> w <> '')")).alias("n_tokens"),
+        F.size(_words(f"trim(regexp_replace(regexp_replace(lower({text_col}), '[^a-z0-9 ]', ' '), ' +', ' '))")).alias("n_tokens"),
     )
 
 
@@ -278,7 +321,7 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
     fold, no shuffle, no UDF."""
     df = spread_for_compute(df)
     expr = (
-        f"aggregate(filter(split({text_col}, ' '), w -> w <> ''), cast(0 as bigint), "
+        f"aggregate({words_sql(text_col)}, cast(0 as bigint), "
         f"(acc, w) -> pmod(acc * 31 + length(w) * 131 + ascii(substring(w, 1, 1)), {FINGERPRINT_MOD}))"
     )
     return df.select(F.col(id_col), F.expr(expr).alias("fingerprint"))
@@ -420,55 +463,44 @@ def repetition_top_ngram(
     integer arithmetic + one division, so the SQL oracle reproduces
     them bit-for-bit."""
     df = spread_for_compute(df)
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
-    grams = (
-        f"case when size({words}) >= {n} then "
-        f"transform(sequence(1, size({words}) - {n - 1}), "
-        f"i -> array_join(slice({words}, i, {n}), ' ')) "
-        f"else array() end"
-    )
     # (gram, same-as-previous?) pairs: equal neighbors in the sorted
     # array extend a run; runs enumerate distinct grams with counts.
     # prev = [''] ++ ss, sliced to EXACTLY size(ss) elements — zip_with
     # pads the shorter side with nulls, so an unsliced sentinel array
     # would give an empty gram list one phantom element (the <n-word
     # document edge, pinned in test_repetition_top_ngram_counts).
-    # The sorted gram array is LAMBDA-BOUND (one-element transform, the
-    # gopher suite's _bound_sorted device) so array_sort — and the
-    # grams build under it — evaluates ONCE per row; HOFs are
-    # interpreted with no subexpression elimination, and the earlier
-    # inlined form re-sorted per reference (3x per row; the round-8
-    # vs-prev bench flag on this query).
+    # The words and the sorted grams are let-bound (ws, ss), so the
+    # split, the gram build and the sort each run once per row.
     z = (
         "zip_with(ss, slice(concat(array(''), ss), 1, size(ss)), "
         "(c, p) -> struct(c AS g, c = p AS eq))"
     )
-    runs = (
-        f"element_at(transform(array(array_sort({grams})), ss -> "
+    runs = let_sql(
+        f"array_sort({word_ngrams_sql('ws', n)})",
+        "ss",
         f"aggregate({z}, "
         f"named_struct('run', 0, 'best', 0, 'bestch', 0), "
         f"(acc, e) -> named_struct("
         f"'run', if(e.eq, acc.run + 1, 1), "
         f"'best', greatest(acc.best, if(e.eq, acc.run + 1, 1)), "
-        f"'bestch', greatest(acc.bestch, if(e.eq, acc.run + 1, 1) * length(e.g))))"
-        f"), 1)"
+        f"'bestch', greatest(acc.bestch, if(e.eq, acc.run + 1, 1) * length(e.g))))",
+    )
+    # the gram COUNT has a closed form in the word count — no second
+    # build of the gram array just to size it
+    row = let_sql(
+        words_sql(text_col),
+        "ws",
+        f"named_struct('total', greatest(size(ws) - {n - 1}, 0), 'runs', {runs})",
     )
     n_chars = F.length(F.col(text_col))
-    counted = df.select(
-        F.col(id_col),
-        n_chars.alias("_nc"),
-        # the gram COUNT has a closed form in the word count — no
-        # second build of the gram array just to size it
-        F.expr(f"greatest(size({words}) - {n - 1}, 0)").alias("total_ngrams"),
-        F.expr(runs).alias("_r"),
-    )
+    counted = df.select(F.col(id_col), n_chars.alias("_nc"), F.expr(row).alias("_r"))
     return counted.select(
         id_col,
-        "total_ngrams",
-        F.col("_r.best").alias("top_ngram_count"),
+        F.col("_r.total").alias("total_ngrams"),
+        F.col("_r.runs.best").alias("top_ngram_count"),
         F.when(
             F.col("_nc") > 0,
-            F.round(F.col("_r.bestch").cast("double") / F.col("_nc").cast("double"), 6),
+            F.round(F.col("_r.runs.bestch").cast("double") / F.col("_nc").cast("double"), 6),
         )
         .otherwise(F.lit(0.0))
         .alias("top_ngram_char_fraction"),
@@ -497,18 +529,16 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("require 0 <= overlap < chunk_tokens")
     step = chunk_tokens - overlap
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
-    n = f"size({words})"
-    n_chunks = f"(1 + ((greatest({n} - {chunk_tokens}, 0) + {step} - 1) div {step}))"
+    n_chunks = f"(1 + ((greatest(size(ws) - {chunk_tokens}, 0) + {step} - 1) div {step}))"
     chunks = (
-        f"case when {n} > 0 then "
+        f"case when size(ws) > 0 then "
         f"transform(sequence(0, {n_chunks} - 1), i -> named_struct("
         f"'chunk_idx', i, "
-        f"'chunk_text', array_join(slice({words}, i * {step} + 1, {chunk_tokens}), ' '), "
-        f"'n_chunk_tokens', size(slice({words}, i * {step} + 1, {chunk_tokens})))) "
+        f"'chunk_text', array_join(slice(ws, i * {step} + 1, {chunk_tokens}), ' '), "
+        f"'n_chunk_tokens', size(slice(ws, i * {step} + 1, {chunk_tokens})))) "
         f"else array() end"
     )
-    return df.select(F.col(id_col), F.expr(f"inline({chunks})"))
+    return df.select(F.col(id_col), F.expr(f"inline({let_sql(words_sql(text_col), 'ws', chunks)})"))
 
 
 def unigram_lm_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -574,31 +604,25 @@ def boilerplate_signals(df: DataFrame, text_col: str = "text", id_col: str = "do
     expressions (one array of n-gram strings per doc inside a single
     projection), no shuffle, no UDF."""
     df = spread_for_compute(df)
-    # Stays a single inline projection: measured 3× faster than
-    # materializing the gram array behind a generator boundary — the
-    # outputs are scalars, so the boundary only breaks the codegen
-    # pipeline (contrast shingle_docs, where the boundary wins because
-    # the array feeds a downstream explode).
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
-    grams = (
-        f"case when size({words}) >= {n} then "
-        f"transform(sequence(1, size({words}) - {n - 1}), "
-        f"i -> array_join(slice({words}, i, {n}), ' ')) "
-        f"else array() end"
+    # one projection: the words and the gram array are let-bound, so
+    # the split and the gram build run once per row (sf0.1, 4 cores:
+    # 5.3 JVM-cpu-s per noop write with the words inlined, 0.8 let-bound,
+    # 0.9 behind a generator barrier)
+    counts = let_sql(
+        words_sql(text_col),
+        "ws",
+        let_sql(
+            word_ngrams_sql("ws", n),
+            "gs",
+            "named_struct('total', size(gs), 'distinct', size(array_distinct(gs)))",
+        ),
     )
-    counts = df.select(
-        F.col(id_col),
-        F.expr(f"size({grams})").alias("total_ngrams"),
-        F.expr(f"size(array_distinct({grams}))").alias("distinct_ngrams"),
-    )
-    return counts.select(
+    total, distinct = F.col("_c.total"), F.col("_c.distinct")
+    return df.select(F.col(id_col), F.expr(counts).alias("_c")).select(
         id_col,
-        "total_ngrams",
-        "distinct_ngrams",
-        F.when(
-            F.col("total_ngrams") > 0,
-            F.round(1.0 - F.col("distinct_ngrams").cast("double") / F.col("total_ngrams"), 6),
-        )
+        total.alias("total_ngrams"),
+        distinct.alias("distinct_ngrams"),
+        F.when(total > 0, F.round(1.0 - distinct.cast("double") / total, 6))
         .otherwise(F.lit(0.0))
         .alias("dup_ngram_fraction"),
     )
@@ -656,12 +680,7 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
     corpus-sized); join back by bigram.  Docs with < 2 tokens score 0
     over 0 bigrams."""
     df = spread_for_compute(df)
-    words = f"filter(split({text_col}, ' '), x -> x <> '')"
-    grams = (
-        f"case when size({words}) >= 2 then "
-        f"transform(sequence(1, size({words}) - 1), i -> array_join(slice({words}, i, 2), ' ')) "
-        f"else array() end"
-    )
+    grams = let_sql(words_sql(text_col), "ws", word_ngrams_sql("ws", 2))
     inst = df.select(F.col(id_col), F.explode(F.expr(grams)).alias("bg"))
     bg_counts = inst.groupBy("bg").agg(F.count(F.lit(1)).alias("cbg"))
     bg_counts = bg_counts.withColumn("w1", F.split(F.col("bg"), " ").getItem(0))
@@ -746,15 +765,22 @@ def gopher_quality_rules(
     exact SQL oracle (counts-of-3-char '...' via the
     length-minus-replace identity, integer-divided by 3)."""
     df = spread_for_compute(df)
-    words = f"filter(split({text_col}, ' '), w -> w <> '')"
     # split's pattern arg is a regex in Spark; '\n' the two-char escape
     # compiles to the newline class, matching the oracle's chr(10)
     lines = f"filter(split({text_col}, '\\n'), l -> trim(l) <> '')"
     stop_arr = "array(" + ", ".join(f"'{s}'" for s in _GOPHER_STOPWORDS) + ")"
+    # the word signals share one let-bound word array (one split per row)
+    word_sig = let_sql(
+        words_sql(text_col),
+        "ws",
+        "named_struct('n', size(ws), "
+        "'chars', aggregate(ws, 0L, (acc, w) -> acc + length(w)), "
+        "'alpha', size(filter(ws, w -> w rlike '[a-zA-Z]')), "
+        f"'stop', size(filter({stop_arr}, s -> array_contains(ws, s))))",
+    )
     base = df.select(
         F.col(id_col),
-        F.expr(f"size({words})").alias("n_words"),
-        F.expr(f"aggregate({words}, 0L, (acc, w) -> acc + length(w))").alias("_word_chars"),
+        F.expr(word_sig).alias("_ws"),
         (
             F.length(F.col(text_col))
             - F.length(F.expr(f"replace({text_col}, '#', '')"))
@@ -762,7 +788,6 @@ def gopher_quality_rules(
             - F.length(F.expr(f"replace({text_col}, '…', '')"))
             + F.expr(f"(length({text_col}) - length(replace({text_col}, '...', ''))) div 3")
         ).alias("_symbols"),
-        F.expr(f"size(filter({words}, w -> w rlike '[a-zA-Z]'))").alias("_alpha_words"),
         F.expr(f"size({lines})").alias("_n_lines"),
         F.expr(
             f"size(filter({lines}, l -> startswith(trim(l), '-') "
@@ -772,9 +797,6 @@ def gopher_quality_rules(
             f"size(filter({lines}, l -> endswith(trim(l), '...') "
             f"or endswith(trim(l), '…')))"
         ).alias("_ellipsis_lines"),
-        F.expr(f"size(filter({stop_arr}, s -> array_contains({words}, s)))").alias(
-            "stopword_hits"
-        ),
     )
 
     def _ratio(num, den):
@@ -784,13 +806,13 @@ def gopher_quality_rules(
 
     sig = base.select(
         F.col(id_col),
-        F.col("n_words"),
-        _ratio(F.col("_word_chars"), F.col("n_words")).alias("mean_word_len"),
-        _ratio(F.col("_symbols"), F.col("n_words")).alias("symbol_word_ratio"),
-        _ratio(F.col("_alpha_words"), F.col("n_words")).alias("alpha_word_frac"),
+        F.col("_ws.n").alias("n_words"),
+        _ratio(F.col("_ws.chars"), F.col("_ws.n")).alias("mean_word_len"),
+        _ratio(F.col("_symbols"), F.col("_ws.n")).alias("symbol_word_ratio"),
+        _ratio(F.col("_ws.alpha"), F.col("_ws.n")).alias("alpha_word_frac"),
         _ratio(F.col("_bullet_lines"), F.col("_n_lines")).alias("bullet_line_frac"),
         _ratio(F.col("_ellipsis_lines"), F.col("_n_lines")).alias("ellipsis_line_frac"),
-        F.col("stopword_hits"),
+        F.col("_ws.stop").alias("stopword_hits"),
     )
     keep = (
         F.col("n_words").between(min_words, max_words)
@@ -802,32 +824,6 @@ def gopher_quality_rules(
         & (F.col("stopword_hits") >= min_stopword_hits)
     )
     return sig.select("*", keep.alias("keep"))
-
-
-def _materialize_arrays(
-    df: DataFrame, scalars: list[str], arrays: dict, scalar_exprs: dict | None = None
-) -> DataFrame:
-    """Materialize computed ARRAY columns behind a one-element
-    explode(array(struct(...))) generator — the shingle_docs device,
-    generalized: higher-order functions are interpreted (no codegen
-    subexpression elimination) and CollapseProject inlines a projected
-    column's DEFINING EXPRESSION into every downstream reference, so a
-    column referenced inside a downstream lambda would otherwise be
-    re-evaluated once per lambda ELEMENT (an O(G) derivation referenced
-    per-gram turns O(G²)).  Behind the generator the columns are plain
-    attributes: one evaluation per row, O(1) per reference.
-    ``scalar_exprs`` are consumed-once computed columns that ride in
-    the same select without needing the barrier themselves."""
-    named = [c.alias(n) for n, c in arrays.items()]
-    extra = [c.alias(n) for n, c in (scalar_exprs or {}).items()]
-    staged = df.select(
-        *scalars, *extra, F.explode(F.array(F.struct(*named))).alias("_m")
-    )
-    return staged.select(
-        *scalars,
-        *[F.col(n) for n in (scalar_exprs or {})],
-        *[F.col(f"_m.{n}").alias(n) for n in arrays],
-    )
 
 
 def gopher_repetition_suite(
@@ -856,7 +852,7 @@ def gopher_repetition_suite(
     the winning gram — that is the published top-gram definition.
 
     Engine shape: per-row higher-order expressions staged over
-    GENERATOR-BARRIERED projections (see _materialize_arrays — without
+    GENERATOR-BARRIERED projections (see evaluate_once — without
     the barriers, CollapseProject turns every lambda-internal column
     reference into a per-element re-derivation and the suite goes
     quadratic in document length; measured 64s → ~1s on a single
@@ -871,14 +867,12 @@ def gopher_repetition_suite(
     θ-join) — an independent formulation, so a green hash certifies
     both."""
     df = spread_for_compute(df)
-    base = _materialize_arrays(
+    base = evaluate_once(
         df.select(F.col(id_col), F.length(F.col(text_col)).alias("_nc"), F.col(text_col)),
         [id_col, "_nc"],
-        {
-            "_w": F.expr(f"filter(split({text_col}, ' '), w -> w <> '')"),
-            "_l": F.expr(f"filter(split({text_col}, '\\n'), l -> trim(l) <> '')"),
-            "_p": F.expr(f"filter(split({text_col}, '\\n\\n'), p -> trim(p) <> '')"),
-        },
+        _w=_words(text_col),
+        _l=F.expr(f"filter(split({text_col}, '\\n'), l -> trim(l) <> '')"),
+        _p=F.expr(f"filter(split({text_col}, '\\n\\n'), p -> trim(p) <> '')"),
     )
     # r13: INCREMENTAL gram build — level n extends level n-1's gram
     # strings by one word (zip_with + concat) instead of re-deriving
@@ -888,25 +882,23 @@ def gopher_repetition_suite(
     # but the per-level cost drops from n element copies + an n-way
     # join per gram to ONE two-string concat per gram: measured 2.9×
     # less CPU for the whole 9-level build (19.9 → 6.9 JVM-cpu-s at
-    # sf0.1).  Levels chain through _materialize_arrays barriers so
+    # sf0.1).  Levels chain through evaluate_once barriers so
     # each consumes the previous as a plain attribute — without the
     # barrier CollapseProject would inline level n-1's definition into
     # level n and the build would go exponential.
-    g = _materialize_arrays(
+    g = evaluate_once(
         base,
         [id_col, "_nc", "_w", "_l", "_p"],
-        {
-            "_g2": F.expr(
-                "case when size(_w) >= 2 then zip_with(slice(_w, 1, size(_w) - 1), "
-                "slice(_w, 2, size(_w) - 1), (a, b) -> concat(a, ' ', b)) else array() end"
-            )
-        },
+        _g2=F.expr(
+            "case when size(_w) >= 2 then zip_with(slice(_w, 1, size(_w) - 1), "
+            "slice(_w, 2, size(_w) - 1), (a, b) -> concat(a, ' ', b)) else array() end"
+        ),
     )
     for n in range(3, 11):
-        g = _materialize_arrays(
+        g = evaluate_once(
             g,
-            list(g.columns),
-            {
+            g.columns,
+            **{
                 f"_g{n}": F.expr(
                     f"case when size(_w) >= {n} then "
                     f"zip_with(slice(_g{n - 1}, 1, size(_w) - {n - 1}), "
@@ -916,13 +908,6 @@ def gopher_repetition_suite(
             },
         )
     keep_cols = [id_col, "_nc", "_w", "_l", "_p"]
-
-    def _bound_sorted(arr: str, body: str) -> str:
-        # evaluate array_sort(arr) ONCE per row by binding it to a
-        # lambda variable `ss` (a one-element transform) — the device
-        # that lets a sorted copy be consumed by a multi-reference
-        # expression without materializing it through a barrier column
-        return f"element_at(transform(array(array_sort({arr})), ss -> {body}), 1)"
 
     def _top_chars(n: int) -> str:
         # sorted-run fold tracking (current run, best count, chars of
@@ -943,7 +928,7 @@ def gopher_repetition_suite(
             f"if({r} = acc.bc, greatest(acc.bch, {r} * length(e.g)), acc.bch)))"
             f").bch"
         )
-        return _bound_sorted(f"_g{n}", body)
+        return let_sql(f"array_sort(_g{n})", "ss", body)
 
     def _dup_firsts(arr: str) -> str:
         # sorted (value, idx) pairs — array_sort on structs orders by
@@ -959,10 +944,8 @@ def gopher_repetition_suite(
             "if(i + 2 <= size(sp), element_at(sp, i + 2).g = e.g, false) "
             "and if(i > 0, element_at(sp, i).g <> e.g, true))"
         )
-        return (
-            f"element_at(transform(array(array_sort("
-            f"transform({arr}, (x, i) -> struct(x AS g, i + 1 AS idx)))"
-            f"), sp -> {body}), 1)"
+        return let_sql(
+            f"array_sort(transform({arr}, (x, i) -> struct(x AS g, i + 1 AS idx)))", "sp", body
         )
 
     # ONE barrier stage materializes every duplicate-value list (each
@@ -971,10 +954,10 @@ def gopher_repetition_suite(
     # barrier.  Line/paragraph duplicate tallies need no value list:
     # sum(count-1) over duplicated values == total - distinct, so both
     # ride the later select as closed-form scalar pairs.
-    g2 = _materialize_arrays(
+    g2 = evaluate_once(
         g,
         keep_cols + [f"_g{n}" for n in range(5, 11)] + [f"_g{n}" for n in (2, 3, 4)],
-        {f"_dv{n}": F.expr(_dup_firsts(f"_g{n}")) for n in range(5, 11)},
+        **{f"_dv{n}": F.expr(_dup_firsts(f"_g{n}")) for n in range(5, 11)},
     )
 
     _DUP_SCAN_CAP = 16
@@ -999,41 +982,38 @@ def gopher_repetition_suite(
             f"if(exists(_dv{n}, e -> e.g = x and e.idx < i + 1), 1, 0))"
         )
         prev_eq = "if(i > 0, element_at(sp, i).g = e.g, false)"
-        positional = (
-            f"element_at(transform(array("
-            f"array_sort(transform(_g{n}, (x, i) -> struct(x AS g, i AS idx)))"
-            f"), sp -> transform(array_sort(transform(sp, (e, i) -> "
-            f"struct(e.idx AS idx, if({prev_eq}, 1, 0) AS f))), "
-            f"s -> s.f)), 1)"
+        positional = let_sql(
+            f"array_sort(transform(_g{n}, (x, i) -> struct(x AS g, i AS idx)))",
+            "sp",
+            f"transform(array_sort(transform(sp, (e, i) -> "
+            f"struct(e.idx AS idx, if({prev_eq}, 1, 0) AS f))), s -> s.f)",
         )
         return (
             f"case when size(_dv{n}) <= {_DUP_SCAN_CAP} then {contains} "
             f"else {positional} end"
         )
 
-    # the duplicated-line/paragraph counts and the top-gram folds are
-    # consumed ONCE downstream, so they ride the g3 barrier select as
-    # plain computed scalars (no second branch, no join, no re-scan)
-    g3b = _materialize_arrays(
+    # the duplicated-line/paragraph counts and the top-gram folds ride
+    # the same barrier as the flags (no second branch, no join, no
+    # re-scan)
+    g3b = evaluate_once(
         g2,
         keep_cols + [f"_g{n}" for n in range(5, 11)],
-        {f"_df{n}": F.expr(_dup_flags(n)) for n in range(5, 11)},
-        scalar_exprs={
-            **{f"_t{n}": F.expr(_top_chars(n)) for n in (2, 3, 4)},
-            # duplicates-beyond-the-first: sum over duplicated values
-            # of (count - 1) == total - distinct, elementwise and in
-            # characters — closed forms, no duplicate-value list needed
-            "_dlcnt": F.expr("size(_l) - size(array_distinct(_l))"),
-            "_dlch": F.expr(
-                "aggregate(_l, 0L, (a, x) -> a + length(x)) "
-                "- aggregate(array_distinct(_l), 0L, (a, x) -> a + length(x))"
-            ),
-            "_dpcnt": F.expr("size(_p) - size(array_distinct(_p))"),
-            "_dpch": F.expr(
-                "aggregate(_p, 0L, (a, x) -> a + length(x)) "
-                "- aggregate(array_distinct(_p), 0L, (a, x) -> a + length(x))"
-            ),
-        },
+        **{f"_df{n}": F.expr(_dup_flags(n)) for n in range(5, 11)},
+        **{f"_t{n}": F.expr(_top_chars(n)) for n in (2, 3, 4)},
+        # duplicates-beyond-the-first: sum over duplicated values of
+        # (count - 1) == total - distinct, elementwise and in
+        # characters — closed forms, no duplicate-value list needed
+        _dlcnt=F.expr("size(_l) - size(array_distinct(_l))"),
+        _dlch=F.expr(
+            "aggregate(_l, 0L, (a, x) -> a + length(x)) "
+            "- aggregate(array_distinct(_l), 0L, (a, x) -> a + length(x))"
+        ),
+        _dpcnt=F.expr("size(_p) - size(array_distinct(_p))"),
+        _dpch=F.expr(
+            "aggregate(_p, 0L, (a, x) -> a + length(x)) "
+            "- aggregate(array_distinct(_p), 0L, (a, x) -> a + length(x))"
+        ),
     )
 
     def _marked(n: int) -> str:
@@ -1319,24 +1299,16 @@ def qc_sigmoid_table_micro() -> list[int]:
     ]
 
 
-def _qc_gram_sql(words_sql: str, word_ngrams: int) -> str:
-    """SQL expression for a doc's SALTED feature-gram strings from a
-    words-array expression: 'qc1:<w>' unigrams plus, at
+def _qc_gram_sql(words: str, word_ngrams: int) -> str:
+    """SQL expression for a doc's SALTED feature-gram strings from an
+    already-evaluated word array: 'qc1:<w>' unigrams plus, at
     ``word_ngrams>=2``, 'qc2:<w_{i-1}> <w_i>' consecutive word bigrams
     (fastText's wordNgrams device; hashed into the SAME bucket space,
-    the hashing-trick simplification).  The bigram arm guards
-    ``size>=2`` explicitly — ``sequence(2, 1)`` would count DOWN."""
-    uni = f"transform({words_sql}, t -> concat('qc1:', t))"
+    the hashing-trick simplification)."""
+    uni = f"transform({words}, t -> concat('qc1:', t))"
     if word_ngrams < 2:
         return uni
-    bi = (
-        f"case when size({words_sql}) >= 2 then "
-        f"transform(sequence(2, size({words_sql})), i -> "
-        f"concat('qc2:', element_at({words_sql}, i - 1), ' ', "
-        f"element_at({words_sql}, i))) "
-        f"else cast(array() as array<string>) end"
-    )
-    return f"concat({uni}, {bi})"
+    return f"concat({uni}, transform({word_ngrams_sql(words, 2)}, g -> concat('qc2:', g)))"
 
 
 def _qc_features(
@@ -1356,10 +1328,9 @@ def _qc_features(
     iteration."""
     from hadoop_3_3_6_spark.functions.dedup import portable_hash_expr
 
-    words = f"filter(split({text_col}, ' '), t -> t <> '')"
     grams = df.select(
         F.col(id_col),
-        F.explode(F.expr(_qc_gram_sql(words, word_ngrams))).alias("g"),
+        F.explode(F.expr(let_sql(words_sql(text_col), "ws", _qc_gram_sql("ws", word_ngrams)))).alias("g"),
     )
     feats = (
         grams.select(
@@ -1480,23 +1451,9 @@ def apply_quality_classifier(
     from hadoop_3_3_6_spark.functions.dedup import portable_hash_expr
 
     df = spread_for_compute(df, id_col)
-    # the words array is materialized behind a generator barrier so the
-    # gram builder (which references it ~4x: unigram transform, size
-    # guard, bigram transform) re-reads a plain attribute instead of
-    # re-splitting the text per reference (HOFs have no CSE)
-    staged = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep_cols],
-        F.explode(
-            F.array(
-                F.struct(
-                    F.expr(
-                        f"filter(split({text_col}, ' '), t -> t <> '')"
-                    ).alias("w")
-                )
-            )
-        ).alias("_m"),
-    ).select(F.col(id_col), *[F.col(c) for c in keep_cols], F.col("_m.w").alias("_warr"))
+    # the word array is evaluated once behind the barrier: the gram
+    # builder reads it ~4x (unigram transform, size guard, bigram build)
+    staged = evaluate_once(df, [id_col, *keep_cols], _warr=_words(text_col))
     # dot = sum of weights over the doc's DISTINCT gram buckets + bias:
     # term-for-term the training aggregate, so scores match the loop's
     barr = (

@@ -57,6 +57,7 @@ from hadoop_3_3_6_spark.functions.text import (
     language_id,
     quality_score,
     token_counts,
+    words_sql,
 )
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -3747,7 +3748,7 @@ def q_pipeline_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack_sequences; one aggregate + a 1-row scalar cross, all
     closed-form arithmetic — exact oracle."""
     docs = load_table(spark, "documents", sf_dir)
-    ntok = F.expr("size(filter(split(text, ' '), w -> w <> ''))")
+    ntok = F.size(F.expr(words_sql("text")))
     s = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum(ntok).alias("n_tokens")
     )
@@ -4981,9 +4982,7 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _encode_ids(corpus: DataFrame, vocab: DataFrame) -> DataFrame:
         toks = corpus.select(
             "doc_id",
-            F.posexplode(F.expr("filter(split(text, ' '), w -> w <> '')")).alias(
-                "pos", "token"
-            ),
+            F.posexplode(F.expr(words_sql("text"))).alias("pos", "token"),
         )
         enc = (
             toks.join(vocab, "token")
@@ -5162,7 +5161,7 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _rendered_dir("pretrain_full_", sf_dir, render)
 
-    wc = F.expr("size(filter(split(text, ' '), w -> w <> ''))").cast("bigint")
+    wc = F.size(F.expr(words_sql("text"))).cast("bigint")
 
     def stage_row(name: str, df: DataFrame, tokens_col=None) -> DataFrame:
         tokens = tokens_col if tokens_col is not None else F.sum(wc)
@@ -5974,9 +5973,7 @@ def q_token_shards_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab = build_vocab(docs, "text", "doc_id").select("token", "token_id")
         toks = docs.select(
             "doc_id",
-            F.posexplode(F.expr("filter(split(text, ' '), w -> w <> '')")).alias(
-                "pos", "token"
-            ),
+            F.posexplode(F.expr(words_sql("text"))).alias("pos", "token"),
         )
         # no broadcast hint by design: the vocab is bounded here but
         # grows with an open corpus — AQE picks the strategy (the
@@ -7127,12 +7124,11 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine (quality_score / language_id / exact_dedup building blocks),
     fused without materialization between stages."""
     docs = load_table(spark, "documents", sf_dir)
-    words = F.expr("filter(split(text, ' '), w -> w <> '')")
-    n_words = F.size(words)
+    n_words = F.size(F.expr(words_sql("text")))
     n_chars = F.length("text")
     alpha = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
     stop_arr = "array(" + ",".join(f"'{w}'" for w in ["the","a","of","and","to","in","is","on","for","with"]) + ")"
-    hits = F.expr(f"size(filter(filter(split(text, ' '), w -> w <> ''), w -> array_contains({stop_arr}, w)))")
+    hits = F.expr(f"size(filter({words_sql('text')}, w -> array_contains({stop_arr}, w)))")
     staged = (
         docs.select("doc_id", "text", n_words.alias("n_words"), n_chars.alias("n_chars"), alpha.alias("alpha"), hits.alias("hits"))
         .filter((F.col("n_words") >= 20) & (F.col("alpha").cast("double") / F.col("n_chars") > 0.5))
@@ -7460,12 +7456,12 @@ def q_pipeline_pretraining_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     red = pii_redact(injected, "text", "doc_id", keep_cols=("source",))
-    words = F.expr("filter(split(clean_text, ' '), w -> w <> '')")
+    words = words_sql("clean_text")
     stop_arr = "array(" + ",".join(f"'{w}'" for w in EN_STOPWORDS) + ")"
     hits = F.expr(
-        f"size(filter(filter(split(clean_text, ' '), w -> w <> ''), w -> array_contains({stop_arr}, w)))"
+        f"size(filter({words}, w -> array_contains({stop_arr}, w)))"
     )
-    kept = red.select("doc_id", "source", "clean_text", F.size(words).alias("_nw"), hits.alias("_hits")).filter(
+    kept = red.select("doc_id", "source", "clean_text", F.size(F.expr(words)).alias("_nw"), hits.alias("_hits")).filter(
         (F.col("_nw") >= 20) & (F.col("_hits").cast("double") / F.col("_nw") >= 0.05)
     )
     mixed = temperature_sample(kept, "doc_id", "source", alpha=0.5)
@@ -8654,8 +8650,7 @@ def q_fuzzy_join_titles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_3_3_6_spark.operators.joins import fuzzy_join
 
     docs = load_table(spark, "documents", sf_dir)
-    words = "filter(split(text, ' '), w -> w <> '')"
-    title = F.expr(f"array_join(slice({words}, 1, 4), ' ')")
+    title = F.expr(f"array_join(slice({words_sql('text')}, 1, 4), ' ')")
     left = docs.select(F.col("doc_id").alias("left_id"), title.alias("left_title"))
     right = docs.select(F.col("doc_id").alias("right_id"), title.alias("right_title"))
     return fuzzy_join(
@@ -9186,7 +9181,7 @@ def q_sketch_hll_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     words = docs.select(
         "source",
-        F.explode(F.expr("filter(split(text, ' '), w -> w <> '')")).alias("w"),
+        F.explode(F.expr(words_sql("text"))).alias("w"),
     )
     regs = hll_registers(words, "w", p=8, group_cols=["source"])
     merged = hll_merge(regs).select(

@@ -16,6 +16,15 @@ def plan_of(spark, sf_dir, name: str) -> str:
     return QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture(scope="module")
+def built(spark, sf_dir):
+    """Every registered query, constructed once for the corpus-wide
+    audits below.  Constructing them first also pays the one-time
+    schema-inference and build-once work, so it is the warm pass of
+    test_query_construction_runs_no_jobs."""
+    return {name: QUERIES[name](spark, sf_dir) for name in QUERIES}
+
+
 def test_q6_filters_reach_parquet_scan(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q6_revenue_forecast")
     assert "PushedFilters: [IsNotNull" in plan
@@ -289,7 +298,7 @@ def test_runtime_bloom_filter_reduces_fact_scan(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_no_accidental_cartesian_or_nlj_anywhere(spark, sf_dir):
+def test_no_accidental_cartesian_or_nlj_anywhere(built):
     """Corpus-wide plan audit as a regression gate: CartesianProduct
     never appears; BroadcastNestedLoopJoin only in the queries where
     the cross product IS the semantics (brute-force similarity
@@ -441,8 +450,8 @@ def test_no_accidental_cartesian_or_nlj_anywhere(spark, sf_dir):
     }
     python_nodes = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas", "PythonDataSource")
     offenders = {}
-    for name in QUERIES:
-        plan = plan_of(spark, sf_dir, name)
+    for name, df in built.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in allowed_nlj:
@@ -454,7 +463,7 @@ def test_no_accidental_cartesian_or_nlj_anywhere(spark, sf_dir):
     assert not offenders, offenders
 
 
-def test_query_construction_runs_no_jobs(spark, sf_dir):
+def test_query_construction_runs_no_jobs(spark, sf_dir, built):
     """Query constructors must be pure plan builders — no eager driver
     action (collect/count) hidden inside.  At scale an eager action in
     a constructor splits the plan and materializes intermediates.
@@ -490,11 +499,9 @@ def test_query_construction_runs_no_jobs(spark, sf_dir):
         }
     }
     lazy = [n for n in QUERIES if n not in eager_by_contract]
-    # Warm pass: pays the one-time parquet schema-inference jobs that
-    # load_table memoizes and the build-once construction work; the
-    # measured pass below must then be pure.
-    for name in lazy:
-        QUERIES[name](spark, sf_dir)
+    # The ``built`` fixture was the warm pass: it paid the one-time
+    # parquet schema-inference jobs that load_table memoizes and the
+    # build-once construction work; the measured pass must be pure.
     sc = spark.sparkContext
     offenders = {}
     for name in lazy:
@@ -508,6 +515,105 @@ def test_query_construction_runs_no_jobs(spark, sf_dir):
         if jobs:
             offenders[name] = len(jobs)
     assert not offenders, f"eager constructors: {offenders}"
+
+
+# Expressions Spark evaluates at O(input) or worse per row: the regex
+# family, array sorts and dedups, sequences, and higher-order functions
+# (any node with a LambdaFunction child).
+_HEAVY_EXPRS = {"StringSplit", "RLike", "Like", "ILike", "ArraySort", "SortArray", "ArrayDistinct", "Sequence"}
+
+
+def _seq(xs) -> list:
+    return [xs.apply(i) for i in range(xs.size())]
+
+
+def _annotate(nodes: list, i: int = 0) -> tuple[dict, int]:
+    """Rebuild one expression tree from TreeNode.toJSON's pre-order
+    list, marking each node with its free lambda variables and whether
+    it contains a heavy expression."""
+    node = {"cls": nodes[i]["class"].rsplit(".", 1)[-1], "kids": []}
+    j = i + 1
+    for _ in range(nodes[i]["num-children"]):
+        kid, j = _annotate(nodes, j)
+        node["kids"].append(kid)
+    kids = node["kids"]
+    if node["cls"] == "NamedLambdaVariable":
+        node["free"] = {nodes[i]["exprId"]["id"]}
+    else:
+        node["free"] = set().union(*(k["free"] for k in kids))
+    if node["cls"] == "LambdaFunction":
+        node["free"] = node["free"] - set().union(*(k["free"] for k in kids[1:]))
+    node["heavy"] = (
+        node["cls"] in _HEAVY_EXPRS
+        or node["cls"].startswith("RegExp")
+        or any(k["cls"] == "LambdaFunction" or k["heavy"] for k in kids)
+    )
+    return node, j
+
+
+def _invariant_in_lambda(node: dict, in_body: bool, path: tuple, out: list) -> None:
+    """Collect the paths of the outermost subtrees inside a lambda body
+    that are heavy yet read no variable bound outside them (a lambda
+    function itself is not evaluated on its own: only its body is)."""
+    if in_body and node["heavy"] and not node["free"] and node["cls"] != "LambdaFunction":
+        out.append(path)
+        return
+    for k, kid in enumerate(node["kids"]):
+        body = in_body or (node["cls"] == "LambdaFunction" and k == 0)
+        _invariant_in_lambda(kid, body, path + (k,), out)
+
+
+def lambda_lint(spark, plan) -> list[str]:
+    """Loop-invariant work inside lambda bodies of a logical plan.
+
+    Spark interprets higher-order functions with no common-subexpression
+    elimination, so a subtree inside a lambda body is evaluated once per
+    array element.  One that reads no lambda variable bound outside it
+    (and is not foldable) computes the same value each time: a word rule
+    inlined into an n-gram lambda re-splits the document once per gram.
+    Returns the SQL of each such subtree."""
+    import json
+
+    patterns = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    lam, sub = patterns.LAMBDA_FUNCTION(), patterns.PLAN_EXPRESSION()
+    found, todo = [], [plan]
+    while todo:
+        p = todo.pop()
+        if not (p.containsPattern(lam) or p.containsPattern(sub)):
+            continue
+        todo.extend(_seq(p.children()))
+        todo.extend(_seq(p.subqueries()))
+        for e in _seq(p.expressions()):
+            if not e.containsPattern(lam):
+                continue
+            paths = []
+            _invariant_in_lambda(_annotate(json.loads(e.toJSON()))[0], False, (), paths)
+            for path in paths:
+                x = e
+                for k in path:
+                    x = x.children().apply(k)
+                if not x.foldable():
+                    found.append(x.toString())
+    return found
+
+
+# Queries allowed loop-invariant work inside a lambda, each with its
+# one-line reason.
+LAMBDA_LINT_ALLOW: dict[str, str] = {}
+
+
+def test_no_loop_invariant_work_inside_lambdas(spark, built):
+    """No registered query evaluates loop-invariant heavy work inside a
+    lambda body (see lambda_lint).  The fix is to evaluate it once per
+    row first: behind text.evaluate_once, or bound by text.let_sql."""
+    offenders = {}
+    for name, df in built.items():
+        if name in LAMBDA_LINT_ALLOW:
+            continue
+        found = lambda_lint(spark, df._jdf.queryExecution().optimizedPlan())
+        if found:
+            offenders[name] = found[0][:300]
+    assert not offenders, offenders
 
 
 def test_classifier_replica_trained_once_per_split():

@@ -4,8 +4,11 @@ oracle-parity sweep alone would not exercise these edges)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
 from hadoop_3_3_6_spark.functions.dedup import duplicated_span_fraction
-from hadoop_3_3_6_spark.functions.text import pii_redact, repetition_top_ngram
+from hadoop_3_3_6_spark.functions.text import let_sql, pii_redact, repetition_top_ngram
 
 
 def _docs(spark, texts):
@@ -451,6 +454,67 @@ def test_gopher_r13_rewrites_differential(spark):
             (F.expr(old_m) != F.expr(new_m)).alias("bad")
         ).filter("bad")
         assert diff.count() == 0, f"marked-span divergence at n={n}"
+
+
+def _inline_words(value: str, var: str, body: str) -> str:
+    """``text.let_sql`` with the word binding undone: the word rule
+    written out at every use of ``ws``, as the operators spelled it
+    before their words were let-bound.  Other bindings pass through."""
+    import re
+
+    if var != "ws":
+        return let_sql(value, var, body)
+    return re.sub(r"\bws\b", lambda _: f"({value})", body)
+
+
+_WORD_EDGE_DOCS = [
+    "",
+    None,
+    "solo",
+    "a b",  # fewer words than n = 3
+    "a b c",  # exactly n words
+    "  a  b   c  a b  ",  # runs of spaces, leading and trailing
+    "x y z a b c",
+    " ".join(f"w{i % 37}" for i in range(2000)),
+]
+
+
+@pytest.mark.parametrize(
+    "module, op",
+    [
+        ("text", lambda m, df: m.repetition_top_ngram(df, n=2)),
+        ("text", lambda m, df: m.chunk_documents(df, chunk_tokens=8, overlap=3)),
+        ("text", lambda m, df: m.boilerplate_signals(df, n=3)),
+        ("text", lambda m, df: m.bigram_lm_score(df)),
+        ("text", lambda m, df: m.gopher_quality_rules(df)),
+        ("dedup", lambda m, df: m.duplicated_span_fraction(df, n=3)),
+        ("dedup", lambda m, df: m.duplicated_spans(df, n=3, max_df=1000)),
+        ("sampling", lambda m, df: m.importance_weights(df, F.col("doc_id") % 2 == 0)),
+    ],
+    ids=[
+        "repetition_top_ngram", "chunk_documents", "boilerplate_signals", "bigram_lm_score",
+        "gopher_quality_rules", "duplicated_span_fraction", "duplicated_spans", "importance_weights",
+    ],
+)
+def test_let_bound_words_differential(spark, monkeypatch, module, op):
+    """Each operator that reads its words inside a lambda binds them
+    once per row (text.let_sql).  Pinned against the inline form, with
+    the word rule re-derived at every use, on edge documents: empty,
+    NULL, one word, fewer than / exactly n words, runs of spaces and
+    one 2000-word document.  The values must be identical."""
+    import importlib
+
+    m = importlib.import_module(f"hadoop_3_3_6_spark.functions.{module}")
+    df = _docs(spark, _WORD_EDGE_DOCS)
+    new = op(m, df)
+    monkeypatch.setattr(m, "let_sql", _inline_words)
+    old = op(m, df)
+    def splits(d):
+        return d._jdf.queryExecution().optimizedPlan().toString().count("split(")
+
+    assert splits(old) > splits(new)  # the inline form re-splits the text
+    assert old.count() == new.count() > 0
+    assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
 
 
 def test_sampling_null_edges(spark):
