@@ -73,7 +73,9 @@ def evaluate_once(df: DataFrame, keep: list[str], **computed: Column) -> DataFra
     column, evaluated once per row behind a one-element
     explode(array(struct(...))).  Downstream operators read the results
     as plain attributes: CollapseProject cannot inline their defining
-    expressions through the generator."""
+    expressions through the generator.  Use it where a value feeds a
+    lambda body or a fan-out join (the PQ codes ahead of the IVF-PQ
+    candidate join: inlined, the encode ran once per candidate)."""
     staged = df.select(
         *keep, F.explode(F.array(F.struct(*[c.alias(n) for n, c in computed.items()]))).alias("_m")
     )

@@ -571,7 +571,7 @@ def lambda_lint(spark, plan) -> list[str]:
     array element.  One that reads no lambda variable bound outside it
     (and is not foldable) computes the same value each time: a word rule
     inlined into an n-gram lambda re-splits the document once per gram.
-    Returns the SQL of each such subtree."""
+    Returns each such subtree as a string."""
     import json
 
     patterns = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
@@ -600,6 +600,20 @@ def lambda_lint(spark, plan) -> list[str]:
 # Queries allowed loop-invariant work inside a lambda, each with its
 # one-line reason.
 LAMBDA_LINT_ALLOW: dict[str, str] = {}
+
+
+def test_lambda_lint_flags_an_inlined_word_rule(spark):
+    """The lint's own canary: word n-grams over the inlined word rule
+    are flagged, the same n-grams over let-bound words are not."""
+    from hadoop_3_3_6_spark.functions.text import let_sql, word_ngrams_sql, words_sql
+
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+
+    def lint(sql):
+        return lambda_lint(spark, df.select(F.expr(sql))._jdf.queryExecution().optimizedPlan())
+
+    assert lint(word_ngrams_sql(words_sql("text"), 2))
+    assert not lint(let_sql(words_sql("text"), "ws", word_ngrams_sql("ws", 2)))
 
 
 def test_no_loop_invariant_work_inside_lambdas(spark, built):
