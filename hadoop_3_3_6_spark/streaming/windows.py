@@ -14,7 +14,10 @@ source/sink bindings change.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import tempfile
 import uuid
 
 import pandas as pd
@@ -89,6 +92,31 @@ def sized_state_partitions(
     return max(floor, math.ceil(nbytes / target_bytes))
 
 
+# Checkpoint manager of the one-shot drains (see run_stream_to_batch).
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+@contextlib.contextmanager
+def _scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the body, then put each key back
+    as it was, also on an exception: its previous value, or unset if it
+    was unset (the key's default is never written back)."""
+    prev = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
 def run_stream_to_batch(
     stream_df: DataFrame,
     output_mode: str = "complete",
@@ -105,14 +133,10 @@ def run_stream_to_batch(
     stream-stream join keeps four per partition), and per-store
     overhead dominates when partitions far exceed state volume —
     measured 2.7x on the outer-join drain at local scale.  Sequential
-    use only (the conf is session-scoped while the query starts)."""
-    import tempfile
-
+    use only (the confs are session-scoped while the query starts)."""
     from hadoop_3_3_6_spark.session import spark_local_dir
 
     spark = stream_df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
     name = "s" + uuid.uuid4().hex[:12]
     # the one-shot drain's checkpoint (offset log + state-store deltas,
     # a few KB per state partition per micro-batch) is ephemeral by
@@ -122,27 +146,37 @@ def run_stream_to_batch(
     # burst-throttled persistent disk.  A RESUMABLE deployment would
     # pass its own durable checkpointLocation; none of these one-shot
     # drains is resumed.
+    #
+    # It is written through the FileSystem-based checkpoint manager.
+    # Without the native Hadoop library the default FileContext manager
+    # on the local file system forks a readlink/chmod shell for the
+    # metadata of every checkpoint file: one warm stream-stream join
+    # drain at sf0.01 started ~790 processes with it, ~180 without
+    # (4 cores, Linux).  The FileSystem manager's weaker rename
+    # atomicity only matters to a checkpoint that is resumed, and this
+    # one is removed below.  The stream thread clones the session's
+    # confs after start() returns, so they stay set until the query
+    # has terminated.
+    confs = {"spark.sql.streaming.checkpointFileManagerClass": _FS_CKPT_MANAGER}
+    if state_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
     ckpt_base = spark_local_dir()
     os.makedirs(ckpt_base, exist_ok=True)
     ckpt = tempfile.mkdtemp(prefix="stream_ckpt_", dir=ckpt_base)
     try:
-        if state_partitions is not None:
-            spark.conf.set(key, str(state_partitions))
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with _scoped_confs(spark, confs):
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set(key, prev)
-        import shutil
-
         shutil.rmtree(ckpt, ignore_errors=True)
-    return stream_df.sparkSession.table(name)
+    return spark.table(name)
 
 
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -296,15 +330,8 @@ def streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFram
         def close(self) -> None:
             pass
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with _scoped_confs(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
         stream = _event_stream(spark, sf_dir).withColumn(
             "value_cents", F.round(F.col("value") * 100).cast("bigint")
         )
@@ -319,8 +346,6 @@ def streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFram
             output_mode="update",
             state_partitions=sized_state_partitions(sf_dir),
         )
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_provider)
     return out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"), F.max("total_cents").alias("total_cents")
     )

@@ -196,3 +196,135 @@ def test_state_sizing_skips_temporary_and_hidden_dirs(tmp_path):
         (ds / junk / "part-00001.parquet").write_bytes(b"x" * 50_000)
     # 1000 real bytes / 100-byte target = 10 partitions
     assert sized_state_partitions(str(tmp_path), target_bytes=100, floor=1) == 10
+
+
+_FC_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+)
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_drain_checkpoints_through_filesystem_manager(spark, tmp_path, monkeypatch):
+    """run_stream_to_batch starts its query with the FileSystem-based
+    checkpoint manager and the requested state partitions, and puts both
+    confs back afterwards (an unset manager key stays unset), also when
+    start() raises; its temp checkpoint dir is removed either way."""
+    import os
+    import tempfile
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from hadoop_3_3_6_spark.streaming import windows
+
+    mgr_key = "spark.sql.streaming.checkpointFileManagerClass"
+    part_key = "spark.sql.shuffle.partitions"
+    spark.conf.unset(mgr_key)
+    prev_parts = spark.conf.get(part_key)
+    state_parts = str(int(prev_parts) + 1)
+
+    seen = []
+    fail = False
+    real_start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        seen.append((self._spark.conf.get(mgr_key, None), self._spark.conf.get(part_key)))
+        if fail:
+            raise RuntimeError("start failed")
+        return real_start(self, *args, **kwargs)
+
+    ckpts = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        ckpts.append(real_mkdtemp(*args, **kwargs))
+        return ckpts[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+
+    src = tmp_path / "src"
+    spark.range(20).select((F.col("id") % 3).alias("k")).write.parquet(str(src))
+    stream = spark.readStream.schema("k long").parquet(str(src)).groupBy("k").count()
+
+    def assert_restored():
+        assert spark.conf.get(mgr_key, None) is None
+        assert spark.conf.get(part_key) == prev_parts
+        assert ckpts and not any(os.path.exists(c) for c in ckpts)
+
+    out = windows.run_stream_to_batch(stream, state_partitions=int(state_parts))
+    assert seen == [(_FS_MANAGER, state_parts)]
+    assert_restored()
+    assert sorted(tuple(r) for r in out.collect()) == [(0, 7), (1, 7), (2, 6)]
+
+    fail = True
+    with pytest.raises(RuntimeError, match="start failed"):
+        windows.run_stream_to_batch(stream, state_partitions=int(state_parts))
+    assert seen == [(_FS_MANAGER, state_parts)] * 2
+    assert len(ckpts) == 2
+    assert_restored()
+
+
+@pytest.mark.parametrize("manager", [_FC_MANAGER, _FS_MANAGER], ids=["filecontext", "filesystem"])
+def test_checkpoint_restart_matches_one_shot(spark, tmp_path, manager):
+    """A durable checkpoint resumes exactly under either checkpoint
+    manager: a watermarked tumbling count drained over two files, then
+    restarted from its checkpoint after a third file lands, ends equal
+    to one drain over all three files."""
+    import uuid
+
+    from hadoop_3_3_6_spark.streaming.windows import _scoped_confs, run_stream_to_batch
+
+    src = tmp_path / "src"
+    files = [
+        ["2024-01-01 10:05:00", "2024-01-01 10:40:00", "2024-01-01 11:10:00"],
+        ["2024-01-01 11:20:00", "2024-01-01 12:15:00"],
+        ["2024-01-01 12:45:00", "2024-01-01 13:05:00", "2024-01-01 13:30:00", "2024-01-01 13:50:00"],
+    ]
+
+    def add_file(stamps):
+        spark.createDataFrame([(s,) for s in stamps], "ts_s string").select(
+            F.to_timestamp("ts_s").alias("ts")
+        ).coalesce(1).write.mode("append").parquet(str(src))
+
+    def counts():
+        return (
+            spark.readStream.schema("ts timestamp")
+            .parquet(str(src))
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    def rows(df):
+        return sorted((r["w"]["start"], r["n"]) for r in df.collect())
+
+    name = "restart_" + uuid.uuid4().hex[:10]
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        q = (
+            counts()
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q
+
+    add_file(files[0])
+    add_file(files[1])
+    with _scoped_confs(spark, {"spark.sql.streaming.checkpointFileManagerClass": manager}):
+        first = drain()
+        add_file(files[2])
+        second = drain()
+    assert first.id == second.id  # the restart resumed the same query
+    assert sum(p["numInputRows"] for p in second.recentProgress) == len(files[2])
+    restarted = rows(spark.table(name))
+
+    assert restarted == rows(run_stream_to_batch(counts()))
+    assert sum(n for _, n in restarted) == sum(map(len, files))
