@@ -99,7 +99,43 @@ def _rendered_dir(prefix: str, sf_dir: str, render) -> str:
     return _once((prefix, sf_dir), build)
 
 
-def _register(name: str, oracle: str | None = None):
+# The driver's sf0.01 comparison tier: every replica oracle (a numpy or
+# pure-Python re-derivation of a trained or rendered result) is built
+# from this tier's fixture, whatever sf_dir the query itself runs on.
+_REPLICA_SF_DIR = "/root/testdata/sf0.01"
+
+
+def _replica_oracle(name: str, table: str, build: Callable[[str], str | None]) -> str | None:
+    """``build(path)`` over the replica tier's ``table`` parquet.  A
+    missing fixture or a build that raises registers no oracle (the
+    query is compared rows-only) and says so on stderr under ``name``;
+    a build that returns None declines the oracle silently."""
+    import os
+    import sys
+
+    path = os.path.join(_REPLICA_SF_DIR, f"{table}.parquet")
+    try:
+        if not os.path.exists(path):
+            raise FileNotFoundError(path)
+        return build(path)
+    except Exception as exc:
+        print(f"# WARNING: {name} oracle degraded to rows-only: {exc!r}", file=sys.stderr)
+        return None
+
+
+def _values_sql(rows, columns: str) -> str:
+    """``SELECT * FROM (VALUES …) AS t(columns)`` over ``rows``, each a
+    sequence of rendered SQL literals."""
+    values = ", ".join("(" + ", ".join(r) + ")" for r in rows)
+    return f"SELECT * FROM (VALUES {values}) AS t({columns})"
+
+
+def _register(name: str, oracle: str | None = None, replica: tuple | None = None):
+    """Register query ``name`` with its oracle SQL, or with the oracle a
+    replica builds: ``replica=(table, build)``, see _replica_oracle."""
+    if replica is not None:
+        oracle = _replica_oracle(name, *replica)
+
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:
@@ -2335,51 +2371,43 @@ def _phash_replica(path: str):
     return ids, uh
 
 
-def _phash_incremental_oracle() -> str | None:
+def _phash_bands(h: int) -> list[tuple[int, int]]:
+    """The 4 (band, 16-bit slice) keys of a replica hash."""
+    return [(k, (h >> (16 * k)) & 0xFFFF) for k in range(4)]
+
+
+def _phash_buckets(uh: dict, ids) -> dict:
+    """Band buckets of the replica hashes: band key -> the ids, in
+    ``ids`` order, that carry it."""
+    from collections import defaultdict
+
+    buckets = defaultdict(list)
+    for i in ids:
+        for band in _phash_bands(uh[i]):
+            buckets[band].append(i)
+    return buckets
+
+
+def _phash_incremental_oracle(path: str) -> str:
     """Exact oracle for INCREMENTAL phash dedup: the shared replica's
     hashes split into index (even ids) and batch (odd ids); each batch
     hash collects its banding candidates among the index side only and
     keeps popcount-verified pairs — the dedup_against_index contract
     replayed independently."""
-    import os
-
-    path = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(path):
-        return None
-    try:
-        ids, uh = _phash_replica(path)
-        from collections import defaultdict
-
-        buckets = defaultdict(set)
-        for i in ids:
-            if i % 2 == 0:
-                for k in range(4):
-                    buckets[(k, (uh[i] >> (16 * k)) & 0xFFFF)].add(i)
-        rows = []
-        for o in ids:
-            if o % 2 == 0:
-                continue
-            cands: set = set()
-            for k in range(4):
-                cands |= buckets[(k, (uh[o] >> (16 * k)) & 0xFFFF)]
-            for c in sorted(cands):
-                ham = bin(uh[o] ^ uh[c]).count("1")
-                if ham <= 4:
-                    rows.append((o, c, ham))
-        values = ", ".join(
-            f"({o}::BIGINT, {c}::BIGINT, {h}::INT)" for o, c, h in rows
-        )
-        return (
-            "SELECT * FROM (VALUES "
-            + values
-            + ") AS t(new_id, corpus_id, hamming)"
-        )
-    except Exception as exc:
-        print(
-            f"# WARNING: multimodal_phash_incremental oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+    ids, uh = _phash_replica(path)
+    index = _phash_buckets(uh, [i for i in ids if i % 2 == 0])
+    rows = []
+    for o in ids:
+        if o % 2 == 0:
+            continue
+        cands: set = set()
+        for band in _phash_bands(uh[o]):
+            cands.update(index.get(band, ()))
+        for c in sorted(cands):
+            ham = bin(uh[o] ^ uh[c]).count("1")
+            if ham <= 4:
+                rows.append((f"{o}::BIGINT", f"{c}::BIGINT", f"{ham}::INT"))
+    return _values_sql(rows, "new_id, corpus_id, hamming")
 
 
 def _phash_hashes(docs):
@@ -2424,7 +2452,7 @@ def _phash_hashes(docs):
     return docs.mapInPandas(render_hash, schema="doc_id bigint, dhash bigint")
 
 
-def _phash_oracle() -> str | None:
+def _phash_oracle(path: str) -> str:
     """Exact oracle for perceptual-hash image dedup: an INDEPENDENT
     python replica of the whole pipeline — the deterministic fixture
     render, the 9×8 nearest resample (the resize_nearest formula
@@ -2434,56 +2462,31 @@ def _phash_oracle() -> str | None:
     ids and pins them as a VALUES literal.  A green hash certifies the
     codec roundtrip (PPM/PNG encode → decode), the Arrow-batched hash
     stage and the banded Hamming join end-to-end."""
-    import os
+    ids, uh = _phash_replica(path)
+    cand = set()
+    for mem in _phash_buckets(uh, ids).values():
+        for ai in range(len(mem)):
+            for bi in range(ai + 1, len(mem)):
+                cand.add((mem[ai], mem[bi]))
+    dup_with: dict = {}
+    for p, q in cand:
+        if bin(uh[p] ^ uh[q]).count("1") <= 4:
+            dup_with[q] = min(dup_with.get(q, p), p)
 
-    path = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(path):
-        return None
-    try:
-        ids, uh = _phash_replica(path)
-        from collections import defaultdict
+    def signed(h):
+        return h - (1 << 64) if h >= (1 << 63) else h
 
-        buckets = defaultdict(list)
-        for i in ids:
-            for k in range(4):
-                buckets[(k, (uh[i] >> (16 * k)) & 0xFFFF)].append(i)
-        cand = set()
-        for mem in buckets.values():
-            for ai in range(len(mem)):
-                for bi in range(ai + 1, len(mem)):
-                    cand.add((mem[ai], mem[bi]))
-        dup_with: dict = {}
-        for p, q in cand:
-            if bin(uh[p] ^ uh[q]).count("1") <= 4:
-                dup_with[q] = min(dup_with.get(q, p), p)
-
-        def signed(h):
-            return h - (1 << 64) if h >= (1 << 63) else h
-
-        values = ", ".join(
-            f"({i}::BIGINT, {signed(uh[i])}::BIGINT, "
-            + (
-                f"{dup_with[i]}::BIGINT, false"
-                if i in dup_with
-                else "NULL::BIGINT, true"
-            )
-            + ")"
+    return _values_sql(
+        (
+            (f"{i}::BIGINT", f"{signed(uh[i])}::BIGINT")
+            + ((f"{dup_with[i]}::BIGINT", "false") if i in dup_with else ("NULL::BIGINT", "true"))
             for i in ids
-        )
-        return (
-            "SELECT * FROM (VALUES "
-            + values
-            + ") AS t(doc_id, dhash, dup_with, keep)"
-        )
-    except Exception as exc:
-        print(
-            f"# WARNING: multimodal_phash_dedup oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+        ),
+        "doc_id, dhash, dup_with, keep",
+    )
 
 
-@_register("multimodal_phash_dedup", _phash_oracle())
+@_register("multimodal_phash_dedup", replica=("documents", _phash_oracle))
 def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image near-dedup — the multimodal member of the
     dedup tier: deterministic 16×16 fixtures (PPM even / PNG odd, real
@@ -2504,7 +2507,7 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phash_near_duplicates(hashes, "doc_id", "dhash", max_hamming=4, bands=4)
 
 
-@_register("multimodal_phash_incremental", _phash_incremental_oracle())
+@_register("multimodal_phash_incremental", replica=("documents", _phash_incremental_oracle))
 def q_multimodal_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL image near-dedup — batch-vs-history parity with the
     text tier's dedup_incremental: the corpus side (even doc_ids) is
@@ -2536,7 +2539,60 @@ def q_multimodal_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def _ivf_trained_oracle() -> str | None:
+def _load_embeddings_np(path: str):
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=["vec_id", "embedding"])
+    ids = t.column("vec_id").to_numpy()
+    vecs = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
+    return ids, vecs
+
+
+def _pq_train_encode_np(ids, vecs, m: int, codes: int, iters: int, q: int):
+    """Parameterized numpy replica of train_pq_codebooks + pq_encode —
+    the shared core of the PQ, IVF-PQ and OPQ oracles.  Returns
+    (books, barr, enc)."""
+    import hashlib
+
+    import numpy as np
+
+    n, dim = vecs.shape
+    sub = dim // m
+    ranks = [
+        int(hashlib.md5(f"kmseed:{int(i)}".encode()).hexdigest()[:15], 16)
+        for i in ids
+    ]
+    order = sorted(range(n), key=lambda j: (ranks[j], ids[j]))[:codes]
+    books = [
+        [list(vecs[o][j * sub : (j + 1) * sub]) for o in order] for j in range(m)
+    ]
+    for _ in range(iters):
+        nb = []
+        for j in range(m):
+            sv = vecs[:, j * sub : (j + 1) * sub]
+            cents = np.array(books[j])
+            diffs = sv[:, None, :] - cents[None, :, :]
+            # cumsum = Spark's sequential aggregate() left fold
+            d = np.cumsum(diffs * diffs, axis=2)[:, :, -1]
+            assign = np.argmin(d, axis=1)  # first min = lowest code_id
+            newj = []
+            for c in range(codes):
+                mem = sv[assign == c]
+                mu = mem.sum(axis=0) / len(mem) if len(mem) else np.array(books[j][c])
+                newj.append([round(float(x), q) for x in mu])
+            nb.append(newj)
+        books = nb
+    barr = [np.array(books[j]) for j in range(m)]
+    enc = np.zeros((n, m), dtype=int)
+    for j in range(m):
+        sv = vecs[:, j * sub : (j + 1) * sub]
+        diffs = sv[:, None, :] - barr[j][None, :, :]
+        enc[:, j] = np.argmin(np.cumsum(diffs * diffs, axis=2)[:, :, -1], axis=1)
+    return books, barr, enc
+
+
+def _ivf_trained_oracle(path: str) -> str:
     """Exact oracle for trained IVF (the BPE-apply pattern, VERDICT r5
     task 7): an INDEPENDENT pure-numpy replica of the distributed
     k-means loop (same md5 seed ranking, same sequential-fold distance
@@ -2553,49 +2609,12 @@ def _ivf_trained_oracle() -> str | None:
     would surface as a red driver row, never a false green).  Pinned
     to the driver's sf0.01 comparison tier — the Spark query trains on
     its own sf_dir, so both sides see the same corpus wherever the
-    driver compares them.  Degrades to rows-only (None) if the fixture
-    or replica is unavailable."""
-    import os
-
-    path = "/root/testdata/sf0.01/embeddings.parquet"
-    if not os.path.exists(path):
-        return None
-    try:
-        import hashlib
-
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(path, columns=["vec_id", "embedding"])
-        ids = t.column("vec_id").to_numpy()
-        vecs = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-        n = len(ids)
-        k, iters, q = 16, 3, 3
-        ranks = [
-            int(hashlib.md5(f"kmseed:{int(i)}".encode()).hexdigest()[:15], 16) for i in ids
-        ]
-        order = sorted(range(n), key=lambda j: (ranks[j], ids[j]))[:k]
-        cents = vecs[order].copy()
-        for _ in range(iters):
-            diffs = vecs[:, None, :] - cents[None, :, :]
-            # cumsum = the sequential left fold Spark's aggregate() does
-            d = np.cumsum(diffs * diffs, axis=2)[:, :, -1]
-            assign = np.argmin(d, axis=1)  # first occurrence = lowest cent_id
-            new = []
-            for c in range(k):
-                members = vecs[assign == c]
-                m = members.sum(axis=0) / len(members) if len(members) else cents[c]
-                new.append([round(float(x), q) for x in m])
-            cents = np.array(new, dtype=np.float64)
-    except Exception as exc:
-        # A transient failure here silently downgrades a newly-exact
-        # oracle to rows-only — make the degradation visible in driver
-        # and test logs (round-6 ADVICE item).
-        print(
-            f"# WARNING: similarity_ivf_trained oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+    driver compares them.  The replica is the shared one-subspace
+    (m=1) _pq_train_encode_np."""
+    ids, vecs = _load_embeddings_np(path)
+    k = 16
+    books, _barr, _enc = _pq_train_encode_np(ids, vecs, 1, k, 3, 3)
+    cents = books[0]
     values = ", ".join(
         f"({c}, [{', '.join(repr(float(x)) for x in cents[c])}]::DOUBLE[])" for c in range(k)
     )
@@ -2629,7 +2648,7 @@ def _ivf_trained_oracle() -> str | None:
     """
 
 
-@_register("similarity_ivf_trained", _ivf_trained_oracle())
+@_register("similarity_ivf_trained", replica=("embeddings", _ivf_trained_oracle))
 def q_similarity_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over Lloyd-trained centroids: distributed k-means
     (functions/similarity.train_kmeans_centroids — deterministic
@@ -2701,59 +2720,6 @@ def _pq_replica(path: str):
     return ids, vecs, barr, enc
 
 
-def _load_embeddings_np(path: str):
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    ids = t.column("vec_id").to_numpy()
-    vecs = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-    return ids, vecs
-
-
-def _pq_train_encode_np(ids, vecs, m: int, codes: int, iters: int, q: int):
-    """Parameterized numpy replica of train_pq_codebooks + pq_encode —
-    the shared core of the PQ, IVF-PQ and OPQ oracles.  Returns
-    (books, barr, enc)."""
-    import hashlib
-
-    import numpy as np
-
-    n, dim = vecs.shape
-    sub = dim // m
-    ranks = [
-        int(hashlib.md5(f"kmseed:{int(i)}".encode()).hexdigest()[:15], 16)
-        for i in ids
-    ]
-    order = sorted(range(n), key=lambda j: (ranks[j], ids[j]))[:codes]
-    books = [
-        [list(vecs[o][j * sub : (j + 1) * sub]) for o in order] for j in range(m)
-    ]
-    for _ in range(iters):
-        nb = []
-        for j in range(m):
-            sv = vecs[:, j * sub : (j + 1) * sub]
-            cents = np.array(books[j])
-            diffs = sv[:, None, :] - cents[None, :, :]
-            # cumsum = Spark's sequential aggregate() left fold
-            d = np.cumsum(diffs * diffs, axis=2)[:, :, -1]
-            assign = np.argmin(d, axis=1)  # first min = lowest code_id
-            newj = []
-            for c in range(codes):
-                mem = sv[assign == c]
-                mu = mem.sum(axis=0) / len(mem) if len(mem) else np.array(books[j][c])
-                newj.append([round(float(x), q) for x in mu])
-            nb.append(newj)
-        books = nb
-    barr = [np.array(books[j]) for j in range(m)]
-    enc = np.zeros((n, m), dtype=int)
-    for j in range(m):
-        sv = vecs[:, j * sub : (j + 1) * sub]
-        diffs = sv[:, None, :] - barr[j][None, :, :]
-        enc[:, j] = np.argmin(np.cumsum(diffs * diffs, axis=2)[:, :, -1], axis=1)
-    return books, barr, enc
-
-
 def _adc_replica_rows(path: str, probe_max: int, allowed_cells=None, k: int | None = None):
     """ADC top-k rows from the shared replica (see
     _adc_rows_from_arrays for the core)."""
@@ -2768,10 +2734,9 @@ def _adc_rows_from_arrays(
     L2 tables (cumsum folds), candidate distance = fixed-order sum of
     m lookups, HALF_UP 1e-6 rounding, (dist, neighbor_id) sort.
     ``vecs`` are the vectors the probe tables are built from (the
-    ROTATED vectors for OPQ).  ``allowed_cells`` (probe_id -> set of
-    cell ids, plus the shared vector->cell assignment in position
-    'assign') restricts candidates to the probe's inverted lists —
-    the IVF-PQ pruning."""
+    ROTATED vectors for OPQ).  ``allowed_cells`` (_ivf_probe_cells)
+    restricts candidates to the probe's inverted lists — the IVF-PQ
+    pruning."""
     import numpy as np
 
     m = len(barr)
@@ -2804,17 +2769,13 @@ def _adc_rows_from_arrays(
 
 
 def _adc_values_sql(rows, dist_col: str = "adc_dist") -> str:
-    values = ", ".join(
-        f"({p}::BIGINT, {i}::BIGINT, {d!r}::DOUBLE, {r}::INT)" for p, i, d, r in rows
-    )
-    return (
-        "SELECT * FROM (VALUES "
-        + values
-        + f") AS t(probe_id, neighbor_id, {dist_col}, rank)"
+    return _values_sql(
+        ((f"{p}::BIGINT", f"{i}::BIGINT", f"{d!r}::DOUBLE", f"{r}::INT") for p, i, d, r in rows),
+        f"probe_id, neighbor_id, {dist_col}, rank",
     )
 
 
-def _pq_oracle() -> str | None:
+def _pq_oracle(path: str) -> str:
     """Exact oracle for PQ/ADC top-k (the similarity_ivf_trained
     pattern, one step further): an INDEPENDENT pure-numpy replica of
     the whole pipeline — training, encoding, and the full-scan ADC
@@ -2822,23 +2783,8 @@ def _pq_oracle() -> str | None:
     result rows from the sf0.01 parquet directly and pins them as a
     VALUES literal.  A green hash therefore certifies codebook
     training, encoding AND the ADC query end-to-end.  Pinned to the
-    driver's sf0.01 tier (the Spark query trains on its own sf_dir).
-    Degrades to rows-only (None), loudly, if the fixture or replica is
-    unavailable."""
-    import os
-
-    path = "/root/testdata/sf0.01/embeddings.parquet"
-    if not os.path.exists(path):
-        return None
-    try:
-        rows = _adc_replica_rows(path, _PQ_PROBE_MAX)
-    except Exception as exc:
-        print(
-            f"# WARNING: similarity_pq_topk oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
-    return _adc_values_sql(rows)
+    driver's sf0.01 tier (the Spark query trains on its own sf_dir)."""
+    return _adc_values_sql(_adc_replica_rows(path, _PQ_PROBE_MAX))
 
 
 @functools.cache
@@ -2868,7 +2814,24 @@ def _coarse_replica(path: str):
     return ids, vecs, cent_rows, id_to_idx, cs
 
 
-def _ivf_pq_oracle() -> str | None:
+@functools.cache
+def _ivf_probe_cells(path: str) -> dict:
+    """The IVF list rule over the coarse replica, in cell-index space:
+    'assign' -> every vector's argmax cell (first occurrence = lower
+    cent_id on ties), and probe id -> its _IVFPQ_NPROBE best cells in
+    (score desc, cent_id) order, for each probe id < _IVFPQ_PROBE_MAX."""
+    import numpy as np
+
+    ids, _vecs, cent_rows, id_to_idx, cs = _coarse_replica(path)
+    cells = {"assign": np.argmax(cs, axis=1)}
+    for p in (int(i) for i in ids if i < _IVFPQ_PROBE_MAX):
+        row = cs[id_to_idx[p]]
+        order = sorted(range(len(cent_rows)), key=lambda j: (-row[j], cent_rows[j]))
+        cells[p] = tuple(order[:_IVFPQ_NPROBE])
+    return cells
+
+
+def _ivf_pq_oracle(path: str) -> str:
     """Exact oracle for the COMPOSED IVF-PQ query: the shared PQ
     replica plus a numpy replica of the coarse stage — cosine scores
     against the id < _IVFPQ_CELLS seed centroids with sequential-fold
@@ -2878,34 +2841,12 @@ def _ivf_pq_oracle() -> str | None:
     ADC top-k restricted to each probe's inverted lists.  A green hash
     certifies coarse assignment, codebook training, encoding and the
     list-pruned ADC query end-to-end."""
-    import os
-
-    path = "/root/testdata/sf0.01/embeddings.parquet"
-    if not os.path.exists(path):
-        return None
-    try:
-        import numpy as np
-
-        _ids0, _vecs0, _barr, _enc = _pq_replica(path)
-        ids, vecs, cent_rows, id_to_idx, cs = _coarse_replica(path)
-        # corpus: argmax = first occurrence = lowest cent_id on ties
-        assign = np.array([cent_rows[j] for j in np.argmax(cs, axis=1)])
-        allowed = {"assign": assign}
-        for p in (int(i) for i in ids if i < _IVFPQ_PROBE_MAX):
-            row = cs[id_to_idx[p]]
-            order = sorted(range(len(cent_rows)), key=lambda j: (-row[j], cent_rows[j]))
-            allowed[p] = {cent_rows[j] for j in order[: _IVFPQ_NPROBE]}
-        rows = _adc_replica_rows(path, _IVFPQ_PROBE_MAX, allowed_cells=allowed)
-    except Exception as exc:
-        print(
-            f"# WARNING: similarity_ivf_pq_topk oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
-    return _adc_values_sql(rows)
+    return _adc_values_sql(
+        _adc_replica_rows(path, _IVFPQ_PROBE_MAX, allowed_cells=_ivf_probe_cells(path))
+    )
 
 
-def _ivf_pq_residual_oracle() -> str | None:
+def _ivf_pq_residual_oracle(path: str) -> str:
     """Exact oracle for RESIDUAL IVF-PQ (FAISS by_residual): the
     shared coarse replica assigns every vector its cell, codebooks are
     trained by the shared PQ replica on the EXACT residuals
@@ -2914,58 +2855,45 @@ def _ivf_pq_residual_oracle() -> str | None:
     cell from the probe's residual to THAT centroid.  A green hash
     certifies coarse assignment, residualization, residual training,
     encoding and the per-cell ADC query end-to-end."""
-    import os
+    import numpy as np
 
-    path = "/root/testdata/sf0.01/embeddings.parquet"
-    if not os.path.exists(path):
-        return None
-    try:
-        import numpy as np
-
-        ids, vecs, cent_rows, id_to_idx, cs = _coarse_replica(path)
-        cents = np.array([vecs[id_to_idx[c]] for c in cent_rows])
-        assign_ix = np.argmax(cs, axis=1)  # first occurrence = lower cent_id
-        resid = vecs - cents[assign_ix]
-        _books, barr, enc = _pq_train_encode_np(
-            ids, resid, _PQ_M, _PQ_CODES, _PQ_ITERS, _PQ_Q
-        )
-        sub = vecs.shape[1] // _PQ_M
-        rows = []
-        for p in sorted(int(i) for i in ids if i < _IVFPQ_PROBE_MAX):
-            pi = id_to_idx[p]
-            prow = cs[pi]
-            order = sorted(range(len(cent_rows)), key=lambda j: (-prow[j], cent_rows[j]))
-            scored = []
-            for j in order[: _IVFPQ_NPROBE]:
-                rq = vecs[pi] - cents[j]
-                tabs = []
-                for jj in range(_PQ_M):
-                    pv = rq[jj * sub : (jj + 1) * sub]
-                    diffs = pv[None, :] - barr[jj]
-                    tabs.append(np.cumsum(diffs * diffs, axis=1)[:, -1])
-                for ix, i in enumerate(ids):
-                    if int(i) == p or int(assign_ix[ix]) != j:
-                        continue
-                    acc = 0.0
-                    for jj in range(_PQ_M):  # fixed-order fold, as in the plan
-                        acc = acc + float(tabs[jj][enc[ix, jj]])
-                    scored.append((_spark_round(acc), int(i)))
-            scored.sort()
-            for r, (dd, i) in enumerate(scored[: _PQ_K], 1):
-                rows.append((p, i, dd, r))
-    except Exception as exc:
-        print(
-            f"# WARNING: similarity_ivf_pq_residual_topk oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+    ids, vecs, cent_rows, id_to_idx, _cs = _coarse_replica(path)
+    cells = _ivf_probe_cells(path)
+    cents = np.array([vecs[id_to_idx[c]] for c in cent_rows])
+    assign_ix = cells["assign"]
+    resid = vecs - cents[assign_ix]
+    _books, barr, enc = _pq_train_encode_np(
+        ids, resid, _PQ_M, _PQ_CODES, _PQ_ITERS, _PQ_Q
+    )
+    sub = vecs.shape[1] // _PQ_M
+    rows = []
+    for p in sorted(int(i) for i in ids if i < _IVFPQ_PROBE_MAX):
+        pi = id_to_idx[p]
+        scored = []
+        for j in cells[p]:
+            rq = vecs[pi] - cents[j]
+            tabs = []
+            for jj in range(_PQ_M):
+                pv = rq[jj * sub : (jj + 1) * sub]
+                diffs = pv[None, :] - barr[jj]
+                tabs.append(np.cumsum(diffs * diffs, axis=1)[:, -1])
+            for ix, i in enumerate(ids):
+                if int(i) == p or int(assign_ix[ix]) != j:
+                    continue
+                acc = 0.0
+                for jj in range(_PQ_M):  # fixed-order fold, as in the plan
+                    acc = acc + float(tabs[jj][enc[ix, jj]])
+                scored.append((_spark_round(acc), int(i)))
+        scored.sort()
+        for r, (dd, i) in enumerate(scored[: _PQ_K], 1):
+            rows.append((p, i, dd, r))
     return _adc_values_sql(rows)
 
 
 _REFINE_SHORTLIST = 20  # similarity_ivf_pq_refined_topk: 4·k deep
 
 
-def _ivf_pq_refined_oracle() -> str | None:
+def _ivf_pq_refined_oracle(path: str) -> str:
     """Exact oracle for the refined two-stage query: the IVF-PQ
     replica produces the _REFINE_SHORTLIST-deep ADC shortlist per
     probe (same coarse assignment + codebooks + list pruning as
@@ -2974,44 +2902,26 @@ def _ivf_pq_refined_oracle() -> str | None:
     neighbor-id tiebreak) and keeps the top _PQ_K.  A green hash
     certifies the compressed stage, the shortlist boundary AND the
     refine join end-to-end."""
-    import os
+    import numpy as np
 
-    path = "/root/testdata/sf0.01/embeddings.parquet"
-    if not os.path.exists(path):
-        return None
-    try:
-        import numpy as np
-
-        ids, vecs, cent_rows, id_to_idx, cs = _coarse_replica(path)
-        assign = np.array([cent_rows[j] for j in np.argmax(cs, axis=1)])
-        allowed = {"assign": assign}
-        for p in (int(i) for i in ids if i < _IVFPQ_PROBE_MAX):
-            row = cs[id_to_idx[p]]
-            order = sorted(range(len(cent_rows)), key=lambda j: (-row[j], cent_rows[j]))
-            allowed[p] = {cent_rows[j] for j in order[: _IVFPQ_NPROBE]}
-        short = _adc_replica_rows(
-            path, _IVFPQ_PROBE_MAX, allowed_cells=allowed, k=_REFINE_SHORTLIST
-        )
-        by_probe: dict = {}
-        for p, i, _d, _r in short:
-            by_probe.setdefault(p, []).append(i)
-        rows = []
-        for p in sorted(by_probe):
-            pv = vecs[id_to_idx[p]]
-            scored = []
-            for i in by_probe[p]:
-                diff = pv - vecs[id_to_idx[i]]
-                d = float(np.cumsum(diff * diff)[-1])
-                scored.append((_spark_round(d), int(i)))
-            scored.sort()
-            for r, (dd, i) in enumerate(scored[: _PQ_K], 1):
-                rows.append((p, i, dd, r))
-    except Exception as exc:
-        print(
-            f"# WARNING: similarity_ivf_pq_refined_topk oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+    ids, vecs, _cent_rows, id_to_idx, _cs = _coarse_replica(path)
+    short = _adc_replica_rows(
+        path, _IVFPQ_PROBE_MAX, allowed_cells=_ivf_probe_cells(path), k=_REFINE_SHORTLIST
+    )
+    by_probe: dict = {}
+    for p, i, _d, _r in short:
+        by_probe.setdefault(p, []).append(i)
+    rows = []
+    for p in sorted(by_probe):
+        pv = vecs[id_to_idx[p]]
+        scored = []
+        for i in by_probe[p]:
+            diff = pv - vecs[id_to_idx[i]]
+            d = float(np.cumsum(diff * diff)[-1])
+            scored.append((_spark_round(d), int(i)))
+        scored.sort()
+        for r, (dd, i) in enumerate(scored[: _PQ_K], 1):
+            rows.append((p, i, dd, r))
     return _adc_values_sql(rows, dist_col="l2_dist")
 
 
@@ -3058,7 +2968,7 @@ def _opq_rotate_np(vecs, R):
     return np.cumsum(vecs[:, None, :] * R[None, :, :], axis=2)[:, :, -1]
 
 
-def _opq_oracle() -> str | None:
+def _opq_oracle(path: str) -> str:
     """Exact oracle for OPQ top-k: a numpy replica of the FULL
     alternating loop — identity-init rotation, per-sweep PQ training on
     the rotated corpus (shared _pq_train_encode_np), the integer
@@ -3070,44 +2980,31 @@ def _opq_oracle() -> str | None:
     matrix, the md5-seeding precedent), a final training sweep, and
     the rotated-space ADC top-k.  A green hash certifies rotation
     training, codebooks, encoding and the query end-to-end."""
-    import os
+    import numpy as np
 
-    path = "/root/testdata/sf0.01/embeddings.parquet"
-    if not os.path.exists(path):
-        return None
-    try:
-        import numpy as np
-
-        ids, vecs = _load_embeddings_np(path)
-        dim = vecs.shape[1]
-        m = _PQ_M
-        R = np.eye(dim)
-        for _ in range(_OPQ_ITERS):
-            rv = _opq_rotate_np(vecs, R)
-            _books, barr, enc = _pq_train_encode_np(
-                ids, rv, m, _PQ_CODES, _OPQ_PQ_ITERS, _PQ_Q
-            )
-            C = np.concatenate([barr[j][enc[:, j]] for j in range(m)], axis=1)
-            prod = C[:, :, None] * vecs[:, None, :]
-            a_int = np.round(prod * 1e6).astype(np.int64).sum(axis=0)
-            A = a_int.astype(np.float64) / 1e6
-            U, _s, Vt = np.linalg.svd(A)
-            R = U @ Vt
+    ids, vecs = _load_embeddings_np(path)
+    dim = vecs.shape[1]
+    m = _PQ_M
+    R = np.eye(dim)
+    for _ in range(_OPQ_ITERS):
         rv = _opq_rotate_np(vecs, R)
         _books, barr, enc = _pq_train_encode_np(
             ids, rv, m, _PQ_CODES, _OPQ_PQ_ITERS, _PQ_Q
         )
-        rows = _adc_rows_from_arrays(ids, rv, barr, enc, _PQ_PROBE_MAX)
-    except Exception as exc:
-        print(
-            f"# WARNING: similarity_opq_topk oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
-    return _adc_values_sql(rows)
+        C = np.concatenate([barr[j][enc[:, j]] for j in range(m)], axis=1)
+        prod = C[:, :, None] * vecs[:, None, :]
+        a_int = np.round(prod * 1e6).astype(np.int64).sum(axis=0)
+        A = a_int.astype(np.float64) / 1e6
+        U, _s, Vt = np.linalg.svd(A)
+        R = U @ Vt
+    rv = _opq_rotate_np(vecs, R)
+    _books, barr, enc = _pq_train_encode_np(
+        ids, rv, m, _PQ_CODES, _OPQ_PQ_ITERS, _PQ_Q
+    )
+    return _adc_values_sql(_adc_rows_from_arrays(ids, rv, barr, enc, _PQ_PROBE_MAX))
 
 
-@_register("similarity_pq_topk", _pq_oracle())
+@_register("similarity_pq_topk", replica=("embeddings", _pq_oracle))
 def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al. TPAMI 2011 — the FAISS
     IVF-PQ architecture): per-subspace codebooks trained by the
@@ -3133,7 +3030,7 @@ def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(emb, books, "vec_id", "embedding", k=_PQ_K, probes=probes)
 
 
-@_register("similarity_ivf_pq_topk", _ivf_pq_oracle())
+@_register("similarity_ivf_pq_topk", replica=("embeddings", _ivf_pq_oracle))
 def q_similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPOSED IVF-PQ — the architecture FAISS ships as IndexIVFPQ
     (Jégou et al. TPAMI 2011 §IV) and the structural fix for the full
@@ -3163,7 +3060,7 @@ def q_similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("similarity_ivf_pq_refined_topk", _ivf_pq_refined_oracle())
+@_register("similarity_ivf_pq_refined_topk", replica=("embeddings", _ivf_pq_refined_oracle))
 def q_similarity_ivf_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage refined ANN — FAISS's IndexRefineFlat deployment
     pattern and the capstone of the compressed ladder: the list-pruned
@@ -3191,7 +3088,7 @@ def q_similarity_ivf_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@_register("similarity_ivf_pq_residual_topk", _ivf_pq_residual_oracle())
+@_register("similarity_ivf_pq_residual_topk", replica=("embeddings", _ivf_pq_residual_oracle))
 def q_similarity_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESIDUAL IVF-PQ — FAISS IndexIVFPQ's shipping default
     (by_residual=true; Jégou et al. TPAMI 2011 §IV-A eq.(26)): the PQ
@@ -3223,7 +3120,7 @@ def q_similarity_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-@_register("similarity_opq_topk", _opq_oracle())
+@_register("similarity_opq_topk", replica=("embeddings", _opq_oracle))
 def q_similarity_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ ANN (Ge et al. CVPR 2013 — FAISS's OPQMatrix + PQ tier):
     an orthogonal rotation trained to minimize PQ reconstruction error
@@ -4361,26 +4258,12 @@ def q_warc_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text").filter(F.col("doc_id") % 10 == 1)
 
     def render(out: str) -> None:
-        def write_part(rows):
-            from pyspark import TaskContext
-
-            from hadoop_3_3_6_spark.sources.warc import encode_warc
-
-            recs = [
-                {
-                    "warc_type": "response",
-                    "target_uri": f"http://example.com/doc/{int(r.doc_id)}",
-                    "content_type": "text/plain",
-                    "payload": r.text,
-                }
-                for r in rows
-            ]
-            if recs:
-                pid = TaskContext.get().partitionId()
-                with open(f"{out}/seg{pid:05d}.warc.gz", "wb") as f:
-                    f.write(encode_warc(recs, compress=True))
-
-        docs.foreachPartition(write_part)
+        docs.select(
+            F.lit("response").alias("warc_type"),
+            F.concat(F.lit("http://example.com/doc/"), F.col("doc_id").cast("string")).alias("target_uri"),
+            F.lit("text/plain").alias("content_type"),
+            F.encode("text", "UTF-8").alias("payload"),
+        ).write.format("warc").mode("overwrite").save(out)
 
     out = _rendered_dir("warcsrc_", sf_dir, render)
     src = spark.read.format("warc").option("record_types", "response").option("metadata_only", "true").load(out)
@@ -4500,26 +4383,12 @@ def q_pipeline_web_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def render(out: str) -> None:
-        def write_part(rows):
-            from pyspark import TaskContext
-
-            from hadoop_3_3_6_spark.sources.warc import encode_warc
-
-            recs = [
-                {
-                    "warc_type": "response",
-                    "target_uri": f"http://example.org/page/{int(r.doc_id)}",
-                    "content_type": "text/html",
-                    "payload": r.html,
-                }
-                for r in rows
-            ]
-            if recs:
-                pid = TaskContext.get().partitionId()
-                with open(f"{out}/seg{pid:05d}.warc.gz", "wb") as f:
-                    f.write(encode_warc(recs, compress=True))
-
-        docs.foreachPartition(write_part)
+        docs.select(
+            F.lit("response").alias("warc_type"),
+            F.concat(F.lit("http://example.org/page/"), F.col("doc_id").cast("string")).alias("target_uri"),
+            F.lit("text/html").alias("content_type"),
+            F.encode("html", "UTF-8").alias("payload"),
+        ).write.format("warc").mode("overwrite").save(out)
 
     out = _rendered_dir("warchtml_", sf_dir, render)
     pages = (
@@ -4556,23 +4425,27 @@ _QC_GOLD = ("src0", "src1", "src2", "src3")
 _QC_GOLD_MARK, _QC_CRAWL_MARK = " hqmarker hqa hqb", " hqb hqa"
 
 
+def _qc_sig_idx(dot: int) -> int:
+    """The replica's sigmoid-table index of an integer micro-unit dot
+    (512 bins over [-8, 8]).  Spark's `div` truncates toward zero;
+    python's // floors, so the quotient is taken on magnitudes."""
+    a, b = (dot + 8_000_000) * 512, 16_000_000
+    q = abs(a) // b
+    return min(max(-q if a < 0 else q, 0), 511)
+
+
 @functools.cache
-def _qc_replica_state(train_even_only: bool):
+def _qc_replica_state(path: str, train_even_only: bool):
     """Shared replica core for the classifier oracles: an INDEPENDENT
     python re-derivation of the whole loop — md5-ring feature hashing
     (unigrams + word bigrams, fastText wordNgrams=2), the integer
     sigmoid table recomputed from its published formula, per-doc
     integer dots over distinct buckets, integer residuals, gradient
     sums and the same driver update.  Spark's `div` truncates toward
-    zero; the replica's tdiv mirrors that (python // floors).
+    zero; _qc_sig_idx mirrors that (python // floors).
     Returns (weights, feats, labels, table) — memoized, because the
     full-train weights are shared by the classifier oracle AND the
     capstone pretraining oracle's in-SQL scoring stage."""
-    import os
-
-    path = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(path):
-        return None
     import hashlib
     import math
 
@@ -4605,13 +4478,6 @@ def _qc_replica_state(train_even_only: bool):
             int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % B for g in gs
         }
 
-    def tdiv(a: int, b: int) -> int:
-        q = abs(a) // abs(b)
-        return -q if (a < 0) != (b < 0) else q
-
-    def sig_idx(dot: int) -> int:
-        return min(max(tdiv((dot + 8_000_000) * BINS, 16_000_000), 0), BINS - 1)
-
     feats, labels = {}, {}
     for i, tx, src in docs:
         y = 1 if src in _QC_GOLD else 0
@@ -4625,7 +4491,7 @@ def _qc_replica_state(train_even_only: bool):
         grad = [0] * (B + 1)
         for i in train_ids:
             dot = sum(w[b] for b in feats[i]) + w[B]
-            r = table[sig_idx(dot)] - labels[i] * 1_000_000
+            r = table[_qc_sig_idx(dot)] - labels[i] * 1_000_000
             for b in feats[i]:
                 grad[b] += r
             grad[B] += r
@@ -4633,26 +4499,15 @@ def _qc_replica_state(train_even_only: bool):
     return w, feats, labels, table
 
 
-def _qc_replica_rows(train_even_only: bool) -> list[tuple[int, int, int, bool]] | None:
+def _qc_replica_rows(path: str, train_even_only: bool) -> list[tuple[int, int, int, bool]]:
     """All docs as (id, label, score_micro, predicted) under the
     replica-trained weights (full corpus or even-id half)."""
-    state = _qc_replica_state(train_even_only)
-    if state is None:
-        return None
-    w, feats, labels, table = state
+    w, feats, labels, table = _qc_replica_state(path, train_even_only)
     B = _QC_BUCKETS
-
-    def tdiv(a: int, b: int) -> int:
-        q = abs(a) // abs(b)
-        return -q if (a < 0) != (b < 0) else q
-
-    def sig_idx(dot: int) -> int:
-        return min(max(tdiv((dot + 8_000_000) * 512, 16_000_000), 0), 511)
-
     rows = []
     for i in sorted(feats):
         dot = sum(w[b] for b in feats[i]) + w[B]
-        s = table[sig_idx(dot)]
+        s = table[_qc_sig_idx(dot)]
         rows.append((i, labels[i], s, s >= 500_000))
     return rows
 
@@ -4684,7 +4539,7 @@ assert "BETWEEN 30 AND 100000" in _PRETRAIN_GOPHER_SQL
 assert "stopword_hits >= 1)" in _PRETRAIN_GOPHER_SQL
 
 
-def _pretraining_full_oracle() -> str | None:
+def _pretraining_full_oracle(path: str) -> str:
     """Closed-form relational replay of the capstone chain INCLUDING
     the classifier + score-conditioned sampling stages (the published
     CCNet/LLaMA order: rules → classifier → sampling → tokenize).
@@ -4704,10 +4559,7 @@ def _pretraining_full_oracle() -> str | None:
     `pages` CTE therefore stays originals + mirrors only: had the
     stage NOT dropped the refetches (same URL, CHANGED body — invisible
     to exact dedup), their extra bodies would shift every later row."""
-    state = _qc_replica_state(False)
-    if state is None:
-        return None
-    w, _feats, _labels, table = state
+    w, _feats, _labels, table = _qc_replica_state(path, False)
     B = _QC_BUCKETS
     w_arr = "[" + ",".join(str(x) for x in w) + "]::BIGINT[]"
     t_arr = "[" + ",".join(str(v) for v in table) + "]::BIGINT[]"
@@ -4826,7 +4678,7 @@ def _pretraining_full_oracle() -> str | None:
     """
 
 
-@_register("pipeline_pretraining_full", _pretraining_full_oracle())
+@_register("pipeline_pretraining_full", replica=("documents", _pretraining_full_oracle))
 def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE CAPSTONE: the full pretraining corpus pipeline a 100-TB user
     ships, as a JobControl DAG across MATERIALIZING parquet boundaries
@@ -4944,38 +4796,21 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat("html", F.lit("<p>Refetched copy.</p>")).alias("html"),
         )
         pages = originals.unionByName(mirrors).unionByName(refetches)
-
-        def write_part(rows):
-            import uuid as _uuid
-
-            from pyspark import TaskContext
-
-            from hadoop_3_3_6_spark.sources.warc import encode_warc
-
-            # explicit per-record ids: encode_warc's default derives
-            # the id from (target_uri, type), which would COLLIDE for
-            # a refetch whose raw URI string equals the original's —
-            # exactly the case the url_dedup winner join keys on
-            # record_id to handle (round-12 review finding)
-            pid = TaskContext.get().partitionId()
-            recs = [
-                {
-                    "warc_type": "response",
-                    "target_uri": r.uri,
-                    "content_type": "text/html",
-                    "payload": r.html,
-                    "date": r.date,
-                    "record_id": "<urn:uuid:%s>" % _uuid.uuid5(
-                        _uuid.NAMESPACE_URL, f"pretrain:{pid}:{i}"
-                    ),
-                }
-                for i, r in enumerate(rows)
-            ]
-            if recs:
-                with open(f"{out}/seg{pid:05d}.warc.gz", "wb") as f:
-                    f.write(encode_warc(recs, compress=True))
-
-        pages.foreachPartition(write_part)
+        # explicit record ids, one per (uri, date): the sink's default
+        # derives the id from (target_uri, type), which would COLLIDE
+        # for a refetch whose raw URI string equals the original's —
+        # exactly the case the url_dedup winner join keys on record_id
+        # to handle
+        pages.select(
+            F.lit("response").alias("warc_type"),
+            F.col("uri").alias("target_uri"),
+            F.lit("text/html").alias("content_type"),
+            F.encode("html", "UTF-8").alias("payload"),
+            F.col("date").alias("warc_date"),
+            F.concat(
+                F.lit("<urn:sha256:"), F.sha2(F.concat_ws("\n", "uri", "date"), 256), F.lit(">")
+            ).alias("record_id"),
+        ).write.format("warc").mode("overwrite").save(out)
 
     warc_dir = _rendered_dir("pretrainwarc_", sf_dir, render_warc)
 
@@ -5295,6 +5130,9 @@ def q_pipeline_web_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 10_000_000).alias("doc_id"), "html"
         )
 
+        # Hand-written segments, not the warc sink: the sink names its
+        # files part-NNNNN per job, so the two phases appended to one
+        # directory would overwrite each other's segments.
         def write_phase(frame: DataFrame, prefix: str) -> None:
             def write_part(rows):
                 from pyspark import TaskContext
@@ -5398,64 +5236,45 @@ def q_pipeline_web_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _quality_classifier_oracle() -> str | None:
+def _quality_classifier_oracle(path: str) -> str:
     """Exact oracle: replica-trained on the full corpus, every doc's
     score rendered as VALUES.  A green hash certifies the distributed
     feature pass, all training iterations and the shuffle-free scoring
     projection end-to-end."""
-    try:
-        rows = _qc_replica_rows(train_even_only=False)
-        if rows is None:
-            return None
-        values = ", ".join(
-            f"({i}::BIGINT, {y}::INT, {s / 1e6}::DOUBLE, {str(p).lower()})"
-            for i, y, s, p in rows
-        )
-        return (
-            "SELECT * FROM (VALUES " + values + ") t(doc_id, label, score, predicted)"
-        )
-    except Exception as exc:
-        print(
-            f"# WARNING: pipeline_quality_classifier oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+    return _values_sql(
+        (
+            (f"{i}::BIGINT", f"{y}::INT", f"{s / 1e6}::DOUBLE", str(p).lower())
+            for i, y, s, p in _qc_replica_rows(path, False)
+        ),
+        "doc_id, label, score, predicted",
+    )
 
 
-def _quality_classifier_eval_oracle() -> str | None:
+def _quality_classifier_eval_oracle(path: str) -> str:
     """Exact oracle for the HELD-OUT evaluation row: replica-trained on
     the even-id half, confusion counts over the odd-id half, accuracy
     as integer ppm (truncating div — no float rounding ambiguity)."""
-    try:
-        rows = _qc_replica_rows(train_even_only=True)
-        if rows is None:
-            return None
-        test = [(y, s, p) for i, y, s, p in rows if i % 2 == 1]
-        tp = sum(1 for y, _s, p in test if y == 1 and p)
-        fp = sum(1 for y, _s, p in test if y == 0 and p)
-        fn = sum(1 for y, _s, p in test if y == 1 and not p)
-        tn = sum(1 for y, _s, p in test if y == 0 and not p)
-        n_test = len(test)
-        acc_ppm = (tp + tn) * 1_000_000 // n_test
-        gold_mean = sum(s for y, s, _p in test if y == 1) // (tp + fn)
-        crawl_mean = sum(s for y, s, _p in test if y == 0) // (fp + tn)
-        return (
-            f"SELECT {len(rows) - n_test}::BIGINT AS n_train, {n_test}::BIGINT AS n_test, "
-            f"{tp}::BIGINT AS tp, {fp}::BIGINT AS fp, {fn}::BIGINT AS fn, "
-            f"{tn}::BIGINT AS tn, {acc_ppm}::BIGINT AS accuracy_ppm, "
-            f"{gold_mean}::BIGINT AS gold_mean_score_micro, "
-            f"{crawl_mean}::BIGINT AS crawl_mean_score_micro, "
-            f"{gold_mean - crawl_mean}::BIGINT AS separation_micro"
-        )
-    except Exception as exc:
-        print(
-            f"# WARNING: pipeline_classifier_eval oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+    rows = _qc_replica_rows(path, True)
+    test = [(y, s, p) for i, y, s, p in rows if i % 2 == 1]
+    tp = sum(1 for y, _s, p in test if y == 1 and p)
+    fp = sum(1 for y, _s, p in test if y == 0 and p)
+    fn = sum(1 for y, _s, p in test if y == 1 and not p)
+    tn = sum(1 for y, _s, p in test if y == 0 and not p)
+    n_test = len(test)
+    acc_ppm = (tp + tn) * 1_000_000 // n_test
+    gold_mean = sum(s for y, s, _p in test if y == 1) // (tp + fn)
+    crawl_mean = sum(s for y, s, _p in test if y == 0) // (fp + tn)
+    return (
+        f"SELECT {len(rows) - n_test}::BIGINT AS n_train, {n_test}::BIGINT AS n_test, "
+        f"{tp}::BIGINT AS tp, {fp}::BIGINT AS fp, {fn}::BIGINT AS fn, "
+        f"{tn}::BIGINT AS tn, {acc_ppm}::BIGINT AS accuracy_ppm, "
+        f"{gold_mean}::BIGINT AS gold_mean_score_micro, "
+        f"{crawl_mean}::BIGINT AS crawl_mean_score_micro, "
+        f"{gold_mean - crawl_mean}::BIGINT AS separation_micro"
+    )
 
 
-@_register("pipeline_quality_classifier", _quality_classifier_oracle())
+@_register("pipeline_quality_classifier", replica=("documents", _quality_classifier_oracle))
 def q_pipeline_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quality-CLASSIFIER stage of the CCNet / LLaMA pretraining
     recipes (the fasttext-supervised 'gold vs crawl' model the rule
@@ -5526,7 +5345,7 @@ def _qc_weights(spark: SparkSession, sf_dir: str, even_only: bool) -> list:
     return _once(("qc_weights", sf_dir, even_only), train)
 
 
-@_register("pipeline_classifier_eval", _quality_classifier_eval_oracle())
+@_register("pipeline_classifier_eval", replica=("documents", _quality_classifier_eval_oracle))
 def q_pipeline_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HELD-OUT evaluation of the quality classifier — the train/test
     hygiene a production quality gate ships with: train on the even-id
@@ -5596,45 +5415,39 @@ def q_pipeline_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quality_classifier_calibration_oracle() -> str | None:
+def _quality_classifier_calibration_oracle(path: str) -> str:
     """Exact oracle for the calibration row: the same even-half
     replica weights as pipeline_classifier_eval, per-score-decile
     aggregates over the odd-id held-out split rendered as VALUES
     (integer micro/ppm units via truncating division — every operand
     is non-negative, so python // and Spark's div agree)."""
-    try:
-        rows = _qc_replica_rows(train_even_only=True)
-        if rows is None:
-            return None
-        agg: dict[int, list[int]] = {}
-        for i, y, s, _p in rows:
-            if i % 2 == 0:
-                continue
-            d = min(s // 100_000, 9)
-            a = agg.setdefault(d, [0, 0, 0])
-            a[0] += 1
-            a[1] += s
-            a[2] += y
-        vals = ", ".join(
-            f"({d}::INT, {a[0]}::BIGINT, {a[1] // a[0]}::BIGINT, "
-            f"{a[2] * 1_000_000 // a[0]}::BIGINT, "
-            f"{a[1] // a[0] - a[2] * 1_000_000 // a[0]}::BIGINT)"
+    agg: dict[int, list[int]] = {}
+    for i, y, s, _p in _qc_replica_rows(path, True):
+        if i % 2 == 0:
+            continue
+        d = min(s // 100_000, 9)
+        a = agg.setdefault(d, [0, 0, 0])
+        a[0] += 1
+        a[1] += s
+        a[2] += y
+    return _values_sql(
+        (
+            (
+                f"{d}::INT",
+                f"{a[0]}::BIGINT",
+                f"{a[1] // a[0]}::BIGINT",
+                f"{a[2] * 1_000_000 // a[0]}::BIGINT",
+                f"{a[1] // a[0] - a[2] * 1_000_000 // a[0]}::BIGINT",
+            )
             for d, a in sorted(agg.items())
-        )
-        return (
-            "SELECT * FROM (VALUES " + vals + ") t(decile, n_docs, "
-            "mean_score_micro, gold_ppm, calibration_gap_micro)"
-        )
-    except Exception as exc:
-        print(
-            f"# WARNING: pipeline_classifier_calibration oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+        ),
+        "decile, n_docs, mean_score_micro, gold_ppm, calibration_gap_micro",
+    )
 
 
 @_register(
-    "pipeline_classifier_calibration", _quality_classifier_calibration_oracle()
+    "pipeline_classifier_calibration",
+    replica=("documents", _quality_classifier_calibration_oracle),
 )
 def q_pipeline_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram for the quality classifier (VERDICT r11
@@ -9638,7 +9451,27 @@ def q_timeseries_interpolate_hourly(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def _bpe_train_oracle() -> str | None:
+@functools.cache
+def _bpe_replica_merges(path: str) -> list:
+    """The replica merge table shared by both BPE oracles, derived once
+    per process: word frequencies via DuckDB SQL over the parquet
+    (mirroring functions/bpe._word_freqs: freq desc, word asc, cap
+    1200), then the pure-Python reference_bpe's 8 merges."""
+    import duckdb
+
+    from hadoop_3_3_6_spark.functions.bpe import reference_bpe
+
+    con = duckdb.connect()
+    rows = con.execute(
+        "SELECT w, count(*)::BIGINT AS freq FROM ("
+        "SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w "
+        f"FROM read_parquet('{path}')) GROUP BY w ORDER BY freq DESC, w LIMIT 1200"
+    ).fetchall()
+    con.close()
+    return reference_bpe(dict(rows), 8)
+
+
+def _bpe_train_oracle(path: str) -> str | None:
     """Exact oracle for tokenizer_bpe_train (round 6, closing another
     rows-only row): the query's OUTPUT is the 8-row merge table itself,
     and the apply-oracle already re-derives that table through an
@@ -9649,47 +9482,24 @@ def _bpe_train_oracle() -> str | None:
     distributed training ITERATIONS (JVM pair counting, argmax
     tiebreaks, merge application) row for row.  Quotes in tokens are
     SQL-escaped; pinned to the driver's sf0.01 comparison tier like
-    the apply oracle; degrades to rows-only (None) on any failure."""
-    import os
-
-    docs = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(docs):
-        return None
-    try:
-        import duckdb
-
-        from hadoop_3_3_6_spark.functions.bpe import reference_bpe
-
-        con = duckdb.connect()
-        rows = con.execute(
-            "SELECT w, count(*)::BIGINT AS freq FROM ("
-            "SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w "
-            f"FROM read_parquet('{docs}')) GROUP BY w ORDER BY freq DESC, w LIMIT 1200"
-        ).fetchall()
-        con.close()
-        merges = reference_bpe(dict(rows), 8)
-    except Exception as exc:
-        print(
-            f"# WARNING: tokenizer_bpe_train oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+    the apply oracle."""
+    merges = _bpe_replica_merges(path)
     if not merges:
         return None
 
     def esc(s: str) -> str:
         return s.replace("'", "''")
 
-    values = ", ".join(
-        f"({i}, '{esc(l)}', '{esc(r)}', '{esc(l + r)}', {c}::BIGINT)"
-        for i, (l, r, c) in enumerate(merges)
-    )
-    return (
-        f'SELECT * FROM (VALUES {values}) AS t(rank, "left", "right", merged, pair_count)'
+    return _values_sql(
+        (
+            (str(i), f"'{esc(l)}'", f"'{esc(r)}'", f"'{esc(l + r)}'", f"{c}::BIGINT")
+            for i, (l, r, c) in enumerate(merges)
+        ),
+        'rank, "left", "right", merged, pair_count',
     )
 
 
-@_register("tokenizer_bpe_train", _bpe_train_oracle())
+@_register("tokenizer_bpe_train", replica=("documents", _bpe_train_oracle))
 def q_tokenizer_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING (functions/bpe.py — learning the merge
     table from the corpus, the step beyond text.token_counts'
@@ -9724,13 +9534,13 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
     return _once(("bpe_merges", sf_dir), train)
 
 
-def _bpe_apply_oracle() -> str | None:
+def _bpe_apply_oracle(path: str) -> str | None:
     """Exact DuckDB oracle for tokenizer_bpe_apply, generated at
     registration time: the merge table is re-derived INDEPENDENTLY of
     the engine — word frequencies via DuckDB SQL over the driver's
-    sf0.01 parquet (mirroring functions/bpe._word_freqs: freq desc,
-    word asc, cap 1200), then the pure-Python reference_bpe (the same
-    public Sennrich et al. 2016 algorithm, separately implemented) —
+    sf0.01 parquet, then the pure-Python reference_bpe (the same
+    public Sennrich et al. 2016 algorithm, separately implemented;
+    see _bpe_replica_merges) —
     and rendered into nested replace() calls over a bracket-delimited
     symbol string:  word -> '[c][c]..[c</w>]', each merge (l, r) ->
     replace(seq, '[l][r]', '[lr]')  (left-to-right non-overlapping,
@@ -9741,42 +9551,24 @@ def _bpe_apply_oracle() -> str | None:
     Pinned to the driver's sf0.01 comparison tier — the Spark query
     trains on its own sf_dir, so both sides see the same corpus
     wherever the driver compares them."""
-    import os
+    import duckdb
 
-    docs = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(docs):
+    from hadoop_3_3_6_spark.functions.bpe import EOW
+
+    # Corpus-alphabet soundness (not just merge-table soundness): a
+    # corpus word containing '[' or ']' would corrupt the oracle's
+    # bracket-count token tally even if no bracket ever enters the
+    # merge table, so scan the whole corpus for the delimiter
+    # characters and decline the oracle on any hit.
+    con = duckdb.connect()
+    n_bad = con.execute(
+        f"SELECT count(*) FROM read_parquet('{path}') "
+        "WHERE regexp_matches(text, '[\\[\\]]')"
+    ).fetchone()[0]
+    con.close()
+    if n_bad:
         return None
-    try:
-        import duckdb
-
-        from hadoop_3_3_6_spark.functions.bpe import EOW, reference_bpe
-
-        con = duckdb.connect()
-        # Corpus-alphabet soundness (not just merge-table soundness): a
-        # corpus word containing '[' or ']' would corrupt the oracle's
-        # bracket-count token tally even if no bracket ever enters the
-        # merge table, so scan the whole corpus for the delimiter
-        # characters and degrade to rows-only on any hit.
-        n_bad = con.execute(
-            f"SELECT count(*) FROM read_parquet('{docs}') "
-            "WHERE regexp_matches(text, '[\\[\\]]')"
-        ).fetchone()[0]
-        if n_bad:
-            con.close()
-            return None
-        rows = con.execute(
-            "SELECT w, count(*)::BIGINT AS freq FROM ("
-            "SELECT unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS w "
-            f"FROM read_parquet('{docs}')) GROUP BY w ORDER BY freq DESC, w LIMIT 1200"
-        ).fetchall()
-        con.close()
-    except Exception as exc:
-        print(
-            f"# WARNING: tokenizer_bpe_apply oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
-    merges = reference_bpe(dict(rows), 8)
+    merges = _bpe_replica_merges(path)
     if any(set("[]'%") & set(left + right) for left, right, _ in merges):
         return None
     seq = f"'[' || array_to_string(regexp_extract_all(w, '(?s).'), '][') || '{EOW}]'"
@@ -9805,7 +9597,7 @@ _UNI_MOD = 1_000_000_007
 _UNI_MAX_TRAIN = 200_000  # train_unigram's max_train_words default
 
 
-def _unigram_oracle() -> str | None:
+def _unigram_oracle(path: str) -> str:
     """Exact oracle for the unigram tokenizer: an INDEPENDENT python
     replica of the whole pipeline — word counts straight from the
     parquet text, the trainer's deterministic (-count, word) top
@@ -9821,101 +9613,85 @@ def _unigram_oracle() -> str | None:
     green hash certifies the distributed word-count pass, training,
     the broadcast segmentation join and the HOF document fold
     end-to-end."""
-    import os
+    import math
+    from collections import Counter
 
-    path = "/root/testdata/sf0.01/documents.parquet"
-    if not os.path.exists(path):
-        return None
-    try:
-        import math
-        from collections import Counter
+    import pyarrow.parquet as pq
 
-        import pyarrow.parquet as pq
+    t = pq.read_table(path, columns=["doc_id", "text"])
+    docs = sorted(
+        zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist())
+    )
+    doc_words = {int(i): [w for w in (tx or "").split(" ") if w] for i, tx in docs}
+    wc: Counter = Counter()
+    for ws in doc_words.values():
+        wc.update(ws)
+    # the trainer's input bound: top max_train_words by (-count, word)
+    wc = Counter(
+        dict(sorted(wc.items(), key=lambda kv: (-kv[1], kv[0]))[:_UNI_MAX_TRAIN])
+    )
+    subs: Counter = Counter()
+    chars: set = set()
+    for w, c in wc.items():
+        chars.update(w)
+        for ln in range(1, _UNI_MAXLEN + 1):
+            for st in range(0, len(w) - ln + 1):
+                subs[w[st : st + ln]] += c
+    kept = sorted((p for p in subs if len(p) > 1), key=lambda p: (-subs[p], p))
+    pieces = {p: subs[p] for p in kept[:_UNI_SEED]}
+    for ch in chars:
+        pieces[ch] = subs[ch]
 
-        t = pq.read_table(path, columns=["doc_id", "text"])
-        docs = sorted(
-            zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist())
-        )
-        doc_words = {int(i): [w for w in (tx or "").split(" ") if w] for i, tx in docs}
-        wc: Counter = Counter()
-        for ws in doc_words.values():
-            wc.update(ws)
-        # the trainer's input bound: top max_train_words by (-count, word)
-        wc = Counter(
-            dict(sorted(wc.items(), key=lambda kv: (-kv[1], kv[0]))[:_UNI_MAX_TRAIN])
-        )
-        subs: Counter = Counter()
-        chars: set = set()
-        for w, c in wc.items():
-            chars.update(w)
-            for ln in range(1, _UNI_MAXLEN + 1):
-                for st in range(0, len(w) - ln + 1):
-                    subs[w[st : st + ln]] += c
-        kept = sorted((p for p in subs if len(p) > 1), key=lambda p: (-subs[p], p))
-        pieces = {p: subs[p] for p in kept[:_UNI_SEED]}
-        for ch in chars:
-            pieces[ch] = subs[ch]
+    def viterbi(word, lp):
+        n = len(word)
+        score = [None] * (n + 1)
+        score[0] = 0
+        prev = [0] * (n + 1)
+        for i in range(1, n + 1):
+            for j in range(max(0, i - _UNI_MAXLEN), i):
+                if score[j] is None or word[j:i] not in lp:
+                    continue
+                cand = score[j] + lp[word[j:i]]
+                if score[i] is None or cand > score[i]:
+                    score[i], prev[i] = cand, j
+        if score[n] is None:
+            return None
+        seq, i = [], n
+        while i > 0:
+            seq.append(word[prev[i] : i])
+            i = prev[i]
+        return seq[::-1]
 
-        def viterbi(word, lp):
-            n = len(word)
-            score = [None] * (n + 1)
-            score[0] = 0
-            prev = [0] * (n + 1)
-            for i in range(1, n + 1):
-                for j in range(max(0, i - _UNI_MAXLEN), i):
-                    if score[j] is None or word[j:i] not in lp:
-                        continue
-                    cand = score[j] + lp[word[j:i]]
-                    if score[i] is None or cand > score[i]:
-                        score[i], prev[i] = cand, j
-            if score[n] is None:
-                return None
-            seq, i = [], n
-            while i > 0:
-                seq.append(word[prev[i] : i])
-                i = prev[i]
-            return seq[::-1]
-
-        for _ in range(_UNI_ITERS):
-            total = sum(pieces.values())
-            lp = {p: round(math.log(c / total) * 1_000_000) for p, c in pieces.items()}
-            new: Counter = Counter()
-            for w, c in wc.items():
-                for p in viterbi(w, lp) or []:
-                    new[p] += c
-            keep = sorted((p for p in new if len(p) > 1), key=lambda p: (-new[p], p))
-            pieces = {p: new[p] for p in keep[:_UNI_VOCAB]}
-            for ch in chars:
-                pieces[ch] = max(new.get(ch, 0), 1)
+    for _ in range(_UNI_ITERS):
         total = sum(pieces.values())
         lp = {p: round(math.log(c / total) * 1_000_000) for p, c in pieces.items()}
-        pid = {p: i for i, p in enumerate(sorted(pieces))}
-        seg_cache: dict = {}
-        rows = []
-        for i in sorted(doc_words):
-            h, n = 0, 0
-            for w in doc_words[i]:
-                if w not in seg_cache:
-                    s = viterbi(w, lp)
-                    seg_cache[w] = [pid[p] for p in s] if s is not None else [-1]
-                for x in seg_cache[w]:
-                    h = (h * 31 + x) % _UNI_MOD
-                    n += 1
-            rows.append((i, n, h))
-        values = ", ".join(
-            f"({i}::BIGINT, {n}::INT, {h}::BIGINT)" for i, n, h in rows
-        )
-        return (
-            "SELECT * FROM (VALUES "
-            + values
-            + ") AS t(doc_id, n_pieces, pieces_hash)"
-        )
-    except Exception as exc:
-        print(
-            f"# WARNING: tokenizer_unigram_apply oracle degraded to rows-only: {exc!r}",
-            file=__import__("sys").stderr,
-        )
-        return None
+        new: Counter = Counter()
+        for w, c in wc.items():
+            for p in viterbi(w, lp) or []:
+                new[p] += c
+        keep = sorted((p for p in new if len(p) > 1), key=lambda p: (-new[p], p))
+        pieces = {p: new[p] for p in keep[:_UNI_VOCAB]}
+        for ch in chars:
+            pieces[ch] = max(new.get(ch, 0), 1)
+    total = sum(pieces.values())
+    lp = {p: round(math.log(c / total) * 1_000_000) for p, c in pieces.items()}
+    pid = {p: i for i, p in enumerate(sorted(pieces))}
+    seg_cache: dict = {}
+    rows = []
+    for i in sorted(doc_words):
+        h, n = 0, 0
+        for w in doc_words[i]:
+            if w not in seg_cache:
+                s = viterbi(w, lp)
+                seg_cache[w] = [pid[p] for p in s] if s is not None else [-1]
+            for x in seg_cache[w]:
+                h = (h * 31 + x) % _UNI_MOD
+                n += 1
+        rows.append((i, n, h))
+    return _values_sql(
+        ((f"{i}::BIGINT", f"{n}::INT", f"{h}::BIGINT") for i, n, h in rows),
+        "doc_id, n_pieces, pieces_hash",
+    )
 
 
 def _trained_unigram(spark: SparkSession, sf_dir: str) -> list:
@@ -9931,7 +9707,7 @@ def _trained_unigram(spark: SparkSession, sf_dir: str) -> list:
     ))
 
 
-@_register("tokenizer_unigram_apply", _unigram_oracle())
+@_register("tokenizer_unigram_apply", replica=("documents", _unigram_oracle))
 def q_tokenizer_unigram_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer (Kudo 2018 — SentencePiece's unigram
     model, hard-EM variant) trained on the corpus and applied to it —
@@ -9954,7 +9730,7 @@ def q_tokenizer_unigram_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apply_unigram(docs, pieces, "text", "doc_id", modulus=_UNI_MOD)
 
 
-@_register("tokenizer_bpe_apply", _bpe_apply_oracle())
+@_register("tokenizer_bpe_apply", replica=("documents", _bpe_apply_oracle))
 def q_tokenizer_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer APPLICATION (functions/bpe.apply_bpe): encode the
     corpus with the merge table learned by tokenizer_bpe_train (same

@@ -158,7 +158,46 @@ def pin_active_session(spark: SparkSession) -> None:
         pass
 
 
+_SCANS: dict[tuple[str, str, str], DataFrame] = {}
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+
+
+def scan_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    """The raw parquet scan of one fixture table, as stored on disk.
+
+    Memoized per (application, table, sf_dir): `spark.read.parquet`
+    runs a footer schema-inference job on every call, so uncached
+    repeat loads pay one driver job each — across a 100-query corpus
+    run that is hundreds of pointless metadata jobs.  The cached
+    object is a pure plan; reusing it never reuses results.  Queries
+    read load_table; a stream over the same files declares this
+    scan's schema."""
+    ensure_session_confs(spark)
+    key = (spark.sparkContext.applicationId, name, sf_dir)
+    if key not in _SCANS:
+        _SCANS[key] = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _SCANS[key]
+
+
+def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """The one timestamp rule for scans of fixture table ``name``,
+    batch or streaming.
+
+    events.ts is stored as TIMESTAMP(NANOS); with nanosAsLong it scans
+    as bigint nanos and is converted here to a microsecond timestamp
+    (same truncation DuckDB applies reading ns into its us timestamps).
+    Naive timestamps (a host session that inferred NTZ before our
+    confs landed) become LTZ, identical under the pinned UTC session
+    timezone; watermarks reject NTZ."""
+    from pyspark.sql import functions as F
+
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        # integer div: float division would lose precision above 2^53 ns
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+    if ntz:
+        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
+    return df
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
@@ -166,37 +205,13 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     column pruning and split planning from the file source for free
     (reference split planning: FileInputFormat.getSplits,
     hadoop-mapreduce-client-core .../lib/input/FileInputFormat.java:397).
-
-    The (lazy) DataFrame is memoized per (application, table, sf_dir):
-    `spark.read.parquet` runs a footer schema-inference job on every
-    call, so uncached repeat loads pay one driver job each — across a
-    100-query corpus run that is hundreds of pointless metadata jobs.
-    The cached object is a pure plan; reusing it never reuses results.
-
-    events.ts is stored as TIMESTAMP(NANOS); with nanosAsLong it scans
-    as bigint nanos and is converted here to a microsecond timestamp
-    (same truncation DuckDB applies reading ns into its us timestamps).
-    """
-    ensure_session_confs(spark)
+    The memoized scan_table with normalize_timestamps applied, itself
+    memoized per (application, table, sf_dir)."""
+    raw = scan_table(spark, name, sf_dir)
     key = (spark.sparkContext.applicationId, name, sf_dir)
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        from pyspark.sql import functions as F
-
-        # integer div: float division would lose precision above 2^53 ns
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # belt-and-braces vs a host session that inferred NTZ before our
-    # confs landed: normalize naive timestamps to LTZ (identical under
-    # the pinned UTC session timezone).
-    ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    if ntz:
-        from pyspark.sql import functions as F
-
-        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
-    _TABLE_CACHE[key] = df
-    return df
+    if key not in _TABLE_CACHE:
+        _TABLE_CACHE[key] = normalize_timestamps(raw, name)
+    return _TABLE_CACHE[key]
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -27,22 +27,16 @@ from pyspark.sql import functions as F
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_3_3_6_spark.session import ensure_session_confs
+    """The events table as a file stream: declared with the memoized
+    batch scan's on-disk schema (no schema-inference job), timestamps
+    normalized by the same rule as session.load_table."""
+    from hadoop_3_3_6_spark.session import normalize_timestamps, scan_table
 
-    ensure_session_confs(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = scan_table(spark, "events", sf_dir).schema
     # FileStreamSource needs a directory/glob source path, not a bare
     # file — glob on the file name keeps basePath a directory.
     stream = spark.readStream.schema(schema).parquet(os.path.join(sf_dir, "events.*"))
-    if dict(stream.dtypes).get("ts") == "bigint":
-        # TIMESTAMP(NANOS) scanned as long (see session.load_table)
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        # schema inferred before inferTimestampNTZ was disabled:
-        # watermarks reject NTZ; LTZ is identical under UTC session tz
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_timestamps(stream, "events")
 
 
 def sized_state_partitions(
@@ -388,26 +382,22 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join: click events joined to purchase
-    events of the same user within the following 30 minutes — both
-    sides watermarked so the state store can evict (the join form that
-    needs true dual-stream state, impossible in the reference's batch
-    model).  Returns per-user conversion pair counts."""
-    clicks = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select("user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id"))
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user_id"), F.col("ts").alias("purchase_ts"), F.col("event_id").alias("purchase_id"))
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
+def _click_purchase_pairs(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The click-to-purchase interval join of both stream-stream
+    queries, drained: click events joined ``how`` to purchase events of
+    the same user within the following 30 minutes, both sides
+    watermarked so the state store can evict."""
+
+    def side(event_type: str, user: str, ts: str, event_id: str) -> DataFrame:
+        return (
+            _event_stream(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .select(F.col("user_id").alias(user), F.col("ts").alias(ts), F.col("event_id").alias(event_id))
+            .withWatermark(ts, "1 hour")
+        )
+
+    joined = side("click", "user_id", "click_ts", "click_id").join(
+        side("purchase", "p_user_id", "purchase_ts", "purchase_id"),
         on=F.expr(
             """
             user_id = p_user_id AND
@@ -415,11 +405,20 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             purchase_ts <= click_ts + interval 30 minutes
             """
         ),
-        how="inner",
+        how=how,
     ).select("user_id", "click_id", "purchase_id")
-    out = run_stream_to_batch(
+    return run_stream_to_batch(
         joined, output_mode="append", state_partitions=sized_state_partitions(sf_dir)
     )
+
+
+def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join: click events joined to purchase
+    events of the same user within the following 30 minutes — both
+    sides watermarked so the state store can evict (the join form that
+    needs true dual-stream state, impossible in the reference's batch
+    model).  Returns per-user conversion pair counts."""
+    out = _click_purchase_pairs(spark, sf_dir, "inner")
     return out.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
@@ -433,36 +432,7 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
     (min across both streams), so exactly the clicks whose window
     closed before that cutoff emit null matches: deterministic, hence
     oracle-checkable.  Returns per-user (n_pairs, n_expired)."""
-    clicks = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select("user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id"))
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        on=F.expr(
-            """
-            user_id = p_user_id AND
-            purchase_ts > click_ts AND
-            purchase_ts <= click_ts + interval 30 minutes
-            """
-        ),
-        how="leftOuter",
-    ).select("user_id", "click_id", "purchase_id")
-    out = run_stream_to_batch(
-        joined, output_mode="append", state_partitions=sized_state_partitions(sf_dir)
-    )
+    out = _click_purchase_pairs(spark, sf_dir, "leftOuter")
     return out.groupBy("user_id").agg(
         F.count("purchase_id").alias("n_pairs"),
         F.sum(F.when(F.col("purchase_id").isNull(), 1).otherwise(0))

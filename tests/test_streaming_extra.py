@@ -328,3 +328,23 @@ def test_checkpoint_restart_matches_one_shot(spark, tmp_path, manager):
 
     assert restarted == rows(run_stream_to_batch(counts()))
     assert sum(n for _, n in restarted) == sum(map(len, files))
+
+
+def test_event_stream_runs_no_schema_job(spark, sf_dir):
+    """The events stream declares the schema of the memoized batch
+    scan: once load_table has read the table, building the stream
+    launches no Spark job (re-reading the parquet footer would launch
+    one per call), and its ts is the same microsecond timestamp."""
+    from hadoop_3_3_6_spark.session import load_table
+    from hadoop_3_3_6_spark.streaming.windows import _event_stream
+
+    batch = load_table(spark, "events", sf_dir)
+    sc = spark.sparkContext
+    group = "event-stream-schema"
+    sc.setJobGroup(group, "event stream construction")
+    try:
+        streams = [_event_stream(spark, sf_dir) for _ in range(3)]
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert all(s.isStreaming and s.schema == batch.schema for s in streams)
