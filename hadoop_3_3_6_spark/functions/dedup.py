@@ -444,18 +444,24 @@ def duplicated_span_fraction(
     """
     df = spread_for_compute(df, id_col)
     grams = let_sql(words_sql(text_col), "ws", word_ngrams_sql("ws", n))
-    inst = df.select(F.col(id_col), F.explode(F.expr(grams)).alias("shingle"))
+    # null ids are dropped once, before the instances branch: the
+    # trailing left join onto ``df`` infers isnotnull(id) into per_doc,
+    # and were it left to that, only one consumer of the shingle
+    # exchange would carry the filter and the two would not be reused.
+    # Output is unchanged: countDistinct skips null ids, and a null id
+    # never matches the left join.
+    inst = df.select(F.col(id_col), F.explode(F.expr(grams)).alias("shingle")).filter(
+        F.col(id_col).isNotNull()
+    )
     if max_df is not None:
         # the skew guard needs the true distinct-doc count; repartition
         # by shingle FIRST so the countDistinct runs COMPLETE-mode on
         # the pre-partitioned stream (one exchange, no distinct-expand
         # double shuffle) with constant per-key memory, unlike the
         # unbounded window, and the probe join stays
-        # AQE-skew-splittable.  (Unlike duplicated_spans, the trailing
-        # re-join with ``df`` re-aliases one side of the shared
-        # lineage, so the exchange-reuse pin used there cannot apply —
-        # the corpus is tokenized under each materialization; at 0.1s
-        # benched this op is far from the cost frontier.)
+        # AQE-skew-splittable.  Both consumers read one shuffle stage
+        # (ReusedExchange, plan-asserted), so the corpus is tokenized
+        # once.
         ex = inst.repartition("shingle")
         docs_per = ex.groupBy("shingle").agg(F.countDistinct(id_col).alias("n_docs"))
         # hot shingles (> max_df docs) stay in BOTH counts: they are
@@ -537,13 +543,12 @@ def duplicated_spans(
         # memory and the probe join stays AQE-skew-splittable — the
         # two properties the unbounded window form lacks under a
         # runaway boilerplate shingle.  max(pos) + the always-true
-        # filter is the exchange-REUSE PIN (see
-        # duplicated_span_fraction): it keeps the partial-distinct
-        # rewrite from mutating the agg side's exchange subtree, so
-        # both consumers share ONE shuffle stage (ReusedExchange,
-        # plan-asserted) and the corpus is scanned/tokenized/exploded
-        # exactly once — measured ~1.3x on top of the ~1.7x the
-        # complete-mode form already gave.
+        # filter is the exchange-REUSE PIN: it keeps the
+        # partial-distinct rewrite from mutating the agg side's
+        # exchange subtree, so both consumers share ONE shuffle stage
+        # (ReusedExchange, plan-asserted) and the corpus is
+        # scanned/tokenized/exploded exactly once — measured ~1.3x on
+        # top of the ~1.7x the complete-mode form already gave.
         ex = inst.repartition("shingle")
         docs_per = ex.groupBy("shingle").agg(
             F.countDistinct(id_col).alias("n_docs"), F.max("pos").alias("_mp")
@@ -608,7 +613,13 @@ def apply_span_dedup(
     per-row HOF filter over word positions — O(words · runs_per_doc),
     no UDF, no second corpus shuffle.  At 100 TB the corpus text
     moves through exactly one narrow projection."""
-    runs = duplicated_spans(df, text_col, id_col, n=n, max_df=max_df)
+    # null ids are dropped from the span input only, never from the
+    # ``df`` the left join below keeps: see duplicated_span_fraction
+    # (its shingle exchange is reused only if both consumers carry the
+    # filter the left join infers)
+    runs = duplicated_spans(
+        df.filter(F.col(id_col).isNotNull()), text_col, id_col, n=n, max_df=max_df
+    )
     per_doc = runs.groupBy(id_col).agg(
         F.collect_list(F.struct("run_start", "run_end")).alias("_runs")
     )

@@ -55,9 +55,14 @@ def sized_state_partitions(
     (one micro-batch, 2 MB source): tumbling agg 1.0/1.1/2.0/4.7 s and
     the outer-join drain 2.4/4.3/5.5/11.9 s at 4/8/16/32 partitions —
     monotone in partition count, so the floor (4) is the local
-    optimum AND the scale-safe minimum.  At real stream volumes
-    (GB-scale micro-batches) ceil(bytes/target) takes over and the
-    count grows with the data exactly like a batch shuffle.  Every
+    optimum AND the scale-safe minimum.  A lower floor was measured
+    and not taken (4 cores): at the perfbench sf0.01 shape a floor of
+    1 cut streaming ``cpu_s`` by ~20% (3 seeds), but on the sf0.1
+    fixture floors 1, 2 and 4 were within noise, and the warm join
+    drain took 1.25-1.55 s wall at floor 1 against 1.16-1.34 s at
+    floor 4 — a saving of the smallest shape only.  At real stream
+    volumes (GB-scale micro-batches) ceil(bytes/target) takes over and
+    the count grows with the data exactly like a batch shuffle.  Every
     drain checkpoints into a fresh temp dir, so no checkpoint layout
     pins the count."""
     import math
@@ -91,6 +96,65 @@ _FS_CKPT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+
+# Analyzed-plan nodes whose work in a micro-batch that reads no rows
+# adds no row to the sink: row-at-a-time operators, the sources, and
+# the stateful operators whose no-data batch only evicts state (dedup).
+_SILENT_NODES = frozenset(
+    {
+        "Deduplicate",
+        "DeduplicateWithinWatermark",
+        "EventTimeWatermark",
+        "Expand",
+        "Filter",
+        "Project",
+        "StreamingRelation",
+    }
+)
+
+
+def _no_data_batch_can_emit(stream_df: DataFrame, output_mode: str) -> bool:
+    """Whether a micro-batch that reads no rows can still change what
+    ``stream_df`` writes in ``output_mode``: such a batch only moves the
+    watermark and the clocks forward, so it matters to an operator that
+    emits on eviction or on a timer.
+
+    True for an append-mode streaming aggregate (windows are emitted
+    once the watermark closes them), an outer stream-stream join
+    (unmatched rows are emitted on eviction) and a stateful function
+    with a timeout or timer.  False for complete mode, update mode,
+    inner joins and dedup, whose no-data batch only evicts state.  A
+    streaming plan node this rule does not know counts as True, the
+    Spark default."""
+    jvm = stream_df.sparkSession._jvm
+    no_timeout = jvm.org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()
+    no_timers = getattr(jvm.org.apache.spark.sql.streaming.TimeMode, "None")()
+    append = output_mode.lower() == "append"
+    todo = [stream_df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if not node.isStreaming():
+            continue  # a static subtree holds no streaming state
+        name = node.nodeName()
+        if name == "Aggregate":
+            if append:
+                return True
+        elif name == "Join":
+            both_streams = node.left().isStreaming() and node.right().isStreaming()
+            if both_streams and node.joinType().sql() != "INNER":
+                return True
+        elif name == "FlatMapGroupsInPandasWithState":
+            if not node.timeout().equals(no_timeout):
+                return True
+        elif name == "TransformWithStateInPySpark":
+            if not node.timeMode().equals(no_timers):
+                return True
+        elif name not in _SILENT_NODES:
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
 
 
 @contextlib.contextmanager
@@ -127,7 +191,21 @@ def run_stream_to_batch(
     stream-stream join keeps four per partition), and per-store
     overhead dominates when partitions far exceed state volume —
     measured 2.7x on the outer-join drain at local scale.  Sequential
-    use only (the confs are session-scoped while the query starts)."""
+    use only (the confs are session-scoped while the query starts).
+
+    No-data micro-batches run only where one can change the drained
+    table (``_no_data_batch_can_emit``, decided from the analyzed plan
+    and ``output_mode``).  After the last data batch Spark runs one
+    more batch that reads no rows whenever the watermark moved, to
+    evict state and emit what the new watermark closes.  The table is
+    read only after the drain ends, so that batch is pure cost unless
+    it emits.  For the inner stream-stream join it plans the query
+    again and loads, evicts and commits 16 state stores into a
+    checkpoint that is removed right after; skipping it cut perfbench
+    ``streaming`` ``cpu_s`` (tumbling counts + inner join) by ~18%
+    on 4 cores.  The left outer join keeps it: only that batch emits
+    its expired, unmatched clicks (150 result rows at sf0.01, 19
+    without it)."""
     from hadoop_3_3_6_spark.session import spark_local_dir
 
     spark = stream_df.sparkSession
@@ -148,10 +226,18 @@ def run_stream_to_batch(
     # drain at sf0.01 started ~790 processes with it, ~180 without
     # (4 cores, Linux).  The FileSystem manager's weaker rename
     # atomicity only matters to a checkpoint that is resumed, and this
-    # one is removed below.  The stream thread clones the session's
+    # one is removed below.
+    #
+    # No-data micro-batches are off unless the plan can emit in one
+    # (see the docstring).  The stream thread clones the session's
     # confs after start() returns, so they stay set until the query
     # has terminated.
-    confs = {"spark.sql.streaming.checkpointFileManagerClass": _FS_CKPT_MANAGER}
+    confs = {
+        "spark.sql.streaming.checkpointFileManagerClass": _FS_CKPT_MANAGER,
+        "spark.sql.streaming.noDataMicroBatches.enabled": str(
+            _no_data_batch_can_emit(stream_df, output_mode)
+        ).lower(),
+    }
     if state_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(state_partitions)
     ckpt_base = spark_local_dir()

@@ -996,17 +996,19 @@ def test_bucketed_join_rebuilds_after_catalog_loss(spark, sf_dir):
     assert first and again == first
 
 
-def test_guarded_spans_reuse_one_exchange(spark, sf_dir):
-    """The max_df-guarded span extraction must share ONE shuffle stage
+@pytest.mark.parametrize("name", ["dedup_spans", "dedup_spans_apply", "dedup_span_fraction"])
+def test_guarded_spans_reuse_one_exchange(spark, sf_dir, name):
+    """The max_df-guarded span queries must share ONE shuffle stage
     between the per-shingle aggregate and the probe join
     (ReusedExchange in the final adaptive plan): the corpus is
     scanned/tokenized/exploded exactly once.  The reuse pin (companion
     max(pos) aggregate + always-true filter) keeps the
     partial-distinct rewrite from mutating the aggregate side's
-    exchange subtree — this test is the canary if a Spark upgrade
-    changes that planning.  (dedup_span_fraction can't reuse: its
-    trailing re-join with the docs table re-aliases one lineage.)"""
-    df = QUERIES["dedup_spans"](spark, sf_dir)
+    exchange subtree, and the null-id filter on the shingle instances
+    keeps the isnotnull(doc_id) that the trailing left join onto the
+    documents infers from reaching only one consumer — this test is
+    the canary if a Spark upgrade changes that planning."""
+    df = QUERIES[name](spark, sf_dir)
     df.collect()  # materialize THIS plan: reuse only shows in the FINAL adaptive plan
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan, "plan did not finalize"

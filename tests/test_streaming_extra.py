@@ -206,21 +206,72 @@ _FS_MANAGER = (
 )
 
 
-def test_drain_checkpoints_through_filesystem_manager(spark, tmp_path, monkeypatch):
+class _DrainProgress:
+    """A StreamingQueryListener's record of the queries it saw: the run
+    ids of their progress events and of their terminations."""
+
+    def __init__(self, spark):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        self.progress, self.terminated = [], []
+        record = self
+
+        class _Listener(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                pass
+
+            def onQueryProgress(self, event):
+                record.progress.append(str(event.progress.runId))
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                record.terminated.append(str(event.runId))
+
+        self.spark, self.listener = spark, _Listener()
+        spark.streams.addListener(self.listener)
+
+    def batches(self, drain) -> int:
+        """Micro-batches of the one query ``drain()`` runs: the listener
+        bus delivers a query's progress events before its termination."""
+        import time
+
+        seen = len(self.terminated)
+        drain()
+        deadline = time.time() + 60
+        while len(self.terminated) == seen and time.time() < deadline:
+            time.sleep(0.05)
+        assert len(self.terminated) == seen + 1, "drain did not terminate once"
+        return self.progress.count(self.terminated[-1])
+
+    def close(self):
+        self.spark.streams.removeListener(self.listener)
+
+
+def test_drain_checkpoints_through_filesystem_manager(spark, sf_dir, tmp_path, monkeypatch):
     """run_stream_to_batch starts its query with the FileSystem-based
-    checkpoint manager and the requested state partitions, and puts both
-    confs back afterwards (an unset manager key stays unset), also when
-    start() raises; its temp checkpoint dir is removed either way."""
+    checkpoint manager, the requested state partitions and no-data
+    micro-batches as the drain's plan needs them (off for a
+    complete-mode count and the inner stream-stream join, on for the
+    left outer one), and puts all three confs back afterwards (an
+    unset key stays unset), also when start() raises; its temp
+    checkpoint dir is removed either way.  The inner join drain runs
+    its one data batch only; the left join also runs the no-data batch
+    that emits its unmatched clicks."""
     import os
     import tempfile
 
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
+    from hadoop_3_3_6_spark.plans.queries import QUERIES
     from hadoop_3_3_6_spark.streaming import windows
 
     mgr_key = "spark.sql.streaming.checkpointFileManagerClass"
     part_key = "spark.sql.shuffle.partitions"
+    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     spark.conf.unset(mgr_key)
+    spark.conf.unset(nodata_key)
     prev_parts = spark.conf.get(part_key)
     state_parts = str(int(prev_parts) + 1)
 
@@ -229,7 +280,8 @@ def test_drain_checkpoints_through_filesystem_manager(spark, tmp_path, monkeypat
     real_start = DataStreamWriter.start
 
     def recording_start(self, *args, **kwargs):
-        seen.append((self._spark.conf.get(mgr_key, None), self._spark.conf.get(part_key)))
+        conf = self._spark.conf
+        seen.append((conf.get(mgr_key, None), conf.get(part_key), conf.get(nodata_key, None)))
         if fail:
             raise RuntimeError("start failed")
         return real_start(self, *args, **kwargs)
@@ -250,19 +302,33 @@ def test_drain_checkpoints_through_filesystem_manager(spark, tmp_path, monkeypat
 
     def assert_restored():
         assert spark.conf.get(mgr_key, None) is None
+        assert spark.conf.get(nodata_key, None) is None
         assert spark.conf.get(part_key) == prev_parts
         assert ckpts and not any(os.path.exists(c) for c in ckpts)
 
     out = windows.run_stream_to_batch(stream, state_partitions=int(state_parts))
-    assert seen == [(_FS_MANAGER, state_parts)]
+    assert seen == [(_FS_MANAGER, state_parts, "false")]
     assert_restored()
     assert sorted(tuple(r) for r in out.collect()) == [(0, 7), (1, 7), (2, 6)]
 
     fail = True
     with pytest.raises(RuntimeError, match="start failed"):
         windows.run_stream_to_batch(stream, state_partitions=int(state_parts))
-    assert seen == [(_FS_MANAGER, state_parts)] * 2
+    assert seen == [(_FS_MANAGER, state_parts, "false")] * 2
     assert len(ckpts) == 2
+    assert_restored()
+
+    fail = False
+    progress = _DrainProgress(spark)
+    try:
+        batches = {
+            name: progress.batches(lambda: QUERIES[name](spark, sf_dir))
+            for name in ("streaming_stream_stream_join", "streaming_stream_stream_left_join")
+        }
+    finally:
+        progress.close()
+    assert [nodata for _, _, nodata in seen[2:]] == ["false", "true"]
+    assert batches == {"streaming_stream_stream_join": 1, "streaming_stream_stream_left_join": 2}
     assert_restored()
 
 
@@ -348,3 +414,131 @@ def test_event_stream_runs_no_schema_job(spark, sf_dir):
         sc.setJobGroup("", "")
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert all(s.isStreaming and s.schema == batch.schema for s in streams)
+
+
+def _stream_rows(df) -> list:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _streaming_drains() -> list[str]:
+    from hadoop_3_3_6_spark.plans.queries import QUERIES
+
+    return [name for name in QUERIES if name.startswith("streaming_")]
+
+
+@pytest.mark.parametrize("name", _streaming_drains())
+def test_drain_rows_equal_with_no_data_batches_forced_on(spark, sf_dir, monkeypatch, name):
+    """Each registered streaming query drains through run_stream_to_batch,
+    and its rows under the no-data-batch rule equal its rows with no-data
+    micro-batches forced on (Spark's default): the rule only skips a
+    batch that cannot change the result."""
+    from hadoop_3_3_6_spark.plans.queries import QUERIES
+    from hadoop_3_3_6_spark.streaming import windows
+
+    rule = windows._no_data_batch_can_emit
+    decided = []
+
+    def recording_rule(stream_df, output_mode):
+        decided.append(rule(stream_df, output_mode))
+        return decided[-1]
+
+    monkeypatch.setattr(windows, "_no_data_batch_can_emit", recording_rule)
+    under_rule = _stream_rows(QUERIES[name](spark, sf_dir))
+    assert decided, f"{name} did not drain through run_stream_to_batch"
+    monkeypatch.setattr(windows, "_no_data_batch_can_emit", lambda stream_df, output_mode: True)
+    assert under_rule == _stream_rows(QUERIES[name](spark, sf_dir))
+
+
+def test_append_window_count_keeps_no_data_batches(spark, tmp_path, monkeypatch):
+    """An append-mode windowed count emits a window only once the
+    watermark has passed its end, which on a one-file replay happens in
+    the no-data batch after the data batch: the rule keeps that batch,
+    and without it the drain emits nothing."""
+    from hadoop_3_3_6_spark.streaming import windows
+
+    src = tmp_path / "src"
+    stamps = ["2024-01-01 10:05:00", "2024-01-01 10:40:00", "2024-01-01 11:10:00", "2024-01-01 12:15:00"]
+    spark.createDataFrame([(s,) for s in stamps], "ts_s string").select(
+        F.to_timestamp("ts_s").alias("ts")
+    ).coalesce(1).write.parquet(str(src))
+    counts = (
+        spark.readStream.schema("ts timestamp")
+        .parquet(str(src))
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.date_format("w.start", "HH:mm").alias("start"), "n")
+    )
+
+    assert windows._no_data_batch_can_emit(counts, "append")
+    closed = _stream_rows(windows.run_stream_to_batch(counts, output_mode="append"))
+    # the watermark after the data batch is 12:05: two windows closed
+    assert closed == [("10:00", 2), ("11:00", 1)]
+    monkeypatch.setattr(windows, "_no_data_batch_can_emit", lambda stream_df, output_mode: False)
+    assert _stream_rows(windows.run_stream_to_batch(counts, output_mode="append")) == []
+
+
+def test_left_join_rows_change_without_no_data_batches(spark, sf_dir, monkeypatch):
+    """Canary of the differential test above: forced off, the left
+    outer stream-stream join loses the unmatched clicks that only its
+    no-data batch emits, so a rule that turned it off would show."""
+    from hadoop_3_3_6_spark.plans.queries import QUERIES
+    from hadoop_3_3_6_spark.streaming import windows
+
+    query = QUERIES["streaming_stream_stream_left_join"]
+    under_rule = _stream_rows(query(spark, sf_dir))
+    monkeypatch.setattr(windows, "_no_data_batch_can_emit", lambda stream_df, output_mode: False)
+    assert _stream_rows(query(spark, sf_dir)) != under_rule
+
+
+def test_no_data_batch_rule_keeps_timeouts_timers_and_unknown_nodes(spark, tmp_path):
+    """The rule keeps no-data batches for a state function whose timeout
+    or timer can fire in one, and for a streaming plan node it does not
+    know (Spark's default); the same functions without a timeout or
+    timer turn them off.  Decided from the plan alone: nothing runs."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+
+    from hadoop_3_3_6_spark.streaming.windows import _no_data_batch_can_emit
+
+    src = tmp_path / "src"
+    spark.range(3).select(F.col("id").alias("user_id"), F.current_timestamp().alias("ts")).write.parquet(
+        str(src)
+    )
+    events = (
+        spark.readStream.schema("user_id long, ts timestamp")
+        .parquet(str(src))
+        .withWatermark("ts", "1 hour")
+    )
+
+    def update(key, pdfs, state):
+        yield from ()
+
+    class Processor(StatefulProcessor):
+        def init(self, handle):
+            pass
+
+        def handleInputRows(self, key, rows, timerValues):
+            yield from ()
+
+        def close(self):
+            pass
+
+    def with_state(timeout):
+        return events.groupBy("user_id").applyInPandasWithState(
+            update, "user_id long", "n long", "update", timeout
+        )
+
+    def with_timers(time_mode):
+        return events.groupBy("user_id").transformWithStateInPandas(
+            Processor(), "user_id long", "Update", time_mode
+        )
+
+    assert not _no_data_batch_can_emit(with_state(GroupStateTimeout.NoTimeout), "update")
+    assert _no_data_batch_can_emit(with_state(GroupStateTimeout.EventTimeTimeout), "update")
+    assert _no_data_batch_can_emit(with_state(GroupStateTimeout.ProcessingTimeTimeout), "update")
+    assert not _no_data_batch_can_emit(with_timers("None"), "update")
+    assert _no_data_batch_can_emit(with_timers("EventTime"), "update")
+    assert _no_data_batch_can_emit(with_timers("ProcessingTime"), "update")
+    assert not _no_data_batch_can_emit(events, "append")
+    assert _no_data_batch_can_emit(events.union(events), "append")
