@@ -22,8 +22,9 @@ join, multifilewc, dbcount, teragen/terasort/teravalidate.
 
 from __future__ import annotations
 
-import functools
-from collections.abc import Callable
+import os
+import sys
+from collections.abc import Callable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,24 +62,36 @@ from hadoop_3_3_6_spark.functions.text import (
 )
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
 
 # Build-once store for construction-time artifacts (rendered corpus
-# dirs, trained models, drained stream sinks): each is a pure function
-# of its key, so it is built ONCE per process and reused by every
-# query that needs it.  _once is the only reader and writer of the
-# store.  Saved tables are not kept here: a catalog entry does not
-# carry over to a new session, so their users re-create the table
-# whenever spark.catalog.tableExists is false.
+# dirs, trained models, drained stream sinks, replica oracles and the
+# replica state they share): each is a pure function of its key, so it
+# is built ONCE per process and reused by every reader.  _once is the
+# only reader and writer of the store.  Saved tables are not kept
+# here: a catalog entry does not carry over to a new session, so their
+# users re-create the table whenever spark.catalog.tableExists is
+# false.
 _BUILT: dict[tuple, object] = {}
 
 
 def _once(key: tuple, build: Callable[[], object]):
     """Return the artifact stored under ``key``, calling ``build()``
-    exactly once per process (a build that raises stores nothing)."""
+    exactly once per process (a build that raises stores nothing; one
+    that returns None stores None)."""
     if key not in _BUILT:
         _BUILT[key] = build()
     return _BUILT[key]
+
+
+def _built_once(fn: Callable):
+    """``fn(*args)`` through _once, keyed by ``(fn.__name__, *args)``:
+    the shared replica state several oracles read.  Positional
+    arguments only, so every call spells one key one way."""
+
+    def wrapper(*args):
+        return _once((fn.__name__, *args), lambda: fn(*args))
+
+    return wrapper
 
 
 def _rendered_dir(prefix: str, sf_dir: str, render) -> str:
@@ -99,28 +112,51 @@ def _rendered_dir(prefix: str, sf_dir: str, render) -> str:
     return _once((prefix, sf_dir), build)
 
 
-# The driver's sf0.01 comparison tier: every replica oracle (a numpy or
-# pure-Python re-derivation of a trained or rendered result) is built
-# from this tier's fixture, whatever sf_dir the query itself runs on.
-_REPLICA_SF_DIR = "/root/testdata/sf0.01"
+def _degraded(name: str, why: str) -> None:
+    print(f"# WARNING: {name} oracle degraded to rows-only: {why}", file=sys.stderr)
 
 
-def _replica_oracle(name: str, table: str, build: Callable[[str], str | None]) -> str | None:
-    """``build(path)`` over the replica tier's ``table`` parquet.  A
-    missing fixture or a build that raises registers no oracle (the
-    query is compared rows-only) and says so on stderr under ``name``;
-    a build that returns None declines the oracle silently."""
-    import os
-    import sys
+class _Oracles(Mapping):
+    """The oracle registry: query name -> DuckDB SQL.  Membership,
+    ``len`` and iteration (in QUERIES order) are registration facts and
+    build nothing.  Reading an entry registered as a zero-argument
+    builder builds its SQL once, through _once; a build that raises or
+    returns None warns once under the query's name and from then on
+    reads as missing (KeyError)."""
 
-    path = os.path.join(_REPLICA_SF_DIR, f"{table}.parquet")
-    try:
-        if not os.path.exists(path):
-            raise FileNotFoundError(path)
-        return build(path)
-    except Exception as exc:
-        print(f"# WARNING: {name} oracle degraded to rows-only: {exc!r}", file=sys.stderr)
-        return None
+    def __init__(self) -> None:
+        self._registered: dict[str, str | Callable[[], str | None]] = {}
+
+    def __getitem__(self, name: str) -> str:
+        oracle = self._registered[name]
+        if callable(oracle):
+            oracle = _once(("oracle", name), lambda: self._build(name, oracle))
+            if oracle is None:
+                raise KeyError(name)
+        return oracle
+
+    @staticmethod
+    def _build(name: str, build: Callable[[], str | None]) -> str | None:
+        try:
+            sql = build()
+        except Exception as exc:
+            _degraded(name, repr(exc))
+            return None
+        if sql is None:
+            _degraded(name, "the build returned None")
+        return sql
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._registered
+
+    def __iter__(self) -> Iterator[str]:
+        return (name for name in QUERIES if name in self._registered)
+
+    def __len__(self) -> int:
+        return len(self._registered)
+
+
+ORACLES = _Oracles()
 
 
 def _values_sql(rows, columns: str) -> str:
@@ -130,19 +166,36 @@ def _values_sql(rows, columns: str) -> str:
     return f"SELECT * FROM (VALUES {values}) AS t({columns})"
 
 
-def _register(name: str, oracle: str | None = None, replica: tuple | None = None):
-    """Register query ``name`` with its oracle SQL, or with the oracle a
-    replica builds: ``replica=(table, build)``, see _replica_oracle."""
-    if replica is not None:
-        oracle = _replica_oracle(name, *replica)
+def _register(name: str, oracle: str | Callable[[], str | None] | None = None):
+    """Register query ``name`` with its oracle: DuckDB SQL text, or a
+    zero-argument builder that ORACLES calls on the entry's first read
+    (see _Oracles).  No oracle = the query is compared rows-only."""
 
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:
-            ORACLES[name] = oracle
+            ORACLES._registered[name] = oracle
         return fn
 
     return deco
+
+
+# The driver's sf0.01 comparison tier: every replica oracle (a numpy or
+# pure-Python re-derivation of a trained or rendered result) is built
+# from this tier's fixture, whatever sf_dir the query itself runs on.
+_REPLICA_SF_DIR = "/root/testdata/sf0.01"
+
+
+def _register_replica(name: str, table: str, build: Callable[[str], str | None]):
+    """Register query ``name`` with the oracle ``build(path)`` derives
+    from the replica tier's ``table`` parquet, built on first read.  A
+    missing fixture registers no oracle (the query is compared
+    rows-only) and says so on stderr under ``name`` at registration."""
+    path = os.path.join(_REPLICA_SF_DIR, f"{table}.parquet")
+    if not os.path.exists(path):
+        _degraded(name, repr(FileNotFoundError(path)))
+        return _register(name)
+    return _register(name, lambda: build(path))
 
 
 def _dec(col: str, p: int = 15, s: int = 2) -> str:
@@ -2343,7 +2396,7 @@ def _phash_fixture_array(i: int):
     return arr.astype(np.uint8)
 
 
-@functools.cache
+@_built_once
 def _phash_replica(path: str):
     """Memoized replica core shared by the batch and incremental phash
     oracles: (sorted ids, unsigned 64-bit dHash per id) — the fixture
@@ -2486,7 +2539,7 @@ def _phash_oracle(path: str) -> str:
     )
 
 
-@_register("multimodal_phash_dedup", replica=("documents", _phash_oracle))
+@_register_replica("multimodal_phash_dedup", "documents", _phash_oracle)
 def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image near-dedup — the multimodal member of the
     dedup tier: deterministic 16×16 fixtures (PPM even / PNG odd, real
@@ -2507,7 +2560,7 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phash_near_duplicates(hashes, "doc_id", "dhash", max_hamming=4, bands=4)
 
 
-@_register("multimodal_phash_incremental", replica=("documents", _phash_incremental_oracle))
+@_register_replica("multimodal_phash_incremental", "documents", _phash_incremental_oracle)
 def q_multimodal_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL image near-dedup — batch-vs-history parity with the
     text tier's dedup_incremental: the corpus side (even doc_ids) is
@@ -2648,7 +2701,7 @@ def _ivf_trained_oracle(path: str) -> str:
     """
 
 
-@_register("similarity_ivf_trained", replica=("embeddings", _ivf_trained_oracle))
+@_register_replica("similarity_ivf_trained", "embeddings", _ivf_trained_oracle)
 def q_similarity_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over Lloyd-trained centroids: distributed k-means
     (functions/similarity.train_kmeans_centroids — deterministic
@@ -2704,7 +2757,7 @@ def _spark_round(x: float, decimals: int = 6) -> float:
     )
 
 
-@functools.cache
+@_built_once
 def _pq_replica(path: str):
     """Shared pure-numpy replica of the distributed PQ pipeline's
     training + encoding stages: per-subspace Lloyd with the same md5
@@ -2787,7 +2840,7 @@ def _pq_oracle(path: str) -> str:
     return _adc_values_sql(_adc_replica_rows(path, _PQ_PROBE_MAX))
 
 
-@functools.cache
+@_built_once
 def _coarse_replica(path: str):
     """Memoized numpy replica of the coarse IVF stage (the
     assign_clusters contract): cosine scores against the
@@ -2814,7 +2867,7 @@ def _coarse_replica(path: str):
     return ids, vecs, cent_rows, id_to_idx, cs
 
 
-@functools.cache
+@_built_once
 def _ivf_probe_cells(path: str) -> dict:
     """The IVF list rule over the coarse replica, in cell-index space:
     'assign' -> every vector's argmax cell (first occurrence = lower
@@ -3004,7 +3057,7 @@ def _opq_oracle(path: str) -> str:
     return _adc_values_sql(_adc_rows_from_arrays(ids, rv, barr, enc, _PQ_PROBE_MAX))
 
 
-@_register("similarity_pq_topk", replica=("embeddings", _pq_oracle))
+@_register_replica("similarity_pq_topk", "embeddings", _pq_oracle)
 def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al. TPAMI 2011 — the FAISS
     IVF-PQ architecture): per-subspace codebooks trained by the
@@ -3030,7 +3083,7 @@ def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(emb, books, "vec_id", "embedding", k=_PQ_K, probes=probes)
 
 
-@_register("similarity_ivf_pq_topk", replica=("embeddings", _ivf_pq_oracle))
+@_register_replica("similarity_ivf_pq_topk", "embeddings", _ivf_pq_oracle)
 def q_similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPOSED IVF-PQ — the architecture FAISS ships as IndexIVFPQ
     (Jégou et al. TPAMI 2011 §IV) and the structural fix for the full
@@ -3060,7 +3113,7 @@ def q_similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("similarity_ivf_pq_refined_topk", replica=("embeddings", _ivf_pq_refined_oracle))
+@_register_replica("similarity_ivf_pq_refined_topk", "embeddings", _ivf_pq_refined_oracle)
 def q_similarity_ivf_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage refined ANN — FAISS's IndexRefineFlat deployment
     pattern and the capstone of the compressed ladder: the list-pruned
@@ -3088,7 +3141,7 @@ def q_similarity_ivf_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@_register("similarity_ivf_pq_residual_topk", replica=("embeddings", _ivf_pq_residual_oracle))
+@_register_replica("similarity_ivf_pq_residual_topk", "embeddings", _ivf_pq_residual_oracle)
 def q_similarity_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESIDUAL IVF-PQ — FAISS IndexIVFPQ's shipping default
     (by_residual=true; Jégou et al. TPAMI 2011 §IV-A eq.(26)): the PQ
@@ -3120,7 +3173,7 @@ def q_similarity_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-@_register("similarity_opq_topk", replica=("embeddings", _opq_oracle))
+@_register_replica("similarity_opq_topk", "embeddings", _opq_oracle)
 def q_similarity_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ ANN (Ge et al. CVPR 2013 — FAISS's OPQMatrix + PQ tier):
     an orthogonal rotation trained to minimize PQ reconstruction error
@@ -4434,7 +4487,7 @@ def _qc_sig_idx(dot: int) -> int:
     return min(max(-q if a < 0 else q, 0), 511)
 
 
-@functools.cache
+@_built_once
 def _qc_replica_state(path: str, train_even_only: bool):
     """Shared replica core for the classifier oracles: an INDEPENDENT
     python re-derivation of the whole loop — md5-ring feature hashing
@@ -4678,7 +4731,7 @@ def _pretraining_full_oracle(path: str) -> str:
     """
 
 
-@_register("pipeline_pretraining_full", replica=("documents", _pretraining_full_oracle))
+@_register_replica("pipeline_pretraining_full", "documents", _pretraining_full_oracle)
 def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE CAPSTONE: the full pretraining corpus pipeline a 100-TB user
     ships, as a JobControl DAG across MATERIALIZING parquet boundaries
@@ -5274,7 +5327,7 @@ def _quality_classifier_eval_oracle(path: str) -> str:
     )
 
 
-@_register("pipeline_quality_classifier", replica=("documents", _quality_classifier_oracle))
+@_register_replica("pipeline_quality_classifier", "documents", _quality_classifier_oracle)
 def q_pipeline_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quality-CLASSIFIER stage of the CCNet / LLaMA pretraining
     recipes (the fasttext-supervised 'gold vs crawl' model the rule
@@ -5345,7 +5398,7 @@ def _qc_weights(spark: SparkSession, sf_dir: str, even_only: bool) -> list:
     return _once(("qc_weights", sf_dir, even_only), train)
 
 
-@_register("pipeline_classifier_eval", replica=("documents", _quality_classifier_eval_oracle))
+@_register_replica("pipeline_classifier_eval", "documents", _quality_classifier_eval_oracle)
 def q_pipeline_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HELD-OUT evaluation of the quality classifier — the train/test
     hygiene a production quality gate ships with: train on the even-id
@@ -5445,9 +5498,8 @@ def _quality_classifier_calibration_oracle(path: str) -> str:
     )
 
 
-@_register(
-    "pipeline_classifier_calibration",
-    replica=("documents", _quality_classifier_calibration_oracle),
+@_register_replica(
+    "pipeline_classifier_calibration", "documents", _quality_classifier_calibration_oracle
 )
 def q_pipeline_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram for the quality classifier (VERDICT r11
@@ -8666,7 +8718,7 @@ def q_typedbytes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     format itself, not just the values."""
     from hadoop_3_3_6_spark.sources.typedbytes import (
         decode_typed_bytes,
-        read_typed_bytes_seqfile,
+        read_raw_sequence_file,
         typed_bytes_frames,
         write_typed_bytes_seqfile,
     )
@@ -8680,7 +8732,7 @@ def q_typedbytes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_typed_bytes_seqfile(frames, d)
 
     out = _rendered_dir("typedbytes_", sf_dir, render)
-    back = read_typed_bytes_seqfile(spark, out)
+    back = read_raw_sequence_file(spark, out)
 
     def dec(batches):
         import pandas as pd
@@ -9451,7 +9503,7 @@ def q_timeseries_interpolate_hourly(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@functools.cache
+@_built_once
 def _bpe_replica_merges(path: str) -> list:
     """The replica merge table shared by both BPE oracles, derived once
     per process: word frequencies via DuckDB SQL over the parquet
@@ -9499,7 +9551,7 @@ def _bpe_train_oracle(path: str) -> str | None:
     )
 
 
-@_register("tokenizer_bpe_train", replica=("documents", _bpe_train_oracle))
+@_register_replica("tokenizer_bpe_train", "documents", _bpe_train_oracle)
 def q_tokenizer_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING (functions/bpe.py — learning the merge
     table from the corpus, the step beyond text.token_counts'
@@ -9707,7 +9759,7 @@ def _trained_unigram(spark: SparkSession, sf_dir: str) -> list:
     ))
 
 
-@_register("tokenizer_unigram_apply", replica=("documents", _unigram_oracle))
+@_register_replica("tokenizer_unigram_apply", "documents", _unigram_oracle)
 def q_tokenizer_unigram_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer (Kudo 2018 — SentencePiece's unigram
     model, hard-EM variant) trained on the corpus and applied to it —
@@ -9730,7 +9782,7 @@ def q_tokenizer_unigram_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apply_unigram(docs, pieces, "text", "doc_id", modulus=_UNI_MOD)
 
 
-@_register("tokenizer_bpe_apply", replica=("documents", _bpe_apply_oracle))
+@_register_replica("tokenizer_bpe_apply", "documents", _bpe_apply_oracle)
 def q_tokenizer_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer APPLICATION (functions/bpe.apply_bpe): encode the
     corpus with the merge table learned by tokenizer_bpe_train (same
@@ -11084,11 +11136,12 @@ def _driver_order(names: list[str], rounds: dict[str, int]) -> list[str]:
 
 
 def _apply_driver_order() -> None:
+    """Reorder QUERIES by the driver order (ORACLES iterates in QUERIES
+    order, so it follows)."""
     order = _driver_order(list(QUERIES), _driver_verified_rounds())
-    for registry in (QUERIES, ORACLES):
-        snapshot = dict(registry)
-        registry.clear()
-        registry.update((n, snapshot[n]) for n in order if n in snapshot)
+    snapshot = dict(QUERIES)
+    QUERIES.clear()
+    QUERIES.update((n, snapshot[n]) for n in order)
 
 
 _apply_driver_order()

@@ -302,13 +302,3 @@ def estimate_input_bytes(df: DataFrame) -> int:
         total += fs.getFileStatus(path).getLen()
     return total
 
-
-def tune_shuffle_partitions_for(df: DataFrame, **kwargs) -> int:
-    """Set ``spark.sql.shuffle.partitions`` for the given frame's input
-    size (sized_shuffle_partitions over estimate_input_bytes) and
-    return the chosen count.  Runtime-settable, so call before the
-    action that shuffles; AQE still coalesces downward at runtime."""
-    spark = df.sparkSession
-    n = sized_shuffle_partitions(spark, estimate_input_bytes(df), **kwargs)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return n

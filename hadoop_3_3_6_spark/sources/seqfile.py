@@ -1,6 +1,8 @@
-"""SequenceFile SINK as a Python DataSource with Arrow batches — the
-high-throughput replacement for the pickled-RDD legacy path in
-``containers.write_sequence_file``.
+"""The uncompressed SequenceFile v6 format in one module: the SINK as a
+Python DataSource with Arrow batches — the high-throughput replacement
+for the pickled-RDD legacy path in ``containers.write_sequence_file``
+— and its inverse, the raw record walker (``walk_seq_records``) that
+``typedbytes.read_raw_sequence_file`` runs per file.
 
 The reference's SequenceFile.Writer (hadoop-common .../io/
 SequenceFile.java:847) writes the public container format: SEQ magic +
@@ -30,6 +32,7 @@ from __future__ import annotations
 
 import struct
 import uuid
+from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceArrowWriter
 
@@ -61,6 +64,22 @@ def _vint(i: int) -> bytes:
     for idx in range(ln - 1, -1, -1):
         out.append((i >> (8 * idx)) & 0xFF)
     return bytes(out)
+
+
+def _read_vint(data: bytes, pos: int) -> tuple[int, int]:
+    """WritableUtils.readVInt (_vint inverted)."""
+    first = struct.unpack_from("b", data, pos)[0]
+    pos += 1
+    if -112 <= first:
+        return first, pos
+    ln = -(first + 120) if first < -120 else -(first + 112)
+    v = 0
+    for _ in range(ln):
+        v = (v << 8) | data[pos]
+        pos += 1
+    if first < -120:
+        v = ~v
+    return v, pos
 
 
 def _enc_text(v) -> bytes:
@@ -106,6 +125,55 @@ def encode_sequence_file_header(key_cls: str, val_cls: str, sync: bytes) -> byte
     out += struct.pack(">i", 0)  # metadata: zero TreeMap entries
     out += sync
     return bytes(out)
+
+
+def walk_seq_records(data: bytes) -> Iterator[tuple[bytes, bytes]]:
+    """Walk one uncompressed SEQ v6 file's raw records (the pure
+    record framing: int32 record length / int32 key length / key bytes
+    / value bytes, with ``-1`` + 16-byte sync escapes between records
+    — SequenceFile.java's Writer.sync layout, the same framing the
+    sink emits).  Yields (key, value) raw payloads; BytesWritable-
+    framed payloads (incl. TypedBytesWritable) are unwrapped to the
+    payload like nextRawValue's ValueBytes."""
+    if data[:4] != b"SEQ\x06":
+        raise ValueError("not a SEQ v6 file")
+    pos = 4
+    kcls, pos = _read_vint(data, pos)
+    kcls_name = data[pos : pos + kcls].decode()
+    pos += kcls
+    vcls, pos = _read_vint(data, pos)
+    vcls_name = data[pos : pos + vcls].decode()
+    pos += vcls
+    if data[pos] or data[pos + 1]:
+        raise ValueError("compressed SequenceFiles unsupported here")
+    pos += 2
+    (nmeta,) = struct.unpack_from(">i", data, pos)
+    if nmeta:
+        raise ValueError("metadata TreeMap unsupported here")
+    pos += 4
+    sync = data[pos : pos + 16]
+    pos += 16
+    # TypedBytesWritable IS a BytesWritable, so one suffix test covers
+    # both framings
+    bytes_framed = kcls_name.endswith("BytesWritable") and vcls_name.endswith(
+        "BytesWritable"
+    )
+    n = len(data)
+    while pos < n:
+        (rec_len,) = struct.unpack_from(">i", data, pos)
+        if rec_len == -1:  # sync escape
+            if data[pos + 4 : pos + 20] != sync:
+                raise ValueError("sync marker mismatch")
+            pos += 20
+            continue
+        (key_len,) = struct.unpack_from(">i", data, pos + 4)
+        pos += 8
+        kb = data[pos : pos + key_len]
+        vb = data[pos + key_len : pos + rec_len]
+        pos += rec_len
+        if bytes_framed:  # strip the BytesWritable int32 length
+            kb, vb = kb[4:], vb[4:]
+        yield bytes(kb), bytes(vb)
 
 
 class SeqFileArrowWriter(DataSourceArrowWriter):

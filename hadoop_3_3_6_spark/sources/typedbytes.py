@@ -35,34 +35,13 @@ from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_3_3_6_spark.sources.seqfile import _read_vint, _vint, walk_seq_records
+
 # Type.java:25-43
 BYTES, BYTE, BOOL, INT, LONG, FLOAT, DOUBLE, STRING, VECTOR, LIST, MAP = range(11)
 MARKER = 255
 
 TYPED_BYTES_WRITABLE = "org.apache.hadoop.typedbytes.TypedBytesWritable"
-
-
-def _vint(i: int) -> bytes:
-    """WritableUtils.writeVInt — reuse the SequenceFile sink's codec."""
-    from hadoop_3_3_6_spark.sources.seqfile import _vint as enc
-
-    return enc(i)
-
-
-def _read_vint(data: bytes, pos: int) -> tuple[int, int]:
-    """WritableUtils.readVInt (the sink's encoder, inverted)."""
-    first = struct.unpack_from("b", data, pos)[0]
-    pos += 1
-    if -112 <= first:
-        return first, pos
-    ln = -(first + 120) if first < -120 else -(first + 112)
-    v = 0
-    for _ in range(ln):
-        v = (v << 8) | data[pos]
-        pos += 1
-    if first < -120:
-        v = ~v
-    return v, pos
 
 
 def encode_typed_bytes(obj: Any) -> bytes:
@@ -395,55 +374,6 @@ def pipe_typed_bytes(
     return df.mapInPandas(run, "key binary, value binary")
 
 
-def walk_seq_records(data: bytes) -> Iterator[tuple[bytes, bytes]]:
-    """Walk one uncompressed SEQ v6 file's raw records (the pure
-    record framing: int32 record length / int32 key length / key bytes
-    / value bytes, with ``-1`` + 16-byte sync escapes between records
-    — SequenceFile.java's Writer.sync layout, the same framing the
-    sink emits).  Yields (key, value) raw payloads; BytesWritable-
-    framed payloads (incl. TypedBytesWritable) are unwrapped to the
-    payload like nextRawValue's ValueBytes."""
-    if data[:4] != b"SEQ\x06":
-        raise ValueError("not a SEQ v6 file")
-    pos = 4
-    kcls, pos = _read_vint(data, pos)
-    kcls_name = data[pos : pos + kcls].decode()
-    pos += kcls
-    vcls, pos = _read_vint(data, pos)
-    vcls_name = data[pos : pos + vcls].decode()
-    pos += vcls
-    if data[pos] or data[pos + 1]:
-        raise ValueError("compressed SequenceFiles unsupported here")
-    pos += 2
-    (nmeta,) = struct.unpack_from(">i", data, pos)
-    if nmeta:
-        raise ValueError("metadata TreeMap unsupported here")
-    pos += 4
-    sync = data[pos : pos + 16]
-    pos += 16
-    # TypedBytesWritable IS a BytesWritable, so one suffix test covers
-    # both framings
-    bytes_framed = kcls_name.endswith("BytesWritable") and vcls_name.endswith(
-        "BytesWritable"
-    )
-    n = len(data)
-    while pos < n:
-        (rec_len,) = struct.unpack_from(">i", data, pos)
-        if rec_len == -1:  # sync escape
-            if data[pos + 4 : pos + 20] != sync:
-                raise ValueError("sync marker mismatch")
-            pos += 20
-            continue
-        (key_len,) = struct.unpack_from(">i", data, pos + 4)
-        pos += 8
-        kb = data[pos : pos + key_len]
-        vb = data[pos + key_len : pos + rec_len]
-        pos += rec_len
-        if bytes_framed:  # strip the BytesWritable int32 length
-            kb, vb = kb[4:], vb[4:]
-        yield bytes(kb), bytes(vb)
-
-
 def read_raw_sequence_file(spark: SparkSession, path: str) -> DataFrame:
     """SequenceFileAsBinaryInputFormat the way the reference actually
     does it (MRC/mapreduce/lib/input/SequenceFileAsBinaryRecordReader:
@@ -481,9 +411,3 @@ def read_raw_sequence_file(spark: SparkSession, path: str) -> DataFrame:
             yield pd.DataFrame({"key": keys, "value": vals})
 
     return files.select("content").mapInPandas(parse, "key binary, value binary")
-
-
-def read_typed_bytes_seqfile(spark: SparkSession, path: str) -> DataFrame:
-    """Read a ``loadtb``-shaped SequenceFile back to decoded frames:
-    (key, value) binary typed-bytes frames via the raw reader."""
-    return read_raw_sequence_file(spark, path)

@@ -867,8 +867,7 @@ def test_shuffle_partition_sizing(spark, sf_dir):
     large inputs bounded by min(128 MB, execution-memory-per-task /
     sort_inflation) per partition — the round-7 TeraSort lesson (150
     parts = 238 s vs 416 = 88 s on the same 20 GB sort) made engine
-    behavior; estimate_input_bytes matches the on-disk listing; tune_
-    applies the runtime conf."""
+    behavior; estimate_input_bytes matches the on-disk listing."""
     import glob
     import math
     import os
@@ -878,7 +877,6 @@ def test_shuffle_partition_sizing(spark, sf_dir):
         execution_memory_per_task,
         load_table,
         sized_shuffle_partitions,
-        tune_shuffle_partitions_for,
     )
 
     cores = spark.sparkContext.defaultParallelism
@@ -907,13 +905,6 @@ def test_shuffle_partition_sizing(spark, sf_dir):
         if os.path.isfile(p)
     )
     assert estimate_input_bytes(li) == expect > 0
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        n = tune_shuffle_partitions_for(li)
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == n == 2 * cores
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_ivf_pq_residual_recall_floor(spark, sf_dir):

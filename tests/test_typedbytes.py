@@ -154,11 +154,11 @@ def test_walk_seq_records_sync_escapes():
         _enc_bytes,
         _enc_text,
         encode_sequence_file_header,
+        walk_seq_records,
     )
     from hadoop_3_3_6_spark.sources.typedbytes import (
         TYPED_BYTES_WRITABLE,
         encode_typed_bytes,
-        walk_seq_records,
     )
 
     sync = uuid.uuid4().bytes
