@@ -4955,9 +4955,7 @@ def q_pipeline_pretraining_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             return spark.read.parquet(f"{base}/s3_exact")
 
         def j_spans(deps) -> DataFrame:
-            out = apply_span_dedup(
-                deps["exact"], "text", "doc_id", n=_PRETRAIN_SPAN_N, max_df=1000
-            ).select(
+            out = apply_span_dedup(deps["exact"], "text", "doc_id", n=_PRETRAIN_SPAN_N).select(
                 "doc_id", F.col("clean_text").alias("text"), "kept_tokens"
             )
             out.write.mode("overwrite").parquet(f"{base}/s4_spans")
@@ -7109,20 +7107,18 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-substring dedup pass would cut
     (functions/dedup.duplicated_spans).
 
-    Registered WITH the skew guard (``max_df=1000``): the guarded form
-    takes the inverted-index aggregate+join path whose probe join is
-    AQE-skew-splittable, instead of the unbounded per-shingle window a
-    runaway boilerplate shingle would pile onto one partition at scale
-    (reference skew concern: hadoop-mapreduce-client-core
-    .../lib/partition/InputSampler.java:97).  Semantics are
-    form-independent — EVERY duplicated shingle marks its span,
-    including boilerplate hotter than the cap (the r8 review fixed the
-    earlier form that cut hot shingles out, erasing exactly the
+    The >=2-docs flag is an inverted-index aggregate + join whose
+    probe join is AQE-skew-splittable; no unbounded per-shingle window
+    exists for a runaway boilerplate shingle to pile onto one
+    partition at scale (reference skew concern:
+    hadoop-mapreduce-client-core .../lib/partition/InputSampler.java:97).
+    EVERY duplicated shingle marks its span, boilerplate included (an
+    earlier form cut hot shingles out, erasing exactly the
     most-duplicated spans); the oracle's ``HAVING >= 2`` mirrors it."""
     from hadoop_3_3_6_spark.functions.dedup import duplicated_spans
 
     docs = load_table(spark, "documents", sf_dir)
-    return duplicated_spans(docs, "text", "doc_id", n=3, max_df=1000)
+    return duplicated_spans(docs, "text", "doc_id", n=3)
 
 
 @_register(
@@ -7170,20 +7166,19 @@ def q_dedup_spans_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     its corpus-duplicated token runs removed — the actual OUTPUT of
     Lee et al. 2022's exact-substring dedup pass, closing the
     dedup_spans loop the way compact_files closes storage_file_profile
-    (functions/dedup.apply_span_dedup).  Same shingle size and skew
-    guard as the registered dedup_spans (n=3, max_df=1000 — semantics
-    are form-independent).  Per doc: the few runs fold to one array
-    and join back on the id (id-sized exchange); the rewrite is one
-    generator-barriered HOF filter over word positions.  The oracle
-    performs the same surgery relationally (positions anti-joined
-    against span coverage, string_agg in position order) — an
-    independent formulation, so a green hash certifies the span table
-    AND the rewrite.  Conservation (kept + cut = total words; cut =
+    (functions/dedup.apply_span_dedup).  Same shingle size and span
+    table as the registered dedup_spans (n=3).  Per doc: the few runs
+    fold to one array and join back on the id (id-sized exchange); the
+    rewrite is one generator-barriered HOF filter over word positions.
+    The oracle performs the same surgery relationally (positions
+    anti-joined against span coverage, string_agg in position order) —
+    an independent formulation, so a green hash certifies the span
+    table AND the rewrite.  Conservation (kept + cut = total words; cut =
     sum of run_tokens) is pinned by a unit test."""
     from hadoop_3_3_6_spark.functions.dedup import apply_span_dedup
 
     docs = load_table(spark, "documents", sf_dir)
-    return apply_span_dedup(docs, "text", "doc_id", n=3, max_df=1000)
+    return apply_span_dedup(docs, "text", "doc_id", n=3)
 
 
 @_register(
@@ -7742,19 +7737,17 @@ def q_dedup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-granularity exact-substring-dedup signal (inverted-index
     join, never all-pairs; functions/dedup.duplicated_span_fraction).
 
-    Registered WITH the skew guard (``max_df=1000``), same rationale
-    as ``dedup_spans``: the per-shingle aggregate streams complete-mode
-    over one exchange and no unbounded shingle window exists to pile a
-    runaway boilerplate shingle onto one partition.  Semantics are
-    form-independent — shingles hotter than the cap still count in
-    BOTH the duplicated and total tallies (duplicated by definition;
-    the r8 review fixed the earlier form that dropped them, which
-    reported ~0.0 for exactly the boilerplate-heavy docs the signal
-    exists to flag)."""
+    Same shape as ``dedup_spans``: the per-shingle aggregate streams
+    complete-mode over one exchange, which the join-back reuses, and
+    no unbounded shingle window exists to pile a runaway boilerplate
+    shingle onto one partition.  Boilerplate shingles count in BOTH
+    the duplicated and total tallies (duplicated by definition; an
+    earlier form dropped them and reported ~0.0 for exactly the
+    boilerplate-heavy docs the signal exists to flag)."""
     from hadoop_3_3_6_spark.functions.dedup import duplicated_span_fraction
 
     docs = load_table(spark, "documents", sf_dir)
-    return duplicated_span_fraction(docs, "text", "doc_id", n=3, max_df=1000)
+    return duplicated_span_fraction(docs, "text", "doc_id", n=3)
 
 
 @_register(

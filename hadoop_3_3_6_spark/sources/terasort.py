@@ -12,7 +12,8 @@ hadoop-mapreduce-examples/src/main/java/org/apache/hadoop/examples/terasort/):
 Spark-first: ``spark.range(n)`` is the range source; deterministic
 sha2-derived ASCII bytes replace the reference's PRNG; ``orderBy`` is
 the sampled range-partitioned total sort; validation checks both the
-sort invariant (max(key) per partition <= min(key) of the next) and
+sort invariant (every record in order, and the last key of each input
+split or partition <= the first key of the next) and
 checksum preservation (sum of crc32 over records is sort-invariant).
 """
 
@@ -85,17 +86,26 @@ def terachecksum(df: DataFrame) -> int:
 def teravalidate(sorted_df: DataFrame, input_checksum: int) -> Row:
     """TeraValidate: (1) keys globally non-decreasing, checked the way
     TeraValidate.java:63-126 checks its output files — EVERY record in
-    partition-iteration order (one Arrow-batched fold per partition
-    carrying first/last/sorted across batch boundaries; pandas'
-    lexicographic compare equals Spark's ordering for both key kinds —
-    UTF8 order on ASCII string keys, unsigned-byte order on python
-    ``bytes`` for the r12 binary gensort records, whose boundary keys
-    cross back hex-encoded since hex is order-preserving), then a tiny
-    driver-side scan over the per-partition boundaries; (2) checksum
-    equality (content preservation).  Round-10 review fix: the previous form trusted
-    within-partition order ("guaranteed by the sort") — true of
-    Spark's sort operator, but the reference's validator checks the
-    records, not the operator contract, and so does this one now."""
+    iteration order (one Arrow-batched fold per partition carrying
+    first/last/sorted across batch boundaries; pandas' lexicographic
+    compare equals Spark's ordering for both key kinds — UTF8 order on
+    ASCII string keys, unsigned-byte order on python ``bytes`` for the
+    r12 binary gensort records, whose boundary keys cross back
+    hex-encoded since hex is order-preserving), then a tiny
+    driver-side scan over the segment boundaries; (2) checksum
+    equality (content preservation).  Within-partition order is
+    checked, not trusted as "guaranteed by the sort": true of Spark's
+    sort operator, but the reference's validator checks the records,
+    not the operator contract, and so does this one.
+
+    A segment is one input file split (``input_file_name()``,
+    ``input_file_block_start()``), ordered by file name then block
+    start — TeraValidate's per-file begin/end records.  Output read
+    back from files must be checked in part-file order: Spark packs
+    small files into read partitions by size, not by name, so
+    partition order can interleave them.  A frame with no input file
+    (the sort's own output) is one segment per partition, in
+    partition order."""
     from collections.abc import Iterator
 
     import pandas as pd
@@ -104,54 +114,53 @@ def teravalidate(sorted_df: DataFrame, input_checksum: int) -> Row:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        first = last = None
-        ok = True
-        n = 0
+        segs: dict[tuple[str, int], list] = {}  # split -> [first, last, ok, n]
         for pdf in batches:
-            keys = pdf["key"]
-            if len(keys) == 0:
-                continue
-            if first is None:
-                first = keys.iloc[0]
-            if last is not None and keys.iloc[0] < last:
-                ok = False
-            if not keys.is_monotonic_increasing:
-                ok = False
-            last = keys.iloc[-1]
-            n += len(keys)
-        if n:
-            if isinstance(first, (bytes, bytearray)):
-                # binary keys: the Arrow return column is string, and
-                # hex preserves unsigned-byte order for the driver's
-                # boundary compare
-                first, last = bytes(first).hex(), bytes(last).hex()
+            for split, part in pdf.groupby(["file", "start"], sort=False, dropna=False):
+                keys = part["key"]
+                seg = segs.get(split)
+                if seg is None:
+                    segs[split] = [keys.iloc[0], keys.iloc[-1], keys.is_monotonic_increasing, len(keys)]
+                    continue
+                seg[2] = seg[2] and keys.iloc[0] >= seg[1] and keys.is_monotonic_increasing
+                seg[1] = keys.iloc[-1]
+                seg[3] += len(keys)
+        if segs:
+            rows = []
+            for (file, start), (first, last, ok, n) in segs.items():
+                if isinstance(first, (bytes, bytearray)):
+                    # binary keys: the Arrow return column is string, and
+                    # hex preserves unsigned-byte order for the driver's
+                    # boundary compare
+                    first, last = bytes(first).hex(), bytes(last).hex()
+                rows.append((file, start, pid, first, last, n, bool(ok)))
             yield pd.DataFrame(
-                {
-                    "pid": [pid],
-                    "first_key": [first],
-                    "last_key": [last],
-                    "rows": [n],
-                    "locally_sorted": [ok],
-                }
+                rows, columns=["file", "start", "pid", "first_key", "last_key", "rows", "locally_sorted"]
             )
 
-    part_stats = sorted(
-        sorted_df.select("key").mapInPandas(
-            check,
-            "pid int, first_key string, last_key string, rows long, locally_sorted boolean",
-        ).collect(),
-        key=lambda r: r["pid"],
+    splits = sorted_df.select(
+        "key",
+        F.input_file_name().alias("file"),
+        F.expr("input_file_block_start()").alias("start"),
     )
-    globally_sorted = all(r["locally_sorted"] for r in part_stats)
+    seg_stats = sorted(
+        splits.mapInPandas(
+            check,
+            "file string, start long, pid int, first_key string, last_key string, "
+            "rows long, locally_sorted boolean",
+        ).collect(),
+        key=lambda r: (r["file"], r["start"], r["pid"]),
+    )
+    globally_sorted = all(r["locally_sorted"] for r in seg_stats)
     prev_last = None
-    for r in part_stats:
+    for r in seg_stats:
         if prev_last is not None and r["first_key"] < prev_last:
             globally_sorted = False
             break
         prev_last = r["last_key"]
     out_checksum = terachecksum(sorted_df)
     return Row(
-        rows=sum(r["rows"] for r in part_stats),
+        rows=sum(r["rows"] for r in seg_stats),
         globally_sorted=globally_sorted,
         checksum_match=bool(out_checksum == input_checksum),
     )

@@ -62,13 +62,12 @@ def test_q1_partial_aggregation(spark, sf_dir):
 
 
 def test_span_fraction_guarded_no_shingle_window_and_pruning(spark, sf_dir):
+    """The >=2-docs flag comes from a complete-mode per-shingle
+    aggregate over a repartition exchange — NO window over the shingle
+    partition may exist (a runaway boilerplate shingle would pile one
+    partition); exchange reuse (single scan at runtime) is asserted in
+    test_guarded_spans_reuse_one_exchange."""
     plan = plan_of(spark, sf_dir, "dedup_span_fraction")
-    # the REGISTERED form carries the max_df hot-shingle guard: the
-    # >=2-docs flag comes from a complete-mode per-shingle aggregate
-    # over a repartition exchange — NO window over the shingle
-    # partition may exist (a runaway boilerplate shingle would pile
-    # one partition); exchange reuse (single scan at runtime) is
-    # asserted in test_guarded_spans_reuse_one_exchange
     assert "Window" not in plan
     import re
 
@@ -1062,8 +1061,8 @@ def test_bucketed_join_rebuilds_after_catalog_loss(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ["dedup_spans", "dedup_spans_apply", "dedup_span_fraction"])
 def test_guarded_spans_reuse_one_exchange(spark, sf_dir, name):
-    """The max_df-guarded span queries must share ONE shuffle stage
-    between the per-shingle aggregate and the probe join
+    """The span queries must share ONE shuffle stage between the
+    per-shingle aggregate and the probe join
     (ReusedExchange in the final adaptive plan): the corpus is
     scanned/tokenized/exploded exactly once.  The reuse pin (companion
     max(pos) aggregate + always-true filter) keeps the

@@ -195,35 +195,31 @@ def test_duplicated_spans_islands(spark):
     assert 2 not in runs
 
 
-def test_duplicated_span_fraction_and_max_df(spark):
-    df = _docs(
-        spark,
-        [
-            "a b c d e",  # shares "a b c"/"b c d" with doc 1
-            "a b c d x",
-            "p q r s t",  # unique spans
-            "zz",  # too short for 3-grams
-        ],
-    )
-    rows = {r.doc_id: r for r in duplicated_span_fraction(df, "text", "doc_id", n=3).collect()}
+def test_duplicated_span_fraction_counts_every_duplicated_shingle(spark):
+    texts = [
+        "a b c d e",  # shares "a b c"/"b c d" with doc 1
+        "a b c d x",
+        "p q r s t",  # unique spans
+        "zz",  # too short for 3-grams
+    ]
+    rows = {r.doc_id: r for r in duplicated_span_fraction(_docs(spark, texts), "text", "doc_id", n=3).collect()}
     assert rows[0].total_shingles == 3 and rows[0].dup_shingles == 2
     assert rows[0].dup_span_fraction == round(2 / 3, 6)
     assert rows[1].dup_shingles == 2
     assert rows[2].dup_shingles == 0 and rows[2].dup_span_fraction == 0.0
     assert rows[3].total_shingles == 0 and rows[3].dup_span_fraction == 0.0
 
-    # max_df selects the aggregate+join FORM but never changes the
-    # semantics: shingles hotter than the cap are duplicated by
-    # definition and still count in both tallies (the r8 review fixed
-    # the earlier form that cut them, reporting ~0.0 for exactly the
+    # a shingle in EVERY document ("h1 h2 h3") is duplicated by
+    # definition and counts in both tallies, however hot (an earlier
+    # form cut hot shingles, reporting ~0.0 for exactly the
     # boilerplate-heavy docs the signal exists to flag)
-    guarded = {
-        r.doc_id: r
-        for r in duplicated_span_fraction(df, "text", "doc_id", n=3, max_df=1).collect()
+    hot = {
+        r.doc_id: (r.total_shingles, r.dup_shingles, r.dup_span_fraction)
+        for r in duplicated_span_fraction(
+            _docs(spark, [t + " h1 h2 h3" for t in texts]), "text", "doc_id", n=3
+        ).collect()
     }
-    assert {i: (r.total_shingles, r.dup_shingles) for i, r in guarded.items()} == {
-        i: (r.total_shingles, r.dup_shingles) for i, r in rows.items()
-    }
+    assert hot == {0: (6, 3, 0.5), 1: (6, 3, 0.5), 2: (6, 1, round(1 / 6, 6)), 3: (2, 1, 0.5)}
 
 
 def test_minhash_verify_stage_filters_candidates(spark, sf_dir):
@@ -488,7 +484,7 @@ _WORD_EDGE_DOCS = [
         ("text", lambda m, df: m.bigram_lm_score(df)),
         ("text", lambda m, df: m.gopher_quality_rules(df)),
         ("dedup", lambda m, df: m.duplicated_span_fraction(df, n=3)),
-        ("dedup", lambda m, df: m.duplicated_spans(df, n=3, max_df=1000)),
+        ("dedup", lambda m, df: m.duplicated_spans(df, n=3)),
         ("sampling", lambda m, df: m.importance_weights(df, F.col("doc_id") % 2 == 0)),
     ],
     ids=[
@@ -515,6 +511,31 @@ def test_let_bound_words_differential(spark, monkeypatch, module, op):
     assert splits(old) > splits(new)  # the inline form re-splits the text
     assert old.count() == new.count() > 0
     assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
+
+
+_BOILERPLATE_DOCS = [
+    f"home about contact us {body} copyright all rights reserved"
+    for body in ["alpha beta gamma delta", "alpha beta gamma epsilon zeta", "one two three", "", "alpha beta"]
+] + ["unique words only here please", "copyright all rights reserved", "home about contact"]
+
+
+@pytest.mark.parametrize("texts", [_WORD_EDGE_DOCS, _BOILERPLATE_DOCS], ids=["word_edges", "boilerplate"])
+def test_span_fraction_agrees_with_spans(spark, texts):
+    """The two span operators mark the same shingle instances: per
+    document, duplicated_span_fraction's dup_shingles equals the
+    number of shingle positions inside its duplicated_spans runs (a
+    run of run_tokens tokens holds run_tokens - n + 1 shingles)."""
+    from hadoop_3_3_6_spark.functions.dedup import duplicated_spans
+
+    n = 3
+    df = _docs(spark, texts)
+    frac = {r.doc_id: r.dup_shingles for r in duplicated_span_fraction(df, "text", "doc_id", n=n).collect()}
+    in_runs = {i: 0 for i in frac}
+    for r in duplicated_spans(df, "text", "doc_id", n=n).collect():
+        in_runs[r.doc_id] += r.run_tokens - n + 1
+    assert len(frac) == len(texts)
+    assert any(frac.values())  # the corpus has duplicated spans to compare
+    assert frac == in_runs
 
 
 def test_sampling_null_edges(spark):

@@ -248,7 +248,7 @@ def test_diversity_sample_invariants(spark, sf_dir):
 def test_simhash_near_duplicates_close(spark):
     """Property: near-identical documents get hamming-close simhashes,
     unrelated documents don't."""
-    from hadoop_3_3_6_spark.functions.dedup import hamming_distance, simhash
+    from hadoop_3_3_6_spark.functions.dedup import simhash
 
     docs = spark.createDataFrame(
         [
@@ -261,7 +261,7 @@ def test_simhash_near_duplicates_close(spark):
     fp = {r["doc_id"]: r["simhash"] for r in simhash(docs, "text", "doc_id").collect()}
     df = spark.createDataFrame(
         [(fp[1], fp[2]), (fp[1], fp[3])], "a long, b long"
-    ).select(hamming_distance("a", "b").alias("d"))
+    ).select(F.bit_count(F.expr("a ^ b")).alias("d"))
     near, far = [r["d"] for r in df.collect()]
     assert near < far
     assert near <= 16
@@ -1250,6 +1250,59 @@ def test_teravalidate_detects_out_of_order_records(spark):
     bad = teravalidate(scrambled, cksum)
     assert not bad.globally_sorted          # record-level check catches it
     assert bad.checksum_match               # content untouched
+
+
+def test_teravalidate_on_read_back_output(spark, tmp_path):
+    """A sorted output written as parquet and read back must validate:
+    Spark packs part files into read partitions by size, not by name,
+    so a partition-order check reports a correctly sorted output as
+    unsorted.  The segments are the input file splits, in file name
+    then block order — checked with whole files per read partition
+    (the two short files packed into one) and with the files split
+    into blocks, packed across partitions by size."""
+    from hadoop_3_3_6_spark.sources.terasort import (
+        teragen,
+        terachecksum,
+        terasort,
+        teravalidate,
+    )
+
+    gen = teragen(spark, 20000, partitions=4)
+    cksum = terachecksum(gen)
+    path = str(tmp_path / "sorted")
+    # several files per write task, the last one short: file sizes are
+    # not in name order, so neither are the read partitions; small row
+    # groups so a file split at a block boundary has rows in both
+    terasort(gen).write.option("maxRecordsPerFile", 3000).option(
+        "parquet.block.size", 65536
+    ).parquet(path)
+
+    def read_order(df):
+        return [
+            r.f
+            for r in df.select(F.input_file_name().alias("f"))
+            .withColumn("i", F.monotonically_increasing_id())
+            .groupBy("f")
+            .agg(F.min("i").alias("i"))
+            .orderBy("i")
+            .collect()
+        ]
+
+    # the second read splits each file into 200 kB blocks
+    blocks = {"spark.sql.files.openCostInBytes": "1", "spark.sql.files.maxPartitionBytes": "200000"}
+    for confs in ({}, blocks):
+        prev = {k: spark.conf.get(k) for k in confs}
+        try:
+            for k, val in confs.items():
+                spark.conf.set(k, val)
+            back = spark.read.parquet(path)
+            order = read_order(back)
+            assert len(order) > 1 and order != sorted(order), order  # the case under test
+            out = teravalidate(back, cksum)
+        finally:
+            for k, val in prev.items():
+                spark.conf.set(k, val)
+        assert out.rows == 20000 and out.globally_sorted and out.checksum_match, (confs, out)
 
 
 def test_terasort_gen_matches_generic_path(spark):
