@@ -1104,6 +1104,7 @@ def _fuzzy_join_titles_clean(spark, sf_dir: str):
     scaling."""
     from pyspark.sql import functions as F
 
+    from hadoop_3_3_6_spark.functions.text import words_sql
     from hadoop_3_3_6_spark.operators.joins import fuzzy_join
     from hadoop_3_3_6_spark.session import load_table
 
@@ -1113,7 +1114,7 @@ def _fuzzy_join_titles_clean(spark, sf_dir: str):
         )
     offset = _SF01_DOC_OFFSET[0]
     docs = load_table(spark, "documents", sf_dir)
-    words = "filter(split(text, ' '), w -> w <> '')"
+    words = words_sql("text")
     title = F.expr(
         f"concat(cast(doc_id div {offset} as string), '_', array_join(slice({words}, 1, 4), ' '))"
     )

@@ -352,33 +352,18 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.2,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity via inverted-index join: explode
     distinct shingles, join docs sharing a shingle, count shared
     shingles per pair, Jaccard = shared / (|A| + |B| - shared).
 
-    ``max_df`` optionally drops shingles occurring in more than that
-    many docs (stop-shingles) — the standard skew guard at scale: the
-    SELF-join's pair fan-out is quadratic per bucket, so a ubiquitous
-    shingle genuinely must go.  Jaccard is then computed over the
-    RESTRICTED shingle space — both the shared count AND each doc's
-    size exclude the stop-shingles, so identical documents still score
-    1.0.  Leave None for whole-space oracle-exact semantics.
+    The self-join's pair fan-out is quadratic in a shingle's document
+    count, so this is the verification tier: at scale it runs on
+    candidate pairs or samples, not a whole corpus.
     """
     sh = shingle_docs(df, text_col, id_col, n).select(
         F.col(id_col), F.size("shingles").alias("n_shingles"), F.explode("shingles").alias("shingle")
     )
-    if max_df is not None:
-        hot = sh.groupBy("shingle").count().filter(F.col("count") > max_df).select("shingle")
-        filtered = sh.select(id_col, "shingle").join(F.broadcast(hot), on="shingle", how="left_anti")
-        # Jaccard over the RESTRICTED shingle space: the denominators
-        # must count post-filter shingles too, or similarity is
-        # systematically underestimated (identical boilerplate-heavy
-        # docs would fall below any threshold — numerator shrank while
-        # the denominator kept the removed shingles)
-        sizes = filtered.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
-        sh = filtered.join(sizes, id_col)
     a = sh.alias("a")
     b = sh.alias("b")
     pairs = (

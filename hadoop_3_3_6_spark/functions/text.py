@@ -12,6 +12,7 @@ reproduce them bit-for-bit.
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -47,6 +48,47 @@ def words_sql(text_col: str) -> str:
 
 def _words(text_col: str) -> Column:
     return F.expr(words_sql(text_col))
+
+
+def lines_sql(text_col: str) -> str:
+    """The line rule as SQL text: newline-split lines with blank lines
+    removed.  split's pattern argument is a regex in Spark: the
+    two-char escape '\\n' compiles to the newline class, matching the
+    oracle's chr(10)."""
+    return f"filter(split({text_col}, '\\n'), l -> trim(l) <> '')"
+
+
+def array_sql(elems: Iterable[str]) -> str:
+    """A SQL array literal of already-rendered element texts."""
+    return f"array({', '.join(elems)})"
+
+
+def stopword_hits_sql(words: str, stops: Iterable[str]) -> str:
+    """How many elements of ``words`` (a word-array expression) are in
+    the fixed word list ``stops``: the stopword-ratio numerator."""
+    stop_arr = array_sql(f"'{s}'" for s in stops)
+    return f"size(filter({words}, w -> array_contains({stop_arr}, w)))"
+
+
+def _ratio_or_zero(num: Column, den: Column) -> Column:
+    """num / den as a double; 0.0 when den is not positive (an empty
+    document or one with no lines)."""
+    return F.when(den > 0, num.cast("double") / den.cast("double")).otherwise(F.lit(0.0))
+
+
+def _sorted_runs_sql(ss: str) -> str:
+    """The run array of ``ss``, an already-evaluated SORTED array: one
+    struct(g, eq) per element, eq true when the element equals its
+    predecessor.  Equal neighbors extend a run, so a fold over it
+    enumerates the distinct values with their counts.  The predecessor
+    array [''] ++ ss is sliced to EXACTLY size(ss) elements: zip_with
+    pads the shorter side with nulls, so an unsliced sentinel array
+    would give an empty array one phantom element (the <n-word document
+    edge, pinned in test_repetition_top_ngram_counts)."""
+    return (
+        f"zip_with({ss}, slice(concat(array(''), {ss}), 1, size({ss})), "
+        "(c, p) -> struct(c AS g, c = p AS eq))"
+    )
 
 
 def word_ngrams_sql(words: str, n: int) -> str:
@@ -184,10 +226,8 @@ def language_id(
     stopwords; >= threshold → 'en' else 'unk'.  (The reference has no
     NLP surface; this is the training-pipeline heuristic analogue.)"""
     df = spread_for_compute(df)
-    stop_arr = "array(" + ",".join(f"'{w}'" for w in EN_STOPWORDS) + ")"
-    hits = F.expr(f"size(filter({words_sql(text_col)}, w -> array_contains({stop_arr}, w)))")
-    total = F.size(_words(text_col))
-    ratio = F.when(total > 0, hits.cast("double") / total.cast("double")).otherwise(F.lit(0.0))
+    hits = F.expr(stopword_hits_sql(words_sql(text_col), EN_STOPWORDS))
+    ratio = _ratio_or_zero(hits, F.size(_words(text_col)))
     return df.select(
         F.col(id_col),
         ratio.alias("stopword_ratio"),
@@ -213,15 +253,11 @@ def language_id_multi(
     order via strict comparisons).  Pure column expressions — the
     n-language generalization of ``language_id``."""
     df = spread_for_compute(df)
-    words = _words(text_col)
-    total = F.size(words)
-    ratios = {}
-    for lang, stops in LANG_STOPWORDS.items():
-        arr = "array(" + ",".join(f"'{w}'" for w in stops) + ")"
-        hits = F.expr(f"size(filter({words_sql(text_col)}, w -> array_contains({arr}, w)))")
-        ratios[lang] = (
-            F.when(total > 0, hits.cast("double") / total.cast("double")).otherwise(F.lit(0.0))
-        )
+    total = F.size(_words(text_col))
+    ratios = {
+        lang: _ratio_or_zero(F.expr(stopword_hits_sql(words_sql(text_col), stops)), total)
+        for lang, stops in LANG_STOPWORDS.items()
+    }
     langs = list(LANG_STOPWORDS)
     best = None
     for lang in langs:
@@ -247,15 +283,11 @@ def normalize_text(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     near-dup detection robust to case/punctuation noise; three
     regexp_replace passes, shuffle-free."""
     df = spread_for_compute(df)
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", " "), " +", " "
-        )
-    )
+    norm = f"trim(regexp_replace(regexp_replace(lower({text_col}), '[^a-z0-9 ]', ' '), ' +', ' '))"
     return df.select(
         F.col(id_col),
-        norm.alias("norm_text"),
-        F.size(_words(f"trim(regexp_replace(regexp_replace(lower({text_col}), '[^a-z0-9 ]', ' '), ' +', ' '))")).alias("n_tokens"),
+        F.expr(norm).alias("norm_text"),
+        F.size(_words(norm)).alias("n_tokens"),
     )
 
 
@@ -272,12 +304,8 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
         F.col(id_col),
         n_chars.alias("n_chars"),
         n_words.alias("n_words"),
-        F.when(n_words > 0, (n_chars - n_words + 1).cast("double") / n_words.cast("double"))
-        .otherwise(F.lit(0.0))
-        .alias("mean_word_len"),
-        F.when(n_chars > 0, alpha_chars.cast("double") / n_chars.cast("double"))
-        .otherwise(F.lit(0.0))
-        .alias("alpha_ratio"),
+        _ratio_or_zero(n_chars - n_words + 1, n_words).alias("mean_word_len"),
+        _ratio_or_zero(alpha_chars, n_chars).alias("alpha_ratio"),
     )
 
 
@@ -465,22 +493,12 @@ def repetition_top_ngram(
     integer arithmetic + one division, so the SQL oracle reproduces
     them bit-for-bit."""
     df = spread_for_compute(df)
-    # (gram, same-as-previous?) pairs: equal neighbors in the sorted
-    # array extend a run; runs enumerate distinct grams with counts.
-    # prev = [''] ++ ss, sliced to EXACTLY size(ss) elements — zip_with
-    # pads the shorter side with nulls, so an unsliced sentinel array
-    # would give an empty gram list one phantom element (the <n-word
-    # document edge, pinned in test_repetition_top_ngram_counts).
     # The words and the sorted grams are let-bound (ws, ss), so the
     # split, the gram build and the sort each run once per row.
-    z = (
-        "zip_with(ss, slice(concat(array(''), ss), 1, size(ss)), "
-        "(c, p) -> struct(c AS g, c = p AS eq))"
-    )
     runs = let_sql(
         f"array_sort({word_ngrams_sql('ws', n)})",
         "ss",
-        f"aggregate({z}, "
+        f"aggregate({_sorted_runs_sql('ss')}, "
         f"named_struct('run', 0, 'best', 0, 'bestch', 0), "
         f"(acc, e) -> named_struct("
         f"'run', if(e.eq, acc.run + 1, 1), "
@@ -562,35 +580,42 @@ def unigram_lm_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     tok = df.select(F.col(id_col), F.explode(_words(text_col)).alias("term"))
     counts = tok.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     total = counts.agg(F.sum("c").cast("double").alias("_T"))
-    quant = (
-        counts.crossJoin(F.broadcast(total))
-        .select(
-            "term",
-            F.round(F.log(F.col("c").cast("double") / F.col("_T")) * 1_000_000)
-            .cast("bigint")
-            .alias("lp_micro"),
-        )
+    quant = counts.crossJoin(F.broadcast(total)).select(
+        "term", _micro_nats(F.col("c"), F.col("_T")).alias("lp_micro")
     )
+    # the vocabulary is small at any corpus size: broadcast the scores
+    return _lm_doc_scores(df, id_col, tok, F.broadcast(quant), "term", "n_tokens")
+
+
+def _micro_nats(num: Column, den: Column) -> Column:
+    """ln(num / den) quantized to integer micro-nats."""
+    return F.round(F.log(num.cast("double") / den.cast("double")) * 1_000_000).cast("bigint")
+
+
+def _lm_doc_scores(
+    df: DataFrame, id_col: str, inst: DataFrame, quant: DataFrame, key: str, n_col: str
+) -> DataFrame:
+    """The per-document tail of the LM scorers: join each (id, key)
+    instance of ``inst`` to its (key, lp_micro) score in ``quant`` (the
+    caller hints it), count and integer-sum per document, then
+    left-join onto every id of ``df``.  A document with no instance
+    (empty, NULL, too short) scores 0 over 0 with avg_logprob 0.0."""
     per_doc = (
-        tok.join(F.broadcast(quant), "term")
+        inst.join(quant, key)
         .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum("lp_micro").alias("logprob_micro"),
-        )
+        .agg(F.count(F.lit(1)).alias(n_col), F.sum("lp_micro").alias("logprob_micro"))
     )
+    n = F.coalesce(n_col, F.lit(0))
     return (
         df.select(F.col(id_col))
         .join(per_doc, id_col, "left")
         .select(
             F.col(id_col),
-            F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
+            n.alias(n_col),
             F.coalesce("logprob_micro", F.lit(0)).alias("logprob_micro"),
             F.when(
-                F.coalesce("n_tokens", F.lit(0)) > 0,
-                F.round(
-                    F.col("logprob_micro").cast("double") / F.col("n_tokens").cast("double") / 1e6, 6
-                ),
+                n > 0,
+                F.round(F.col("logprob_micro").cast("double") / F.col(n_col).cast("double") / 1e6, 6),
             )
             .otherwise(F.lit(0.0))
             .alias("avg_logprob"),
@@ -630,13 +655,7 @@ def boilerplate_signals(df: DataFrame, text_col: str = "text", id_col: str = "do
     )
 
 
-def build_vocab(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_count: int = 1,
-    max_size: int | None = None,
-) -> DataFrame:
+def build_vocab(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Corpus vocabulary construction — the tokenizer-training
     precursor: every distinct whitespace token with its corpus count,
     document frequency, and a frequency-ranked id (0 = most frequent;
@@ -646,10 +665,9 @@ def build_vocab(
     Shape: explode → one two-phase aggregate keyed by token (count
     partials + min/max-style df via countDistinct partials), then the
     rank window.  The window is a single global ordering over the
-    VOCABULARY (≤ max_size rows after the filter), not the corpus —
-    at 100 TB the token table is millions of rows, not trillions, so
-    the one-partition rank stage is bounded; for open-ended
-    vocabularies cap with ``max_size`` (TakeOrdered) before ranking."""
+    VOCABULARY, not the corpus — at 100 TB the token table is millions
+    of rows, not trillions, so the one-partition rank stage is
+    bounded."""
     from pyspark.sql.window import Window
 
     toks = df.select(F.col(id_col), F.explode(_words(text_col)).alias("token"))
@@ -657,10 +675,6 @@ def build_vocab(
         F.count(F.lit(1)).alias("count"),
         F.countDistinct(id_col).alias("doc_freq"),
     )
-    if min_count > 1:
-        counts = counts.filter(F.col("count") >= min_count)
-    if max_size is not None:
-        counts = counts.orderBy(F.col("count").desc(), F.col("token").asc()).limit(max_size)
     w = Window.orderBy(F.col("count").desc(), F.col("token").asc())
     return counts.withColumn("token_id", F.row_number().over(w) - 1).select(
         "token", "count", "doc_freq", "token_id"
@@ -688,34 +702,12 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
     bg_counts = bg_counts.withColumn("w1", F.split(F.col("bg"), " ").getItem(0))
     prefix = bg_counts.groupBy("w1").agg(F.sum("cbg").alias("cpre"))
     quant = bg_counts.join(prefix, "w1").select(
-        "bg",
-        F.round(F.log(F.col("cbg").cast("double") / F.col("cpre").cast("double")) * 1_000_000)
-        .cast("bigint")
-        .alias("lp_micro"),
+        "bg", _micro_nats(F.col("cbg"), F.col("cpre")).alias("lp_micro")
     )
     # NO broadcast hint: distinct bigrams grow near-linearly with the
     # corpus (unlike the unigram vocab) — a plain hash join lets AQE
     # broadcast only when the score table actually is small
-    per_doc = (
-        inst.join(quant, "bg")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_bigrams"), F.sum("lp_micro").alias("logprob_micro"))
-    )
-    return (
-        df.select(F.col(id_col))
-        .join(per_doc, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-            F.coalesce("logprob_micro", F.lit(0)).alias("logprob_micro"),
-            F.when(
-                F.coalesce("n_bigrams", F.lit(0)) > 0,
-                F.round(F.col("logprob_micro").cast("double") / F.col("n_bigrams").cast("double") / 1e6, 6),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("avg_logprob"),
-        )
-    )
+    return _lm_doc_scores(df, id_col, inst, quant, "bg", "n_bigrams")
 
 
 _GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -767,10 +759,8 @@ def gopher_quality_rules(
     exact SQL oracle (counts-of-3-char '...' via the
     length-minus-replace identity, integer-divided by 3)."""
     df = spread_for_compute(df)
-    # split's pattern arg is a regex in Spark; '\n' the two-char escape
-    # compiles to the newline class, matching the oracle's chr(10)
-    lines = f"filter(split({text_col}, '\\n'), l -> trim(l) <> '')"
-    stop_arr = "array(" + ", ".join(f"'{s}'" for s in _GOPHER_STOPWORDS) + ")"
+    lines = lines_sql(text_col)
+    stop_arr = array_sql(f"'{s}'" for s in _GOPHER_STOPWORDS)
     # the word signals share one let-bound word array (one split per row)
     word_sig = let_sql(
         words_sql(text_col),
@@ -801,19 +791,14 @@ def gopher_quality_rules(
         ).alias("_ellipsis_lines"),
     )
 
-    def _ratio(num, den):
-        return (
-            F.when(den > 0, num.cast("double") / den.cast("double")).otherwise(F.lit(0.0))
-        )
-
     sig = base.select(
         F.col(id_col),
         F.col("_ws.n").alias("n_words"),
-        _ratio(F.col("_ws.chars"), F.col("_ws.n")).alias("mean_word_len"),
-        _ratio(F.col("_symbols"), F.col("_ws.n")).alias("symbol_word_ratio"),
-        _ratio(F.col("_ws.alpha"), F.col("_ws.n")).alias("alpha_word_frac"),
-        _ratio(F.col("_bullet_lines"), F.col("_n_lines")).alias("bullet_line_frac"),
-        _ratio(F.col("_ellipsis_lines"), F.col("_n_lines")).alias("ellipsis_line_frac"),
+        _ratio_or_zero(F.col("_ws.chars"), F.col("_ws.n")).alias("mean_word_len"),
+        _ratio_or_zero(F.col("_symbols"), F.col("_ws.n")).alias("symbol_word_ratio"),
+        _ratio_or_zero(F.col("_ws.alpha"), F.col("_ws.n")).alias("alpha_word_frac"),
+        _ratio_or_zero(F.col("_bullet_lines"), F.col("_n_lines")).alias("bullet_line_frac"),
+        _ratio_or_zero(F.col("_ellipsis_lines"), F.col("_n_lines")).alias("ellipsis_line_frac"),
         F.col("_ws.stop").alias("stopword_hits"),
     )
     keep = (
@@ -873,7 +858,7 @@ def gopher_repetition_suite(
         df.select(F.col(id_col), F.length(F.col(text_col)).alias("_nc"), F.col(text_col)),
         [id_col, "_nc"],
         _w=_words(text_col),
-        _l=F.expr(f"filter(split({text_col}, '\\n'), l -> trim(l) <> '')"),
+        _l=F.expr(lines_sql(text_col)),
         _p=F.expr(f"filter(split({text_col}, '\\n\\n'), p -> trim(p) <> '')"),
     )
     # r13: INCREMENTAL gram build — level n extends level n-1's gram
@@ -916,13 +901,9 @@ def gopher_repetition_suite(
         # the best-count gram); ties on count take greater coverage.
         # The sorted grams are lambda-bound (ss), so the sort runs once
         # per row however many times the fold references it.
-        z = (
-            "zip_with(ss, slice(concat(array(''), ss), 1, size(ss)), "
-            "(c, p) -> struct(c AS g, c = p AS eq))"
-        )
         r = "if(e.eq, acc.run + 1, 1)"
         body = (
-            f"aggregate({z}, named_struct('run', 0, 'bc', 0, 'bch', 0), "
+            f"aggregate({_sorted_runs_sql('ss')}, named_struct('run', 0, 'bc', 0, 'bch', 0), "
             f"(acc, e) -> named_struct("
             f"'run', {r}, "
             f"'bc', greatest(acc.bc, {r}), "
@@ -1050,23 +1031,18 @@ def gopher_repetition_suite(
         *[F.expr(_marked(n)).alias(f"_m{n}") for n in range(5, 11)],
     )
 
-    def _frac(num, den):
-        return F.when(den > 0, num.cast("double") / den.cast("double")).otherwise(
-            F.lit(0.0)
-        )
-
     sig = g4.select(
         F.col(id_col),
-        _frac(F.col("_dlcnt"), F.col("_nl")).alias("dup_line_frac"),
-        _frac(F.col("_dlch"), F.col("_nc")).alias("dup_line_char_frac"),
-        _frac(F.col("_dpcnt"), F.col("_np")).alias("dup_para_frac"),
-        _frac(F.col("_dpch"), F.col("_nc")).alias("dup_para_char_frac"),
+        _ratio_or_zero(F.col("_dlcnt"), F.col("_nl")).alias("dup_line_frac"),
+        _ratio_or_zero(F.col("_dlch"), F.col("_nc")).alias("dup_line_char_frac"),
+        _ratio_or_zero(F.col("_dpcnt"), F.col("_np")).alias("dup_para_frac"),
+        _ratio_or_zero(F.col("_dpch"), F.col("_nc")).alias("dup_para_char_frac"),
         *[
-            _frac(F.col(f"_t{n}"), F.col("_nc")).alias(f"top_{n}gram_char_frac")
+            _ratio_or_zero(F.col(f"_t{n}"), F.col("_nc")).alias(f"top_{n}gram_char_frac")
             for n in (2, 3, 4)
         ],
         *[
-            _frac(F.col(f"_m{n}"), F.col("_nc")).alias(f"dup_{n}gram_char_frac")
+            _ratio_or_zero(F.col(f"_m{n}"), F.col("_nc")).alias(f"dup_{n}gram_char_frac")
             for n in range(5, 11)
         ],
     )
@@ -1204,30 +1180,22 @@ def _make_html_extractor(drop_tags: frozenset):
     return _Extractor
 
 
-def html_to_text(
-    df: DataFrame,
-    html_col: str = "html",
-    drop_tags: tuple = (),
-    errors: str = "permissive",
-) -> DataFrame:
+def html_to_text(df: DataFrame, html_col: str = "html", drop_tags: tuple = ()) -> DataFrame:
     """Extract visible text from an HTML column: adds ``title`` (from
     <title>, NULL when absent), ``text`` (newline-joined blocks) and
     ``n_blocks`` columns next to the input columns.
 
     ``drop_tags`` names extra element subtrees to drop whole — the
     boilerplate-removal knob (('nav', 'footer', 'aside') reproduces
-    the common main-content recipe).  ``errors='permissive'`` maps a
-    document that defeats even the lenient parser to (NULL, NULL, 0)
-    instead of failing the task (the SkipBadRecords disposition);
-    'strict' re-raises.
+    the common main-content recipe).  A document that defeats even the
+    lenient parser maps to (NULL, NULL, 0) instead of failing the task
+    (the SkipBadRecords disposition).
 
     Scale shape: ONE Arrow-batched stage over the html column — no
     shuffle, no driver involvement, linear in corpus bytes; at 100 TB
     the decode scales with cores exactly like the image codecs, and
     the html column itself never shuffles (spread_for_compute
     rebalances the scan when the file layout under-splits)."""
-    if errors not in ("permissive", "strict"):
-        raise ValueError(f"errors must be 'permissive' or 'strict', got {errors!r}")
     # The natural re-extraction case — a frame that already carries a
     # text (or title/n_blocks) column — would otherwise yield duplicate
     # column names and ambiguous-reference failures downstream (the
@@ -1255,8 +1223,6 @@ def html_to_text(
                 p.close()
                 out.append(p.result())
             except Exception:
-                if errors == "strict":
-                    raise
                 out.append((None, None, 0))
         return pd.DataFrame(out, columns=["title", "text", "n_blocks"])
 
@@ -1270,18 +1236,12 @@ def html_to_text(
 # pretraining recipes: a linear (logistic) model over hashed bag-of-words
 # features, trained on a labeled split (wikipedia-like = 1, raw crawl = 0)
 # and applied corpus-wide as a keep/score signal.  This is fastText's
-# supervised model at wordNgrams=1 minus the embedding layer — the
+# supervised model at wordNgrams=2 minus the embedding layer — the
 # published ablations show the linear head carries almost all of the
 # quality signal at this task shape.
 
 QC_SIGMOID_BINS = 512
 QC_SIGMOID_RANGE = 8.0
-# fastText's published quality-classifier configs (the CCNet / LLaMA
-# recipes) run wordNgrams=2: hashed word-bigram features alongside the
-# unigrams.  Bigrams share the unigram bucket space under a distinct
-# salt ('qc2:') — the hashing-trick simplification that keeps the
-# weight vector exactly buckets+1 integers.
-QC_WORD_NGRAMS = 2
 
 
 def qc_sigmoid_table_micro() -> list[int]:
@@ -1301,28 +1261,21 @@ def qc_sigmoid_table_micro() -> list[int]:
     ]
 
 
-def _qc_gram_sql(words: str, word_ngrams: int) -> str:
+def _qc_gram_sql(words: str) -> str:
     """SQL expression for a doc's SALTED feature-gram strings from an
-    already-evaluated word array: 'qc1:<w>' unigrams plus, at
-    ``word_ngrams>=2``, 'qc2:<w_{i-1}> <w_i>' consecutive word bigrams
-    (fastText's wordNgrams device; hashed into the SAME bucket space,
-    the hashing-trick simplification)."""
+    already-evaluated word array: 'qc1:<w>' unigrams plus
+    'qc2:<w_{i-1}> <w_i>' consecutive word bigrams.  fastText's
+    published quality-classifier configs (the CCNet / LLaMA recipes)
+    run wordNgrams=2; the bigrams share the unigram bucket space under
+    their own salt — the hashing-trick simplification that keeps the
+    weight vector exactly buckets+1 integers."""
     uni = f"transform({words}, t -> concat('qc1:', t))"
-    if word_ngrams < 2:
-        return uni
     return f"concat({uni}, transform({word_ngrams_sql(words, 2)}, g -> concat('qc2:', g)))"
 
 
-def _qc_features(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    buckets: int,
-    word_ngrams: int = QC_WORD_NGRAMS,
-) -> DataFrame:
+def _qc_features(df: DataFrame, text_col: str, id_col: str, buckets: int) -> DataFrame:
     """(id, bucket) BINARY hashed gram presence features (unigrams +
-    word bigrams at the fastText wordNgrams=2 default) plus the
-    always-on bias feature (bucket == ``buckets``) — set-of-grams
+    word bigrams) plus the always-on bias feature (bucket == ``buckets``) — set-of-grams
     logistic regression, the formulation that keeps every quantity in
     the training loop a plain integer (dots are sums of weights over a
     doc's distinct buckets; no count scaling, no division anywhere).
@@ -1332,7 +1285,7 @@ def _qc_features(
 
     grams = df.select(
         F.col(id_col),
-        F.explode(F.expr(let_sql(words_sql(text_col), "ws", _qc_gram_sql("ws", word_ngrams)))).alias("g"),
+        F.explode(F.expr(let_sql(words_sql(text_col), "ws", _qc_gram_sql("ws")))).alias("g"),
     )
     feats = (
         grams.select(
@@ -1347,14 +1300,16 @@ def _qc_features(
     ).unionByName(bias)
 
 
-def _qc_sig_idx_sql(dot_col: str) -> str:
-    """All-integer sigmoid-table index: clamp(((dot + R) * BINS) div 2R)
-    with everything in micro-units — no float touches the index."""
+def _qc_sigmoid_sql(dot_col: str) -> str:
+    """The sigmoid-table lookup of a micro-unit dot: the table rides the
+    plan as a literal, and its index clamp(((dot + R) * BINS) div 2R)
+    is all-integer — no float touches it."""
     r_micro = int(QC_SIGMOID_RANGE * 1_000_000)
-    return (
+    idx = (
         f"least(greatest(cast((({dot_col} + {r_micro}) * {QC_SIGMOID_BINS}) "
         f"div {2 * r_micro} as int), 0), {QC_SIGMOID_BINS - 1})"
     )
+    return f"element_at({array_sql(str(v) for v in qc_sigmoid_table_micro())}, {idx} + 1)"
 
 
 def train_quality_classifier(
@@ -1365,11 +1320,9 @@ def train_quality_classifier(
     buckets: int = 256,
     iters: int = 5,
     lr: float = 0.5,
-    word_ngrams: int = QC_WORD_NGRAMS,
 ) -> list[int]:
     """Full-batch logistic regression over hashed gram presence
-    features (unigrams + word bigrams at the fastText wordNgrams=2
-    default); returns the weight vector in integer micro-units (length
+    features (unigrams + word bigrams); returns the weight vector in integer micro-units (length
     ``buckets + 1``, bias last).
 
     Distribution contract (the BPE/unigram/Lloyd discipline): the
@@ -1387,26 +1340,21 @@ def train_quality_classifier(
     (order-independent, overflow-proof at any corpus size); the driver
     update rounds an exact integer ratio.  An independent replica
     reproduces every weight bit-for-bit."""
-    table = qc_sigmoid_table_micro()
-    feats = _qc_features(df, text_col, id_col, buckets, word_ngrams).persist()
+    feats = _qc_features(df, text_col, id_col, buckets).persist()
     labels = df.select(
         F.col(id_col), (F.col(label_col).cast("bigint") * 1_000_000).alias("_y_micro")
     )
     n_docs = df.count()
     w = [0] * (buckets + 1)
-    table_arr = "array(" + ",".join(str(v) for v in table) + ")"
     try:
         for _ in range(iters):
-            w_arr = "array(" + ",".join(str(x) + "L" for x in w) + ")"
+            w_arr = array_sql(f"{x}L" for x in w)
             dots = feats.groupBy(id_col).agg(
                 F.sum(F.expr(f"element_at({w_arr}, cast(bucket as int) + 1)")).alias("_dot")
             )
             resid = dots.join(labels, id_col).select(
                 F.col(id_col),
-                (
-                    F.expr(f"element_at({table_arr}, {_qc_sig_idx_sql('_dot')} + 1)")
-                    - F.col("_y_micro")
-                ).alias("_r_micro"),
+                (F.expr(_qc_sigmoid_sql("_dot")) - F.col("_y_micro")).alias("_r_micro"),
             )
             grad_rows = (
                 feats.join(resid, id_col)
@@ -1430,11 +1378,9 @@ def apply_quality_classifier(
     text_col: str = "text",
     id_col: str = "doc_id",
     keep_cols: tuple[str, ...] = (),
-    word_ngrams: int = QC_WORD_NGRAMS,
 ) -> DataFrame:
     """Score documents with a trained weight vector: (id, *keep_cols,
-    score, predicted).  ``word_ngrams`` must match the value the
-    weights were trained with.  Pure per-row HOF projection — the
+    score, predicted).  Pure per-row HOF projection — the
     weight array and sigmoid table ride the plan as literals, the
     corpus never shuffles, and scoring fuses into the scan (the
     Gopher-rules scale shape).  score = table[idx(dot)] / 1e6 rounded
@@ -1448,8 +1394,7 @@ def apply_quality_classifier(
             "keep_cols; rename them first"
         )
     buckets = len(w_micro) - 1
-    w_arr = "array(" + ",".join(str(x) + "L" for x in w_micro) + ")"
-    table_arr = "array(" + ",".join(str(v) for v in qc_sigmoid_table_micro()) + ")"
+    w_arr = array_sql(f"{x}L" for x in w_micro)
     from hadoop_3_3_6_spark.functions.dedup import portable_hash_expr
 
     df = spread_for_compute(df, id_col)
@@ -1459,7 +1404,7 @@ def apply_quality_classifier(
     # dot = sum of weights over the doc's DISTINCT gram buckets + bias:
     # term-for-term the training aggregate, so scores match the loop's
     barr = (
-        f"transform({_qc_gram_sql('_warr', word_ngrams)}, "
+        f"transform({_qc_gram_sql('_warr')}, "
         f"g -> pmod({portable_hash_expr('g')}, {buckets}))"
     )
     dot = (
@@ -1470,7 +1415,7 @@ def apply_quality_classifier(
     staged = staged.select(
         F.col(id_col), *[F.col(c) for c in keep_cols], F.expr(dot).alias("_dot")
     )
-    sig = f"element_at({table_arr}, {_qc_sig_idx_sql('_dot')} + 1)"
+    sig = _qc_sigmoid_sql("_dot")
     return staged.select(
         F.col(id_col),
         *[F.col(c) for c in keep_cols],

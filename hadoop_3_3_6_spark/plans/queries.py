@@ -54,9 +54,11 @@ from hadoop_3_3_6_spark.functions.similarity import (
 # fold; shared by every embedding-space oracle below.
 _IVF_COS = "round(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
 from hadoop_3_3_6_spark.functions.text import (
+    EN_STOPWORDS,
     doc_fingerprint,
     language_id,
     quality_score,
+    stopword_hits_sql,
     token_counts,
     words_sql,
 )
@@ -6990,8 +6992,7 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(F.expr(words_sql("text")))
     n_chars = F.length("text")
     alpha = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
-    stop_arr = "array(" + ",".join(f"'{w}'" for w in ["the","a","of","and","to","in","is","on","for","with"]) + ")"
-    hits = F.expr(f"size(filter({words_sql('text')}, w -> array_contains({stop_arr}, w)))")
+    hits = F.expr(stopword_hits_sql(words_sql("text"), EN_STOPWORDS))
     staged = (
         docs.select("doc_id", "text", n_words.alias("n_words"), n_chars.alias("n_chars"), alpha.alias("alpha"), hits.alias("hits"))
         .filter((F.col("n_words") >= 20) & (F.col("alpha").cast("double") / F.col("n_chars") > 0.5))
@@ -7300,7 +7301,7 @@ def q_pipeline_pretraining_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions/{text,sampling}.py; the exact oracle replays the whole
     chain in SQL."""
     from hadoop_3_3_6_spark.functions.sampling import pack_sequences, temperature_sample
-    from hadoop_3_3_6_spark.functions.text import EN_STOPWORDS, pii_redact
+    from hadoop_3_3_6_spark.functions.text import pii_redact
 
     docs = load_table(spark, "documents", sf_dir)
     injected = docs.withColumn(
@@ -7317,10 +7318,7 @@ def q_pipeline_pretraining_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     red = pii_redact(injected, "text", "doc_id", keep_cols=("source",))
     words = words_sql("clean_text")
-    stop_arr = "array(" + ",".join(f"'{w}'" for w in EN_STOPWORDS) + ")"
-    hits = F.expr(
-        f"size(filter({words}, w -> array_contains({stop_arr}, w)))"
-    )
+    hits = F.expr(stopword_hits_sql(words, EN_STOPWORDS))
     kept = red.select("doc_id", "source", "clean_text", F.size(F.expr(words)).alias("_nw"), hits.alias("_hits")).filter(
         (F.col("_nw") >= 20) & (F.col("_hits").cast("double") / F.col("_nw") >= 0.05)
     )

@@ -513,6 +513,69 @@ def test_let_bound_words_differential(spark, monkeypatch, module, op):
     assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
 
 
+def _replica_lm_scores(texts, order):
+    """Pure-Python replica of the LM scorers: per document, the count
+    of its order-``order`` grams and the integer sum of their micro-nat
+    log-probs (round(ln(c / c_context) * 1e6), half away from zero like
+    Spark's round); a document with no gram scores 0 over 0."""
+    import math
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def half_up(x, places):
+        return Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP)
+
+    grams = {}
+    for i, t in enumerate(texts):
+        ws = [w for w in (t or "").split(" ") if w]
+        grams[i] = [tuple(ws[j : j + order]) for j in range(len(ws) - order + 1)]
+    counts = Counter(g for gs in grams.values() for g in gs)
+    context = Counter()
+    for g, c in counts.items():
+        context[g[:-1]] += c
+    lp = {g: int(half_up(math.log(c / context[g[:-1]]) * 1e6, 0)) for g, c in counts.items()}
+    out = {}
+    for i, gs in grams.items():
+        total = sum(lp[g] for g in gs)
+        avg = float(half_up(total / len(gs) / 1e6, 6)) if gs else 0.0
+        out[i] = (len(gs), total, avg)
+    return out
+
+
+@pytest.mark.parametrize("op, order, n_col", [
+    ("unigram_lm_score", 1, "n_tokens"),
+    ("bigram_lm_score", 2, "n_bigrams"),
+])
+def test_lm_scores_match_replica(spark, op, order, n_col):
+    """Both LM scorers share one per-document tail: integer micro-nat
+    sums per document, and a zero-filled row for every document
+    without a gram (empty, NULL, one word for the bigram order).
+    Pinned against a pure-Python replica on the word-edge documents."""
+    from hadoop_3_3_6_spark.functions import text
+
+    df = _docs(spark, _WORD_EDGE_DOCS)
+    got = {
+        r.doc_id: (r[n_col], r.logprob_micro, r.avg_logprob)
+        for r in getattr(text, op)(df, "text", "doc_id").collect()
+    }
+    want = _replica_lm_scores(_WORD_EDGE_DOCS, order)
+    assert got == want
+    assert got[0] == got[1] == (0, 0, 0.0)  # the empty and NULL documents
+
+
+def test_language_id_ratio_equals_multi_en_ratio(spark):
+    """language_id and language_id_multi count English stopword hits
+    with the same rule: stopword_ratio rounded to 6 places is ratio_en."""
+    from hadoop_3_3_6_spark.functions.text import language_id, language_id_multi
+
+    df = _docs(spark, _WORD_EDGE_DOCS)
+    single = language_id(df).select("doc_id", F.round("stopword_ratio", 6).alias("r"))
+    multi = language_id_multi(df).select("doc_id", F.col("ratio_en").alias("r"))
+    rows = single.collect()
+    assert len(rows) == len(_WORD_EDGE_DOCS) and any(r.r > 0 for r in rows)
+    assert single.exceptAll(multi).count() == 0 and multi.exceptAll(single).count() == 0
+
+
 _BOILERPLATE_DOCS = [
     f"home about contact us {body} copyright all rights reserved"
     for body in ["alpha beta gamma delta", "alpha beta gamma epsilon zeta", "one two three", "", "alpha beta"]
@@ -612,10 +675,7 @@ def test_html_to_text_extraction_rules(spark):
 def test_html_to_text_malformed_is_permissive(spark):
     """Malformed markup never fails the task: unclosed tags, stray
     '<', unterminated entities, truncated attributes and binary junk
-    all extract best-effort (HTMLParser's lenient grammar), and the
-    errors knob validates."""
-    import pytest
-
+    all extract best-effort (HTMLParser's lenient grammar)."""
     from hadoop_3_3_6_spark.functions.text import html_to_text
 
     pages = [
@@ -635,8 +695,6 @@ def test_html_to_text_malformed_is_permissive(spark):
     assert out[2].text == "<p abc" and out[2].n_blocks == 1
     assert out[3].text == "<!" and out[3].n_blocks == 1
     assert out[4].text == "ok"
-    with pytest.raises(ValueError, match="permissive"):
-        html_to_text(df, "html", errors="bogus")
 
 
 def test_apply_span_dedup_conservation(spark):

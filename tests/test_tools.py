@@ -278,50 +278,6 @@ def test_bbp_digits_correct(spark, sf_dir):
     assert [rows[i] for i in range(12)] == expected
 
 
-def test_ngram_jaccard_max_df_guard(spark, sf_dir):
-    """The stop-shingle guard (max_df) removes ubiquitous shingles from
-    the inverted index — the join's input postings must shrink (the
-    skew bound the guard exists for) — and Jaccard is then computed
-    over the RESTRICTED shingle space: both numerator and denominator
-    exclude the stop-shingles, so identical documents still score
-    1.0 (the r8 review fixed a denominator snapshotted pre-filter)."""
-    from hadoop_3_3_6_spark.functions.dedup import shingle_docs
-    from hadoop_3_3_6_spark.session import load_table
-
-    docs = load_table(spark, "documents", sf_dir)
-    sh = shingle_docs(docs).select(F.explode("shingles").alias("shingle"))
-    df_counts = sh.groupBy("shingle").count()
-    hot = df_counts.filter(F.col("count") > 3).count()
-    assert hot > 0, "corpus has no hot shingles; guard untestable"
-    postings_full = sh.count()
-    postings_guarded = (
-        sh.join(df_counts.filter(F.col("count") > 3), on="shingle", how="left_anti").count()
-    )
-    assert postings_guarded < postings_full
-    # and the guarded query still runs end to end
-    from hadoop_3_3_6_spark.functions.dedup import ngram_jaccard_pairs
-
-    assert ngram_jaccard_pairs(docs, threshold=0.2, max_df=3).count() >= 0
-
-    # restricted-space semantics: two identical boilerplate-heavy docs
-    # stay jaccard 1.0 when their boilerplate shingles are hot (made
-    # hot by a third doc carrying only the boilerplate)
-    boil = " ".join(f"b{i % 4}" for i in range(12))
-    small = spark.createDataFrame(
-        [(0, boil + " uniq1 uniq2 uniq3"), (1, boil + " uniq1 uniq2 uniq3"),
-         (2, boil), (3, "x y z w v u t")],
-        "doc_id long, text string",
-    )
-    pairs = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(small, threshold=0.5, max_df=2).collect()
-    }
-    # boilerplate shingles live in docs {0,1,2} (> max_df) and drop;
-    # the tail shingles live in {0,1} only and stay -> identical docs
-    # still score exactly 1.0 over the restricted space
-    assert pairs.get((0, 1)) == 1.0
-
-
 def test_approx_quantiles_tolerance(spark, sf_dir):
     """approx_percentile must land within 2% relative error of the
     exact median at sketch accuracy 1000."""
