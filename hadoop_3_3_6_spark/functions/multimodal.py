@@ -35,26 +35,91 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 
+def _map_rows(df: DataFrame, cols: tuple[str, ...], row_fn, schema: str) -> DataFrame:
+    """The multimodal batch shape: an Arrow-batched mapInPandas that
+    zips the ``cols`` values of each row into ``row_fn``, which returns
+    zero or more output tuples in ``schema`` column order; one pandas
+    frame per input batch.  The plan's MapInPandas node carries
+    ``row_fn``'s name."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame([out for row in zip(*(pdf[c] for c in cols)) for out in row_fn(*row)])
+
+    run.__name__ = row_fn.__name__
+    return df.mapInPandas(run, schema=schema)
+
+
 def binary_metadata(df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id") -> DataFrame:
     """Extract (id, n_bytes, sha256-hex digest) from a binary column via
     mapInPandas.  Arrow carries the bytes to Python in batches; output
     schema is fixed and narrow so downstream stays columnar."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": payloads.map(len).astype("int32"),
-                    "digest": payloads.map(lambda b: hashlib.sha256(bytes(b)).hexdigest()),
-                }
-            )
+    def digest(i, b):
+        return [(i, len(b), hashlib.sha256(bytes(b)).hexdigest())]
 
-    return df.mapInPandas(extract, schema=f"{id_col} bigint, n_bytes int, digest string")
+    return _map_rows(df, (id_col, payload_col), digest, f"{id_col} bigint, n_bytes int, digest string")
 
 
-# --- pure-numpy image codecs (PPM P6 and 24-bit BMP) ---------------------
+# --- pure-numpy image codecs (PPM P6, 24-bit BMP, PNG, baseline JPEG) ---
+
+
+def _decode_ppm(payload: bytes) -> np.ndarray:
+    # header: P6 <ws> width <ws> height <ws> maxval <single ws>, then raw RGB
+    pos, fields = 2, []
+    while len(fields) < 3:
+        while pos < len(payload) and payload[pos : pos + 1].isspace():
+            pos += 1
+        if payload[pos : pos + 1] == b"#":  # comment to end of line
+            while payload[pos : pos + 1] not in (b"\n", b""):
+                pos += 1
+            continue
+        start = pos
+        while pos < len(payload) and not payload[pos : pos + 1].isspace():
+            pos += 1
+        fields.append(int(payload[start:pos]))
+    pos += 1  # the single whitespace after maxval
+    w, h, maxval = fields
+    if maxval != 255:
+        raise ValueError(f"PPM maxval {maxval} unsupported (only 8-bit)")
+    arr = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=pos)
+    return arr.reshape(h, w, 3).copy()
+
+
+def _decode_bmp(payload: bytes) -> np.ndarray:
+    data_offset, = struct.unpack_from("<I", payload, 10)
+    header_size, = struct.unpack_from("<I", payload, 14)
+    if header_size < 40:
+        raise ValueError("BMP core-header variant unsupported")
+    w, h = struct.unpack_from("<ii", payload, 18)
+    planes, bpp = struct.unpack_from("<HH", payload, 26)
+    compression, = struct.unpack_from("<I", payload, 30)
+    if bpp != 24 or compression != 0:
+        raise ValueError(f"BMP bpp={bpp} compression={compression} unsupported (24-bit uncompressed only)")
+    bottom_up = h > 0
+    h = abs(h)
+    row_bytes = (w * 3 + 3) & ~3  # rows padded to 4 bytes
+    rows = np.frombuffer(payload, dtype=np.uint8, count=h * row_bytes, offset=data_offset)
+    rows = rows.reshape(h, row_bytes)[:, : w * 3].reshape(h, w, 3)
+    if bottom_up:
+        rows = rows[::-1]
+    return rows[:, :, ::-1].copy()  # BGR -> RGB
+
+
+def _jpeg():
+    # imported on the first JPEG: workers that never see one skip it
+    from hadoop_3_3_6_spark.functions import jpeg
+
+    return jpeg
+
+
+def _image_codec(payload: bytes):
+    """The (decode to RGB, encode) pair of ``payload``'s image format,
+    by its magic bytes; ValueError for any other payload."""
+    for magic, decode, encode in _IMAGE_FORMATS:
+        if payload[: len(magic)] == magic:
+            return decode, encode
+    raise ValueError("not a PPM(P6)/BMP/PNG/JPEG payload")
 
 
 def decode_image(payload: bytes) -> np.ndarray:
@@ -62,54 +127,8 @@ def decode_image(payload: bytes) -> np.ndarray:
     truecolor PNG, or baseline JPEG payload to an (h, w, 3) uint8 RGB
     array (PNG alpha is dropped).  Pure numpy + stdlib zlib (JPEG via
     the T.81 baseline codec in ``functions/jpeg.py``); raises
-    ValueError for any other format (the caller falls back to the stub
-    gate)."""
-    if payload[:8] == _PNG_SIG:
-        arr = decode_png(payload)
-        return arr[:, :, :3].copy()
-    if payload[:2] == b"\xff\xd8":
-        from hadoop_3_3_6_spark.functions.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if payload[:2] == b"P6":
-        # header: P6 <ws> width <ws> height <ws> maxval <single ws>, then raw RGB
-        pos, fields = 2, []
-        while len(fields) < 3:
-            while pos < len(payload) and payload[pos : pos + 1].isspace():
-                pos += 1
-            if payload[pos : pos + 1] == b"#":  # comment to end of line
-                while payload[pos : pos + 1] not in (b"\n", b""):
-                    pos += 1
-                continue
-            start = pos
-            while pos < len(payload) and not payload[pos : pos + 1].isspace():
-                pos += 1
-            fields.append(int(payload[start:pos]))
-        pos += 1  # the single whitespace after maxval
-        w, h, maxval = fields
-        if maxval != 255:
-            raise ValueError(f"PPM maxval {maxval} unsupported (only 8-bit)")
-        arr = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=pos)
-        return arr.reshape(h, w, 3).copy()
-    if payload[:2] == b"BM":
-        data_offset, = struct.unpack_from("<I", payload, 10)
-        header_size, = struct.unpack_from("<I", payload, 14)
-        if header_size < 40:
-            raise ValueError("BMP core-header variant unsupported")
-        w, h = struct.unpack_from("<ii", payload, 18)
-        planes, bpp = struct.unpack_from("<HH", payload, 26)
-        compression, = struct.unpack_from("<I", payload, 30)
-        if bpp != 24 or compression != 0:
-            raise ValueError(f"BMP bpp={bpp} compression={compression} unsupported (24-bit uncompressed only)")
-        bottom_up = h > 0
-        h = abs(h)
-        row_bytes = (w * 3 + 3) & ~3  # rows padded to 4 bytes
-        rows = np.frombuffer(payload, dtype=np.uint8, count=h * row_bytes, offset=data_offset)
-        rows = rows.reshape(h, row_bytes)[:, : w * 3].reshape(h, w, 3)
-        if bottom_up:
-            rows = rows[::-1]
-        return rows[:, :, ::-1].copy()  # BGR -> RGB
-    raise ValueError("not a PPM(P6)/BMP(24) payload")
+    ValueError for any other format or an unsupported flavor of these."""
+    return _image_codec(payload)[0](payload)
 
 
 def encode_ppm(arr: np.ndarray) -> bytes:
@@ -148,8 +167,8 @@ def decode_png(payload: bytes) -> np.ndarray:
     """Decode an 8-bit truecolor PNG (RGB or RGBA, non-interlaced) to
     an (h, w, 3|4) uint8 array.  Needs only stdlib zlib (IDAT inflate)
     plus the five spec filters (None/Sub/Up/Average/Paeth) undone
-    per scanline; raises ValueError for other PNG flavors.  Palette /
-    16-bit / interlaced variants and JPEG remain codec-library gates."""
+    per scanline; raises ValueError for other PNG flavors (palette,
+    16-bit, interlaced)."""
     import zlib
 
     if payload[:8] != _PNG_SIG:
@@ -246,6 +265,16 @@ def encode_png(arr: np.ndarray) -> bytes:
     )
 
 
+# (magic bytes, decode to (h, w, 3) RGB, encode) per image format: the
+# one dispatch decode_image and resize_stub read
+_IMAGE_FORMATS = (
+    (_PNG_SIG, lambda p: decode_png(p)[:, :, :3].copy(), encode_png),
+    (b"\xff\xd8", lambda p: _jpeg().decode_jpeg(p), lambda a: _jpeg().encode_jpeg(a)),
+    (b"P6", _decode_ppm, encode_ppm),
+    (b"BM", _decode_bmp, encode_bmp),
+)
+
+
 # --- pure-numpy audio codec (RIFF/WAVE, PCM 8/16-bit) --------------------
 
 
@@ -323,39 +352,23 @@ def audio_features(
     option.  Default (strict) raises, keeping the exact-oracle
     contract."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = (id_col, "sample_rate", "n_channels", "n_samples", "peak", "zero_crossings", "decode_ok")
-            rows = {k: [] for k in cols}
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    samples, rate = decode_wav(bytes(b))
-                except ValueError:
-                    if not permissive:
-                        raise
-                    for k, v in zip(cols, (i, None, None, None, None, None, False)):
-                        rows[k].append(v)
-                    continue
-                mono = samples[:, 0].astype(np.int64)
-                vals = (
-                    i,
-                    rate,
-                    samples.shape[1],
-                    samples.shape[0],
-                    int(np.abs(mono).max(initial=0)),
-                    int(np.sum(mono[1:] * mono[:-1] < 0)),
-                    True,
-                )
-                for k, v in zip(cols, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def features(i, b):
+        try:
+            samples, rate = decode_wav(bytes(b))
+        except ValueError:
+            if not permissive:
+                raise
+            return [(i, None, None, None, None, None, False)]
+        mono = samples[:, 0].astype(np.int64)
+        peak = int(np.abs(mono).max(initial=0))
+        return [(i, rate, samples.shape[1], samples.shape[0], peak, int(np.sum(mono[1:] * mono[:-1] < 0)), True)]
 
-    out = df.mapInPandas(
-        extract,
-        schema=(
-            f"{id_col} bigint, sample_rate int, n_channels int, n_samples int, "
-            f"peak int, zero_crossings int, decode_ok boolean"
-        ),
+    out = _map_rows(
+        df,
+        (id_col, payload_col),
+        features,
+        f"{id_col} bigint, sample_rate int, n_channels int, n_samples int, "
+        "peak int, zero_crossings int, decode_ok boolean",
     )
     return out if permissive else out.drop("decode_ok")
 
@@ -425,32 +438,29 @@ def y4m_frame_luma(meta: dict, frame: bytes) -> np.ndarray:
     return np.frombuffer(frame, dtype=np.uint8, count=w * h).reshape(h, w)
 
 
-def decode_stub(payload: bytes, modality: str = "image") -> dict:
-    """Decode one payload to typed metadata + an 8-dim feature.
+def decode_stub(payload: bytes) -> dict:
+    """Decode one image payload to typed metadata + an 8-dim feature.
 
     Real path: PPM/BMP/PNG/baseline-JPEG images decode via
     ``decode_image`` — the feature is [per-channel mean (3),
     per-channel max (3), normalized aspect terms (2)].  Remaining
     formats (MP3/MP4 audio/video) require codec libraries not in this
     environment and raise NotImplementedError."""
-    if modality == "image":
-        try:
-            arr = decode_image(bytes(payload))
-        except ValueError:
-            arr = None
-        if arr is not None:
-            h, w, _ = arr.shape
-            means = arr.reshape(-1, 3).mean(axis=0) / 255.0
-            maxes = arr.reshape(-1, 3).max(axis=0) / 255.0
-            return {
-                "width": w,
-                "height": h,
-                "channels": 3,
-                "feature": [*means.tolist(), *maxes.tolist(), w / (w + h), h / (w + h)],
-            }
-    raise NotImplementedError(
-        f"media decode for modality={modality!r} requires external libraries not present in this environment"
-    )
+    try:
+        arr = decode_image(bytes(payload))
+    except ValueError as e:
+        raise NotImplementedError(
+            "media decode beyond PPM/BMP/PNG/JPEG images requires external libraries not present in this environment"
+        ) from e
+    h, w, _ = arr.shape
+    means = arr.reshape(-1, 3).mean(axis=0) / 255.0
+    maxes = arr.reshape(-1, 3).max(axis=0) / 255.0
+    return {
+        "width": w,
+        "height": h,
+        "channels": 3,
+        "feature": [*means.tolist(), *maxes.tolist(), w / (w + h), h / (w + h)],
+    }
 
 
 def resize_stub(payload: bytes, width: int, height: int) -> bytes:
@@ -459,21 +469,13 @@ def resize_stub(payload: bytes, width: int, height: int) -> bytes:
     Other formats raise NotImplementedError."""
     payload = bytes(payload)
     try:
-        arr = decode_image(payload)
-    except ValueError:
-        arr = None
-    if arr is not None:
-        small = resize_nearest(arr, width, height)
-        if payload[:8] == _PNG_SIG:
-            return encode_png(small)
-        if payload[:2] == b"\xff\xd8":
-            from hadoop_3_3_6_spark.functions.jpeg import encode_jpeg
-
-            return encode_jpeg(small)
-        return encode_ppm(small) if payload[:2] == b"P6" else encode_bmp(small)
-    raise NotImplementedError(
-        "resize of non-PPM/BMP/PNG/JPEG images requires PIL/opencv, not present in this environment"
-    )
+        decode, encode = _image_codec(payload)
+        arr = decode(payload)
+    except ValueError as e:
+        raise NotImplementedError(
+            "resize of non-PPM/BMP/PNG/JPEG images requires PIL/opencv, not present in this environment"
+        ) from e
+    return encode(resize_nearest(arr, width, height))
 
 
 def frame_sample_stub(payload: bytes, every_n: int = 10) -> list[bytes]:
@@ -481,14 +483,11 @@ def frame_sample_stub(payload: bytes, every_n: int = 10) -> list[bytes]:
     ``decode_y4m`` and every n-th frame is re-encoded as a standalone
     single-frame y4m (self-describing blob).  Compressed containers
     (MP4/MKV) require ffmpeg and raise NotImplementedError."""
-    payload = bytes(payload)
     try:
-        meta, frames = decode_y4m(payload)
-    except ValueError:
-        meta = None
-    if meta is not None:
-        return [encode_y4m(meta, [f]) for f in frames[::every_n]]
-    raise NotImplementedError("compressed video decode requires ffmpeg, not present in this environment")
+        meta, frames = decode_y4m(bytes(payload))
+    except ValueError as e:
+        raise NotImplementedError("compressed video decode requires ffmpeg, not present in this environment") from e
+    return [encode_y4m(meta, [f]) for f in frames[::every_n]]
 
 
 def resize_images(
@@ -497,14 +496,11 @@ def resize_images(
     """Distributed resize stage: mapInPandas over binary payloads →
     (id, thumbnail binary, n_bytes).  Arrow carries bytes both ways."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            thumbs = pdf[payload_col].map(lambda b: resize_stub(bytes(b), width, height))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "thumbnail": thumbs, "n_bytes": thumbs.map(len).astype("int32")}
-            )
+    def thumbnail(i, b):
+        thumb = resize_stub(bytes(b), width, height)
+        return [(i, thumb, len(thumb))]
 
-    return df.mapInPandas(run, schema=f"{id_col} bigint, thumbnail binary, n_bytes int")
+    return _map_rows(df, (id_col, payload_col), thumbnail, f"{id_col} bigint, thumbnail binary, n_bytes int")
 
 
 def sample_frames(
@@ -513,17 +509,10 @@ def sample_frames(
     """Distributed frame sampling: one output row per kept frame
     (id, frame_idx, frame binary) — the explode-shaped mapInPandas."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                for j, fr in enumerate(frame_sample_stub(bytes(b), every_n)):
-                    ids.append(i)
-                    idxs.append(j)
-                    frames.append(fr)
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
+    def frames(i, b):
+        return [(i, j, fr) for j, fr in enumerate(frame_sample_stub(bytes(b), every_n))]
 
-    return df.mapInPandas(run, schema=f"{id_col} bigint, frame_idx int, frame binary")
+    return _map_rows(df, (id_col, payload_col), frames, f"{id_col} bigint, frame_idx int, frame binary")
 
 
 def decode_features(
@@ -533,19 +522,11 @@ def decode_features(
     with an 8-dim feature vector output — the batch shape a real
     image embedder would use."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf[payload_col].map(lambda b: decode_stub(bytes(b)))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": feats.map(lambda d: d["width"]).astype("int32"),
-                    "height": feats.map(lambda d: d["height"]).astype("int32"),
-                    "feature": feats.map(lambda d: d["feature"]),
-                }
-            )
+    def features(i, b):
+        d = decode_stub(bytes(b))
+        return [(i, d["width"], d["height"], d["feature"])]
 
-    return df.mapInPandas(extract, schema=f"{id_col} bigint, width int, height int, feature array<double>")
+    return _map_rows(df, (id_col, payload_col), features, f"{id_col} bigint, width int, height int, feature array<double>")
 
 
 # --- lossy-container METADATA parsers (MP3 frame headers, MP4 boxes) ------
@@ -694,46 +675,25 @@ def media_metadata(
     decoders elsewhere).  Unparseable payloads yield ok=false rows
     (SkipBadRecords stance), never task failures."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("fmt", "ok", "duration_ms", "sample_rate", "channels", "width", "height", "detail")}
-            for b in pdf[payload_col]:
-                b = bytes(b)
-                try:
-                    if b[4:8] == b"ftyp":
-                        m = parse_mp4_metadata(b)
-                        v = next((t for t in m["tracks"] if t["type"] == "vide"), None)
-                        rows["fmt"].append("mp4")
-                        rows["ok"].append(True)
-                        rows["duration_ms"].append(m["duration_ms"])
-                        rows["sample_rate"].append(0)
-                        rows["channels"].append(0)
-                        rows["width"].append(v["width"] if v else 0)
-                        rows["height"].append(v["height"] if v else 0)
-                        rows["detail"].append(m["brand"])
-                    else:
-                        m = parse_mp3_metadata(b)
-                        rows["fmt"].append("mp3")
-                        rows["ok"].append(True)
-                        rows["duration_ms"].append(m["duration_ms"])
-                        rows["sample_rate"].append(m["sample_rate"])
-                        rows["channels"].append(m["channels"])
-                        rows["width"].append(0)
-                        rows["height"].append(0)
-                        rows["detail"].append(f"{m['bitrate_kbps']}kbps{' vbr' if m['vbr'] else ''}")
-                except (ValueError, IndexError, struct.error):
-                    for k, v in (("fmt", "unknown"), ("ok", False), ("duration_ms", 0),
-                                 ("sample_rate", 0), ("channels", 0), ("width", 0),
-                                 ("height", 0), ("detail", "")):
-                        rows[k].append(v)
-            yield pd.DataFrame({id_col: pdf[id_col], **rows})
+    def metadata(i, b):
+        b = bytes(b)
+        try:
+            if b[4:8] == b"ftyp":
+                m = parse_mp4_metadata(b)
+                v = next((t for t in m["tracks"] if t["type"] == "vide"), None)
+                return [(i, "mp4", True, m["duration_ms"], 0, 0, v["width"] if v else 0, v["height"] if v else 0, m["brand"])]
+            m = parse_mp3_metadata(b)
+            detail = f"{m['bitrate_kbps']}kbps{' vbr' if m['vbr'] else ''}"
+            return [(i, "mp3", True, m["duration_ms"], m["sample_rate"], m["channels"], 0, 0, detail)]
+        except (ValueError, IndexError, struct.error):
+            return [(i, "unknown", False, 0, 0, 0, 0, 0, "")]
 
-    return df.mapInPandas(
-        extract,
-        schema=(
-            f"{id_col} bigint, fmt string, ok boolean, duration_ms bigint, "
-            "sample_rate int, channels int, width int, height int, detail string"
-        ),
+    return _map_rows(
+        df,
+        (id_col, payload_col),
+        metadata,
+        f"{id_col} bigint, fmt string, ok boolean, duration_ms bigint, "
+        "sample_rate int, channels int, width int, height int, detail string",
     )
 
 
@@ -768,19 +728,10 @@ def image_dhash(
     cross the Arrow boundary once, hashes come back as one BIGINT
     column — at 100 TB this is a pure map stage over the image store
     with an 8-byte-per-image output."""
-    import pandas as pd
+    def dhash(i, payload):
+        return [(i, dhash64(decode_image(bytes(payload))))]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(i)
-                hashes.append(dhash64(decode_image(bytes(payload))))
-            yield pd.DataFrame(
-                {id_col: ids, "dhash": pd.array(hashes, dtype="int64")}
-            )
-
-    return df.mapInPandas(extract, schema=f"{id_col} bigint, dhash bigint")
+    return _map_rows(df, (id_col, payload_col), dhash, f"{id_col} bigint, dhash bigint")
 
 
 def phash_near_duplicates(

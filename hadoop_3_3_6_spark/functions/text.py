@@ -219,16 +219,29 @@ def token_counts(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     )
 
 
+def _stopword_ratios(
+    df: DataFrame, text_col: str, id_col: str, stops_by_lang: dict[str, Iterable[str]]
+) -> tuple[DataFrame, dict[str, Column]]:
+    """``df`` reduced to ``id_col`` and ``_sw``, the per-row word count
+    ``n`` and one stopword-hit count per language, all read from one
+    let-bound word array (one split per row); plus each language's
+    stopword ratio over those fields."""
+    hits = "".join(f", '{lang}', {stopword_hits_sql('ws', stops)}" for lang, stops in stops_by_lang.items())
+    counted = spread_for_compute(df).select(
+        F.col(id_col), F.expr(let_sql(words_sql(text_col), "ws", f"named_struct('n', size(ws){hits})")).alias("_sw")
+    )
+    return counted, {lang: _ratio_or_zero(F.col(f"_sw.{lang}"), F.col("_sw.n")) for lang in stops_by_lang}
+
+
 def language_id(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", threshold: float = 0.05
 ) -> DataFrame:
     """Stopword-ratio language ID: fraction of tokens that are English
     stopwords; >= threshold → 'en' else 'unk'.  (The reference has no
     NLP surface; this is the training-pipeline heuristic analogue.)"""
-    df = spread_for_compute(df)
-    hits = F.expr(stopword_hits_sql(words_sql(text_col), EN_STOPWORDS))
-    ratio = _ratio_or_zero(hits, F.size(_words(text_col)))
-    return df.select(
+    counted, ratios = _stopword_ratios(df, text_col, id_col, {"en": EN_STOPWORDS})
+    ratio = ratios["en"]
+    return counted.select(
         F.col(id_col),
         ratio.alias("stopword_ratio"),
         F.when(ratio >= threshold, F.lit("en")).otherwise(F.lit("unk")).alias("pred_lang"),
@@ -252,12 +265,7 @@ def language_id_multi(
     threshold else 'unk' (ties break in en > de > fr declaration
     order via strict comparisons).  Pure column expressions — the
     n-language generalization of ``language_id``."""
-    df = spread_for_compute(df)
-    total = F.size(_words(text_col))
-    ratios = {
-        lang: _ratio_or_zero(F.expr(stopword_hits_sql(words_sql(text_col), stops)), total)
-        for lang, stops in LANG_STOPWORDS.items()
-    }
+    counted, ratios = _stopword_ratios(df, text_col, id_col, LANG_STOPWORDS)
     langs = list(LANG_STOPWORDS)
     best = None
     for lang in langs:
@@ -269,7 +277,7 @@ def language_id_multi(
             cond = cond & op
         best = F.when(cond, F.lit(lang)) if best is None else best.when(cond, F.lit(lang))
     pred = best.otherwise(F.lit("unk"))
-    return df.select(
+    return counted.select(
         F.col(id_col),
         *[F.round(ratios[lang], 6).alias(f"ratio_{lang}") for lang in langs],
         pred.alias("pred_lang"),
@@ -759,7 +767,6 @@ def gopher_quality_rules(
     exact SQL oracle (counts-of-3-char '...' via the
     length-minus-replace identity, integer-divided by 3)."""
     df = spread_for_compute(df)
-    lines = lines_sql(text_col)
     stop_arr = array_sql(f"'{s}'" for s in _GOPHER_STOPWORDS)
     # the word signals share one let-bound word array (one split per row)
     word_sig = let_sql(
@@ -770,9 +777,19 @@ def gopher_quality_rules(
         "'alpha', size(filter(ws, w -> w rlike '[a-zA-Z]')), "
         f"'stop', size(filter({stop_arr}, s -> array_contains(ws, s))))",
     )
+    # so do the line signals (one line split per row)
+    line_sig = let_sql(
+        lines_sql(text_col),
+        "ls",
+        "named_struct('n', size(ls), "
+        "'bullet', size(filter(ls, l -> startswith(trim(l), '-') "
+        "or startswith(trim(l), '*') or startswith(trim(l), '•'))), "
+        "'ellipsis', size(filter(ls, l -> endswith(trim(l), '...') or endswith(trim(l), '…'))))",
+    )
     base = df.select(
         F.col(id_col),
         F.expr(word_sig).alias("_ws"),
+        F.expr(line_sig).alias("_ls"),
         (
             F.length(F.col(text_col))
             - F.length(F.expr(f"replace({text_col}, '#', '')"))
@@ -780,15 +797,6 @@ def gopher_quality_rules(
             - F.length(F.expr(f"replace({text_col}, '…', '')"))
             + F.expr(f"(length({text_col}) - length(replace({text_col}, '...', ''))) div 3")
         ).alias("_symbols"),
-        F.expr(f"size({lines})").alias("_n_lines"),
-        F.expr(
-            f"size(filter({lines}, l -> startswith(trim(l), '-') "
-            f"or startswith(trim(l), '*') or startswith(trim(l), '•')))"
-        ).alias("_bullet_lines"),
-        F.expr(
-            f"size(filter({lines}, l -> endswith(trim(l), '...') "
-            f"or endswith(trim(l), '…')))"
-        ).alias("_ellipsis_lines"),
     )
 
     sig = base.select(
@@ -797,8 +805,8 @@ def gopher_quality_rules(
         _ratio_or_zero(F.col("_ws.chars"), F.col("_ws.n")).alias("mean_word_len"),
         _ratio_or_zero(F.col("_symbols"), F.col("_ws.n")).alias("symbol_word_ratio"),
         _ratio_or_zero(F.col("_ws.alpha"), F.col("_ws.n")).alias("alpha_word_frac"),
-        _ratio_or_zero(F.col("_bullet_lines"), F.col("_n_lines")).alias("bullet_line_frac"),
-        _ratio_or_zero(F.col("_ellipsis_lines"), F.col("_n_lines")).alias("ellipsis_line_frac"),
+        _ratio_or_zero(F.col("_ls.bullet"), F.col("_ls.n")).alias("bullet_line_frac"),
+        _ratio_or_zero(F.col("_ls.ellipsis"), F.col("_ls.n")).alias("ellipsis_line_frac"),
         F.col("_ws.stop").alias("stopword_hits"),
     )
     keep = (

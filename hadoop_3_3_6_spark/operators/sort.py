@@ -29,11 +29,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def global_sort(df: DataFrame, cols: list[str], ascending: bool = True) -> DataFrame:
-    """Total-order sort: range-partitioned with sampled split points —
-    built-in equivalent of TotalOrderPartitioner + InputSampler."""
-    order = [F.col(c).asc() if ascending else F.col(c).desc() for c in cols]
-    return df.orderBy(*order)
+def global_sort(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Ascending total-order sort: range-partitioned with sampled split
+    points — built-in equivalent of TotalOrderPartitioner +
+    InputSampler."""
+    return df.orderBy(*[F.col(c).asc() for c in cols])
 
 
 def top_k(df: DataFrame, order: list[Column], k: int) -> DataFrame:

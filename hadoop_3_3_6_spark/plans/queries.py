@@ -2345,18 +2345,10 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross the Arrow boundary in both directions and the decoded
     (width, height, channel mean) are exactly oracle-checkable because
     color and dims derive from doc_id.  This is the production batch
-    shape for an image feature-extract stage; only the codec changes
-    (JPEG stays a codec-library gate)."""
-    from collections.abc import Iterator
-
+    shape for an image feature-extract stage; only the codec changes."""
     import numpy as np
-    import pandas as pd
 
-    from hadoop_3_3_6_spark.functions.multimodal import (
-        decode_features,
-        encode_png,
-        encode_ppm,
-    )
+    from hadoop_3_3_6_spark.functions.multimodal import _map_rows, decode_features
     from hadoop_3_3_6_spark.functions.text import spread_for_python
 
     # codec encode/decode is pure-Python per-image work: rebalance an
@@ -2364,16 +2356,13 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_for_python; plan no-op at real scale)
     docs = spread_for_python(load_table(spark, "documents", sf_dir).select("doc_id"))
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                arr = np.full((3 + i % 7, 4 + i % 13, 3), i % 251, dtype=np.uint8)
-                payloads.append(encode_ppm(arr) if i % 2 == 0 else encode_png(arr))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    payload = _image_fixture_payload()
 
-    blobs = docs.mapInPandas(render, schema="doc_id bigint, payload binary")
+    def render(i):
+        i = int(i)
+        return [(i, payload(i, np.full((3 + i % 7, 4 + i % 13, 3), i % 251, dtype=np.uint8)))]
+
+    blobs = _map_rows(docs, ("doc_id",), render, "doc_id bigint, payload binary")
     feats = decode_features(blobs, "payload", "doc_id")
     return feats.select(
         "doc_id",
@@ -2381,6 +2370,19 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "height",
         F.round(F.element_at("feature", 1), 6).alias("mean_r"),
     )
+
+
+def _image_fixture_payload():
+    """The image fixtures' container rule, ``payload(i, arr)``: PPM
+    for even doc_ids, PNG for odd (both real codec roundtrips).  A
+    nested function, so a Python worker unpickles it without importing
+    this module, which costs it ~0.1 CPU-s on a 4-core x86 VM."""
+    from hadoop_3_3_6_spark.functions.multimodal import encode_png, encode_ppm
+
+    def payload(i: int, arr) -> bytes:
+        return encode_ppm(arr) if i % 2 == 0 else encode_png(arr)
+
+    return payload
 
 
 def _phash_fixture_array(i: int):
@@ -2477,34 +2479,16 @@ def _phash_hashes(docs):
     task runs one worker, not a piped pair (r13 measurement: the
     chained pair cost 2.3× the fused form at full width purely in
     worker spawn + payload transpose)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from hadoop_3_3_6_spark.functions.multimodal import (
-        decode_image,
-        dhash64,
-        encode_png,
-        encode_ppm,
-    )
+    from hadoop_3_3_6_spark.functions.multimodal import _map_rows, decode_image, dhash64
     from hadoop_3_3_6_spark.functions.text import spread_for_python
 
-    docs = spread_for_python(docs)
+    payload = _image_fixture_payload()
 
-    def render_hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                arr = _phash_fixture_array(i)
-                payload = encode_ppm(arr) if i % 2 == 0 else encode_png(arr)
-                ids.append(i)
-                hashes.append(dhash64(decode_image(payload)))
-            yield pd.DataFrame(
-                {"doc_id": ids, "dhash": pd.array(hashes, dtype="int64")}
-            )
+    def render_hash(i):
+        i = int(i)
+        return [(i, dhash64(decode_image(payload(i, _phash_fixture_array(i)))))]
 
-    return docs.mapInPandas(render_hash, schema="doc_id bigint, dhash bigint")
+    return _map_rows(spread_for_python(docs), ("doc_id",), render_hash, "doc_id bigint, dhash bigint")
 
 
 def _phash_oracle(path: str) -> str:
@@ -3295,6 +3279,23 @@ def q_similarity_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _square_wav():
+    """The audio fixture rule, ``wav(i)``: a 16-bit PCM mono WAV at
+    8 kHz, a square wave of 100 + i % 400 samples, amplitude
+    1000 + i % 20000 and half-period 1 + i % 16 samples.  Nested, as
+    ``_image_fixture_payload``, so workers need not import this
+    module."""
+    import numpy as np
+
+    from hadoop_3_3_6_spark.functions.multimodal import encode_wav
+
+    def wav(i: int) -> bytes:
+        n, amp, half = 100 + i % 400, 1000 + i % 20000, 1 + i % 16
+        return encode_wav(np.where((np.arange(n) // half) % 2 == 0, amp, -amp).astype(np.int16), 8000)
+
+    return wav
+
+
 @_register(
     "multimodal_audio",
     """
@@ -3317,12 +3318,7 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact.  Same batch shape as a production audio feature-extract
     stage — only the codec (PCM here, MP3/FLAC on a real cluster)
     changes."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from hadoop_3_3_6_spark.functions.multimodal import audio_features, encode_wav
+    from hadoop_3_3_6_spark.functions.multimodal import _map_rows, audio_features
     from hadoop_3_3_6_spark.functions.text import spread_for_python
 
     # WAV encode/decode is pure-Python per-row work: rebalance an
@@ -3330,18 +3326,12 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_for_python; plan no-op at real scale)
     docs = spread_for_python(load_table(spark, "documents", sf_dir).select("doc_id"))
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n, amp, half = 100 + i % 400, 1000 + i % 20000, 1 + i % 16
-                idx = np.arange(n)
-                wave_arr = np.where((idx // half) % 2 == 0, amp, -amp).astype(np.int16)
-                payloads.append(encode_wav(wave_arr, 8000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    wav = _square_wav()
 
-    blobs = docs.mapInPandas(render, schema="doc_id bigint, payload binary")
+    def render(i):
+        return [(i, wav(int(i)))]
+
+    blobs = _map_rows(docs, ("doc_id",), render, "doc_id bigint, payload binary")
     return audio_features(blobs, "payload", "doc_id")
 
 
@@ -3372,18 +3362,12 @@ def q_multimodal_wav_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).select("doc_id").filter(F.col("doc_id") % 10 == 0)
 
     def render(out: str) -> None:
+        wav = _square_wav()
+
         def write_part(rows):
-            import numpy as np
-
-            from hadoop_3_3_6_spark.functions.multimodal import encode_wav
-
             for r in rows:
-                i = int(r.doc_id)
-                n, amp, half = 100 + i % 400, 1000 + i % 20000, 1 + i % 16
-                idx = np.arange(n)
-                s = np.where((idx // half) % 2 == 0, amp, -amp).astype(np.int16)
-                with open(f"{out}/{i}.wav", "wb") as f:
-                    f.write(encode_wav(s, 8000))
+                with open(f"{out}/{int(r.doc_id)}.wav", "wb") as f:
+                    f.write(wav(int(r.doc_id)))
 
         docs.foreachPartition(write_part)
 
@@ -3420,12 +3404,8 @@ def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     in doc_id, so the oracle is exact.  Production batch shape for a
     video frame-extract stage; only the codec (y4m here, MP4 via
     ffmpeg on a real cluster) changes."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     from hadoop_3_3_6_spark.functions.multimodal import (
+        _map_rows,
         decode_y4m,
         encode_y4m,
         sample_frames,
@@ -3439,34 +3419,20 @@ def q_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape at fixture size.
     docs = load_table(spark, "documents", sf_dir).select("doc_id")
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h, n, val = 4 + (i % 3) * 2, 2 + (i % 2) * 2, 2 + i % 8, i % 251
-                meta = {"width": w, "height": h, "colorspace": "420"}
-                frame = bytes([val]) * (w * h) + bytes([128]) * (w * h // 2)
-                payloads.append(encode_y4m(meta, [frame] * n))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def render(i):
+        i = int(i)
+        w, h, n, val = 4 + (i % 3) * 2, 2 + (i % 2) * 2, 2 + i % 8, i % 251
+        frame = bytes([val]) * (w * h) + bytes([128]) * (w * h // 2)
+        return [(i, encode_y4m({"width": w, "height": h, "colorspace": "420"}, [frame] * n))]
 
-    blobs = docs.mapInPandas(render, schema="doc_id bigint, payload binary")
+    blobs = _map_rows(docs, ("doc_id",), render, "doc_id bigint, payload binary")
     kept = sample_frames(blobs, "payload", "doc_id", every_n=2)
 
-    def features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, means = [], [], []
-            for b in pdf["frame"]:
-                meta, frames = decode_y4m(bytes(b))
-                luma = y4m_frame_luma(meta, frames[0])
-                ws.append(meta["width"])
-                hs.append(meta["height"])
-                means.append(float(luma.mean()))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "width": ws, "height": hs, "frame_mean": means}
-            )
+    def features(i, b):
+        meta, frames = decode_y4m(bytes(b))
+        return [(i, meta["width"], meta["height"], float(y4m_frame_luma(meta, frames[0]).mean()))]
 
-    feats = kept.mapInPandas(features, schema="doc_id bigint, width int, height int, frame_mean double")
+    feats = _map_rows(kept, ("doc_id", "frame"), features, "doc_id bigint, width int, height int, frame_mean double")
     return feats.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("int").alias("kept_frames"),
         F.first("width").alias("width"),
@@ -8825,11 +8791,8 @@ def q_multimodal_container_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle is exact.  The corpus-stats shape for audio/video
     crawls where full decode is neither needed nor possible."""
     import struct as _struct
-    from collections.abc import Iterator as _Iter
 
-    import pandas as _pd
-
-    from hadoop_3_3_6_spark.functions.multimodal import media_metadata
+    from hadoop_3_3_6_spark.functions.multimodal import _map_rows, media_metadata
     from hadoop_3_3_6_spark.functions.text import spread_for_python
 
     # container render + metadata walk are chained Python stages:
@@ -8837,30 +8800,23 @@ def q_multimodal_container_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chained-Python-stage rule, spread_for_python; plan no-op at scale)
     docs = spread_for_python(load_table(spark, "documents", sf_dir).select("doc_id"))
 
-    def render(batches: _Iter[_pd.DataFrame]) -> _Iter[_pd.DataFrame]:
-        # MPEG-1 Layer III, 128 kbps, 44.1 kHz, no padding: 417-byte frames
-        frame = bytes([0xFF, 0xFB, 0x90, 0x00]) + bytes(144 * 128000 // 44100 - 4)
+    # MPEG-1 Layer III, 128 kbps, 44.1 kHz, no padding: 417-byte frames
+    frame = bytes([0xFF, 0xFB, 0x90, 0x00]) + bytes(144 * 128000 // 44100 - 4)
 
-        def b(btype: bytes, payload: bytes) -> bytes:
-            return _struct.pack(">I", 8 + len(payload)) + btype + payload
+    def b(btype: bytes, payload: bytes) -> bytes:
+        return _struct.pack(">I", 8 + len(payload)) + btype + payload
 
-        out = []
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                if i % 2 == 0:
-                    payloads.append(frame * (3 + i % 5))
-                else:
-                    mvhd = b(b"mvhd", bytes(4) + bytes(8) + _struct.pack(">II", 1000, 1000 + i % 7000) + bytes(80))
-                    tkhd = b(b"tkhd", bytes(4) + bytes(72) + _struct.pack(
-                        ">II", (16 * (1 + i % 40)) << 16, (16 * (1 + i % 30)) << 16))
-                    hdlr = b(b"hdlr", bytes(8) + b"vide" + bytes(14))
-                    trak = b(b"trak", tkhd + b(b"mdia", hdlr))
-                    payloads.append(b(b"ftyp", b"mp42" + bytes(4)) + b(b"moov", mvhd + trak))
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def render(i):
+        i = int(i)
+        if i % 2 == 0:
+            return [(i, frame * (3 + i % 5))]
+        mvhd = b(b"mvhd", bytes(4) + bytes(8) + _struct.pack(">II", 1000, 1000 + i % 7000) + bytes(80))
+        tkhd = b(b"tkhd", bytes(4) + bytes(72) + _struct.pack(
+            ">II", (16 * (1 + i % 40)) << 16, (16 * (1 + i % 30)) << 16))
+        trak = b(b"trak", tkhd + b(b"mdia", b(b"hdlr", bytes(8) + b"vide" + bytes(14))))
+        return [(i, b(b"ftyp", b"mp42" + bytes(4)) + b(b"moov", mvhd + trak))]
 
-    blobs = docs.mapInPandas(render, schema="doc_id bigint, payload binary")
+    blobs = _map_rows(docs, ("doc_id",), render, "doc_id bigint, payload binary")
     meta = media_metadata(blobs, "payload", "doc_id")
     return meta.select("doc_id", "fmt", "duration_ms", "sample_rate", "width", "height")
 

@@ -44,7 +44,7 @@ def spark_local_dir() -> str:
     )
 
 
-def get_spark(app_name: str = "hadoop-3-3-6-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "hadoop-3-3-6-spark") -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
     On a real cluster only ``master`` and sizing configs change; the
@@ -52,8 +52,7 @@ def get_spark(app_name: str = "hadoop-3-3-6-spark", shuffle_partitions: int | No
     semantics) are deployment-independent.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
+    shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

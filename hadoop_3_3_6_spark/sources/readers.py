@@ -25,17 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_text_lines(spark: SparkSession, path: str, with_offset: bool = False) -> DataFrame:
+def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
     """TextInputFormat analogue: one row per line, column ``line``.
-
-    ``with_offset`` adds a monotonic per-file position stand-in for the
-    byte offset key (the reference key is the byte offset; no example
-    query consumes it as data, it is an iteration artifact).
-    """
-    df = spark.read.text(path).withColumnRenamed("value", "line")
-    if with_offset:
-        df = df.withColumn("offset", F.monotonically_increasing_id())
-    return df
+    The reference's byte-offset key is an iteration artifact no query
+    consumes, so it has no column."""
+    return spark.read.text(path).withColumnRenamed("value", "line")
 
 
 def read_key_value_text(

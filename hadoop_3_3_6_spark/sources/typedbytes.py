@@ -260,9 +260,11 @@ def read_raw_bytes_frame(fp) -> bytes | None:
     return body
 
 
-def pipe_typed_bytes(
-    df: DataFrame, argv: list[str], batch_rows: int = 2048, io: str = "typedbytes"
-) -> DataFrame:
+# rows per pandas frame a pipe yields back from its child's output
+PIPE_BATCH_ROWS = 2048
+
+
+def pipe_typed_bytes(df: DataFrame, argv: list[str], io: str = "typedbytes") -> DataFrame:
     """The binary streaming pipe (HT/hadoop-streaming/.../
     PipeMapRed.java child-process contract): per PARTITION one child
     process of ``argv`` is spawned — the reference spawns one per map
@@ -336,7 +338,7 @@ def pipe_typed_bytes(
                 raise ValueError("typed-bytes pipe: key frame without a value frame")
             keys.append(k)
             vals.append(v)
-            if len(keys) >= batch_rows:
+            if len(keys) >= PIPE_BATCH_ROWS:
                 yield pd.DataFrame({"key": keys, "value": vals})
                 keys, vals = [], []
         # r12 ADVICE: a child that closed stdout (clean EOF above) but

@@ -452,15 +452,23 @@ def test_gopher_r13_rewrites_differential(spark):
         assert diff.count() == 0, f"marked-span divergence at n={n}"
 
 
-def _inline_words(value: str, var: str, body: str) -> str:
-    """``text.let_sql`` with the word binding undone: the word rule
-    written out at every use of ``ws``, as the operators spelled it
-    before their words were let-bound.  Other bindings pass through."""
+def _inline_binding(name: str):
+    """``text.let_sql`` with the binding of lambda variable ``name``
+    undone: its value written out at every use, as the operators
+    spelled it before the value was let-bound.  Other bindings pass
+    through."""
     import re
 
-    if var != "ws":
-        return let_sql(value, var, body)
-    return re.sub(r"\bws\b", lambda _: f"({value})", body)
+    def inline(value: str, var: str, body: str) -> str:
+        if var != name:
+            return let_sql(value, var, body)
+        return re.sub(rf"\b{name}\b", lambda _: f"({value})", body)
+
+    return inline
+
+
+def _splits(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count("split(")
 
 
 _WORD_EDGE_DOCS = [
@@ -503,12 +511,9 @@ def test_let_bound_words_differential(spark, monkeypatch, module, op):
     m = importlib.import_module(f"hadoop_3_3_6_spark.functions.{module}")
     df = _docs(spark, _WORD_EDGE_DOCS)
     new = op(m, df)
-    monkeypatch.setattr(m, "let_sql", _inline_words)
+    monkeypatch.setattr(m, "let_sql", _inline_binding("ws"))
     old = op(m, df)
-    def splits(d):
-        return d._jdf.queryExecution().optimizedPlan().toString().count("split(")
-
-    assert splits(old) > splits(new)  # the inline form re-splits the text
+    assert _splits(old) > _splits(new)  # the inline form re-splits the text
     assert old.count() == new.count() > 0
     assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
 
@@ -574,6 +579,84 @@ def test_language_id_ratio_equals_multi_en_ratio(spark):
     rows = single.collect()
     assert len(rows) == len(_WORD_EDGE_DOCS) and any(r.r > 0 for r in rows)
     assert single.exceptAll(multi).count() == 0 and multi.exceptAll(single).count() == 0
+
+
+def _stopword_ratios_unbound(df, text_col, id_col, stops_by_lang):
+    """``text._stopword_ratios`` as language ID spelled it before the
+    words and hit counts were bound: every read of a ratio re-derives
+    the word split and its stopword filter."""
+    from hadoop_3_3_6_spark.functions.text import _ratio_or_zero, stopword_hits_sql, words_sql
+
+    total = F.size(F.expr(words_sql(text_col)))
+    return df, {
+        lang: _ratio_or_zero(F.expr(stopword_hits_sql(words_sql(text_col), stops)), total)
+        for lang, stops in stops_by_lang.items()
+    }
+
+
+_LANG_EDGE_DOCS = [
+    "",
+    None,
+    "     ",  # only spaces: no words, every ratio 0
+    "the der",  # en and de tie: en wins by declaration order
+    "der le und et x",  # de and fr tie: de wins
+    "the der le",  # three-way tie
+    "zz yy xx",  # no stopword: unk
+    " ".join(["der", "die", "the", "le", "w"][i % 5] for i in range(2000)),
+]
+
+
+@pytest.mark.parametrize("op", ["language_id", "language_id_multi"])
+def test_language_id_bound_counts_differential(spark, monkeypatch, op):
+    """Language ID reads its word count and per-language stopword hits
+    from one let-bound word array.  Pinned against the unbound form,
+    which re-derives the split at every read of a ratio, on edge
+    documents: empty, NULL, only spaces, two- and three-way ties
+    between languages and one 2000-word document.  The values must be
+    identical."""
+    from hadoop_3_3_6_spark.functions import text
+
+    df = _docs(spark, _LANG_EDGE_DOCS)
+    new = getattr(text, op)(df)
+    monkeypatch.setattr(text, "_stopword_ratios", _stopword_ratios_unbound)
+    old = getattr(text, op)(df)
+    assert _splits(new) == 1 < _splits(old)
+    rows = {r.doc_id: r.pred_lang for r in new.collect()}
+    if op == "language_id_multi":
+        assert [rows[i] for i in (3, 4, 5, 6)] == ["en", "de", "en", "unk"]
+    assert old.count() == new.count() == len(_LANG_EDGE_DOCS)
+    assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
+
+
+_LINE_EDGE_DOCS = [
+    "",
+    None,
+    "\n\n  \n",  # only blank lines: no lines, both fractions 0
+    "one line, no newline",
+    "- a\n* b\n• c\nplain",
+    "end...\nend…\n \n  x...  \n- y",
+    "\n".join(["- item", "text", "more..."][i % 3] for i in range(2000)),
+]
+
+
+def test_gopher_bound_lines_differential(spark, monkeypatch):
+    """The Gopher rules read their line count and bullet / ellipsis
+    line counts from one let-bound line array.  Pinned against the
+    unbound form, with the line rule re-derived at every use, on line
+    edge documents: empty, NULL, blank lines only, no newline, bullet
+    and ellipsis lines with surrounding spaces and one 2000-line
+    document.  The values must be identical."""
+    from hadoop_3_3_6_spark.functions import text
+
+    df = _docs(spark, _LINE_EDGE_DOCS)
+    new = text.gopher_quality_rules(df)
+    monkeypatch.setattr(text, "let_sql", _inline_binding("ls"))
+    old = text.gopher_quality_rules(df)
+    assert _splits(new) == 2 < _splits(old)  # one word split, one line split
+    fracs = {r.doc_id: (r.bullet_line_frac, r.ellipsis_line_frac) for r in new.collect()}
+    assert fracs[2] == (0.0, 0.0) and fracs[4] == (0.75, 0.0) and fracs[5] == (0.25, 0.75)
+    assert old.count() == new.count() == len(_LINE_EDGE_DOCS)
+    assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
 
 
 _BOILERPLATE_DOCS = [

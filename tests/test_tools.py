@@ -392,39 +392,47 @@ def test_resize_nearest_known_values():
 
 
 def test_real_image_decode_and_resize_in_spark(spark):
-    """The mapInPandas stages run the REAL numpy decoder end-to-end on
-    PPM and BMP payloads, producing true dimensions and
-    re-encoded thumbnails that decode back to the expected size."""
+    """The mapInPandas stages run the REAL numpy decoders end-to-end on
+    PPM, BMP, PNG and JPEG payloads: true dimensions, and thumbnails
+    re-encoded in the source's own container.  A lossless source's
+    thumbnail decodes to exactly resize_nearest of the source."""
     import numpy as np
 
+    from hadoop_3_3_6_spark.functions.jpeg import encode_jpeg
     from hadoop_3_3_6_spark.functions.multimodal import (
+        decode_features,
         decode_image,
         encode_bmp,
+        encode_png,
         encode_ppm,
-        decode_features,
         resize_images,
+        resize_nearest,
     )
 
     rng = np.random.default_rng(3)
-    img1 = rng.integers(0, 256, size=(16, 12, 3), dtype=np.uint8)
-    img2 = rng.integers(0, 256, size=(9, 21, 3), dtype=np.uint8)
+    sources = {  # doc_id -> (image, encoder, magic, lossless)
+        1: (rng.integers(0, 256, size=(16, 12, 3), dtype=np.uint8), encode_ppm, b"P6", True),
+        2: (rng.integers(0, 256, size=(9, 21, 3), dtype=np.uint8), encode_bmp, b"BM", True),
+        3: (rng.integers(0, 256, size=(11, 7, 3), dtype=np.uint8), encode_png, b"\x89PNG\r\n\x1a\n", True),
+        4: (np.full((16, 24, 3), 90, dtype=np.uint8), encode_jpeg, b"\xff\xd8", False),
+    }
     df = spark.createDataFrame(
-        [(1, bytearray(encode_ppm(img1))), (2, bytearray(encode_bmp(img2)))],
+        [(i, bytearray(enc(img))) for i, (img, enc, _, _) in sources.items()],
         "doc_id long, payload binary",
     )
     feats = {r["doc_id"]: r for r in decode_features(df).collect()}
-    assert (feats[1]["width"], feats[1]["height"]) == (12, 16)
-    assert (feats[2]["width"], feats[2]["height"]) == (21, 9)
-    exp_mean = img1.reshape(-1, 3).mean(axis=0) / 255.0
+    for i, (img, _, _, _) in sources.items():
+        assert (feats[i]["width"], feats[i]["height"]) == (img.shape[1], img.shape[0])
+    exp_mean = sources[1][0].reshape(-1, 3).mean(axis=0) / 255.0
     assert abs(feats[1]["feature"][0] - exp_mean[0]) < 1e-9
 
-    thumbs = {r["doc_id"]: r for r in resize_images(df, width=4, height=4).collect()}
-    t1 = decode_image(bytes(thumbs[1]["thumbnail"]))
-    t2 = decode_image(bytes(thumbs[2]["thumbnail"]))
-    assert t1.shape == (4, 4, 3) and t2.shape == (4, 4, 3)
-    # thumbnail formats follow the source container (PPM in -> PPM out)
-    assert bytes(thumbs[1]["thumbnail"])[:2] == b"P6"
-    assert bytes(thumbs[2]["thumbnail"])[:2] == b"BM"
+    thumbs = {r["doc_id"]: bytes(r["thumbnail"]) for r in resize_images(df, width=4, height=4).collect()}
+    for i, (img, _, magic, lossless) in sources.items():
+        assert thumbs[i][: len(magic)] == magic  # the source's container
+        t = decode_image(thumbs[i])
+        assert t.shape == (4, 4, 3)
+        if lossless:
+            assert (t == resize_nearest(img, 4, 4)).all()
 
 
 def test_connected_components_chain_and_singleton(spark):
