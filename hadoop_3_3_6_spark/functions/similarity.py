@@ -13,13 +13,20 @@ Each shared decision has one copy:
   ``array<double>``, ``_cnorm``).  :func:`assign_clusters` ranks cells
   by rounded cosine desc, NULL last, then ``cent_id`` asc;
   :func:`assign_clusters_rowwise` is its shuffle-free one-cell form.
-- ADC: :func:`pq_encode` codes the corpus, :func:`_adc_tables` builds
-  per-probe distance tables and :func:`_adc_dist` sums the lookups.
-  :func:`_sqdist` is the one squared-L2 fold (trainer, encoder, tables
-  and the refine stage).
-- Probe form: every top-k takes ``probes``, a DataFrame of probe ids
+- Scores: :func:`_norm_sql` is the one L2 norm and :func:`_cosine_sql`
+  the one rounded cosine (``round(dot / (na * nb), 6)``), for the float
+  and the int8 dot alike.
+- ADC: :func:`pq_encode` codes the corpus (:func:`_nearest_code` is the
+  one codebook argmin, shared with the trainer), :func:`_adc_tables`
+  builds per-probe distance tables and :func:`_adc_rank` sums the
+  lookups and ranks.  :func:`_sqdist` is the one squared-L2 fold
+  (trainer, encoder, tables and the refine stage).
+- Pair join: :func:`_cell_pairs` is the within-cell pair join of the
+  cluster-blocked near-dup and SemDeDup.
+- Probe form: every top-k requires ``probes``, a DataFrame of probe ids
   applied as a broadcast semi-join (:func:`_restrict_to_probes`), so
-  no driver action; the PQ tiers require it.
+  the probe side is bounded and there is no driver action.  Every top-k
+  answers a probe batch against the built index; none runs all-pairs.
 
 Dot products run JVM-side via zip_with/aggregate folds in double
 precision (sequential fold ⇒ bit-reproducible, oracle-matchable).
@@ -69,18 +76,26 @@ def _sqdist(a: "F.Column", b: "F.Column") -> "F.Column":
     )
 
 
-def _restrict_to_probes(df: DataFrame, id_col: str, probes: DataFrame | None) -> DataFrame:
+def _norm_sql(vec: str) -> str:
+    return f"sqrt({_dot(vec, vec)})"
+
+
+def _cosine_sql(dot: str, na: str, nb: str) -> str:
+    """Cosine from a dot product and two norms, rounded to 1e-6 so ranks
+    are stable across engines (NULL for a zero norm: non-ANSI 0/0)."""
+    return f"round({dot} / ({na} * {nb}), 6)"
+
+
+def _restrict_to_probes(df: DataFrame, id_col: str, probes: DataFrame) -> DataFrame:
     """Restrict ``df`` to the probe rows without any driver action:
     ``probes`` is a DataFrame of probe ids (column named ``id_col``),
     applied as a broadcast semi-join so the probe set stays a table
-    inside the plan.  ``None`` keeps every row (all-pairs)."""
-    if probes is None:
-        return df
+    inside the plan."""
     return df.join(F.broadcast(probes.select(id_col).distinct()), on=id_col, how="left_semi")
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("_norm", F.expr(f"sqrt({_dot(vec_col, vec_col)})"))
+    return df.withColumn("_norm", F.expr(_norm_sql(vec_col)))
 
 
 def _rank_topk(
@@ -123,39 +138,27 @@ def _rank_topk(
     )
 
 
-def _scored_pairs(
-    emb: DataFrame, probes: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    a = with_norm(probes, vec_col).alias("a")
-    # corpus side of the |probes|-fanout score join: D-wide dot folds
-    # per (probe, row) pair are CPU-bound — rebalance an under-split
-    # scan to full width (plan no-op at real scale)
-    b = with_norm(spread_for_compute(emb, id_col), vec_col).alias("b")
-    dot = _dot(f"a.{vec_col}", f"b.{vec_col}")
-    score = F.expr(f"{dot} / (a._norm * b._norm)")
-    return (
-        a.join(b, on=F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("probe_id"),
-            F.col(f"b.{id_col}").alias("neighbor_id"),
-            score.alias("score"),
-        )
-    )
-
-
 def cosine_topk_bruteforce(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    probes: DataFrame | None = None,
+    *,
+    probes: DataFrame,
 ) -> DataFrame:
-    """Exact cosine top-k per probe.  Rank over (round(score,6) desc,
-    neighbor_id asc) — deterministic across engines.  Pass ``probes``
-    (an id DataFrame) to keep the probe set in-plan; no driver action."""
-    probe_rows = _restrict_to_probes(emb, id_col, probes)
-    scored = _scored_pairs(emb, probe_rows, id_col, vec_col).select(
-        "probe_id", "neighbor_id", F.round("score", 6).alias("score")
+    """Exact cosine top-k per probe (``probes``: an id DataFrame, kept
+    in-plan; no driver action).  Rank over (round(score,6) desc,
+    neighbor_id asc) — deterministic across engines."""
+    a = with_norm(_restrict_to_probes(emb, id_col, probes), vec_col).alias("a")
+    # corpus side of the |probes|-fanout score join: D-wide dot folds
+    # per (probe, row) pair are CPU-bound — rebalance an under-split
+    # scan to full width (plan no-op at real scale)
+    b = with_norm(spread_for_compute(emb, id_col), vec_col).alias("b")
+    score = F.expr(_cosine_sql(_dot(f"a.{vec_col}", f"b.{vec_col}"), "a._norm", "b._norm"))
+    scored = a.join(b, on=F.col(f"a.{id_col}") != F.col(f"b.{id_col}")).select(
+        F.col(f"a.{id_col}").alias("probe_id"),
+        F.col(f"b.{id_col}").alias("neighbor_id"),
+        score.alias("score"),
     )
     return _rank_topk(scored, k).select("probe_id", "neighbor_id", "score", "rank")
 
@@ -209,13 +212,13 @@ def cosine_pairs_above(
     )
     a = with_norm(guarded, vec_col).alias("a")
     b = with_norm(guarded, vec_col).alias("b")
-    score = F.expr(f"{_dot(f'a.{vec_col}', f'b.{vec_col}')} / (a._norm * b._norm)")
+    score = F.expr(_cosine_sql(_dot(f"a.{vec_col}", f"b.{vec_col}"), "a._norm", "b._norm"))
     return (
         a.join(b, on=F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(score, 6).alias("score"),
+            score.alias("score"),
         )
         .filter(F.col("score") >= threshold)
     )
@@ -241,6 +244,34 @@ def _spread_for_pair_join(assigned: DataFrame) -> DataFrame:
     the SMJ path."""
     par = assigned.sparkSession.sparkContext.defaultParallelism
     return assigned.repartition(par, F.col("cluster_id"))
+
+
+def _cell_pairs(assigned: DataFrame, id_col: str, vec_col: str, threshold: float) -> DataFrame:
+    """The within-cell pair join of the cluster-blocked operators: a
+    self equi-join of the assignment rows on cluster_id, kept where
+    ``_id_a < _id_b`` and the cosine reaches ``threshold``.  Output:
+    (_id_a, _id_b, cluster_id, score), one row per shared cell."""
+
+    def side(suffix: str) -> DataFrame:
+        return assigned.select(
+            F.col("cluster_id"),
+            F.col(id_col).alias(f"_id_{suffix}"),
+            F.col(vec_col).alias(f"_v{suffix}"),
+            F.col("_norm").alias(f"_n{suffix}"),
+        )
+
+    return (
+        side("a")
+        .join(side("b"), on="cluster_id")
+        .filter(F.col("_id_a") < F.col("_id_b"))
+        .select(
+            "_id_a",
+            "_id_b",
+            "cluster_id",
+            F.expr(_cosine_sql(_dot("_va", "_vb"), "_na", "_nb")).alias("score"),
+        )
+        .filter(F.col("score") >= threshold)
+    )
 
 
 def cosine_pairs_above_blocked(
@@ -276,29 +307,14 @@ def cosine_pairs_above_blocked(
     assigned = _spread_for_pair_join(
         assign_clusters(emb, id_col, vec_col, num_centroids, centroids, num_probes)
     )
-    a = assigned.select(
-        F.col("cluster_id"),
-        F.col(id_col).alias("_id_a"),
-        F.col(vec_col).alias("_va"),
-        F.col("_norm").alias("_na"),
-    )
-    b = assigned.select(
-        F.col("cluster_id"),
-        F.col(id_col).alias("_id_b"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_norm").alias("_nb"),
-    )
-    score = F.round(F.expr(f"{_dot('_va', '_vb')} / (_na * _nb)"), 6)
     return (
-        a.join(b, on="cluster_id")
-        .filter(F.col("_id_a") < F.col("_id_b"))
+        _cell_pairs(assigned, id_col, vec_col, threshold)
         .select(
             F.col("_id_a").alias("id_a"),
             F.col("_id_b").alias("id_b"),
-            F.col("cluster_id"),
-            score.alias("score"),
+            "cluster_id",
+            "score",
         )
-        .filter(F.col("score") >= threshold)
         .groupBy("id_a", "id_b", "score")
         .agg(F.min("cluster_id").alias("cluster_id"))
         .select("id_a", "id_b", "cluster_id", "score")
@@ -337,7 +353,8 @@ def ivf_topk(
     k: int = 5,
     num_centroids: int = 16,
     nprobe: int = 4,
-    probes: DataFrame | None = None,
+    *,
+    probes: DataFrame,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: coarse-quantize the corpus onto
@@ -367,14 +384,14 @@ def ivf_topk(
         F.col("_norm").alias("_pnorm"),
         "cluster_id",
     )
-    score = F.round(F.expr(f"{_dot('_pvec', vec_col)} / (_pnorm * _norm)"), 6)
+    score = F.expr(_cosine_sql(_dot("_pvec", vec_col), "_pnorm", "_norm"))
     # probes × nprobe is small by construction — broadcast it so the
     # corpus-sized assigned side never shuffles (cluster_id has only
     # num_centroids values: a hash join on it would be maximally
-    # skewed).  In all-pairs mode (no probe restriction) the probe side
-    # is corpus-sized, so fall back to the shuffle join.
-    probe_side = F.broadcast(probe_cells) if probes is not None else probe_cells
-    cand = assigned.join(probe_side, on="cluster_id").filter(F.col("probe_id") != F.col(id_col))
+    # skewed)
+    cand = assigned.join(F.broadcast(probe_cells), on="cluster_id").filter(
+        F.col("probe_id") != F.col(id_col)
+    )
     scored = cand.select("probe_id", F.col(id_col).alias("neighbor_id"), score.alias("score"))
     return _rank_topk(scored, k)
 
@@ -411,7 +428,8 @@ def quantized_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    probes: DataFrame | None = None,
+    *,
+    probes: DataFrame,
 ) -> DataFrame:
     """Exact top-k over int8-QUANTIZED cosine — the memory-bandwidth
     scale variant of ``cosine_topk_bruteforce``: integer dot products
@@ -432,11 +450,10 @@ def quantized_topk(
     q = quantize_embeddings(emb, id_col, vec_col, drop_zero=True)
     idot = "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as bigint) * cast(y as bigint)), cast(0 as bigint), (acc, v) -> acc + v)"
     qn = q.withColumn("_qnorm", F.expr(f"sqrt(cast({idot.format(a='qvec', b='qvec')} as double))"))
-    probe_rows = _restrict_to_probes(qn, id_col, probes)
-    a = probe_rows.alias("a")
+    a = _restrict_to_probes(qn, id_col, probes).alias("a")
     b = qn.alias("b")
-    score = F.round(
-        F.expr(f"cast({idot.format(a='a.qvec', b='b.qvec')} as double) / (a._qnorm * b._qnorm)"), 6
+    score = F.expr(
+        _cosine_sql(f"cast({idot.format(a='a.qvec', b='b.qvec')} as double)", "a._qnorm", "b._qnorm")
     )
     scored = a.join(b, on=F.col(f"a.{id_col}") != F.col(f"b.{id_col}")).select(
         F.col(f"a.{id_col}").alias("probe_id"),
@@ -529,14 +546,7 @@ def train_pq_codebooks(
         F.posexplode(F.expr(_slices_expr(vec_col, m, sub))).alias("sub_id", "sv")
     ).persist()
     try:
-        nearest = F.array_min(
-            F.transform(
-                F.element_at(F.col("books"), F.col("sub_id") + 1),
-                lambda c: F.struct(
-                    _sqdist(F.col("sv"), c["cvec"]).alias("_d"), c["code_id"].alias("code_id")
-                ),
-            )
-        )["code_id"]
+        nearest = _nearest_code(F.col("sv"), F.element_at(F.col("books"), F.col("sub_id") + 1))
         for _ in range(iters):
             assigned = vs.crossJoin(F.broadcast(_books_df(spark, books))).select(
                 "sub_id", nearest.alias("code_id"), "sv"
@@ -576,6 +586,19 @@ def _books_df(spark, books: list[list[list[float]]]) -> DataFrame:
     return spark.createDataFrame(
         [(payload,)], "books array<array<struct<cvec: array<double>, code_id: int>>>"
     )
+
+
+def _nearest_code(sv: "F.Column", book: "F.Column") -> "F.Column":
+    """Code id of the ``book`` entry nearest subvector ``sv`` — the one
+    codebook argmin (trainer and encoder): ``array_min`` over
+    struct(:func:`_sqdist`, code_id), so equidistant entries tie to the
+    LOWER code id."""
+    return F.array_min(
+        F.transform(
+            book,
+            lambda c: F.struct(_sqdist(sv, c["cvec"]).alias("_d"), c["code_id"].alias("code_id")),
+        )
+    )["code_id"]
 
 
 def _slices_expr(vec_col: str, m: int, sub: int) -> str:
@@ -621,18 +644,7 @@ def _pq_codes(
     under-split probe would launch a job at every construction."""
     m, sub = len(books), len(books[0][0])
     bdf = F.broadcast(_books_df(emb.sparkSession, books))
-    codes_expr = F.zip_with(
-        F.expr(_slices_expr(vec_col, m, sub)),
-        F.col("books"),
-        lambda sv, book: F.array_min(
-            F.transform(
-                book,
-                lambda c: F.struct(
-                    _sqdist(sv, c["cvec"]).alias("_d"), c["code_id"].alias("code_id")
-                ),
-            )
-        )["code_id"],
-    )
+    codes_expr = F.zip_with(F.expr(_slices_expr(vec_col, m, sub)), F.col("books"), _nearest_code)
     return emb.crossJoin(bdf).select(
         F.col(id_col), *[F.col(c) for c in extra_cols], codes_expr.alias("codes")
     )
@@ -665,30 +677,23 @@ def _adc_tables(
     )
 
 
-def _adc_dist() -> "F.Column":
-    """Fixed-order fold of the m per-subspace table lookups (codes →
-    dtab rows) — the determinism contract both PQ oracles replicate."""
-    return F.aggregate(
+def _adc_rank(cand: DataFrame, id_col: str, k: int) -> DataFrame:
+    """The ADC tiers' score-and-rank tail over (probe, code row,
+    ``dtab``) candidates: drop the self match, sum the m per-subspace
+    table lookups (codes → dtab rows) as a fixed-order fold — the
+    determinism contract the PQ oracles replicate — round to 1e-6 and
+    two-phase rank by ascending distance."""
+    adc_dist = F.aggregate(
         F.zip_with(
             F.col("codes"), F.col("dtab"), lambda code, row: F.element_at(row, code + 1)
         ),
         F.lit(0.0),
         lambda acc, d: acc + d,
     )
-
-
-def _require_probes(probes: DataFrame | None, op: str, why: str) -> None:
-    """The PQ tiers' bounded-probe contract: their per-probe tables
-    broadcast, so an unbounded probe set is refused up front."""
-    if probes is None:
-        raise ValueError(f"{op} requires a bounded probe set (probes): {why}")
-
-
-_ADC_WHY = (
-    "the ADC scan broadcasts one distance table per probe, so unbounded probes "
-    "mean a corpus-sized broadcast and O(N²) candidate work — batch the "
-    "probes, or use ivf_pq_topk's list pruning for all-pairs shapes"
-)
+    scored = cand.filter(F.col("probe_id") != F.col(id_col)).select(
+        "probe_id", F.col(id_col).alias("neighbor_id"), F.round(adc_dist, 6).alias("adc_dist")
+    )
+    return _rank_topk(scored, k, order_col="adc_dist", ascending=True)
 
 
 def pq_topk(
@@ -697,7 +702,8 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    probes: DataFrame | None = None,
+    *,
+    probes: DataFrame,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: each probe keeps
     its RAW vector and precomputes an m×codes distance TABLE (probe
@@ -716,7 +722,6 @@ def pq_topk(
     by an independent replica (the similarity_ivf_trained pattern).
     Output: (probe_id, neighbor_id, adc_dist, rank), ascending ADC
     distance."""
-    _require_probes(probes, "pq_topk", _ADC_WHY)
     # pq_encode spreads the scan; the encoded frame carries the
     # codebook broadcast, so the ADC scan takes it as it is
     enc = pq_encode(emb, books, id_col, vec_col)
@@ -738,8 +743,8 @@ def adc_topk(
     for querying 100 TB of history at probe cost, the similarity-tier
     mirror of dedup's build_minhash_index/dedup_against_index.
     ``probe_rows`` carry raw vectors; ``enc`` is (id, codes).
-    ``probe_rows`` must be a BOUNDED batch (the caller's contract —
-    pq_topk enforces it): the per-probe tables broadcast."""
+    ``probe_rows`` must be a BOUNDED batch (the caller's contract): the
+    per-probe tables broadcast."""
     # the ADC scan (m lookups + m adds per candidate × |probes| fanout)
     # is CPU-bound; a persisted code table read back as one small file
     # would otherwise scan single-task (plan no-op at real scale)
@@ -758,13 +763,7 @@ def _adc_scan(
     the broadcast probe tables, two-phase ranked by ascending
     distance."""
     probe_tabs = _adc_tables(probe_rows, books, id_col, vec_col)
-    cand = enc.crossJoin(F.broadcast(probe_tabs)).filter(
-        F.col("probe_id") != F.col(id_col)
-    )
-    scored = cand.select(
-        "probe_id", F.col(id_col).alias("neighbor_id"), F.round(_adc_dist(), 6).alias("adc_dist")
-    )
-    return _rank_topk(scored, k, order_col="adc_dist", ascending=True)
+    return _adc_rank(enc.crossJoin(F.broadcast(probe_tabs)), id_col, k)
 
 
 def build_pq_index(
@@ -852,9 +851,6 @@ def train_opq_rotation(
     partials hold ~1e12 rows per partition; the driver total uses
     Python integers.)  The D×D SVD runs on the driver — k×D-class
     state, the train_kmeans_centroids contract."""
-    import numpy as np
-    import pandas as pd
-
     first = emb.select(vec_col).first()
     dim = len(first[0])
     if dim % m != 0:
@@ -890,25 +886,19 @@ def train_opq_rotation(
             total += np.array(r["a"], dtype=object)
         return (total.astype(np.float64) / 1e6).reshape(dim, dim)
 
-    books = None
-    for _ in range(opq_iters):
-        rot_df = rotate_vectors(emb, [[float(x) for x in row] for row in R], vec_col)
+    # opq_iters alternations, then the final codebooks trained in the
+    # FINAL rotated space (Ge et al. alternate-then-finalize)
+    for alternations_left in range(opq_iters, -1, -1):
+        rmat = [[float(x) for x in row] for row in R]
+        rot_df = rotate_vectors(emb, rmat, vec_col)
         rframe = rot_df.select(F.col(id_col), F.col("_rvec").alias(vec_col))
         books = train_pq_codebooks(
             rframe, id_col, vec_col, m, codes, pq_iters, quantize_decimals
         )
-        A = a_matrix(rot_df, books)
-        U, _s, Vt = np.linalg.svd(A)
+        if not alternations_left:
+            return rmat, books
+        U, _s, Vt = np.linalg.svd(a_matrix(rot_df, books))
         R = U @ Vt
-    # the loop's last step moved R after books were trained — train the
-    # final codebooks in the FINAL rotated space (Ge et al. alternate-
-    # then-finalize)
-    rot_df = rotate_vectors(emb, [[float(x) for x in row] for row in R], vec_col)
-    rframe = rot_df.select(F.col(id_col), F.col("_rvec").alias(vec_col))
-    books = train_pq_codebooks(
-        rframe, id_col, vec_col, m, codes, pq_iters, quantize_decimals
-    )
-    return [[float(x) for x in row] for row in R], books
 
 
 def opq_topk(
@@ -918,14 +908,14 @@ def opq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    probes: DataFrame | None = None,
+    *,
+    probes: DataFrame,
 ) -> DataFrame:
     """ADC top-k in the OPQ-rotated space: rotate corpus and probes by
     the trained R (rotation preserves L2 distances, so ADC in rotated
     space approximates the original-space neighbors with lower
     quantization error), then the standard PQ query path — encode,
     broadcast distance tables, two-phase rank."""
-    _require_probes(probes, "opq_topk", _ADC_WHY)
     # spread BEFORE the rotation, and only there: R·x is D² multiplies
     # per row and the single-file local fixture would run it (and
     # everything above) on one task (plan no-op at real scale), while
@@ -948,7 +938,8 @@ def ivf_pq_topk(
     k: int = 5,
     num_centroids: int = 16,
     nprobe: int = 4,
-    probes: DataFrame | None = None,
+    *,
+    probes: DataFrame,
 ) -> DataFrame:
     """Composed IVF-PQ (Jégou et al. TPAMI 2011 §IV; the architecture
     FAISS ships as IndexIVFPQ): coarse-quantize the corpus onto
@@ -977,17 +968,8 @@ def ivf_pq_topk(
     neighbor_id, adc_dist, rank), ascending ADC distance; NOTE a probe
     sees only vectors in its probed cells (recall < 1 by construction,
     floor-tested vs exact L2 in tests/test_tools.py)."""
-    _require_probes(
-        probes, "ivf_pq_topk", "per-probe ADC tables broadcast — batch unbounded probe sweeps"
-    )
-    cents = _seed_centroids(emb, id_col, vec_col, num_centroids)
-    # rowwise assignment: the corpus never shuffles — assignment AND
-    # the PQ encode are one projection over the (spread) scan stage,
-    # barriered so the candidates join consumes code ATTRIBUTES (the
-    # argmins must evaluate once per corpus row, not per candidate)
-    assigned = assign_clusters_rowwise(emb, cents, id_col, vec_col)
-    enc = pq_encode(assigned, books, id_col, vec_col, extra_cols=("cluster_id",))
-    enc = evaluate_once(enc, [], **{c: F.col(c) for c in enc.columns})
+    cents, assigned = _ivf_cells(emb, id_col, vec_col, num_centroids)
+    enc = _cell_codes(assigned, books, id_col, vec_col)
     probe_rows = _restrict_to_probes(emb, id_col, probes)
     probe_cells = assign_clusters(
         probe_rows, id_col, vec_col, centroids=cents, num_probes=nprobe
@@ -1001,15 +983,31 @@ def ivf_pq_topk(
     # shuffle join on it would be maximally skewed — the ivf_topk
     # discipline).
     probe_tabs = _adc_tables(probe_rows, books, id_col, vec_col)
-    cand = (
-        enc.join(F.broadcast(probe_cells), on="cluster_id")
-        .join(F.broadcast(probe_tabs), on="probe_id")
-        .filter(F.col("probe_id") != F.col(id_col))
+    cand = enc.join(F.broadcast(probe_cells), on="cluster_id").join(
+        F.broadcast(probe_tabs), on="probe_id"
     )
-    scored = cand.select(
-        "probe_id", F.col(id_col).alias("neighbor_id"), F.round(_adc_dist(), 6).alias("adc_dist")
-    )
-    return _rank_topk(scored, k, order_col="adc_dist", ascending=True)
+    return _adc_rank(cand, id_col, k)
+
+
+def _ivf_cells(
+    emb: DataFrame, id_col: str, vec_col: str, num_centroids: int
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF-PQ corpus side's coarse step: the ``id < num_centroids``
+    seed cells and every corpus vector's one cell, assigned row-wise so
+    the corpus never shuffles.  Returns (cents, (id, vec, cluster_id))."""
+    cents = _seed_centroids(emb, id_col, vec_col, num_centroids)
+    return cents, assign_clusters_rowwise(emb, cents, id_col, vec_col)
+
+
+def _cell_codes(
+    rows: DataFrame, books: list[list[list[float]]], id_col: str, vec_col: str
+) -> DataFrame:
+    """PQ-encode cell-assigned ``rows`` with their cluster_id in the same
+    projection over the (spread) scan stage, barriered so the candidate
+    join consumes code ATTRIBUTES (the argmins evaluate once per corpus
+    row, not per candidate).  Output: (id, cluster_id, codes)."""
+    enc = pq_encode(rows, books, id_col, vec_col, extra_cols=("cluster_id",))
+    return evaluate_once(enc, [], **{c: F.col(c) for c in enc.columns})
 
 
 def assign_clusters_rowwise(
@@ -1064,7 +1062,7 @@ def assign_clusters_rowwise(
     # (max_by falls through to the -cent_id field).
     pick = F.expr(
         "array_min(transform(_cents, c -> struct("
-        f"-coalesce(round({_dot(vec_col, 'c.cvec')} / (_norm * c._cnorm), 6), -2) AS _ns, "
+        f"-coalesce({_cosine_sql(_dot(vec_col, 'c.cvec'), '_norm', 'c._cnorm')}, -2) AS _ns, "
         "c.cent_id AS cent_id))).cent_id"
     )
     return v.crossJoin(one_row).select(
@@ -1097,7 +1095,7 @@ def _seed_centroids(
             pool = emb.filter(F.col(id_col) < num_centroids)
         centroids = pool.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cvec"))
     cents = centroids.select("cent_id", F.col("cvec").cast("array<double>").alias("cvec"))
-    return cents.withColumn("_cnorm", F.expr(f"sqrt({_dot('cvec', 'cvec')})"))
+    return cents.withColumn("_cnorm", F.expr(_norm_sql("cvec")))
 
 
 def _residualize(
@@ -1142,8 +1140,7 @@ def train_residual_pq_codebooks(
     :func:`train_pq_codebooks` run on the residual column, with the
     same md5 seed ranking over the SAME ids — so an independent numpy
     replica reproduces the books exactly from (vecs - cents[assign])."""
-    cents = _seed_centroids(emb, id_col, vec_col, num_centroids)
-    assigned = assign_clusters_rowwise(emb, cents, id_col, vec_col)
+    cents, assigned = _ivf_cells(emb, id_col, vec_col, num_centroids)
     res = _residualize(assigned, cents, id_col, vec_col)
     return train_pq_codebooks(
         res, id_col, "resid", m=m, codes=codes, iters=iters,
@@ -1159,7 +1156,8 @@ def ivf_pq_residual_topk(
     k: int = 5,
     num_centroids: int = 16,
     nprobe: int = 4,
-    probes: DataFrame | None = None,
+    *,
+    probes: DataFrame,
 ) -> DataFrame:
     """Residual-encoded IVF-PQ — FAISS IndexIVFPQ's actual default
     (``by_residual=true``; Jégou et al. TPAMI 2011 §IV-A): corpus
@@ -1181,18 +1179,10 @@ def ivf_pq_residual_topk(
     decimal-grid training, sequential folds, HALF_UP 1e-6, neighbor-id
     tiebreak), so the full composition is pinned end-to-end by the
     independent numpy replica in plans/queries._ivf_pq_residual_oracle."""
-    _require_probes(probes, "ivf_pq_residual_topk", "per-(probe, cell) ADC tables broadcast")
-    cents = _seed_centroids(emb, id_col, vec_col, num_centroids)
-    # rowwise assignment (no corpus exchange); residualize is a k-row
-    # broadcast equi join, so assignment + residual + encode all ride
-    # the (spread) scan stage at full width, barriered before the
-    # fanout join (codes evaluate once per corpus row)
-    assigned = assign_clusters_rowwise(emb, cents, id_col, vec_col)
-    enc = pq_encode(
-        _residualize(assigned, cents, id_col, vec_col),
-        books, id_col, "resid", extra_cols=("cluster_id",),
-    )
-    enc = evaluate_once(enc, [], **{c: F.col(c) for c in enc.columns})
+    # residualize is a k-row broadcast equi join, so assignment +
+    # residual + encode all ride the (spread) scan stage at full width
+    cents, assigned = _ivf_cells(emb, id_col, vec_col, num_centroids)
+    enc = _cell_codes(_residualize(assigned, cents, id_col, vec_col), books, id_col, "resid")
     probe_rows = _restrict_to_probes(emb, id_col, probes)
     probe_cells = assign_clusters(
         probe_rows, id_col, vec_col, centroids=cents, num_probes=nprobe
@@ -1202,13 +1192,7 @@ def ivf_pq_residual_topk(
     # broadcast-sized, so the corpus-sized code table never shuffles
     probe_res = _residualize(probe_cells, cents, id_col, vec_col)
     probe_tabs = _adc_tables(probe_res, books, id_col, "resid", extra_cols=("cluster_id",))
-    cand = enc.join(F.broadcast(probe_tabs), on="cluster_id").filter(
-        F.col("probe_id") != F.col(id_col)
-    )
-    scored = cand.select(
-        "probe_id", F.col(id_col).alias("neighbor_id"), F.round(_adc_dist(), 6).alias("adc_dist")
-    )
-    return _rank_topk(scored, k, order_col="adc_dist", ascending=True)
+    return _adc_rank(enc.join(F.broadcast(probe_tabs), on="cluster_id"), id_col, k)
 
 
 def ivf_pq_refined_topk(
@@ -1220,7 +1204,8 @@ def ivf_pq_refined_topk(
     num_centroids: int = 16,
     nprobe: int = 4,
     shortlist: int = 20,
-    probes: DataFrame | None = None,
+    *,
+    probes: DataFrame,
 ) -> DataFrame:
     """Two-stage refined ANN — the FAISS IndexRefineFlat deployment
     pattern: the compressed tier (list-pruned ADC, :func:`ivf_pq_topk`)
@@ -1241,9 +1226,6 @@ def ivf_pq_refined_topk(
     sequential with HALF_UP 1e-6 rounding), so the composition is
     pinned by the independent replica in
     plans/queries._ivf_pq_refined_oracle."""
-    _require_probes(
-        probes, "ivf_pq_refined_topk", "the shortlist and probe vectors broadcast"
-    )
     short = ivf_pq_topk(
         emb, books, id_col, vec_col,
         k=shortlist, num_centroids=num_centroids, nprobe=nprobe, probes=probes,
@@ -1294,7 +1276,7 @@ def semantic_contamination(
     # row's top match with contaminated=true (the quantized_topk
     # drop_zero divergence class)
     evals = (
-        eval_set.withColumn("_enorm", F.expr(f"sqrt({_dot(vec_col, vec_col)})"))
+        eval_set.withColumn("_enorm", F.expr(_norm_sql(vec_col)))
         .filter(F.col("_enorm") > 0.0)
         .agg(
             F.collect_list(
@@ -1309,10 +1291,7 @@ def semantic_contamination(
     v = spread_for_compute(with_norm(corpus, vec_col), id_col)
     # zero-norm CORPUS rows score the -2.0 sentinel (below any cosine):
     # deterministic, never NaN, contaminated stays false
-    cos = (
-        f"if(_norm = 0.0D, -2.0D, "
-        f"round({_dot(vec_col, 'e.evec')} / (_norm * e.enorm), 6))"
-    )
+    cos = f"if(_norm = 0.0D, -2.0D, {_cosine_sql(_dot(vec_col, 'e.evec'), '_norm', 'e.enorm')})"
     best = F.expr(
         f"array_max(transform(_evals, e -> struct({cos} AS cos, -e.eval_id AS neg_id)))"
     )
@@ -1379,7 +1358,7 @@ def assign_clusters(
     # the scan yields enough splits (same discipline as the per-row
     # text stages, functions/text.spread_for_compute).
     v = spread_for_compute(with_norm(emb, vec_col), id_col)
-    cscore = F.round(F.expr(f"{_dot(vec_col, 'cvec')} / (_norm * _cnorm)"), 6)
+    cscore = F.expr(_cosine_sql(_dot(vec_col, "cvec"), "_norm", "_cnorm"))
     vc = v.crossJoin(F.broadcast(cents)).select(
         F.col(id_col), F.col(vec_col), F.col("_norm"), F.col("cent_id"), cscore.alias("cscore")
     )
@@ -1453,23 +1432,8 @@ def semdedup(
     oracle-reproducible form, same as ivf_topk.
     """
     assigned = _spread_for_pair_join(assign_clusters(emb, id_col, vec_col, num_centroids, centroids))
-    a = assigned.select(
-        F.col("cluster_id"),
-        F.col(id_col).alias("_id_a"),
-        F.col(vec_col).alias("_va"),
-        F.col("_norm").alias("_na"),
-    )
-    b = assigned.select(
-        F.col("cluster_id"),
-        F.col(id_col).alias("_id_b"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_norm").alias("_nb"),
-    )
-    pair_score = F.round(F.expr(f"{_dot('_va', '_vb')} / (_na * _nb)"), 6)
     dropped = (
-        a.join(b, on="cluster_id")
-        .filter(F.col("_id_a") < F.col("_id_b"))
-        .filter(pair_score >= threshold)
+        _cell_pairs(assigned, id_col, vec_col, threshold)
         .select(F.col("_id_b").alias(id_col))
         .distinct()
     )
@@ -1557,7 +1521,8 @@ def lsh_bucketed_topk(
     num_tables: int = 8,
     bits_per_table: int = 4,
     dim: int = 64,
-    probes: DataFrame | None = None,
+    *,
+    probes: DataFrame,
     portable: bool = False,
 ) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH.
@@ -1566,9 +1531,9 @@ def lsh_bucketed_topk(
     bits each; a probe meets a candidate if they share a bucket in ANY
     table (per-table collision prob for angle θ is (1-θ/π)^k'; union
     over L tables gives high recall for close vectors while each table
-    stays selective).  Candidate pairs are deduped before scoring, so
-    the shuffle carries (table, bucket) keyed rows and each surviving
-    pair is scored once.  Recall < 1 by construction — verified
+    stays selective).  Candidates are scored inside the bucket join
+    against the broadcast probe side, and a pair met in several tables
+    collapses to one row.  Recall < 1 by construction — verified
     against the brute-force baseline in tests.
 
     ``portable=True`` computes the sign bits with sequential JVM
@@ -1636,63 +1601,32 @@ def lsh_bucketed_topk(
     # folds per row) and the in-bucket scoring above it are CPU-bound
     # and narrow: rebalance an under-split scan to full width first
     # (plan no-op at real scale — the spread_for_compute contract)
-    buckets = mk_buckets(spread_for_compute(emb, id_col))
-    if probes is not None:
-        # bounded probe set: the bucket rows carry the vector (map-side
-        # projection — never shuffled), so candidates are scored inside
-        # the bucket join with the BROADCAST probe side; the corpus
-        # never shuffles, and the cross-table pair dedup is a tiny
-        # (probe, neighbor) agg instead of a distinct + two
-        # join-back-by-id corpus shuffles.  The norm fold repeats per
-        # bucket row (×num_tables) — arithmetic, not I/O; a bargain
-        # against any extra exchange.
-        vb = buckets.withColumn("_norm", F.expr(f"sqrt({_dot(vec_col, vec_col)})"))
-        # probe side: restrict FIRST, then fold buckets over the probe
-        # rows only — |probes| fold evaluations, not another corpus pass
-        probe_vb = mk_buckets(_restrict_to_probes(emb, id_col, probes)).withColumn(
-            "_norm", F.expr(f"sqrt({_dot(vec_col, vec_col)})")
-        )
-        pa = probe_vb.select(
-            F.col(id_col).alias("probe_id"),
-            F.col("table"),
-            F.col("bucket"),
-            F.col(vec_col).alias("_pvec"),
-            F.col("_norm").alias("_pnorm"),
-        )
-        score = F.round(F.expr(f"{_dot('_pvec', vec_col)} / (_pnorm * _norm)"), 6)
-        deduped = (
-            vb.join(F.broadcast(pa), on=["table", "bucket"])
-            .filter(F.col("probe_id") != F.col(id_col))
-            .select("probe_id", F.col(id_col).alias("neighbor_id"), score.alias("score"))
-            .groupBy("probe_id", "neighbor_id")
-            # every duplicate pair row carries the identical rounded
-            # score; min is value-identical to first but DETERMINISTIC,
-            # so it never blocks exchange-reuse canonicalization (the
-            # assign_clusters max_by discipline)
-            .agg(F.min("score").alias("score"))
-        )
-        return _rank_topk(deduped, k)
-    pairs = (
-        _restrict_to_probes(buckets, id_col, probes)
-        .alias("pa")
-        .join(
-            buckets.alias("pb"),
-            on=[
-                F.col("pa.table") == F.col("pb.table"),
-                F.col("pa.bucket") == F.col("pb.bucket"),
-                F.col(f"pa.{id_col}") != F.col(f"pb.{id_col}"),
-            ],
-        )
-        .select(F.col(f"pa.{id_col}").alias("probe_id"), F.col(f"pb.{id_col}").alias("neighbor_id"))
-        .distinct()
+    # the bucket rows carry the vector (map-side projection — never
+    # shuffled), so candidates are scored inside the bucket join with
+    # the BROADCAST probe side; the corpus never shuffles, and the
+    # cross-table pair dedup is a tiny (probe, neighbor) agg.  The norm
+    # fold repeats per bucket row (×num_tables) — arithmetic, not I/O;
+    # a bargain against any extra exchange.
+    vb = with_norm(mk_buckets(spread_for_compute(emb, id_col)), vec_col)
+    # probe side: restrict FIRST, then fold buckets over the probe rows
+    # only — |probes| fold evaluations, not another corpus pass
+    pa = with_norm(mk_buckets(_restrict_to_probes(emb, id_col, probes)), vec_col).select(
+        F.col(id_col).alias("probe_id"),
+        F.col("table"),
+        F.col("bucket"),
+        F.col(vec_col).alias("_pvec"),
+        F.col("_norm").alias("_pnorm"),
     )
-    normed = with_norm(emb, vec_col)
-    a = normed.alias("a")
-    b = normed.alias("b")
-    score = F.expr(f"{_dot(f'a.{vec_col}', f'b.{vec_col}')} / (a._norm * b._norm)")
-    scored = (
-        pairs.join(a, pairs.probe_id == F.col(f"a.{id_col}"))
-        .join(b, pairs.neighbor_id == F.col(f"b.{id_col}"))
-        .select("probe_id", "neighbor_id", F.round(score, 6).alias("score"))
+    score = F.expr(_cosine_sql(_dot("_pvec", vec_col), "_pnorm", "_norm"))
+    deduped = (
+        vb.join(F.broadcast(pa), on=["table", "bucket"])
+        .filter(F.col("probe_id") != F.col(id_col))
+        .select("probe_id", F.col(id_col).alias("neighbor_id"), score.alias("score"))
+        .groupBy("probe_id", "neighbor_id")
+        # every duplicate pair row carries the identical rounded score;
+        # min is value-identical to first but DETERMINISTIC, so it never
+        # blocks exchange-reuse canonicalization (the assign_clusters
+        # max_by discipline)
+        .agg(F.min("score").alias("score"))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(deduped, k)

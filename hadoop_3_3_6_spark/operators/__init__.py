@@ -16,7 +16,6 @@ from hadoop_3_3_6_spark.operators.joins import (
     tagged_join,
 )
 from hadoop_3_3_6_spark.operators.sort import (
-    global_sort,
     key_field_sort,
     parse_key_field_spec,
     secondary_sort,
@@ -36,7 +35,6 @@ __all__ = [
     "composite_join",
     "override_join",
     "tagged_join",
-    "global_sort",
     "key_field_sort",
     "parse_key_field_spec",
     "secondary_sort",

@@ -48,8 +48,8 @@ and the scan side stays distributed:
 Scale: the partition-file workflow collects the SAMPLE to the driver
 (freq·N keys for IntervalSampler, <= numSamples for the others) —
 exactly the state the reference's client holds.  The idiomatic Spark
-path for the same job remains ``sort.global_sort`` (RangePartitioning
-samples distributed and never surfaces the boundaries); this module
+path for the same job remains ``orderBy`` (RangePartitioning samples
+distributed and never surfaces the boundaries; the ``sort`` query); this module
 exists for reference parity and for pipelines that want the partition
 file as a first-class, reusable artifact.
 """

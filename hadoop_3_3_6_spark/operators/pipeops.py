@@ -21,11 +21,13 @@ def pipe_map(df: DataFrame, command: str, sep: str = "\t", out_col: str = "line"
 
     The only RDD use in the engine (rdd.pipe is the faithful
     per-partition process harness; each Spark task forks one child,
-    like each MR task forked one).
+    like each MR task forked one).  A child that exits non-zero fails
+    its task, as a failed streaming task fails its job; its partial
+    output is never returned as a result.
     """
     cols = [F.col(c).cast("string") for c in df.columns]
     lines = df.select(F.concat_ws(sep, *cols).alias("line"))
-    piped = lines.rdd.map(lambda r: r["line"]).pipe(command)
+    piped = lines.rdd.map(lambda r: r["line"]).pipe(command, checkCode=True)
     spark = df.sparkSession
     return spark.createDataFrame(piped.map(lambda l: (l,)), schema=f"{out_col} string")
 

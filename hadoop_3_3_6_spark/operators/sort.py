@@ -6,8 +6,8 @@ Reference parity targets (paths under /root/reference/):
 - total-order sort via sampling + TotalOrderPartitioner
   MRC/mapreduce/lib/partition/TotalOrderPartitioner.java:50,
   InputSampler.java:97-312 — Spark's ``orderBy`` IS this algorithm
-  (RangePartitioning with reservoir sampling), so ``global_sort`` is a
-  thin wrapper.
+  (RangePartitioning with reservoir sampling), so a query sorts with
+  ``orderBy`` directly (the ``sort`` query).
 - secondary sort (values ordered within key group)
   MRX/SecondarySort.java:51-231 + grouping comparator Job.java:1026.
 - Grep's top-k (single-reducer desc sort) MRX/Grep.java:82-92 —
@@ -27,13 +27,6 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def global_sort(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Ascending total-order sort: range-partitioned with sampled split
-    points — built-in equivalent of TotalOrderPartitioner +
-    InputSampler."""
-    return df.orderBy(*[F.col(c).asc() for c in cols])
 
 
 def top_k(df: DataFrame, order: list[Column], k: int) -> DataFrame:

@@ -1678,6 +1678,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash(docs, "text", "doc_id", portable=True)
 
 
+def _probe_ids(emb: DataFrame, n: int) -> DataFrame:
+    """The similarity queries' probe batch: the ids ``vec_id < n``."""
+    return emb.filter(F.col("vec_id") < n).select("vec_id")
+
+
 @_register(
     "similarity_topk",
     """
@@ -1698,7 +1703,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for probes vec_id < 25 —
     the exactness baseline for ANN (scale path: lsh_topk)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") < 25).select("vec_id")
+    probes = _probe_ids(emb, 25)
     return cosine_topk_bruteforce(emb, "vec_id", "embedding", k=5, probes=probes)
 
 
@@ -1791,7 +1796,7 @@ def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch) is the scale default and is recall-tested in
     tests/test_tools.py."""
     emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") < 25).select("vec_id")
+    probes = _probe_ids(emb, 25)
     return lsh_bucketed_topk(
         emb, "vec_id", "embedding", k=5, num_tables=8, bits_per_table=4, dim=64,
         probes=probes, portable=True,
@@ -1810,7 +1815,7 @@ def q_similarity_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is not bit-reproducible across engines (recall is
     tested in tests/test_tools.py instead)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") < 25).select("vec_id")
+    probes = _probe_ids(emb, 25)
     return lsh_bucketed_topk(
         emb, "vec_id", "embedding", k=5, num_tables=8, bits_per_table=4, dim=64,
         probes=probes, portable=False,
@@ -1858,7 +1863,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_3_3_6_spark.functions.similarity import ivf_topk
 
     emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") < 25).select("vec_id")
+    probes = _probe_ids(emb, 25)
     return ivf_topk(emb, "vec_id", "embedding", k=5, num_centroids=16, nprobe=4, probes=probes)
 
 
@@ -1896,7 +1901,7 @@ def q_similarity_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hadoop_3_3_6_spark.functions.similarity import quantized_topk
 
     emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") < 25).select("vec_id")
+    probes = _probe_ids(emb, 25)
     return quantized_topk(emb, "vec_id", "embedding", k=5, probes=probes)
 
 
@@ -2718,7 +2723,7 @@ def q_similarity_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = spark.createDataFrame(
         _once(("kmeans_centroids", sf_dir), train), "cent_id int, cvec array<double>"
     )
-    probes = emb.filter(F.col("vec_id") < 25).select("vec_id")
+    probes = _probe_ids(emb, 25)
     return ivf_topk(emb, "vec_id", "embedding", k=5, nprobe=4, probes=probes, centroids=cents)
 
 
@@ -3065,7 +3070,7 @@ def q_similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir)
     books = _trained_pq_books(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < _PQ_PROBE_MAX).select("vec_id")
+    probes = _probe_ids(emb, _PQ_PROBE_MAX)
     return pq_topk(emb, books, "vec_id", "embedding", k=_PQ_K, probes=probes)
 
 
@@ -3092,7 +3097,7 @@ def q_similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir)
     books = _trained_pq_books(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < _IVFPQ_PROBE_MAX).select("vec_id")
+    probes = _probe_ids(emb, _IVFPQ_PROBE_MAX)
     return ivf_pq_topk(
         emb, books, "vec_id", "embedding",
         k=_PQ_K, num_centroids=_IVFPQ_CELLS, nprobe=_IVFPQ_NPROBE, probes=probes,
@@ -3119,7 +3124,7 @@ def q_similarity_ivf_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFr
 
     emb = load_table(spark, "embeddings", sf_dir)
     books = _trained_pq_books(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < _IVFPQ_PROBE_MAX).select("vec_id")
+    probes = _probe_ids(emb, _IVFPQ_PROBE_MAX)
     return ivf_pq_refined_topk(
         emb, books, "vec_id", "embedding",
         k=_PQ_K, num_centroids=_IVFPQ_CELLS, nprobe=_IVFPQ_NPROBE,
@@ -3152,7 +3157,7 @@ def q_similarity_ivf_pq_residual_topk(spark: SparkSession, sf_dir: str) -> DataF
 
     emb = load_table(spark, "embeddings", sf_dir)
     books = _trained_residual_pq_books(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < _IVFPQ_PROBE_MAX).select("vec_id")
+    probes = _probe_ids(emb, _IVFPQ_PROBE_MAX)
     return ivf_pq_residual_topk(
         emb, books, "vec_id", "embedding",
         k=_PQ_K, num_centroids=_IVFPQ_CELLS, nprobe=_IVFPQ_NPROBE, probes=probes,
@@ -3186,7 +3191,7 @@ def q_similarity_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         opq_iters=_OPQ_ITERS, pq_iters=_OPQ_PQ_ITERS,
         quantize_decimals=_PQ_Q,
     ))
-    probes = emb.filter(F.col("vec_id") < _PQ_PROBE_MAX).select("vec_id")
+    probes = _probe_ids(emb, _PQ_PROBE_MAX)
     return opq_topk(emb, rmat, books, "vec_id", "embedding", k=_PQ_K, probes=probes)
 
 
@@ -10907,7 +10912,7 @@ def q_similarity_lsh_fast_verdict(spark: SparkSession, sf_dir: str) -> DataFrame
     dataset (seeded planes, fixed fold order), so the verdict row is
     a constant of the data."""
     emb = load_table(spark, "embeddings", sf_dir)
-    probes = emb.filter(F.col("vec_id") < 25).select("vec_id")
+    probes = _probe_ids(emb, 25)
     truth = cosine_topk_bruteforce(emb, "vec_id", "embedding", k=5, probes=probes).select(
         "probe_id", "neighbor_id"
     )

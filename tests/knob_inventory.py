@@ -16,11 +16,18 @@ Each row names the test functions that do pass it.  Such a parameter
 picks a code path that only tests (or nobody) run: a candidate for
 deletion, or a reference-parity feature that a test pins on purpose.
 
+A second listing names the mirror case: a defaulted, branch-selecting
+parameter that every such call passes, each with a value other than
+its default (and at least one call exists).  There the default's
+branch is the one that only tests (or nobody) run: a candidate for a
+required parameter and for deleting that branch.
+
 Calls are matched by function name (``f(...)`` and ``m.f(...)``), so
 a call to any same-named function counts for all of them.  A call
 passes a parameter when it names it as a keyword or reaches its
 position, with any expression other than the default's own text; a
-``*args`` / ``**kwargs`` splat counts as passing every parameter.
+``*args`` / ``**kwargs`` splat counts as passing every parameter in
+the first listing and as maybe passing the default in the second.
 Both rules err towards listing fewer rows.
 """
 
@@ -75,14 +82,32 @@ def _callee(call: ast.Call) -> str | None:
     return None
 
 
-def _passes(call: ast.Call, name: str, pos: int | None, default: ast.expr) -> bool:
-    """Whether ``call`` passes parameter ``name`` a non-default value."""
-    if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
-        return True
+def _splat(call: ast.Call) -> bool:
+    return any(isinstance(a, ast.Starred) for a in call.args) or any(
+        k.arg is None for k in call.keywords
+    )
+
+
+def _values(call: ast.Call, name: str, pos: int | None) -> list[ast.expr]:
     values = [k.value for k in call.keywords if k.arg == name]
     if pos is not None and pos < len(call.args):
         values.append(call.args[pos])
-    return any(ast.dump(v) != ast.dump(default) for v in values)
+    return values
+
+
+def _passes(call: ast.Call, name: str, pos: int | None, default: ast.expr) -> bool:
+    """Whether ``call`` passes parameter ``name`` a non-default value."""
+    if _splat(call):
+        return True
+    return any(ast.dump(v) != ast.dump(default) for v in _values(call, name, pos))
+
+
+def _always_passes(call: ast.Call, name: str, pos: int | None, default: ast.expr) -> bool:
+    """Whether ``call`` surely passes parameter ``name`` a non-default value."""
+    values = _values(call, name, pos)
+    return not _splat(call) and bool(values) and all(
+        ast.dump(v) != ast.dump(default) for v in values
+    )
 
 
 def _calls(tree: ast.Module):
@@ -94,7 +119,9 @@ def _calls(tree: ast.Module):
                 yield owner, node
 
 
-def inventory(tree_root: str) -> list[dict]:
+def inventory(tree_root: str, mirror: bool = False) -> list[dict]:
+    """The switches no non-test call sets; with ``mirror``, those every
+    non-test call sets."""
     pkg = os.path.join(tree_root, PACKAGE)
     pkg_files = _py_files(pkg)
     parsed = {p: _parse(p) for p in pkg_files}
@@ -123,16 +150,20 @@ def inventory(tree_root: str) -> list[dict]:
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             for name, pos, default in _knobs(fn):
-                if any(_passes(c, name, pos, default) for c in calls_by_name[fn.name]):
-                    continue
-                set_by = sorted(
-                    {t for t, c in test_calls_by_name[fn.name] if _passes(c, name, pos, default)}
-                )
+                calls, tests = calls_by_name[fn.name], test_calls_by_name[fn.name]
+                if mirror:
+                    if not calls or not all(_always_passes(c, name, pos, default) for c in calls):
+                        continue
+                    set_by = {t for t, c in tests if not _always_passes(c, name, pos, default)}
+                else:
+                    if any(_passes(c, name, pos, default) for c in calls):
+                        continue
+                    set_by = {t for t, c in tests if _passes(c, name, pos, default)}
                 rows.append({
                     "where": f"{rel}:{fn.lineno}",
                     "function": fn.name,
                     "param": f"{name}={ast.unparse(default)}",
-                    "tests": set_by,
+                    "tests": sorted(set_by),
                 })
     return rows
 
@@ -144,6 +175,11 @@ def main(argv: list[str]) -> int:
         tests = ", ".join(r["tests"]) or "no test"
         print(f"{r['where']}  {r['function']}({r['param']})  set by: {tests}")
     print(f"{len(rows)} defaulted branch switches that no non-test caller sets")
+    mirror = inventory(root, mirror=True)
+    for r in mirror:
+        tests = ", ".join(r["tests"]) or "no test"
+        print(f"{r['where']}  {r['function']}({r['param']})  default left by: {tests}")
+    print(f"{len(mirror)} defaulted branch switches that every non-test caller sets")
     return 0
 
 

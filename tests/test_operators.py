@@ -381,6 +381,14 @@ def test_pipe_map_and_chain(spark):
     assert chained.count() == 1
 
 
+def test_pipe_map_fails_on_nonzero_child_exit(spark):
+    """A child that prints a partial answer and exits non-zero fails
+    the job instead of returning its partial lines as rows."""
+    df = spark.createDataFrame([("hello",), ("world",)], "w string")
+    with pytest.raises(Exception, match="exited with error code 3"):
+        pipe_map(df, "sh -c 'cat >/dev/null; echo partial; exit 3'").collect()
+
+
 def test_partitioned_sink_prunes_on_read(spark, tmp_path):
     """MultipleOutputs routing property at scale: reading one route
     back only scans that route's directory (PartitionFilters on the

@@ -1186,6 +1186,44 @@ def test_rowwise_assignment_matches_with_zero_norm_centroid(spark):
     assert cells[10] == cells[11] == cells[12] == {1, 2}
 
 
+def test_cell_pair_join_zero_norm_and_duplicates(spark):
+    """The within-cell pair join that the blocked near-dup and SemDeDup
+    share, pinned on literals: exact duplicates score 1.0, a zero-norm
+    vector (NULL cosine) pairs with nothing and SemDeDup keeps it, and
+    with one cell per vector only cell-sharing pairs meet (0-6 and 5-6
+    straddle the cells).  The ids below 2 seed the two cells."""
+    from hadoop_3_3_6_spark.functions.similarity import cosine_pairs_above_blocked, semdedup
+
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.0, 1.0, 0.0]),
+        (2, [0.0, 0.0, 0.0]),   # zero-norm
+        (3, [1.0, 0.0, 0.0]),   # duplicate of 0
+        (4, [0.0, 1.0, 0.0]),   # duplicate of 1
+        (5, [0.9, 0.1, 0.0]),   # near-duplicate of 0 and 3
+        (6, [0.6, 0.8, 0.0]),   # nearer cell 1
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def pairs(**kw):
+        out = cosine_pairs_above_blocked(emb, threshold=0.5, num_centroids=2, **kw)
+        return sorted(tuple(r) for r in out.collect())
+
+    assert pairs() == [
+        (0, 3, 0, 1.0), (0, 5, 0, 0.993884), (0, 6, 0, 0.6), (1, 4, 0, 1.0), (1, 6, 0, 0.8),
+        (3, 5, 0, 0.993884), (3, 6, 0, 0.6), (4, 6, 0, 0.8), (5, 6, 0, 0.684675),
+    ]
+    assert pairs(num_probes=1) == [
+        (0, 3, 0, 1.0), (0, 5, 0, 0.993884), (1, 4, 1, 1.0), (1, 6, 1, 0.8),
+        (3, 5, 0, 0.993884), (4, 6, 1, 0.8),
+    ]
+    kept = sorted(tuple(r) for r in semdedup(emb, num_centroids=2, threshold=0.5).collect())
+    assert kept == [
+        (0, 0, True), (1, 1, True), (2, 0, True), (3, 0, False),
+        (4, 1, False), (5, 0, False), (6, 1, False),
+    ]
+
+
 def test_teravalidate_detects_out_of_order_records(spark):
     """The faithful record-level validator (round-10 review): an
     UNSORTED frame must fail globally_sorted even when every
