@@ -1143,11 +1143,16 @@ def _pretraining_chain(spark, sf_dir: str):
     Two fixtures stay cached by design: the rendered WARC corpus
     (fixture prep, not chain work) and the classifier training weights
     (training is pipeline_quality_classifier's own scale row; the
-    chain's classifier stage is the APPLY projection)."""
+    chain's classifier stage is the APPLY projection).  The previous
+    run's stage dir is removed when its cache entry is dropped."""
+    import shutil
+
     from hadoop_3_3_6_spark.plans import queries as Q
 
     Q._qc_weights(spark, sf_dir, even_only=False)
-    Q._BUILT.pop(("pretrain_full_", sf_dir), None)
+    stale = Q._BUILT.pop(("pretrain_full_", sf_dir), None)
+    if stale is not None:
+        shutil.rmtree(stale, ignore_errors=True)
     return Q.QUERIES["pipeline_pretraining_full"](spark, sf_dir)
 
 

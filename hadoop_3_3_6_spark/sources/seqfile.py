@@ -66,13 +66,26 @@ def _vint(i: int) -> bytes:
     return bytes(out)
 
 
+def _need(data: bytes, pos: int, size: int, what: str) -> None:
+    """Raise ValueError unless ``size`` bytes of ``what`` start at
+    ``pos`` inside ``data``."""
+    if size < 0 or pos + size > len(data):
+        raise ValueError(
+            f"truncated SequenceFile: {what} at byte {pos} needs {size} bytes, "
+            f"{len(data) - pos} left"
+        )
+
+
 def _read_vint(data: bytes, pos: int) -> tuple[int, int]:
-    """WritableUtils.readVInt (_vint inverted)."""
+    """WritableUtils.readVInt (_vint inverted); ValueError if the
+    integer runs past the end of ``data``."""
+    _need(data, pos, 1, "vint")
     first = struct.unpack_from("b", data, pos)[0]
     pos += 1
     if -112 <= first:
         return first, pos
     ln = -(first + 120) if first < -120 else -(first + 112)
+    _need(data, pos, ln, "vint")
     v = 0
     for _ in range(ln):
         v = (v << 8) | data[pos]
@@ -134,16 +147,21 @@ def walk_seq_records(data: bytes) -> Iterator[tuple[bytes, bytes]]:
     — SequenceFile.java's Writer.sync layout, the same framing the
     sink emits).  Yields (key, value) raw payloads; BytesWritable-
     framed payloads (incl. TypedBytesWritable) are unwrapped to the
-    payload like nextRawValue's ValueBytes."""
+    payload like nextRawValue's ValueBytes.  A header or record that
+    runs past the end of ``data`` raises ValueError; a file cut exactly
+    between two records reads as the records before the cut."""
     if data[:4] != b"SEQ\x06":
         raise ValueError("not a SEQ v6 file")
     pos = 4
     kcls, pos = _read_vint(data, pos)
+    _need(data, pos, kcls, "key class name")
     kcls_name = data[pos : pos + kcls].decode()
     pos += kcls
     vcls, pos = _read_vint(data, pos)
+    _need(data, pos, vcls, "value class name")
     vcls_name = data[pos : pos + vcls].decode()
     pos += vcls
+    _need(data, pos, 2 + 4 + 16, "header flags, metadata and sync")
     if data[pos] or data[pos + 1]:
         raise ValueError("compressed SequenceFiles unsupported here")
     pos += 2
@@ -160,14 +178,22 @@ def walk_seq_records(data: bytes) -> Iterator[tuple[bytes, bytes]]:
     )
     n = len(data)
     while pos < n:
+        _need(data, pos, 4, "record length")
         (rec_len,) = struct.unpack_from(">i", data, pos)
         if rec_len == -1:  # sync escape
+            _need(data, pos, 20, "sync escape")
             if data[pos + 4 : pos + 20] != sync:
                 raise ValueError("sync marker mismatch")
             pos += 20
             continue
+        _need(data, pos, 8, "record header")
         (key_len,) = struct.unpack_from(">i", data, pos + 4)
+        if not 0 <= key_len <= rec_len:
+            raise ValueError(
+                f"corrupt SequenceFile record at byte {pos}: key length {key_len} of {rec_len}"
+            )
         pos += 8
+        _need(data, pos, rec_len, "record")
         kb = data[pos : pos + key_len]
         vb = data[pos + key_len : pos + rec_len]
         pos += rec_len

@@ -6,14 +6,17 @@ plan diff between two trees (a parent export and the change).
     python tests/plan_diff.py diff <parent.json> <change.json>
 
 ``build`` constructs every query of ``__spark_entry__.queries()`` in
-registration order in ONE session and writes
-``{name: optimized logical plan}``.  ``sf_dir`` defaults to the test
+registration order in ONE session and writes ``{"registry": {...},
+"plans": {name: optimized logical plan}}``; ``registry`` pins the
+sha256 of the ``queries()`` names in order and of the ``oracle_sql()``
+items (names plus SQL, in order).  ``sf_dir`` defaults to the test
 suite's (``tests/conftest.py``: sf0.01 or ``SPARK_GRAFT_TEST_SF_DIR``).
 A query whose construction raises records ``ERROR <type>: <first
 line>``.  Run it from the tree being
 measured: the plans must come from that tree's code.  ``diff`` prints
 each name whose plan differs (with the first differing line) and the
-count of identical plans; it exits 1 on any difference.
+count of identical plans, and each registry hash that differs; it exits
+1 on any difference.
 
 Normalized, so two fresh runs of one tree are identical: expression
 ids ``#123`` / ``#123L`` -> ``#``; paths under the temp dir, /dev/shm,
@@ -25,6 +28,7 @@ run a job while being built fail.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -45,6 +49,10 @@ def normalize(plan: str, roots: list[str]) -> str:
     plan = re.sub(r"#\d+L?", "#", plan)
     plan = re.sub(r"\bs[0-9a-f]{12}\b", "<sink>", plan)
     return re.sub(r"\blocal-\d+\b", "<app>", plan)
+
+
+def _sha256(value) -> str:
+    return hashlib.sha256(json.dumps(value).encode()).hexdigest()
 
 
 def build(out: str, sf_dir: str | None) -> None:
@@ -71,17 +79,23 @@ def build(out: str, sf_dir: str | None) -> None:
             plans[name] = normalize(plan, roots)
     finally:
         spark.stop()
+    registry = {"queries_sha256": _sha256(list(e.queries())),
+                "oracle_sql_sha256": _sha256(list(e.oracle_sql().items()))}
     with open(out, "w") as f:
-        json.dump(plans, f, indent=0)
+        json.dump({"registry": registry, "plans": plans}, f, indent=0)
     errors = sum(p.startswith("ERROR ") for p in plans.values())
     print(f"{len(plans)} plans written to {out} ({errors} construction errors)")
 
 
 def diff(a_path: str, b_path: str) -> int:
     with open(a_path) as f:
-        a = json.load(f)
+        ra = json.load(f)
     with open(b_path) as f:
-        b = json.load(f)
+        rb = json.load(f)
+    a, b = ra["plans"], rb["plans"]
+    registry_moved = [k for k in ra["registry"] if ra["registry"][k] != rb["registry"].get(k)]
+    for k in registry_moved:
+        print(f"registry {k}: {ra['registry'][k]} -> {rb['registry'].get(k)}")
     if list(a) != list(b):
         print(f"names differ: only in {a_path}: {sorted(set(a) - set(b))}; "
               f"only in {b_path}: {sorted(set(b) - set(a))}; same set, other order: {set(a) == set(b)}")
@@ -91,8 +105,9 @@ def diff(a_path: str, b_path: str) -> int:
         i = next((i for i, (x, y) in enumerate(zip(la, lb)) if x != y), min(len(la), len(lb)))
         print(f"{n}: line {i}\n  - {la[i] if i < len(la) else '<end>'}\n  + {lb[i] if i < len(lb) else '<end>'}")
     same = sum(1 for n in a if n in b and a[n] == b[n])
-    print(f"{same}/{len(a)} plans identical, {len(moved)} differ")
-    return 1 if moved or list(a) != list(b) else 0
+    print(f"{same}/{len(a)} plans identical, {len(moved)} differ; "
+          f"registry hashes {'differ' if registry_moved else 'identical'}")
+    return 1 if moved or registry_moved or list(a) != list(b) else 0
 
 
 if __name__ == "__main__":

@@ -6,7 +6,9 @@ Pinned here:
   staleness off the tree's max mtime (a live session writing into
   nested hash-bucket subdirs must not be swept) — pure-function tests,
   no SparkSession;
-- the JVM CPU and GC probes read a live session and move forward.
+- the JVM CPU and GC probes read a live session and move forward;
+- each timed capstone chain run re-executes into a fresh stage dir and
+  removes the previous run's dir.
 """
 
 from __future__ import annotations
@@ -89,3 +91,20 @@ def test_jvm_probes_live(monkeypatch, tmp_path, spark):
     gc, old = bench._jvm_gc_stats(spark)
     assert gc is not None and gc >= 0
     assert old is not None and old >= 0
+
+
+def test_pretraining_chain_removes_the_dir_it_drops(monkeypatch, tmp_path, spark, sf_dir):
+    """_pretraining_chain drops the cached capstone stage dir before
+    each run, so every run re-executes all stages into a fresh dir, and
+    the dropped dir is removed then, not at process exit."""
+    from hadoop_3_3_6_spark.plans import queries as Q
+
+    bench = _bench(monkeypatch, tmp_path)
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.001")  # the smallest fixture tier
+    key = ("pretrain_full_", sf)
+    bench._pretraining_chain(spark, sf).collect()
+    first = Q._BUILT[key]
+    bench._pretraining_chain(spark, sf).collect()
+    second = Q._BUILT[key]
+    assert second != first and os.path.isdir(second)
+    assert not os.path.exists(first)

@@ -484,7 +484,6 @@ def test_query_construction_runs_no_jobs(spark, sf_dir, built):
             "observe_counters",  # the observed map exists only after the action
             "nulloutput_noop",  # the noop write action runs at construction
             "inputsampler_totalorder",  # the sampler collect is the workflow
-            "pipeline_classifier_eval",  # n_train is counted at construction
             # sequenceFile toDF pays a schema-inference job per read
             "seqfile_roundtrip", "seqfile_as_text_scan", "seqfile_as_binary_scan",
             "seqfile_filter_percent", "auto_input_scan",
@@ -1304,3 +1303,30 @@ def test_pretraining_full_stage_conservation(spark):
         rows["quality_sample"][1],
     )
     assert rows["shards_verdict"][0] == 0                # zero roundtrip mismatches
+
+
+def test_lazyoutput_reports_counts_measured_at_render(spark, sf_dir, monkeypatch):
+    """lazyoutput_empty_parts reports the removal counts its render
+    measured on every construction in the process, not constants once
+    the rendered dir is cached."""
+    import shutil
+
+    from hadoop_3_3_6_spark.plans import queries as Q
+    from hadoop_3_3_6_spark.sources import writers
+
+    real = writers.write_non_empty
+
+    def removes_five(df, path, **kw):
+        real(df, path, **kw)
+        return 5
+
+    monkeypatch.setattr(writers, "write_non_empty", removes_five)
+    key = ("lazyout_", sf_dir)
+    monkeypatch.setattr(Q, "_BUILT", {k: v for k, v in Q._BUILT.items() if k != key})
+    try:
+        for _ in range(2):
+            rows = dict(Q.QUERIES["lazyoutput_empty_parts"](spark, sf_dir).collect())
+            assert rows["nonempty_parts_removed"] == 5
+            assert rows["empty_write_parts_removed"] == 5
+    finally:
+        shutil.rmtree(Q._BUILT.get(key, ""), ignore_errors=True)

@@ -197,6 +197,37 @@ def test_walk_seq_records_sync_escapes():
         list(walk_seq_records(bad))
 
 
+def test_walk_seq_records_truncated_at_every_offset():
+    """A SEQ file cut at any byte either reads as the whole records
+    before the cut (a cut between two records) or raises ValueError: a
+    cut header or record never yields a partial record or a bare
+    struct.error."""
+    import uuid
+
+    from hadoop_3_3_6_spark.sources.seqfile import (
+        _enc_text,
+        encode_sequence_file_header,
+        walk_seq_records,
+    )
+
+    text = "org.apache.hadoop.io.Text"
+    data = bytearray(encode_sequence_file_header(text, text, uuid.uuid4().bytes))
+    boundaries, pairs = [len(data)], []
+    for i in range(5):
+        kb, vb = _enc_text(f"k{i}"), _enc_text(f"value {i}")
+        data += struct.pack(">ii", len(kb) + len(vb), len(kb)) + kb + vb
+        boundaries.append(len(data))
+        pairs.append((kb, vb))
+    data = bytes(data)
+    assert list(walk_seq_records(data)) == pairs
+    for cut in range(len(data)):
+        if cut in boundaries:
+            assert list(walk_seq_records(data[:cut])) == pairs[: boundaries.index(cut)]
+        else:
+            with pytest.raises(ValueError):
+                list(walk_seq_records(data[:cut]))
+
+
 def _child(script: str) -> list:
     import os
     import sys
